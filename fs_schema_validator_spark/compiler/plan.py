@@ -28,7 +28,7 @@ order within a subject, sorted across subjects (reference report.py:27-33).
 
 from __future__ import annotations
 
-from typing import Mapping
+from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -44,63 +44,75 @@ VIOLATION_SCHEMA = "subject string, rule_id string, rule_seq int, reason string"
 # Per-row violation element carried through the fused scan.
 _ROW_ERR_TYPE = "array<struct<rule_seq:int,rule_id:string,reason:string>>"
 
+# Equality re-fetch tiers by count of hash-mismatched keys (_table_violations).
+_BROADCAST_REFETCH_MAX_KEYS = 100_000
+_KEYSET_REFETCH_MAX_KEYS = 5_000_000
 
-def _rule_errs(rule: Mdl.RuleBase, reason: Column, cond: Column | None = None) -> Column:
-    """One violation element (as a 1-element array) gated on `cond`."""
-    elem = F.struct(
+
+def key_string(col: str) -> Column:
+    """A subject or partition key as a string, nulls rendered '<null>' —
+    on every surface, so a null key never falls out of a join or an
+    ``isin`` filter (misattributed, never validated, or reported OK)."""
+    return F.coalesce(F.col(col).cast("string"), F.lit("<null>"))
+
+
+def _no_errs() -> Column:
+    return F.array().cast(_ROW_ERR_TYPE)
+
+
+def _err_elem(rule: Mdl.RuleBase, reason: Column) -> Column:
+    """One violation element: struct<rule_seq, rule_id, reason>."""
+    return F.struct(
         F.lit(rule.seq).alias("rule_seq"),
         F.lit(rule.rule_id).alias("rule_id"),
         reason.alias("reason"),
     )
-    arr = F.array(elem)
+
+
+def _rule_errs(rule: Mdl.RuleBase, reason: Column, cond: Column | None = None) -> Column:
+    """One violation element (as a 1-element array) gated on `cond`."""
+    arr = F.array(_err_elem(rule, reason))
     if cond is None:
         return arr
-    return F.when(cond, arr).otherwise(F.array().cast(_ROW_ERR_TYPE))
+    return F.when(cond, arr).otherwise(_no_errs())
+
+
+def _checker_errs(rule: Mdl.RuleBase, errs: Column) -> Column:
+    """A spec checker's array<struct<path,msg>> as violation elements."""
+    return F.transform(
+        errs,
+        lambda e: _err_elem(
+            rule, render_reason(e.getField("path"), e.getField("msg"))
+        ),
+    )
+
+
+def _missing_column(rule: Mdl.RuleBase) -> Column:
+    """Column absent from the table: every subject fails existence (the
+    reference's missing-file reason, report.py:24-25) instead of a crash."""
+    return _rule_errs(rule, F.lit(f"`{rule.column}`: does not exist"))
 
 
 def _compile_row_rule(rule: Mdl.Rule, schema: T.StructType) -> Column:
     """Compile one row rule to an array<struct<rule_seq,rule_id,reason>>."""
     if isinstance(rule, Mdl.ColumnSpecRule):
         if rule.column not in schema.names:
-            # Column absent from the table: every subject fails existence —
-            # the reference's missing-file reason (report.py:24-25).
-            return _rule_errs(rule, F.lit(f"`{rule.column}`: does not exist"))
+            return _missing_column(rule)
         dtype = schema[rule.column].dataType
         checker = compile_checker(rule.spec, dtype)
-        errs = checker(F.col(rule.column), F.lit(rule.column))
-        return F.transform(
-            errs,
-            lambda e: F.struct(
-                F.lit(rule.seq).alias("rule_seq"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                render_reason(e.getField("path"), e.getField("msg")).alias("reason"),
-            ),
-        )
+        return _checker_errs(rule, checker(F.col(rule.column), F.lit(rule.column)))
     if isinstance(rule, Mdl.JsonSpecRule):
         from .variant_json import json_column_violations
 
         if rule.column not in schema.names:
-            return _rule_errs(rule, F.lit(f"`{rule.column}`: does not exist"))
-        errs = json_column_violations(F.col(rule.column), rule.spec)
-        return F.transform(
-            errs,
-            lambda e: F.struct(
-                F.lit(rule.seq).alias("rule_seq"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                render_reason(e.getField("path"), e.getField("msg")).alias("reason"),
-            ),
+            return _missing_column(rule)
+        return _checker_errs(
+            rule, json_column_violations(F.col(rule.column), rule.spec)
         )
     if isinstance(rule, Mdl.RowSpecRule):
         checker = compile_checker(rule.spec, schema)
-        errs = checker(F.struct(*[F.col(n) for n in schema.names]), F.lit(""))
-        return F.transform(
-            errs,
-            lambda e: F.struct(
-                F.lit(rule.seq).alias("rule_seq"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                render_reason(e.getField("path"), e.getField("msg")).alias("reason"),
-            ),
-        )
+        row = F.struct(*[F.col(n) for n in schema.names])
+        return _checker_errs(rule, checker(row, F.lit("")))
     if isinstance(rule, Mdl.ExprRule):
         ok = F.expr(rule.assert_sql)
         # A null reason (its SQL hit a null input) falls back to a static
@@ -113,11 +125,9 @@ def _compile_row_rule(rule: Mdl.Rule, schema: T.StructType) -> Column:
         return _rule_errs(rule, reason, ~F.coalesce(ok, F.lit(False)))
     if isinstance(rule, Mdl.NotEmptyRule):
         if rule.allow_empty:
-            return F.array().cast(_ROW_ERR_TYPE)
+            return _no_errs()
         if rule.column not in schema.names:
-            # graceful missing-column violation, same contract as
-            # ColumnSpecRule above (a typo'd column must not crash the run)
-            return _rule_errs(rule, F.lit(f"`{rule.column}`: does not exist"))
+            return _missing_column(rule)
         col = F.col(rule.column)
         dtype = schema[rule.column].dataType
         if isinstance(dtype, (T.ArrayType, T.MapType)):
@@ -127,6 +137,31 @@ def _compile_row_rule(rule: Mdl.Rule, schema: T.StructType) -> Column:
         reason = F.lit(f"`{rule.column}`: cannot be empty")
         return _rule_errs(rule, reason, col.isNotNull() & is_empty)
     raise RuleSetError(f"not a row rule: {rule}")
+
+
+def row_violation_array(
+    rules: Sequence[Mdl.Rule], schema: T.StructType, extra: Sequence[Column] = ()
+) -> Column:
+    """Every row rule's violations for one row, as ONE
+    array<struct<rule_seq,rule_id,reason>> — a stateless expression, so
+    it runs in the fused batch scan and inside native streaming operators
+    alike. `extra` appends further per-row violation arrays (the fused
+    scan's lifted token-range checks)."""
+    arrays = [_compile_row_rule(r, schema) for r in rules]
+    arrays.extend(extra)
+    return F.flatten(F.array(*arrays)) if arrays else _no_errs()
+
+
+def _violation_rows(
+    df: DataFrame, subject: Column, rule: Mdl.RuleBase, reason: Column
+) -> DataFrame:
+    """A table rule's output in the canonical VIOLATION_SCHEMA."""
+    return df.select(
+        subject.cast("string").alias("subject"),
+        F.lit(rule.rule_id).alias("rule_id"),
+        F.lit(rule.seq).alias("rule_seq"),
+        reason.alias("reason"),
+    )
 
 
 class CompiledPlan:
@@ -223,7 +258,7 @@ class CompiledPlan:
             bad_idx,
         )
         return F.when(screen, _rule_errs(rule, reason, bad_idx.isNotNull())).otherwise(
-            F.array().cast(_ROW_ERR_TYPE)
+            _no_errs()
         )
 
     def fused_projection(self) -> DataFrame:
@@ -246,16 +281,14 @@ class CompiledPlan:
             )
             base = base.join(F.broadcast(dim), on=rule.group_col, how="left")
 
-        arrays = [_compile_row_rule(r, self.df.schema) for r in self.ruleset.row_rules]
-        arrays.extend(self._lifted_token_range(r) for r in self._token_range_rules())
-        viols = (
-            F.flatten(F.array(*arrays)) if arrays else F.array().cast(_ROW_ERR_TYPE)
+        viols = row_violation_array(
+            self.ruleset.row_rules,
+            self.df.schema,
+            [self._lifted_token_range(r) for r in self._token_range_rules()],
         )
 
         cols = [
-            F.coalesce(F.col(self.subject_col).cast("string"), F.lit("<null>")).alias(
-                "subject"
-            ),
+            key_string(self.subject_col).alias("subject"),
             *[F.col(c) for c in self._scalar_cols_needed()],
             viols.alias("_viols"),
         ]
@@ -325,23 +358,6 @@ class CompiledPlan:
             )
         )
 
-    # -- per-row ok flags (for summaries / ok-subject extraction) ---------
-
-    def row_ok_flags(self) -> DataFrame:
-        """(subject, ok) for row rules only — single pass, no shuffle.
-        Null subjects render '<null>' like every other violations surface,
-        so flags join cleanly against violations."""
-        rules = self.ruleset.row_rules
-        subject = F.coalesce(
-            F.col(self.subject_col).cast("string"), F.lit("<null>")
-        ).alias("subject")
-        if not rules:
-            return self.df.select(subject, F.lit(True).alias("ok"))
-        arrays = [_compile_row_rule(r, self.df.schema) for r in rules]
-        return self.df.select(
-            subject, (F.size(F.flatten(F.array(*arrays))) == 0).alias("ok")
-        )
-
     # -- table rules ------------------------------------------------------
 
     def _aux(self, name: str) -> DataFrame:
@@ -361,23 +377,16 @@ class CompiledPlan:
                 .agg(F.count(F.lit(1)).alias("_n"))
                 .filter(F.col("_n") > 1)
             )
-            return dupes.select(
-                F.concat_ws("|", *[c.cast("string") for c in keys]).alias("subject"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit(rule.seq).alias("rule_seq"),
-                F.lit("duplicate key").alias("reason"),
-            )
+            subject = F.concat_ws("|", *[c.cast("string") for c in keys])
+            return _violation_rows(dupes, subject, rule, F.lit("duplicate key"))
 
         if isinstance(rule, Mdl.ReferentialRule):
             dim = self._aux(rule.dim).select(
                 F.col(rule.dim_key).alias(rule.column)
             ).distinct()
             missing = fused.join(F.broadcast(dim), on=rule.column, how="left_anti")
-            return missing.select(
-                "subject",
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit(rule.seq).alias("rule_seq"),
-                F.lit(f"unknown {rule.column}").alias("reason"),
+            return _violation_rows(
+                missing, F.col("subject"), rule, F.lit(f"unknown {rule.column}")
             )
 
         if isinstance(rule, Mdl.CompletenessRule):
@@ -388,11 +397,8 @@ class CompiledPlan:
             # The manifest is the small side; the big side is reduced to its
             # distinct keys first so the anti-join shuffles keys, not rows.
             missing = manifest.join(present, on=rule.key, how="left_anti")
-            return missing.select(
-                F.col(rule.key).cast("string").alias("subject"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit(rule.seq).alias("rule_seq"),
-                F.lit("does not exist").alias("reason"),
+            return _violation_rows(
+                missing, F.col(rule.key), rule, F.lit("does not exist")
             )
 
         if isinstance(rule, Mdl.ArrayEqualityRule):
@@ -443,27 +449,29 @@ class CompiledPlan:
             # are KBs/row — 5M array rows would blow past driver/broadcast
             # limits and turn a recoverable burst into a hard failure), so
             # arrays broadcast only below a much smaller key count.
-            if n_bad <= 100_000:
-                # rare corruption: both probe sides broadcast, neither big
-                # table shuffles — two streaming scans total
-                survivors = self.df.select(
-                    F.col(rule.key), F.col(rule.column)
-                ).join(F.broadcast(bad_keys), on=rule.key, how="inner")
-                joined = ref.join(F.broadcast(survivors), on=rule.key, how="inner")
-            elif n_bad <= 5_000_000:
-                # burst corruption: broadcast the KEY SET into both scans
-                # (bounded: keys only), then shuffle-join the two filtered
-                # sides — each carries only n_bad array rows
-                survivors = self.df.select(
-                    F.col(rule.key), F.col(rule.column)
-                ).join(F.broadcast(bad_keys), on=rule.key, how="inner")
-                ref_flt = ref.join(F.broadcast(bad_keys), on=rule.key, how="inner")
-                joined = survivors.join(ref_flt, on=rule.key, how="inner")
+            arrays = self.df.select(F.col(rule.key), F.col(rule.column))
+            if n_bad <= _KEYSET_REFETCH_MAX_KEYS:
+                # broadcast the KEY SET into the scan (bounded: keys only)
+                survivors = arrays.join(
+                    F.broadcast(bad_keys), on=rule.key, how="inner"
+                )
+                if n_bad <= _BROADCAST_REFETCH_MAX_KEYS:
+                    # rare corruption: both probe sides broadcast, neither
+                    # big table shuffles — two streaming scans total
+                    joined = ref.join(
+                        F.broadcast(survivors), on=rule.key, how="inner"
+                    )
+                else:
+                    # burst corruption: the key set filters the reference
+                    # scan too, then the two filtered sides shuffle-join —
+                    # each carries only n_bad array rows
+                    ref_flt = ref.join(
+                        F.broadcast(bad_keys), on=rule.key, how="inner"
+                    )
+                    joined = survivors.join(ref_flt, on=rule.key, how="inner")
             else:  # pathological corruption: fall back to shuffled joins
-                joined = (
-                    self.df.select(F.col(rule.key), F.col(rule.column))
-                    .join(bad_keys, on=rule.key, how="inner")
-                    .join(ref, on=rule.key, how="inner")
+                joined = arrays.join(bad_keys, on=rule.key, how="inner").join(
+                    ref, on=rule.key, how="inner"
                 )
             mism = first_mismatch_index(joined, rule.column, "_ref_arr", key=rule.key)
             # mismatch_idx == -1 here means the screen flagged a null-vs-
@@ -472,13 +480,11 @@ class CompiledPlan:
             # EQUAL (null ≡ empty for the array invariant; nullness itself
             # is the spec/required rules' job). Dropping them is the
             # contract, not a leak.
-            return mism.filter(F.col("mismatch_idx") >= 0).select(
-                F.col(rule.key).cast("string").alias("subject"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit(rule.seq).alias("rule_seq"),
-                F.format_string(
-                    "token mismatch at index %d", F.col("mismatch_idx")
-                ).alias("reason"),
+            return _violation_rows(
+                mism.filter(F.col("mismatch_idx") >= 0),
+                F.col(rule.key),
+                rule,
+                F.format_string("token mismatch at index %d", F.col("mismatch_idx")),
             )
 
         if isinstance(rule, Mdl.DriftRule):
@@ -495,11 +501,11 @@ class CompiledPlan:
                 F.approx_count_distinct(col).alias("approx_distinct"),
             )
             bad = stats.filter(~F.coalesce(F.expr(rule.assert_sql), F.lit(False)))
-            return bad.select(
-                F.col(rule.group_col).cast("string").alias("subject"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit(rule.seq).alias("rule_seq"),
-                F.lit(f"stats assertion failed: {rule.assert_sql}").alias("reason"),
+            return _violation_rows(
+                bad,
+                F.col(rule.group_col),
+                rule,
+                F.lit(f"stats assertion failed: {rule.assert_sql}"),
             )
 
         raise RuleSetError(f"unknown table rule: {rule}")
@@ -539,15 +545,13 @@ class CompiledPlan:
                 F.sum((qc - pc) * F.log(qc / pc)).alias("stat")
             )
             label = "PSI"
-        return stat.filter(F.col("stat") > rule.threshold).select(
-            F.col("grp").cast("string").alias("subject"),
-            F.lit(rule.rule_id).alias("rule_id"),
-            F.lit(rule.seq).alias("rule_seq"),
-            F.format_string(
-                f"distribution drift: {label} %.4f > %s",
-                F.col("stat"),
-                F.lit(M.fmt_num(rule.threshold)),
-            ).alias("reason"),
+        reason = F.format_string(
+            f"distribution drift: {label} %.4f > %s",
+            F.col("stat"),
+            F.lit(M.fmt_num(rule.threshold)),
+        )
+        return _violation_rows(
+            stat.filter(F.col("stat") > rule.threshold), F.col("grp"), rule, reason
         )
 
     # -- full plan --------------------------------------------------------

@@ -14,20 +14,63 @@ Usage::
 The verdict contract mirrors the reference CLI
 (/root/reference/fs_schema_validator/__main__.py:76-96): exit 0 when no
 violations, 1 otherwise, 127 for an invalid rule spec (RuleSetError).
+
+Each shared contract has one implementation: key rendering (nulls as
+'<null>') is ``compiler.plan.key_string``; the row rules' per-row violation
+array is ``compiler.plan.row_violation_array``; a table rule's violation
+rows are built by ``compiler.plan._violation_rows``; per-group attribution
+is ``group_attribution`` below, behind both ``summary()`` and the
+checkpoint manifest (``streaming.checkpoint``).
 """
 
 from __future__ import annotations
 
 from typing import Mapping
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .compiler.plan import CompiledPlan
+from .compiler.plan import CompiledPlan, key_string
 from .evaluator import Bindings
 from .rules.loader import RuleSet, RuleSetError
 
 __all__ = ["ValidationEngine", "ValidationResult", "RuleSet", "RuleSetError"]
+
+
+def group_attribution(
+    df: DataFrame, subject_col: str, group: Column, violations: DataFrame
+) -> DataFrame:
+    """Per-group counts ``(grp, rows, violations, violating_subjects)``.
+
+    Each violation is counted EXACTLY ONCE, under the minimum group
+    containing its subject: a subject spanning groups (itself an anomaly)
+    must not inflate every group's counts. Violations whose subject is
+    absent from `df` (completeness-missing keys) get a null ``grp``; the
+    full outer join keeps them as their own row. One narrow
+    ``(subject, grp, n_rows)`` aggregate feeds both sides; partitioned by
+    subject, its one shuffle also serves the subject -> group map."""
+    base = (
+        df.select(key_string(subject_col).alias("subject"), group.alias("grp"))
+        .repartition("subject")
+        .groupBy("subject", "grp")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+    )
+    rows = base.groupBy("grp").agg(F.sum("n_rows").alias("rows"))
+    subject_grp = base.groupBy("subject").agg(F.min("grp").alias("grp"))
+    viol = (
+        violations.join(subject_grp, "subject", "left")
+        .groupBy("grp")
+        .agg(
+            F.count(F.lit(1)).alias("violations"),
+            F.countDistinct("subject").alias("violating_subjects"),
+        )
+    )
+    return rows.join(viol, "grp", "full_outer").select(
+        "grp",
+        F.coalesce("rows", F.lit(0)).alias("rows"),
+        F.coalesce("violations", F.lit(0)).alias("violations"),
+        F.coalesce("violating_subjects", F.lit(0)).alias("violating_subjects"),
+    )
 
 
 class ValidationResult:
@@ -85,62 +128,27 @@ class ValidationResult:
         subjects render '<null>' like every violations surface, so a
         null-keyed violating row is never misreported as OK."""
         subjects = self._plan.df.select(
-            F.coalesce(
-                F.col(self._plan.subject_col).cast("string"), F.lit("<null>")
-            ).alias("subject")
+            key_string(self._plan.subject_col).alias("subject")
         ).distinct()
         return subjects.join(
             self.violations.select("subject").distinct(), "subject", "left_anti"
         ).orderBy("subject")
 
     def summary(self, group_col: str) -> DataFrame:
-        """Per-group verdict: rows, violating rows, ok rows, verdict string.
-
-        Each violation is counted EXACTLY ONCE, under the minimum group
-        containing its subject (same contract as the checkpoint manifest):
-        a subject spanning groups — itself an anomaly the engine detects —
-        must not inflate every group's counts. Null subjects join through
-        the '<null>' rendering; violations whose subject is absent from
-        the input (completeness-missing keys) fall out of the left join
-        with a null group and surface as their own summary row."""
-        df = self._plan.df
-        subj = F.coalesce(
-            F.col(self._plan.subject_col).cast("string"), F.lit("<null>")
+        """Per-group verdict: rows, violations, violating subjects, and
+        PASS/FAIL, counted by ``group_attribution`` (the checkpoint
+        manifest's contract). Orphan violations form a row with a null
+        group."""
+        counts = group_attribution(
+            self._plan.df, self._plan.subject_col, F.col(group_col), self.violations
         )
-        rows = df.groupBy(F.col(group_col).alias("grp")).agg(
-            F.count(F.lit(1)).alias("rows")
-        )
-        # Map each violation back to ONE group through the subject key.
-        subj_grp = (
-            df.select(subj.alias("subject"), F.col(group_col).alias("grp"))
-            .groupBy("subject")
-            .agg(F.min("grp").alias("grp"))
-        )
-        viol = (
-            self.violations.join(subj_grp, "subject", "left")
-            .groupBy("grp")
-            .agg(
-                F.count(F.lit(1)).alias("violations"),
-                F.countDistinct("subject").alias("violating_subjects"),
-            )
-        )
-        return (
-            # full outer: orphan-subject violations (null grp) still get a
-            # summary row instead of silently vanishing from the report
-            rows.join(viol, "grp", "full_outer")
-            .select(
-                F.col("grp").alias(group_col),
-                F.coalesce("rows", F.lit(0)).alias("rows"),
-                F.coalesce("violations", F.lit(0)).alias("violations"),
-                F.coalesce("violating_subjects", F.lit(0)).alias(
-                    "violating_subjects"
-                ),
-                F.when(F.coalesce("violations", F.lit(0)) == 0, "PASS")
-                .otherwise("FAIL")
-                .alias("verdict"),
-            )
-            .orderBy(group_col)
-        )
+        return counts.select(
+            F.col("grp").alias(group_col),
+            "rows",
+            "violations",
+            "violating_subjects",
+            F.when(F.col("violations") == 0, "PASS").otherwise("FAIL").alias("verdict"),
+        ).orderBy(group_col)
 
 
 class ValidationEngine:

@@ -874,22 +874,6 @@ def hyperplane_band_chunks_arrow(
     return src.mapInArrow(compute, out_schema)
 
 
-def cosine_similarity(a, b):
-    """JVM-side cosine similarity between two array<float> columns.
-
-    Built from ``aggregate``/``zip_with`` so it runs in codegen — reserved
-    for ad-hoc scoring; the bulk ANN path batches via NumPy instead.
-    """
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
 def ivf_probe_cells_arrow(
     df: DataFrame,
     centroids: "np.ndarray",
@@ -1413,7 +1397,7 @@ def pairwise_cosine_arrow(
     Role: the exact scorer for streams that ALREADY carry both vectors
     per row — the rerank stages (shortlists of O(Q·refine·k)) and the
     'pairs' A/B strategy of the kNN joins. It is NOT the corpus-wide
-    hot path: measured (tools/bench_pairwise_cosine.py), shipping
+    hot path: measured (CHANGES.md, pairwise-cosine probe), shipping
     2×dim×4 B of vectors per candidate through the shuffle and Arrow
     IPC costs more than the interpreted HOF lambdas it replaces (kernel
     compute is 1.6 µs/row; the payload is the hot term), which is why

@@ -163,15 +163,3 @@ def ks_vs_global(
     p = ghist.select("bucket", (F.col("gcnt") / F.lit(gtotal)).alias("p"))
     grid = totals.select("grp").crossJoin(p)
     return ks_statistic(hist, grid, digits=digits)
-
-
-def group_stats(df: DataFrame, col: str, group_col: str) -> DataFrame:
-    """Canonical per-group single-pass stats block (exact, portable)."""
-    c = F.col(col)
-    return df.groupBy(F.col(group_col)).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum(c), 4).alias("sum_v"),
-        F.min(c).alias("min_v"),
-        F.max(c).alias("max_v"),
-        F.round(F.avg(c), 6).alias("avg_v"),
-    )

@@ -113,14 +113,6 @@ def default_codec():
     return PillowCodec if pillow_available() else FakeCodec
 
 
-def real_decode(payload: bytes):  # pragma: no cover - container has no codecs
-    raise NotImplementedError(
-        "no real codec importable in this environment; install Pillow "
-        "(PillowCodec picks it up via default_codec()) or pass an "
-        "ffmpeg-backed codec for audio/video"
-    )
-
-
 def extract_features(df: DataFrame, codec=None) -> DataFrame:
     """Decode payloads and emit per-media features via Arrow-batched
     mapInPandas; per-batch vectorized metadata handling, codec applied per

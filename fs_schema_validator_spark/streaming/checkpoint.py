@@ -29,10 +29,12 @@ import hashlib
 from datetime import datetime, timezone
 from typing import Mapping
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import ValidationEngine, ValidationResult
+from ..compiler.plan import key_string
+from ..engine import ValidationEngine, ValidationResult, group_attribution
 from ..rules.loader import RuleSet
 
 MANIFEST_SCHEMA = (
@@ -55,9 +57,14 @@ class ParquetManifestStore:
         self.path = path
 
     def read(self) -> DataFrame:
+        """The manifest, or an empty one on the first run (no path yet).
+        Any other failure — a corrupt or unreadable manifest — raises:
+        treating it as a first run would silently re-validate."""
         try:
             return self.spark.read.parquet(self.path)
-        except Exception:  # noqa: BLE001 - first run: no manifest yet
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
 
     def append(self, records: DataFrame) -> None:
@@ -86,21 +93,13 @@ class ResumableValidator:
         self.partition_col = partition_col
         self.engine_version = engine_version
 
-    def _part_col(self) -> F.Column:
-        """Partition value as a string, nulls rendered '<null>': a null
-        partition would crash sorted() (None vs str) and — worse — fall
-        out of every isin() filter, leaving its rows permanently
-        unvalidated."""
-        return F.coalesce(
-            F.col(self.partition_col).cast("string"), F.lit("<null>")
-        )
-
     def pending_partitions(
         self, df: DataFrame, rules_yaml: str, snapshot_id: str = "-"
     ) -> list[str]:
         rh = rules_fingerprint(rules_yaml)
         all_parts = [
-            r[0] for r in df.select(self._part_col()).distinct().collect()
+            r[0]
+            for r in df.select(key_string(self.partition_col)).distinct().collect()
         ]
         done = {
             r[0]
@@ -126,85 +125,46 @@ class ResumableValidator:
         One validation covers the whole pending set — the pushed filter is
         an IN-list on the partition column, so already-validated
         partitions' files are still never read — and per-partition stats
-        come from ONE aggregation job (row counts full-outer-joined with
-        subject->partition violation counts), followed by ONE manifest
-        append. The previous form looped partitions on the driver: one
-        Spark job (+2 actions) per partition serializes 10^4-10^5 jobs at
-        real partition counts.
+        come from ONE aggregation job (``engine.group_attribution``, the
+        contract behind ``ValidationResult.summary``), followed by ONE
+        manifest append. Looping partitions on the driver instead would
+        serialize one Spark job (+2 actions) per partition: 10^4-10^5 jobs
+        at real partition counts.
 
         Table rules see the pending set as a whole, which is the stronger
         contract: cross-partition duplicate keys are now detected, and
         referential/completeness checks run once instead of per-slice.
-        Every violation is counted EXACTLY ONCE: it is attributed to the
-        minimum partition containing its subject (a subject normally lives
-        in one partition; a subject spanning several — itself an anomaly —
-        does not inflate the other partitions' counts, and the sum of
-        per-partition n_violations always equals the total). Violations
-        whose subject does not occur in the pending input
-        (completeness-missing manifest keys) are recorded under the
-        synthetic partition "(global)"."""
+        Every violation is counted EXACTLY ONCE, under the minimum
+        partition containing its subject, so per-partition n_violations
+        sum to the total. Violations whose subject does not occur in the
+        pending input (completeness-missing manifest keys) are recorded
+        under the synthetic partition "(global)"."""
         rh = rules_fingerprint(rules_yaml)
         ruleset = RuleSet.from_yaml(rules_yaml)
         pending = self.pending_partitions(df, rules_yaml, snapshot_id)
         if not pending:
             return {}
-        part = self._part_col()
+        part = key_string(self.partition_col)
         sub = df.filter(part.isin(pending))
         res: ValidationResult = self.engine.validate(sub, ruleset, tables)
-
-        # Same '<null>' rendering the engine applies to violation subjects
-        # (engine.py:89,108): a bare cast here would leave null-subject
-        # violations unjoinable to their partition — misattributed to
-        # '(global)', and a partition whose only violations have null
-        # subjects would be recorded PASS.
-        subj = F.coalesce(
-            F.col(self.engine.subject_col).cast("string"), F.lit("<null>")
+        # the manifest records no violating_subjects; pruning it drops the
+        # distinct count's extra shuffle
+        counts = (
+            group_attribution(sub, self.engine.subject_col, part, res.violations)
+            .select("grp", "rows", "violations")
+            .collect()
         )
-        # ONE narrow pass over (subject, partition) feeds both the
-        # per-partition row counts and the subject->partition attribution
-        # map — only those two columns are read (column pruning), never the
-        # wide payload columns the validation scan already paid for.
-        base = (
-            sub.select(subj.alias("subject"), part.alias("partition"))
-            .groupBy("subject", "partition")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-        )
-        from ..functions.cache import track
-
-        base = track(base.cache())
-        rows_by_part = base.groupBy("partition").agg(
-            F.sum("n_rows").alias("input_rows")
-        )
-        subj_part = base.groupBy("subject").agg(
-            F.min("partition").alias("partition")
-        )
-        viol_by_part = (
-            res.violations.join(subj_part, "subject", "left")
-            .select(
-                F.coalesce("partition", F.lit("(global)")).alias("partition")
-            )
-            .groupBy("partition")
-            .agg(F.count(F.lit(1)).alias("n_violations"))
-        )
-        stats = {
-            r["partition"]: (
-                r["input_rows"] or 0,
-                r["n_violations"] or 0,
-            )
-            for r in rows_by_part.join(
-                viol_by_part, "partition", "full_outer"
-            ).collect()
-        }
         res.release()
+        by_part = {"(global)" if r["grp"] is None else r["grp"]: r for r in counts}
 
         now = datetime.now(timezone.utc)
         results: dict[str, dict] = {}
-        for p in sorted(stats):
-            n_rows, n_violations = stats[p]
+        for p in sorted(by_part):
+            n_violations = by_part[p]["violations"]
             results[p] = {
                 "partition": p,
                 "rules_hash": rh,
-                "input_rows": n_rows,
+                "input_rows": by_part[p]["rows"],
                 "n_violations": n_violations,
                 "verdict": "PASS" if n_violations == 0 else "FAIL",
                 "engine_version": self.engine_version,

@@ -18,25 +18,13 @@ from __future__ import annotations
 from typing import Callable, Iterator, Mapping
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..compiler.plan import row_violation_array
 from ..engine import ValidationEngine
 from ..rules.loader import RuleSet
-
-
-def _row_violation_count(df: DataFrame, ruleset: RuleSet) -> Column:
-    """Per-row violation count from the ROW rules only — a stateless
-    expression, legal inside native streaming operators (table rules need
-    joins/aggs and run via foreachBatch instead)."""
-    from ..compiler.plan import _ROW_ERR_TYPE, _compile_row_rule
-
-    arrays = [_compile_row_rule(r, df.schema) for r in ruleset.row_rules]
-    viols = (
-        F.flatten(F.array(*arrays)) if arrays else F.array().cast(_ROW_ERR_TYPE)
-    )
-    return F.size(viols)
 
 
 def validate_stream(
@@ -154,7 +142,8 @@ def windowed_violation_counts(
     passes them, and state is bounded by (open windows × groups). Returns
     the streaming DataFrame; the caller attaches the sink."""
     ruleset = RuleSet.from_yaml(rules_yaml)
-    nv = _row_violation_count(stream_df, ruleset)
+    # row rules only: table rules need joins/aggs (validate_stream)
+    nv = F.size(row_violation_array(ruleset.row_rules, stream_df.schema))
     group = [F.col(group_col)] if group_col else []
     flagged = stream_df.select(
         F.col(ts_col).alias("_ts"), *group, nv.alias("_nv")
@@ -188,7 +177,7 @@ def stateful_violation_rate(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     ruleset = RuleSet.from_yaml(rules_yaml)
-    nv = _row_violation_count(stream_df, ruleset)
+    nv = F.size(row_violation_array(ruleset.row_rules, stream_df.schema))
     flagged = stream_df.select(F.col(group_col).alias("_g"), nv.alias("_nv"))
     out_schema = (
         f"{group_col} string, n_rows bigint, n_bad bigint, "

@@ -23,6 +23,22 @@ schema:
 """
 
 
+def assert_summary_matches_manifest(df, rules, results, tables=None):
+    """summary("source") and the checkpoint manifest share one attribution
+    contract: the same (rows, violations) per group, where summary's null
+    group is the manifest's "(global)" partition."""
+    res = ValidationEngine(subject_col="doc_id").validate(df, rules, tables)
+    summary = {
+        "(global)" if r.source is None else r.source: (r.rows, r.violations)
+        for r in res.summary("source").collect()
+    }
+    res.release()
+    manifest = {
+        p: (r["input_rows"], r["n_violations"]) for p, r in results.items()
+    }
+    assert summary == manifest
+
+
 @pytest.fixture()
 def validator(spark, tmp_path):
     store = ParquetManifestStore(spark, str(tmp_path / "manifest"))
@@ -219,6 +235,9 @@ schema:
     assert {p for p in results if p != "(global)"} == {
         "cc", "wiki", "code", "books"
     }
+    assert_summary_matches_manifest(
+        seq, rules, results, tables={"expected_manifest": manifest}
+    )
 
 
 def test_cli_profile_subcommand(spark, tmp_path, capsys):
@@ -258,6 +277,7 @@ def test_run_counts_each_violation_exactly_once(spark, tmp_path):
         ValidationEngine(subject_col="doc_id").validate(both, RULES).violations.count()
     )
     assert total == engine_total
+    assert_summary_matches_manifest(both, RULES, results)
 
 
 def test_null_subject_violations_attributed_to_their_partition(spark, tmp_path):
@@ -279,6 +299,25 @@ def test_null_subject_violations_attributed_to_their_partition(spark, tmp_path):
     assert res["nullbad"]["verdict"] == "FAIL"
     assert res["nullbad"]["n_violations"] == 1
     assert "(global)" not in res
+    assert_summary_matches_manifest(df, rules, res)
+
+
+def test_corrupt_manifest_fails_loud(spark, tmp_path):
+    """Only a missing manifest path means "first run": an unreadable
+    manifest must raise, not silently re-validate every partition."""
+    from pyspark.errors import AnalysisException
+    from py4j.protocol import Py4JJavaError
+
+    path = tmp_path / "manifest_corrupt"
+    path.mkdir()
+    (path / "part-0.parquet").write_bytes(b"not a parquet file")
+    v = ResumableValidator(
+        ValidationEngine(subject_col="doc_id"),
+        ParquetManifestStore(spark, str(path)),
+        partition_col="source",
+    )
+    with pytest.raises((Py4JJavaError, AnalysisException)):
+        v.run(synth.gen_sequences(spark, 20), RULES, snapshot_id="s1")
 
 
 def test_pyfiles_zip_imports_standalone(tmp_path):

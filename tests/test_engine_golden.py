@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from fs_schema_validator_spark.compiler import plan
 from fs_schema_validator_spark.engine import ValidationEngine
 from fs_schema_validator_spark.sources import synth
 
@@ -85,8 +86,7 @@ GOLDEN = [
 ]
 
 
-@pytest.fixture(scope="module")
-def result(spark):
+def _validate_golden_table(spark):
     n = 10
     seq = synth.with_duplicates(
         synth.corrupt_sequences(synth.gen_sequences(spark, n), every=10),
@@ -100,11 +100,39 @@ def result(spark):
     return ValidationEngine(subject_col="doc_id").validate(seq, RULES, tables)
 
 
+@pytest.fixture(scope="module")
+def result(spark):
+    return _validate_golden_table(spark)
+
+
 def test_exact_violation_goldens(result):
     got = [
         (r.subject, r.rule_id, r.reason)
         for r in result.sorted_violations().collect()
     ]
+    assert got == GOLDEN
+
+
+@pytest.mark.parametrize(
+    "zeroed",
+    [
+        (),
+        ("_BROADCAST_REFETCH_MAX_KEYS",),
+        ("_BROADCAST_REFETCH_MAX_KEYS", "_KEYSET_REFETCH_MAX_KEYS"),
+    ],
+    ids=["broadcast", "keyset", "shuffle"],
+)
+def test_equality_refetch_tiers_reproduce_goldens(spark, monkeypatch, zeroed):
+    """Each tier of the equality re-fetch (chosen by the count of
+    hash-mismatched keys) diagnoses the same mismatches: zeroing a tier's
+    key limit forces the next tier on the same fixture."""
+    for name in zeroed:
+        monkeypatch.setattr(plan, name, 0)
+    res = _validate_golden_table(spark)
+    got = [
+        (r.subject, r.rule_id, r.reason) for r in res.sorted_violations().collect()
+    ]
+    res.release()
     assert got == GOLDEN
 
 
