@@ -1823,16 +1823,17 @@ def pq_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch kNN join against the STANDING IVF-PQ index
     (similarity.write_pq_index → similarity.pq_knn_join): every 100th
     vector gets its 5 approximate nearest neighbors; candidates are
-    ranked by per-pair ADC over the m-BYTE codes riding the cell join
-    and only each query's refine·k shortlist fetches raw vectors for
-    the exact-cosine rerank — the kNN-graph cost model. The index is
-    rebuilt deterministically per call (pinned seed window, pinned
-    Lloyd iterations, frozen sidecar), so the full train → encode →
-    probe → pairwise-ADC → rerank composition is replayed in SQL —
-    closing round 4's last ungated operator (pq_knn_join was
-    pytest-parity only)."""
+    ranked by ADC over the m-BYTE codes in one per-cell cogroup and
+    only each query's refine·k shortlist fetches raw vectors for the
+    exact-cosine rerank — the kNN-graph cost model. The index build is
+    deterministic (pinned seed window, pinned Lloyd iterations, frozen
+    sidecar), so the full train → encode → probe → ADC → rerank
+    composition is replayed in SQL — closing round 4's last ungated
+    operator (pq_knn_join was pytest-parity only)."""
     import hashlib
+    import shutil
     import tempfile
+    import uuid
     from pathlib import Path as _P
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1852,14 +1853,22 @@ def pq_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the model sidecar is written LAST by write_pq_index, so its
     # _SUCCESS marker implies the codes are complete too
     if not (_P(path) / "model" / "_SUCCESS").exists():
+        # build into a private sibling, then rename it into place: two
+        # processes that both miss the marker never write into one
+        # directory, and the one whose rename loses drops its copy
+        build = f"{path}.{os.getpid()}.{uuid.uuid4().hex[:8]}"
         similarity.write_pq_index(
             emb,
-            path,
+            build,
             n_centroids=_ANN_N_CENT,
             m=_PQ_M,
             ks=_PQ_KS,
             n_iter=_ANN_PINNED_ITERS,
         )
+        try:
+            os.rename(build, path)
+        except OSError:
+            shutil.rmtree(build, ignore_errors=True)
     q = emb.filter(F.col("vec_id") % 100 == 0)
     return similarity.pq_knn_join(
         spark, path, q, emb, k=5, probes=_ANN_PROBES, refine=_PQ_REFINE

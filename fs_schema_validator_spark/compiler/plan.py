@@ -190,6 +190,9 @@ class CompiledPlan:
         self.tables = dict(tables)
         self.spark = df.sparkSession
         self._fused: DataFrame | None = None
+        # other DataFrames this plan persisted (equality-screen key sets);
+        # release() unpersists them with the fused projection
+        self._cached: list[DataFrame] = []
         self._observation = None  # created lazily in fused_projection
 
     # -- fused projection ---------------------------------------------------
@@ -320,6 +323,9 @@ class CompiledPlan:
         if self._fused is not None:
             self._fused.unpersist()
             self._fused = None
+        for df in self._cached:
+            df.unpersist()
+        self._cached = []
 
     def observed_metrics(self) -> dict:
         """Metrics latched by the fused pass's materialization (observe API).
@@ -436,6 +442,7 @@ class CompiledPlan:
                 .distinct()
                 .cache()
             )
+            self._cached.append(bad_keys)
             n_bad = bad_keys.count()
             if n_bad == 0:
                 # clean partition fast path: no array ever leaves the scan

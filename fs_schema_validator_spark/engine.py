@@ -118,9 +118,10 @@ class ValidationResult:
         return self._plan.observed_metrics()
 
     def release(self) -> None:
-        """Unpersist the plan's cached fused projection (long-lived
-        sessions — streaming foreachBatch, services — call this after the
-        batch's actions; one-shot CLIs can skip it)."""
+        """Unpersist everything the plan cached — the fused projection
+        and the equality screens' key sets (long-lived sessions —
+        streaming foreachBatch, services — call this after the batch's
+        actions; one-shot CLIs can skip it)."""
         self._plan.release()
 
     def ok_subjects(self) -> DataFrame:

@@ -1269,77 +1269,6 @@ def pq_partial_sums_arrow(
     )
 
 
-def pq_adc_pairs_arrow(
-    pairs_df: DataFrame,
-    codebooks: "np.ndarray",
-    qvec_col: str,
-    codes_col: str,
-    query_id_col: str,
-    id_col: str,
-) -> DataFrame:
-    """(qid, id, adist double) asymmetric distance for CANDIDATE PAIRS —
-    the batch-query side of PQ scoring: each row carries a query vector
-    and a corpus code word; the kernel unit-normalizes the queries
-    (shared cosine-family eligibility) and gathers the per-subspace
-    codewords to accumulate ||q_s − cb[s, code_s]||² in one vectorized
-    pass per batch. Rows with an ineligible query vector or malformed
-    codes get NULL adist (callers filter before ranking — Spark sorts
-    NULL FIRST ascending). Per-pair cost is O(dim) like a dot product;
-    the win over exact scoring is the PAYLOAD — m bytes of codes ride
-    the candidate join instead of dim×4 bytes of corpus vector, and the
-    raw corpus vectors are only fetched for the rerank shortlist."""
-    cb = codebooks.astype(np.float64)
-    m, ks, sub = cb.shape
-    dim = m * sub
-    q_field = pairs_df.schema[query_id_col]
-    id_field = pairs_df.schema[id_col]
-    out_schema = (
-        f"{query_id_col} {q_field.dataType.simpleString()}, "
-        f"{id_col} {id_field.dataType.simpleString()}, adist double"
-    )
-    src = pairs_df.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.col(qvec_col).alias("_qv"),
-        F.col(codes_col).alias("_c"),
-    )
-    sub_idx = np.arange(m)
-
-    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            arr = batch.column("_c")
-            if isinstance(arr, pa.ChunkedArray):  # pragma: no cover
-                arr = arr.combine_chunks()
-            un, qgood = _unit_rows_masked(batch.column("_qv"), dim)
-            starts, lengths, values, validity = _binary_views(arr)
-            good = qgood & validity & (lengths == m)
-            adist = np.full(len(starts), np.nan)
-            if good.any():
-                codes = values[starts[good][:, None] + sub_idx].astype(
-                    np.int64
-                )
-                u = un[good]
-                # per-subspace partials summed with np.sum over the m
-                # axis — the SAME reduction shape as the single-query
-                # LUT path (lt[...].sum(axis=1)); a sequential acc +=
-                # has a different fp association order and can flip a
-                # last-ulp tie at the refine shortlist boundary
-                parts = np.empty((len(u), m))
-                for s in range(m):
-                    diff = u[:, s * sub : (s + 1) * sub] - cb[s, codes[:, s]]
-                    parts[:, s] = (diff * diff).sum(axis=1)
-                adist[good] = parts.sum(axis=1)
-            out = pa.array(
-                np.ma.masked_array(adist, mask=~good), type=pa.float64()
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(query_id_col), batch.column(id_col), out],
-                names=[query_id_col, id_col, "adist"],
-            )
-
-    return src.mapInArrow(compute, out_schema)
-
-
 def pq_adc_scores_arrow(
     codes_df: DataFrame,
     lut: "np.ndarray",
@@ -1388,20 +1317,18 @@ def pairwise_cosine_arrow(
     query_id_col: str,
     id_col: str,
 ) -> DataFrame:
-    """(qid, id, cos double) exact cosine for CANDIDATE PAIRS — the
-    exact-scoring sibling of ``pq_adc_pairs_arrow`` with the same
-    (qid, id, vectors) join shape: each row carries a query vector and
-    a corpus vector and one vectorized pass computes
-    ``dot(q, c) / (|q| * |c|)`` per batch.
+    """(qid, id, cos double) exact cosine for CANDIDATE PAIRS: each row
+    carries a query vector and a corpus vector and one vectorized pass
+    computes ``dot(q, c) / (|q| * |c|)`` per batch.
 
     Role: the exact scorer for streams that ALREADY carry both vectors
-    per row — the rerank stages (shortlists of O(Q·refine·k)) and the
-    'pairs' A/B strategy of the kNN joins. It is NOT the corpus-wide
+    per row — the rerank stages (shortlists of O(Q·refine·k)) of
+    pq_knn_join and semantic_dedup_pq. It is NOT the corpus-wide
     hot path: measured (CHANGES.md, pairwise-cosine probe), shipping
     2×dim×4 B of vectors per candidate through the shuffle and Arrow
     IPC costs more than the interpreted HOF lambdas it replaces (kernel
     compute is 1.6 µs/row; the payload is the hot term), which is why
-    the kNN joins default to the cogrouped cell scorer
+    the kNN joins score candidates with the cogrouped cell scorer
     (cell_cosine_pairs_arrow — vectors cross the wire once per cell,
     not once per pair). Semantics mirror the HOF
     expression: a null / wrong-dimension vector on either side → NULL

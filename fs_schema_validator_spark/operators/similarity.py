@@ -7,8 +7,19 @@
   (orderBy+limit lets Catalyst run TakeOrderedAndProject — no full sort).
 * ``lsh_bucketed_topk`` — the scale path: random-hyperplane LSH buckets
   (sign bits of fixed pseudo-random projections), search only the query's
-  bucket (and optionally neighboring probes). Signature computation is a
-  JVM expression; bucketing is a groupBy-free filter on equality.
+  bucket (and optionally neighboring probes). Signatures come from one
+  BLAS matmul per Arrow batch; bucketing is a groupBy-free filter on
+  equality.
+* ``semantic_dedup`` / ``semantic_dedup_pq`` — SemDeDup within IVF cells,
+  scored per cell with BLAS (vectors) or screened from standing-index
+  codes.
+* ``ivf_knn_join`` / ``pq_knn_join`` — batch kNN joins: one cogroup on
+  the cell id scores every query's candidates per cell, so vectors cross
+  the wire once per cell, never once per candidate pair.
+
+Each operator has one scoring path. None scores per candidate pair:
+shipping both vectors on every candidate row costs more than the
+arithmetic (BENCH/BASELINE.md, "Batch-kNN scoring strategies").
 """
 
 from __future__ import annotations
@@ -75,20 +86,6 @@ def _projection_matrix(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return planes
 
 
-def hyperplane_signature(
-    vec: Column, planes: list[list[float]]
-) -> Column:
-    """Bit-pack sign(v·p_i) into a bigint bucket id — one expression."""
-    sig = F.lit(0).cast("bigint")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(_dot(vec, p) >= 0, F.lit(1 << i).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        sig = sig + bit
-    return sig
-
-
 def near_dup_pairs(
     df: DataFrame,
     dim: int,
@@ -99,7 +96,6 @@ def near_dup_pairs(
     id_col: str = "vec_id",
     seed: int = 42,
     digits: int = 5,
-    strategy: str = "arrow",
     max_bucket: int | None = 512,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at scale: multi-band
@@ -118,34 +114,16 @@ def near_dup_pairs(
     (band, chunk) ints, no self-join — and the exact score join touches
     only candidate participants.
 
-    strategy="arrow" (default): band keys from one BLAS matmul per Arrow
-    batch (see hyperplane_band_chunks_arrow) — the HOF expression form does
-    not codegen and runs ~100x slower. strategy="sql": pure-expression
-    fallback (one ≤63-bit signature per band)."""
-    bits_per_band = n_planes // bands
-    planes = _projection_matrix(dim, n_planes, seed)
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    if strategy == "arrow":
-        from ..functions.arrays import hyperplane_band_chunks_arrow
-
-        sigs = hyperplane_band_chunks_arrow(df, planes, bands, vec_col, id_col)
-    else:
-        if bits_per_band > 63:
-            raise ValueError("sql strategy supports at most 63 bits per band")
-        sigs = df.select(
-            F.col(id_col),
-            F.array(
-                *[
-                    hyperplane_signature(
-                        v, planes[i * bits_per_band : (i + 1) * bits_per_band]
-                    )
-                    for i in range(bands)
-                ]
-            ).alias("chunks"),
-        )
+    Band keys come from one BLAS matmul per Arrow batch (see
+    hyperplane_band_chunks_arrow); the HOF expression form does not
+    codegen and runs ~100x slower."""
+    from ..functions.arrays import hyperplane_band_chunks_arrow
     from ..functions.cache import track
     from .dedup import bucket_pairs
 
+    planes = _projection_matrix(dim, n_planes, seed)
+    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    sigs = hyperplane_band_chunks_arrow(df, planes, bands, vec_col, id_col)
     banded = sigs.select(
         F.col(id_col),
         F.posexplode(F.col("chunks")).alias("band", "chunk"),
@@ -190,7 +168,6 @@ def lsh_bucketed_topk(
     id_col: str = "vec_id",
     seed: int = 42,
     probes: int = 9,
-    strategy: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: score only rows in the query's LSH bucket plus
     its `probes-1` Hamming-distance-1 neighbor buckets (multi-probe LSH —
@@ -203,32 +180,26 @@ def lsh_bucketed_topk(
     signature (the intended layout at scale): the IN-list filter on the
     bucket id prunes file groups before the scan.
 
-    strategy="arrow" (default): signatures via the BLAS matmul kernel
+    Signatures come from the BLAS matmul kernel
     (hyperplane_band_chunks_arrow, bands=1 — one packed sig per row;
     the HOF expression form doesn't codegen, ~100x slower) with a
     broadcast semi-join from the probed bucket ids back to the table;
     at scale the bucketed-layout pruning replaces that join entirely.
-    strategy="sql": pure-expression signature, in-scan filter.
 
     When probes >= n_planes + 1 the probe set is exactly the Hamming<=1
     ball around the query's signature — the form the DuckDB oracle
     replays with bit_count(xor(sig, qsig)) <= 1."""
+    from ..functions.arrays import hyperplane_band_chunks_arrow
+
     dim = len(query)
     planes = _projection_matrix(dim, n_planes, seed)
     # probe order: flip the planes the query is closest to first
     probe_sigs = _probe_sigs(query, planes, probes)
-    if strategy == "arrow":
-        from ..functions.arrays import hyperplane_band_chunks_arrow
-
-        sigs = hyperplane_band_chunks_arrow(df, planes, 1, vec_col, id_col)
-        in_bucket = sigs.filter(
-            F.element_at(F.col("chunks"), 1).isin(probe_sigs)
-        ).select(id_col)
-        candidates = df.join(F.broadcast(in_bucket), id_col, "left_semi")
-    else:
-        v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        bucketed = df.withColumn("_sig", hyperplane_signature(v, planes))
-        candidates = bucketed.filter(F.col("_sig").isin(probe_sigs))
+    sigs = hyperplane_band_chunks_arrow(df, planes, 1, vec_col, id_col)
+    in_bucket = sigs.filter(
+        F.element_at(F.col("chunks"), 1).isin(probe_sigs)
+    ).select(id_col)
+    candidates = df.join(F.broadcast(in_bucket), id_col, "left_semi")
     return topk_cosine(candidates, query, k, vec_col, id_col)
 
 
@@ -568,8 +539,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     digits: int = 5,
-    max_bucket: int | None = 512,
-    strategy: str = "kernel",
     centroids: "np.ndarray | None" = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -583,26 +552,16 @@ def semantic_dedup(
     needs an order, and a per-row verdict needs a joinable key) — get a
     NULL cell and is_dup=false; they never enter the comparison.
 
-    strategy="kernel" (default, the scale path): one Arrow-matmul
-    assignment pass, ONE shuffle grouping each cell's rows, then a
-    per-cell NumPy kernel that computes the cosine block matrix with
-    BLAS (row blocks against all earlier rows, so memory stays
-    O(block × cell) while flops are the O(m²) SemDeDup already accepts
-    per cluster). No pair materialization, no interpreted per-pair HOF
-    — ~10x faster than the pairs form at 2k vectors and the gap grows
+    One Arrow-matmul assignment pass, ONE shuffle grouping each cell's
+    rows, then a per-cell NumPy kernel that computes the cosine block
+    matrix with BLAS (row blocks against all earlier rows, so memory
+    stays O(block × cell) while flops are the O(m²) SemDeDup already
+    accepts per cluster). No pair materialization, no interpreted
+    per-pair HOF, and no hot-cell cap — ~10x faster than verifying
+    materialized within-cell pairs at 2k vectors, and the gap grows
     quadratically. n_centroids grows with the corpus so cells stay
     bounded; at 10^12 rows the quantizer comes from
-    train_centroids_kmeans instead of the id-ordered seed sample.
-
-    strategy="pairs": materializes within-cell candidate pairs through
-    bucket_pairs (hot-cell cap: clique ≤ max_bucket + star tail) and
-    verifies each with the expression cosine — kept for differential
-    testing and for consumers that want the qualifying pairs
-    themselves. Both strategies flag the identical set whenever cells
-    fit under the cap."""
-    if strategy not in ("kernel", "pairs"):
-        # fail before the driver-side seed collect / tracked cache
-        raise ValueError(f"unknown strategy {strategy!r}")
+    train_centroids_kmeans instead of the id-ordered seed sample."""
     from ..functions.arrays import ivf_assign_arrow
     from ..functions.cache import track
 
@@ -618,55 +577,15 @@ def semantic_dedup(
     eligible = assigned.filter(
         F.col("cell").isNotNull() & F.col(id_col).isNotNull()
     )
-    if strategy == "kernel":
-        flagged = _cell_dedup_kernel(
-            df, eligible, threshold, vec_col, id_col, digits,
-            dim=centroids.shape[1],
-        )
-        out = assigned.join(flagged, id_col, "left")
-        return out.select(
-            id_col,
-            cell_out,
-            F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"),
-        )
-    from .dedup import bucket_pairs
-
-    cand = track(
-        bucket_pairs(
-            eligible, ["cell"], id_col, "id_a", "id_b", max_bucket
-        ).cache()
+    flagged = _cell_dedup_kernel(
+        df, eligible, threshold, vec_col, id_col, digits,
+        dim=centroids.shape[1],
     )
-    ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionByName(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    # no broadcast hints: with few cells the participant set is most of
-    # the corpus (every cell of size >= 2 contributes all its members),
-    # so a forced broadcast would collect O(N) ids on the driver — let
-    # AQE pick the join strategy from actual sizes
-    participants = df.join(ids, id_col, "left_semi")
-    left = participants.select(F.col(id_col).alias("id_a"), v.alias("va"))
-    right = participants.select(F.col(id_col).alias("id_b"), v.alias("vb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (
-        _norm(F.col("va")) * _norm(F.col("vb"))
-    )
-    dup_ids = (
-        cand.join(left, "id_a")
-        .join(right, "id_b")
-        .select("id_b", F.round(cos, digits).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    flagged = assigned.join(
-        dup_ids.withColumn("_dup", F.lit(True)), id_col, "left"
-    )
-    return flagged.select(
+    out = assigned.join(flagged, id_col, "left")
+    return out.select(
         id_col,
         cell_out,
-        F.coalesce(F.col("_dup"), F.lit(False)).alias("is_dup"),
+        F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"),
     )
 
 
@@ -683,7 +602,7 @@ def _cell_dedup_kernel(
     """(id, is_dup) for every eligible row: per-cell blockwise cosine
     flags via applyInPandas. Rows are ordered by id inside the cell;
     a row is a dup if any earlier row's cosine (rounded to `digits`, the
-    same round-before-threshold contract as the pairs form) reaches the
+    same round-before-threshold contract as the SQL oracle) reaches the
     threshold. Block-at-a-time `X[block] @ X[:upper].T` keeps peak memory
     O(block × cell) on a degenerate giant cell instead of O(cell²).
 
@@ -691,8 +610,7 @@ def _cell_dedup_kernel(
     strict == dim mask guarantees it), so the cell matrix is
     rectangular. Rounding is half-away-from-zero, NOT np.round's
     half-to-even — Spark's F.round and DuckDB's round() both round ties
-    away from zero, and the pairs strategy / the SQL oracle replay go
-    through those."""
+    away from zero, and the SQL oracle replay goes through those."""
     import numpy as np
     import pandas as pd
 
@@ -747,7 +665,7 @@ def semantic_dedup_pq(
 ) -> DataFrame:
     """SemDeDup against a write_pq_index STANDING index — the same
     (id, cell, is_dup) contract and the same flag set as
-    semantic_dedup(strategy="kernel"), at the index's cost model:
+    semantic_dedup, at the index's cost model:
 
     * the within-cell screen reads m-byte CODES + the 8-byte stored
       quantization error, never vectors — the cell-grouped relation
@@ -774,9 +692,11 @@ def semantic_dedup_pq(
 
     The index's coarse quantizer defines the cells — build the index
     with the same `centroids` you would hand semantic_dedup for
-    byte-identical output. Rows of `df` absent from the index
-    (ineligible vectors, null ids, unindexed newcomers) report NULL
-    cell / is_dup false, exactly the semantic_dedup convention for
+    byte-identical output. Only indexed rows whose id is in `df` are
+    compared, so for any `df` drawn from the indexed corpus the flags
+    are those of semantic_dedup(df). Rows of `df` absent from the
+    index (ineligible vectors, null ids, unindexed newcomers) report
+    NULL cell / is_dup false, exactly the semantic_dedup convention for
     non-participants."""
     from ..functions.arrays import (
         pairwise_cosine_arrow,
@@ -786,12 +706,17 @@ def semantic_dedup_pq(
 
     coarse, cb = _load_pq_model(spark, path)
     codes = spark.read.parquet(f"{path}/codes")
+    # screen only the indexed rows that are also in `df`: a keeper the
+    # caller left out must neither prove a certain dup nor drop an
+    # uncertain pair at the vector fetch, so both branches answer for
+    # semantic_dedup(df) on the index's quantizer
+    in_df = codes.join(df.select(id_col), id_col, "left_semi")
     # the screen feeds two branches (certain + uncertain) — cache it or
     # the O(cell²) code kernel runs twice per action (the repo's
     # don't-refeed-expensive-lineage rule)
     screen = track(
         pq_code_screen_pairs_arrow(
-            codes, cb, threshold, digits, id_col=id_col
+            in_df, cb, threshold, digits, id_col=id_col
         ).cache()
     )
     certain = screen.filter(F.col("certain")).select(
@@ -1256,7 +1181,6 @@ def pq_knn_join(
     id_col: str = "vec_id",
     query_id_col: str = "qid",
     digits: int = 5,
-    scoring: str = "cell",
     corpus_blocks: int = 1,
 ) -> DataFrame:
     """(qid, vec_id, cos) — batch kNN against a write_pq_index layout:
@@ -1266,16 +1190,16 @@ def pq_knn_join(
     the m-BYTE codes; only each query's refine·k shortlist fetches raw
     corpus vectors for the exact-cosine rerank.
 
-    scoring="cell" (default): ONE cogroup of (qid, cell, qvec) against
-    the cell-partitioned code table; each query's LUT is built once per
+    Scoring is ONE cogroup of (qid, cell, qvec) against the
+    cell-partitioned code table; each query's LUT is built once per
     probed cell and only its per-cell (adist ASC, id ASC) top-refine·k
     leaves the kernel (cell_pq_adc_topk_arrow) — the query vector
     crosses the wire `probes` times and the scored stream is
-    O(queries × probes × refine·k), not O(candidates). scoring="pairs"
-    keeps the round-4 shape (cell equi-join, per-pair ADC kernel, the
-    query vector riding EVERY candidate row) as the A/B reference; both
-    produce identical rows (the per-cell top-k is a superset of the
-    global shortlist and the fp association orders match bit-for-bit).
+    O(queries × probes × refine·k), not O(candidates). The per-cell
+    top-k is a superset of the global shortlist, so the window below
+    keeps exactly the rows a global ADC ranking would; ``corpus_blocks
+    > 1`` salts each cell into bounded sub-blocks (identical output,
+    more tasks).
 
     vs ivf_knn_join (exact scoring of every candidate): the corpus-side
     payload shrinks ~dim·4/m-fold and the corpus vector fetch drops
@@ -1289,46 +1213,25 @@ def pq_knn_join(
         cell_pq_adc_topk_arrow,
         ivf_probe_cells_arrow,
         pairwise_cosine_arrow,
-        pq_adc_pairs_arrow,
     )
 
-    if scoring not in ("cell", "pairs"):
-        raise ValueError(f"scoring must be 'cell' or 'pairs', got {scoring!r}")
-    if corpus_blocks > 1 and scoring != "cell":
-        raise ValueError("corpus_blocks requires scoring='cell'")
     coarse, cb = _load_pq_model(spark, path)
     codes = spark.read.parquet(f"{path}/codes")
     qv = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qd")
     )
-    if scoring == "cell":
-        q_cells = ivf_probe_cells_arrow(
-            queries.filter(F.col(id_col).isNotNull()),
-            coarse,
-            probes,
-            vec_col,
-            id_col,
-            keep_vec=True,
-        ).withColumnRenamed(id_col, query_id_col)
-        scored = cell_pq_adc_topk_arrow(
-            q_cells, codes, cb, refine * k, query_id_col, id_col,
-            corpus_blocks=corpus_blocks,
-        )
-    else:
-        q_cells = ivf_probe_cells_arrow(
-            queries.filter(F.col(id_col).isNotNull()),
-            coarse,
-            probes,
-            vec_col,
-            id_col,
-        ).withColumnRenamed(id_col, query_id_col)
-        cand = q_cells.join(codes, "cell").select(
-            query_id_col, id_col, "codes"
-        )
-        pairs = cand.join(qv, query_id_col)
-        scored = pq_adc_pairs_arrow(
-            pairs, cb, "_qd", "codes", query_id_col, id_col
-        ).filter(F.col("adist").isNotNull())
+    q_cells = ivf_probe_cells_arrow(
+        queries.filter(F.col(id_col).isNotNull()),
+        coarse,
+        probes,
+        vec_col,
+        id_col,
+        keep_vec=True,
+    ).withColumnRenamed(id_col, query_id_col)
+    scored = cell_pq_adc_topk_arrow(
+        q_cells, codes, cb, refine * k, query_id_col, id_col,
+        corpus_blocks=corpus_blocks,
+    )
     w_short = Window.partitionBy(query_id_col).orderBy(
         F.asc("adist"), F.asc(id_col)
     )
@@ -1363,7 +1266,6 @@ def ivf_knn_join(
     query_id_col: str = "qid",
     digits: int = 5,
     centroids: "np.ndarray | None" = None,
-    scoring: str = "cell",
     corpus_blocks: int = 1,
 ) -> DataFrame:
     """(qid, vec_id, cos) — approximate k nearest corpus neighbors for
@@ -1371,24 +1273,16 @@ def ivf_knn_join(
     kNN-join) primitive the single-query ivf_topk family can't express
     without a driver-side loop.
 
-    Shape (scoring="cell", the default): corpus vectors get their home
-    cell, query vectors their top-`probes` cells — both keep_vec Arrow
-    passes, so (id, cell, vec) shuffles straight into the cell with no
-    id-keyed vector refetch — and ONE cogroup on the cell id both
+    Shape: corpus vectors get their home cell, query vectors their
+    top-`probes` cells — both keep_vec Arrow passes, so (id, cell, vec)
+    shuffles straight into the cell with no id-keyed vector refetch —
+    and ONE cogroup on the cell id both
     generates and scores the candidates as per-cell BLAS block matmuls
     (cell_cosine_pairs_arrow). No cross-join, no per-query job, and no
     per-pair vector materialization: each corpus vector crosses the
     wire once, each query vector `probes` times, and the per-pair
     payload is the 24-byte (qid, id, cos) triple. A per-query window
     keeps the top k (ties on id).
-
-    scoring="pairs" keeps the round-4 shape — cell equi-join then a
-    per-pair Arrow kernel (pairwise_cosine_arrow) over candidates
-    carrying both vectors. Measured (tools/bench_knn_scoring.py): the
-    pair stream ships dim×4 B per vector per candidate, which makes it
-    net slower than the cogroup at every probed size; it stays as the
-    A/B reference and for callers whose candidate stream is already
-    materialized.
 
     Scale shape: the only corpus-wide shuffle is the cell cogroup;
     each query meets ~probes/n_centroids of the corpus, exactly the
@@ -1400,27 +1294,19 @@ def ivf_knn_join(
     filter qid != vec_id.
 
     Fully deterministic and SQL-replayable: id-ordered seeds, stable
-    probe/assignment tie-breaks, rounded scores. The two scorings use
-    different fp association orders (normalize-then-BLAS vs
-    dot-over-norm-product), so "identical rows" holds up to the
-    rounding contract — a cosine sitting within one ulp of a
-    half-away boundary could theoretically round apart between them,
-    the same last-ulp class the engine already accepts vs its DuckDB
-    oracles (probability ~1e-10/pair; the driver gate `knn_join_topk`
-    holds for either scoring)."""
+    probe/assignment tie-breaks, rounded scores. The kernel normalizes
+    then multiplies while the SQL replay divides the dot product by the
+    norm product, so the two agree up to the rounding contract — a
+    cosine within one ulp of a half-away boundary could round apart,
+    the same last-ulp class the engine accepts against all its DuckDB
+    oracles (probability ~1e-10/pair; the driver gate is
+    `knn_join_topk`)."""
     from ..functions.arrays import (
         cell_cosine_pairs_arrow,
         ivf_assign_arrow,
         ivf_probe_cells_arrow,
-        pairwise_cosine_arrow,
     )
 
-    if scoring not in ("cell", "pairs"):
-        raise ValueError(f"scoring must be 'cell' or 'pairs', got {scoring!r}")
-    if corpus_blocks > 1 and scoring != "cell":
-        # hot-cell salting only exists in the cogroup path; silently
-        # dropping it would strip the task-size bound the caller asked for
-        raise ValueError("corpus_blocks requires scoring='cell'")
     # a trained quantizer (train_centroids_kmeans) spreads hot cells —
     # the mitigation when the seed sample would crowd one cell; the SQL-
     # replayable driver gate uses the deterministic seed default
@@ -1439,9 +1325,8 @@ def ivf_knn_join(
         coarse = centroids
     else:
         coarse = _collect_seed_matrix(corpus, n_centroids, vec_col, id_col)
-    keep = scoring == "cell"
     corpus_cells = ivf_assign_arrow(
-        corpus, coarse, vec_col, id_col, keep_vec=keep
+        corpus, coarse, vec_col, id_col, keep_vec=True
     ).filter(F.col("cell").isNotNull() & F.col(id_col).isNotNull())
     q_cells = ivf_probe_cells_arrow(
         queries.filter(F.col(id_col).isNotNull()),
@@ -1449,37 +1334,21 @@ def ivf_knn_join(
         probes,
         vec_col,
         id_col,
-        keep_vec=keep,
+        keep_vec=True,
     ).withColumnRenamed(id_col, query_id_col)
 
-    if scoring == "cell":
-        # the kernel rounds (portable half-away-from-zero — the same
-        # value F.round/DuckDB round produce) and keeps each query's
-        # per-cell top-k, so the emitted stream is O(Q·probes·k); the
-        # global window below reduces the per-cell winners to the
-        # identical final top-k
-        scored = cell_cosine_pairs_arrow(
-            q_cells,
-            corpus_cells,
-            coarse.shape[1],
-            query_id_col,
-            id_col,
-            corpus_blocks=corpus_blocks,
-            per_cell_topk=k,
-            round_digits=digits,
-        )
-    else:
-        cand = q_cells.join(corpus_cells, "cell").select(
-            query_id_col, id_col
-        )
-        qv = queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qv")
-        )
-        cv = corpus.select(F.col(id_col), F.col(vec_col).alias("_cv"))
-        pairs = cand.join(qv, query_id_col).join(cv, id_col)
-        scored = pairwise_cosine_arrow(
-            pairs, coarse.shape[1], "_qv", "_cv", query_id_col, id_col
-        ).select(
-            query_id_col, id_col, F.round(F.col("cos"), digits).alias("cos")
-        )
+    # the kernel rounds (portable half-away-from-zero — the same value
+    # F.round/DuckDB round produce) and keeps each query's per-cell
+    # top-k, so the emitted stream is O(Q·probes·k); the global window
+    # below reduces the per-cell winners to the identical final top-k
+    scored = cell_cosine_pairs_arrow(
+        q_cells,
+        corpus_cells,
+        coarse.shape[1],
+        query_id_col,
+        id_col,
+        corpus_blocks=corpus_blocks,
+        per_cell_topk=k,
+        round_digits=digits,
+    )
     return _per_query_topk(scored, query_id_col, id_col, k)

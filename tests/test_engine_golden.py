@@ -136,6 +136,24 @@ def test_equality_refetch_tiers_reproduce_goldens(spark, monkeypatch, zeroed):
     assert got == GOLDEN
 
 
+def test_release_unpersists_everything_validation_persisted(spark):
+    """ValidationResult.release() alone — without
+    functions.cache.release_all() — leaves no RDD the validation
+    persisted: the fused projection and the equality screen's
+    mismatch-key set both go (streaming micro-batches and resumed runs
+    call only release())."""
+
+    def persisted() -> int:
+        return int(spark.sparkContext._jsc.getPersistentRDDs().size())
+
+    before = persisted()
+    res = _validate_golden_table(spark)
+    res.sorted_violations().collect()
+    assert persisted() >= before + 2
+    res.release()
+    assert persisted() == before
+
+
 def test_verdict(result):
     assert result.okay() is False
     assert result.exit_code() == 1

@@ -368,11 +368,12 @@ def test_training_and_query_assignment_agree(rows, offset):
     ),
     offset=st.integers(0, 3),
 )
-def test_pq_adc_pairs_kernel_property(rows, offset):
-    """pq_adc_pairs_arrow's inner math must match a direct NumPy replay
-    on arbitrary (query vector, codes) pairs — null/wrong-dim/zero-norm
-    queries and null/wrong-length codes get NULL adist; SLICED arrays
-    honored (the binary-views offset class)."""
+def test_pq_adc_gather_sliced_views_property(rows, offset):
+    """The vectorized ADC codeword gather over ``_binary_views`` must
+    match a direct per-row NumPy replay on arbitrary (query vector,
+    codes) rows — null/wrong-dim/zero-norm queries and null/wrong-length
+    codes get NULL adist; SLICED arrays honored (the binary-views offset
+    class every code-reading kernel depends on)."""
     from fs_schema_validator_spark.functions.arrays import (
         _binary_views,
         _unit_rows_masked,
@@ -404,8 +405,8 @@ def test_pq_adc_pairs_kernel_property(rows, offset):
         ]
         expect[i] = np.sum(parts)
 
-    # drive the kernel's compute path via its building blocks on the
-    # same arrays (the mapInArrow wrapper is covered by the Spark tests)
+    # the vectorized gather the code-reading kernels use, on the same
+    # arrays (their mapInArrow wrappers are covered by the Spark tests)
     sub_idx = np.arange(m)
     adist = np.full(len(qarr), np.nan)
     if good.any():

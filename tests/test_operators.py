@@ -1226,12 +1226,11 @@ def _vec(i: int, dim: int = 64) -> list:
     return [rng.uniform(-1.0, 1.0) for _ in range(dim)]
 
 
-@pytest.mark.parametrize("strategy", ["kernel", "pairs"])
-def test_semantic_dedup_flags_planted_copies(spark, strategy):
-    """SemDeDup keep-first semantics under BOTH strategies: an exact
-    copy under a larger id is flagged, the original is not; random
-    non-dup rows are not flagged; null-vector, wrong-dimension, and
-    null-id rows get a NULL cell and never pair."""
+def test_semantic_dedup_flags_planted_copies(spark):
+    """SemDeDup keep-first semantics: an exact copy under a larger id is
+    flagged, the original is not; random non-dup rows are not flagged;
+    null-vector, wrong-dimension, and null-id rows get a NULL cell and
+    never pair."""
     rows = [(i, _vec(i)) for i in range(40)]
     rows += [(1000 + i, _vec(i)) for i in range(3)]     # exact copies
     rows += [(2000, None), (2001, [1.0, 2.0, 3.0])]     # degenerate rows
@@ -1243,8 +1242,7 @@ def test_semantic_dedup_flags_planted_copies(spark, strategy):
     out = {
         r.vec_id: r
         for r in similarity.semantic_dedup(
-            emb, n_centroids=4, threshold=0.95, max_bucket=None,
-            strategy=strategy,
+            emb, n_centroids=4, threshold=0.95
         ).collect()
     }
     assert len(out) == 47
@@ -1261,52 +1259,6 @@ def test_semantic_dedup_flags_planted_copies(spark, strategy):
         assert out[bad].cell is None and not out[bad].is_dup
     # the null-id copy of vec 5 must NOT flag vec 5 (it never pairs)
     assert not out[5].is_dup
-
-
-def test_semantic_dedup_strategies_agree(spark):
-    """Differential: the kernel (BLAS block) and pairs (bucket_pairs +
-    expression cosine) strategies flag the identical set on a mixed
-    fixture with planted copies across multiple cells."""
-    rows = [(i, _vec(i)) for i in range(60)]
-    rows += [(500 + i, _vec(i * 7)) for i in range(6)]  # copies, scattered
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<double>"
-    )
-    runs = {
-        s: sorted(
-            (r.vec_id, r.cell, r.is_dup)
-            for r in similarity.semantic_dedup(
-                emb, n_centroids=8, threshold=0.9, max_bucket=None,
-                strategy=s,
-            ).collect()
-        )
-        for s in ("kernel", "pairs")
-    }
-    assert runs["kernel"] == runs["pairs"]
-    assert sum(d for _, _, d in runs["kernel"]) == 6
-
-
-def test_semantic_dedup_cap_star_pairs_still_flag_tail(spark):
-    """Pairs strategy with a hot cell larger than max_bucket: the star
-    tail (keeper = min id) must still flag every exact-copy member —
-    the keeper-member cosine is 1.0, so capping trades pair scores, not
-    dup recall. (The kernel strategy has no cap; it is blockwise.)"""
-    base = _vec(0)
-    rows = [(i, base) for i in range(20)]            # one 20-member clique
-    rows += [(100 + i, _vec(50 + i)) for i in range(10)]
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<double>"
-    )
-    out = {
-        r.vec_id: r.is_dup
-        for r in similarity.semantic_dedup(
-            emb, n_centroids=2, threshold=0.95, max_bucket=4,
-            strategy="pairs",
-        ).collect()
-    }
-    assert not out[0]                                # keeper survives
-    assert all(out[i] for i in range(1, 20))         # every copy flagged
-    assert not any(out[100 + i] for i in range(10))
 
 
 def test_semantic_dedup_kernel_blockwise_matches_small_blocks(spark):
@@ -2517,12 +2469,10 @@ def test_ivf_knn_join_accepts_trained_quantizer(spark):
         )
 
 
-def test_ivf_knn_join_cell_vs_pairs_scoring_identical(spark):
-    """The cogrouped cell-BLAS scorer and the per-pair Arrow kernel are
-    two physical strategies for the SAME logical join — every (qid,
-    vec_id, cos) row must be identical, including with the corpus side
-    salted into sub-blocks (corpus_blocks changes task boundaries,
-    never results)."""
+def test_ivf_knn_join_corpus_blocks_identical(spark):
+    """Salting the corpus side of the cell cogroup into sub-blocks
+    changes task boundaries, never results: every (qid, vec_id, cos)
+    row must be identical with corpus_blocks=3."""
     import random
 
     from fs_schema_validator_spark.operators import similarity
@@ -2545,17 +2495,15 @@ def test_ivf_knn_join_cell_vs_pairs_scoring_identical(spark):
             ).collect()
         )
 
-    cell = rows_of(scoring="cell")
-    assert cell == rows_of(scoring="pairs")
-    assert cell == rows_of(scoring="cell", corpus_blocks=3)
-    assert len(cell) > 0
+    base = rows_of()
+    assert base == rows_of(corpus_blocks=3)
+    assert len(base) > 0
 
 
-def test_pq_knn_join_cell_vs_pairs_scoring_identical(spark, tmp_path):
-    """The cogrouped per-cell ADC-top-k scorer and the per-pair ADC
-    kernel must produce the identical kNN join (the per-cell shortlist
-    is a superset of the global shortlist and the fp association
-    orders match bit-for-bit)."""
+def test_pq_knn_join_corpus_blocks_identical(spark, tmp_path):
+    """The per-cell ADC-top-k cogroup must produce the identical kNN
+    join when each cell's codes are salted into sub-blocks (each
+    block's top-k is a superset of its share of the cell's top-k)."""
     import random
 
     from fs_schema_validator_spark.operators import similarity
@@ -2571,19 +2519,50 @@ def test_pq_knn_join_cell_vs_pairs_scoring_identical(spark, tmp_path):
     similarity.write_pq_index(emb, path, n_centroids=8, m=4, ks=8, n_iter=2)
     queries = emb.filter(F.col("vec_id") % 9 == 0)
 
-    def rows_of(strategy, **kw):
+    def rows_of(**kw):
         return sorted(
             (r.qid, r.vec_id, r.cos)
             for r in similarity.pq_knn_join(
-                spark, path, queries, emb, k=4, probes=3, refine=2,
-                scoring=strategy, **kw,
+                spark, path, queries, emb, k=4, probes=3, refine=2, **kw
             ).collect()
         )
 
-    cell = rows_of("cell")
-    assert cell == rows_of("pairs")
-    assert cell == rows_of("cell", corpus_blocks=3)
-    assert len(cell) > 0
+    base = rows_of()
+    assert base == rows_of(corpus_blocks=3)
+    assert len(base) > 0
+
+
+@pytest.mark.parametrize(
+    "name", ["knn_join_topk", "pq_knn_join_topk", "semantic_dup_flags"]
+)
+def test_similarity_query_matches_duckdb_oracle(spark, name):
+    """Each similarity operator's one scoring path against its
+    independent DuckDB replay: the driver query on the smoke-scale
+    fixture vs its oracle_sql(), compared the way the driver gate
+    compares (same column names; order-insensitive normalized rows)."""
+    from pathlib import Path
+
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from tools.oracle_parity import norm_rows
+    from tools.plan_audit import SF_DIR
+
+    # the smoke-scale fixture sits beside the audit's sf0.01 directory
+    sf_dir = str(Path(SF_DIR).with_name("sf0.001"))
+    sdf = entrymod.queries()[name](spark, sf_dir)
+    got = norm_rows(sdf.columns, sdf.collect())
+
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    rel = con.sql(entrymod.oracle_sql()[name])
+    dcols = [d[0] for d in rel.description]
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert got == norm_rows(dcols, rel.fetchall())
+    assert len(got) > 0
 
 
 def test_semantic_dedup_pq_matches_all_pairs_kernel(spark, tmp_path):
@@ -2651,6 +2630,44 @@ def test_semantic_dedup_pq_matches_all_pairs_kernel(spark, tmp_path):
             if r.vec_id is not None
         }
         assert a == b, thr
+
+    # SUBSET df whose dup keepers are left out, on an index with EXACT
+    # codes: 12 distinct vectors, all among the ks=16 seed rows, so qerr
+    # is 0 and the screen proves copies certain from codes alone. Ids
+    # 20-24 copy 0-4; `sub` drops 0-4, so only its own rows may prove or
+    # verify a dup and the copies become keepers — semantic_dedup(sub)
+    # on the index quantizer
+    exact = spark.createDataFrame(
+        [(i, _vec(4200 + i)) for i in range(12)]
+        + [(20 + i, _vec(4200 + i)) for i in range(5)],
+        "vec_id bigint, embedding array<float>",
+    )
+    xpath = str(tmp_path / "sdidx_exact")
+    similarity.write_pq_index(exact, xpath, n_centroids=2, m=8, ks=16)
+    full = {
+        r.vec_id
+        for r in similarity.semantic_dedup_pq(
+            spark, xpath, exact, threshold=0.95
+        ).collect()
+        if r.is_dup
+    }
+    assert full == {20, 21, 22, 23, 24}
+    sub = exact.filter(F.col("vec_id") >= 5)
+    coarse = similarity._load_pq_model(spark, xpath)[0]
+    want = {
+        r.vec_id: (r.cell, r.is_dup)
+        for r in similarity.semantic_dedup(
+            sub, threshold=0.95, centroids=coarse
+        ).collect()
+    }
+    got = {
+        r.vec_id: (r.cell, r.is_dup)
+        for r in similarity.semantic_dedup_pq(
+            spark, xpath, sub, threshold=0.95
+        ).collect()
+    }
+    assert not any(d for _, d in want.values())
+    assert got == want
 
 
 def test_append_token_dedup_equals_full_rebuild(spark, tmp_path):

@@ -34,8 +34,8 @@ from fs_schema_validator_spark.operators import similarity  # noqa: E402
 from fs_schema_validator_spark.functions.arrays import (  # noqa: E402
     pairwise_cosine_arrow,
 )
-from tools.bench_knn_scoring import build_corpus  # noqa: E402
 
+DIM = 64
 K = 10
 PROBES = 6
 REFINE = 16
@@ -53,6 +53,56 @@ def shuffle_bytes(ui: str) -> tuple[int, int]:
         sum(s.get("shuffleWriteBytes", 0) for s in stages),
         sum(s.get("shuffleReadBytes", 0) for s in stages),
     )
+
+
+def build_corpus(
+    spark, n: int, n_clusters: int = 16, noise: float = 1.0,
+    manifold: bool = False,
+):
+    """n DIM-dim float32 vectors, two deterministic geometries. Default:
+    a planted cluster direction (id % n_clusters) plus a per-row
+    pseudo-random component of `noise` amplitude, for probes that only
+    need volume (tools/bench_semantic_pq.py). `manifold=True`: a smooth
+    1-D curve through the sphere (phase advances with id) plus tiny
+    jitter, so true nearest neighbors are the adjacent ids (cos 0.998
+    at distance 1, noise floor by distance 50) — the LOCAL structure
+    real embedding spaces have, which the kNN-graph recall probe needs
+    (discrete micro-clusters tie-degenerate the PQ codes: every member
+    quantizes identically and recall measures tie-breaking, not the
+    index).
+    Never zero-norm (id+1 keeps row 0 off the all-zero vector)."""
+    if manifold:
+        comp = lambda i: (
+            F.sin((F.col("id") + 1) * 0.002 * (i * 0.37 + 1)) * 1.5
+            + F.sin((F.col("id") + 1) * i * 0.618) * 0.05
+        ).cast("float")
+    else:
+        # hash-based components: sin(id * c * i) noise ALIASES (ids ~10
+        # apart share phase mod 2π and come out near-duplicate — it
+        # poisoned the semantic-dedup probe with 75% phantom dups);
+        # sin(xxhash64(...)) is effectively uniform and collision-free
+        comp = lambda i: (
+            F.sin(
+                F.xxhash64(F.lit("c"), F.col("id") % n_clusters, i)
+                .cast("double")
+            )
+            * 1.5
+            + F.sin(F.xxhash64(F.lit("n"), F.col("id"), i).cast("double"))
+            * noise
+        ).cast("float")
+    df = (
+        spark.range(n)
+        .select(
+            F.col("id").alias("vec_id"),
+            F.transform(
+                F.sequence(F.lit(1), F.lit(DIM)), comp
+            ).alias("embedding"),
+        )
+        .repartition(32)
+        .persist()
+    )
+    df.count()
+    return df
 
 
 def main() -> int:
@@ -96,7 +146,7 @@ def main() -> int:
         F.broadcast(sample)
     )
     exact_scored = pairwise_cosine_arrow(
-        pairs, 64, "_qv", "_cv", "qid", "vec_id"
+        pairs, DIM, "_qv", "_cv", "qid", "vec_id"
     ).filter(F.col("qid") != F.col("vec_id"))
     exact = similarity._per_query_topk(
         exact_scored.select(

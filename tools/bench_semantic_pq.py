@@ -26,8 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from fs_schema_validator_spark.session import get_spark  # noqa: E402
 from fs_schema_validator_spark.operators import similarity  # noqa: E402
-from tools.bench_knn_scoring import build_corpus  # noqa: E402
-from tools.bench_knn_graph import shuffle_bytes  # noqa: E402
+from tools.bench_knn_graph import build_corpus, shuffle_bytes  # noqa: E402
 
 THRESHOLD = 0.95
 
@@ -101,7 +100,6 @@ def main() -> int:
         return (
             similarity.semantic_dedup(
                 corpus, threshold=THRESHOLD, centroids=coarse,
-                max_bucket=None,
             )
             .agg(F.sum(F.col("is_dup").cast("long")), F.count("*"))
             .collect()
