@@ -8,16 +8,25 @@ whole-stage codegen; there is no per-row Python anywhere on this path.
 
 Design decisions (scale-driven):
 
-* **Type strictness is compile-time.** The checker is compiled against the
-  column's declared ``DataType``. A declared-type mismatch compiles to a
-  constant "Input should be a valid X" violation; value constraints under a
-  mismatched type are never evaluated (mirrors the reference's
-  report-type-error-only behavior for strict types,
-  /root/reference/fs_schema_validator/schemas/json.py:55,74,91,117).
+* **Type strictness is compile-time for typed columns.** The checker is
+  compiled against the column's declared ``DataType``. A declared-type
+  mismatch compiles to a constant "Input should be a valid X" violation;
+  value constraints under a mismatched type are never evaluated (the
+  reference reports only the type error for strict types,
+  fs_schema_validator/schemas/json.py:55,74,91,117).
+* **VARIANT is one more declared type.** A column holding JSON text keeps
+  its type per value, so ``json_column_violations`` parses it with
+  ``try_parse_json`` and compiles the same spec against ``VariantType``.
+  Every ``_compile_<kind>`` serves both value models: on VARIANT the type
+  test moves to run time (``schema_of_variant`` tells BIGINT / STRING /
+  DECIMAL / BOOLEAN / ARRAY / OBJECT apart per value, so "1" is still not
+  an int), constraints read ``try_cast`` values, and composites recurse
+  through ``array<variant>``, ``map<string, variant>`` and
+  ``try_variant_get``. A missing key or a JSON null is null.
 * **Paths are dynamic Columns.** Array-element paths carry the element
-  index (``array.0`` — reference renders dotted paths at
+  index (``array.0`` — the reference renders dotted paths,
   schemas/json.py:249-261), so the path argument is a Column, built with
-  ``concat`` inside ``transform`` lambdas.
+  ``concat`` inside ``transform`` lambdas. A root child has no leading dot.
 * **Null = missing.** In a table a null non-nullable value reports
   "Field required" (the reference's missing-attr reason); ``nullable``
   specs accept null and skip inner checks.
@@ -42,9 +51,25 @@ from . import messages as M
 ERR_SCHEMA = "array<struct<path:string,msg:string>>"
 
 Checker = Callable[[Column, Column], Column]
+Conds = list[tuple[Column, Column | str]]
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FLOATING = (T.FloatType, T.DoubleType)
+
+# Scalar kind -> (declared Spark types, schema_of_variant test, try_cast type).
+_SCALARS: dict[str, tuple[tuple[type, ...], Callable[[Column], Column], str]] = {
+    "bool": ((T.BooleanType,), lambda t: t == "BOOLEAN", "boolean"),
+    "int": (_INTEGRAL, lambda t: t == "BIGINT", "bigint"),
+    # JSON decimals parse as DECIMAL(p,s), big or scientific ones as DOUBLE;
+    # a JSON integer (BIGINT) is not a float — StrictFloat semantics.
+    "float": (
+        (*_FLOATING, T.DecimalType),
+        lambda t: t.startswith("DECIMAL") | (t == "DOUBLE") | (t == "FLOAT"),
+        "double",
+    ),
+    "str": ((T.StringType,), lambda t: t == "STRING", "string"),
+}
+_SCALAR_SPECS = (S.BoolSpec, S.IntSpec, S.FloatSpec, S.StrSpec, S.LiteralSpec)
 
 
 def empty_errors() -> Column:
@@ -65,18 +90,77 @@ def _const_error(msg: str) -> Checker:
     return check
 
 
-def _collect_with_path(path: Column, conds: list[tuple[Column, Column | str]]) -> Column:
+def _collect_with_path(path: Column, conds: Conds) -> Column:
     if not conds:
         return empty_errors()
     items = [F.when(cond, _err(path, msg)) for cond, msg in conds]
     return F.array_compact(F.array(*items))
 
 
-def _wrap_nullable(spec: S.Spec, inner: Checker) -> Checker:
+def _child_path(path: Column, seg: Column, dtype: T.DataType) -> Column:
+    """Dotted child path of a `dtype` value; a ROOT child renders bare
+    ('0', 'key', 'int'), not '.0' — the reference joins pydantic loc tuples
+    with '.' so a root-level element has no leading dot
+    (schemas/json.py:249-261), and the byte-stable message parity contract
+    includes paths. Only a JSON document or a row (a VARIANT or a struct)
+    can be the root; any other typed value sits under a named column, so
+    its child paths skip the root test."""
+    if not isinstance(dtype, (T.VariantType, T.StructType)):
+        return F.concat(path, F.lit("."), seg)
+    return F.when(path == "", seg).otherwise(F.concat(path, F.lit("."), seg))
+
+
+def _is_variant(dtype: T.DataType) -> bool:
+    return isinstance(dtype, T.VariantType)
+
+
+def _guarded(
+    dtype: T.DataType,
+    declared: type | tuple[type, ...],
+    runtime_ok: Callable[[Column], Column],
+    to_value: Callable[[Column], Column],
+    msg: str,
+    body: Callable[[], Checker],
+) -> Checker:
+    """The one type test of every kind. A typed column is compared with
+    `declared` at compile time: a mismatch is the constant `msg`, and
+    `body` is never compiled. A VARIANT value passes ``schema_of_variant``
+    to `runtime_ok` per value; the checker `body` builds then sees the
+    value converted by `to_value`."""
+    if _is_variant(dtype):
+        check = body()
+
+        def guarded(value: Column, path: Column) -> Column:
+            return F.when(
+                ~runtime_ok(F.schema_of_variant(value)), F.array(_err(path, msg))
+            ).otherwise(check(to_value(value), path))
+
+        return guarded
+    if not isinstance(dtype, declared):
+        return _const_error(msg)
+    return body()
+
+
+def _is_array(t: Column) -> Column:
+    return t.startswith("ARRAY")
+
+
+def _is_object(t: Column) -> Column:
+    return t.startswith("OBJECT")
+
+
+def _as_array(value: Column) -> Column:
+    return value.try_cast("array<variant>")
+
+
+def _wrap_nullable(spec: S.Spec, dtype: T.DataType, inner: Checker) -> Checker:
     def check(value: Column, path: Column) -> Column:
+        absent = value.isNull()
+        if _is_variant(dtype):
+            absent = absent | F.is_variant_null(value)
         if spec.nullable:
-            return F.when(value.isNull(), empty_errors()).otherwise(inner(value, path))
-        return F.when(value.isNull(), F.array(_err(path, M.REQUIRED))).otherwise(
+            return F.when(absent, empty_errors()).otherwise(inner(value, path))
+        return F.when(absent, F.array(_err(path, M.REQUIRED))).otherwise(
             inner(value, path)
         )
 
@@ -87,10 +171,8 @@ def _wrap_nullable(spec: S.Spec, inner: Checker) -> Checker:
 # scalar kinds
 
 
-def _numeric_conds(
-    spec: S.IntSpec | S.FloatSpec, value: Column
-) -> list[tuple[Column, Column | str]]:
-    conds: list[tuple[Column, Column | str]] = []
+def _numeric_conds(spec: S.IntSpec | S.FloatSpec, value: Column) -> Conds:
+    conds: Conds = []
     if spec.multiple_of is not None:
         conds.append((value % F.lit(spec.multiple_of) != 0, M.multiple_of(spec.multiple_of)))
     if spec.min is not None:
@@ -104,61 +186,49 @@ def _numeric_conds(
     return conds
 
 
-def _compile_bool(spec: S.BoolSpec, dtype: T.DataType) -> Checker:
-    if not isinstance(dtype, T.BooleanType):
-        return _const_error(M.not_valid(spec.type_name))
-    return lambda value, path: empty_errors()
+def _str_conds(spec: S.StrSpec, value: Column) -> Conds:
+    conds: Conds = []
+    if spec.min_length is not None:
+        conds.append((F.length(value) < spec.min_length, M.str_min_length(spec.min_length)))
+    if spec.max_length is not None:
+        conds.append((F.length(value) > spec.max_length, M.str_max_length(spec.max_length)))
+    if spec.regex is not None:
+        # rlike is search-semantics, matching the reference's use of
+        # re.search via pydantic `pattern` — patterns anchor themselves.
+        conds.append((~value.rlike(spec.regex), M.str_pattern(spec.regex)))
+    return conds
 
 
-def _compile_int(spec: S.IntSpec, dtype: T.DataType) -> Checker:
-    if not isinstance(dtype, _INTEGRAL):
-        return _const_error(M.not_valid(spec.type_name))
-    return lambda value, path: _collect_with_path(path, _numeric_conds(spec, value))
+def _scalar_conds(spec: S.Spec, value: Column) -> Conds:
+    if isinstance(spec, (S.IntSpec, S.FloatSpec)):
+        return _numeric_conds(spec, value)
+    if isinstance(spec, S.StrSpec):
+        return _str_conds(spec, value)
+    if isinstance(spec, S.LiteralSpec):
+        return [(value != F.lit(spec.value), M.literal(spec.value))]
+    return []  # bool: the type is the whole constraint
 
 
-def _compile_float(spec: S.FloatSpec, dtype: T.DataType) -> Checker:
-    if not isinstance(dtype, (*_FLOATING, T.DecimalType)):
-        return _const_error(M.not_valid(spec.type_name))
-    return lambda value, path: _collect_with_path(path, _numeric_conds(spec, value))
+def _scalar_kind(spec: S.Spec) -> str:
+    """A literal takes its kind from the Python type of its value (bool is
+    checked by exact type: it is an int subclass)."""
+    if isinstance(spec, S.LiteralSpec):
+        return {bool: "bool", int: "int", str: "str"}.get(type(spec.value), "float")
+    return spec.kind
 
 
-def _compile_str(spec: S.StrSpec, dtype: T.DataType) -> Checker:
-    if not isinstance(dtype, T.StringType):
-        return _const_error(M.not_valid(spec.type_name))
+def _compile_scalar(spec: S.Spec, dtype: T.DataType) -> Checker:
+    declared, runtime_ok, cast_to = _SCALARS[_scalar_kind(spec)]
+    if isinstance(spec, S.LiteralSpec):
+        msg = M.literal(spec.value)
+    else:
+        msg = M.not_valid(spec.type_name)
 
     def check(value: Column, path: Column) -> Column:
-        conds: list[tuple[Column, Column | str]] = []
-        if spec.min_length is not None:
-            conds.append(
-                (F.length(value) < spec.min_length, M.str_min_length(spec.min_length))
-            )
-        if spec.max_length is not None:
-            conds.append(
-                (F.length(value) > spec.max_length, M.str_max_length(spec.max_length))
-            )
-        if spec.regex is not None:
-            # rlike is search-semantics, matching the reference's use of
-            # re.search via pydantic `pattern` — patterns anchor themselves.
-            conds.append((~value.rlike(spec.regex), M.str_pattern(spec.regex)))
-        return _collect_with_path(path, conds)
+        return _collect_with_path(path, _scalar_conds(spec, value))
 
-    return check
-
-
-def _compile_literal(spec: S.LiteralSpec, dtype: T.DataType) -> Checker:
-    v = spec.value
-    if isinstance(v, str):
-        compatible = isinstance(dtype, T.StringType)
-    elif isinstance(v, bool):  # bool before int: bool is an int subclass
-        compatible = isinstance(dtype, T.BooleanType)
-    elif isinstance(v, int):
-        compatible = isinstance(dtype, _INTEGRAL)
-    else:
-        compatible = isinstance(dtype, (*_FLOATING, T.DecimalType))
-    if not compatible:
-        return _const_error(M.literal(v))
-    return lambda value, path: _collect_with_path(
-        path, [(value != F.lit(v), M.literal(v))]
+    return _guarded(
+        dtype, declared, runtime_ok, lambda v: v.try_cast(cast_to), msg, lambda: check
     )
 
 
@@ -170,54 +240,20 @@ def _compile_literal(spec: S.LiteralSpec, dtype: T.DataType) -> Checker:
 
 
 def ok_predicate(spec: S.Spec, dtype: T.DataType) -> Callable[[Column], Column] | None:
-    def wrap(inner: Callable[[Column], Column]) -> Callable[[Column], Column]:
-        if spec.nullable:
-            return lambda v: v.isNull() | inner(v)
-        return lambda v: v.isNotNull() & inner(v)
+    if not isinstance(spec, _SCALAR_SPECS) or _is_variant(dtype):
+        return None  # composite specs and VARIANT values: no cheap screen
+    if not isinstance(dtype, _SCALARS[_scalar_kind(spec)][0]):
+        return lambda v: F.lit(False)
 
-    if isinstance(spec, S.BoolSpec):
-        if not isinstance(dtype, T.BooleanType):
-            return lambda v: F.lit(False)
-        return wrap(lambda v: F.lit(True))
-    if isinstance(spec, (S.IntSpec, S.FloatSpec)):
-        compatible = (
-            isinstance(dtype, _INTEGRAL)
-            if isinstance(spec, S.IntSpec)
-            else isinstance(dtype, (*_FLOATING, T.DecimalType))
-        )
-        if not compatible:
-            return lambda v: F.lit(False)
+    def ok(v: Column) -> Column:
+        pred = F.lit(True)
+        for cond, _ in _scalar_conds(spec, v):
+            pred = pred & ~cond
+        return pred
 
-        def num_ok(v: Column, spec=spec) -> Column:
-            pred = F.lit(True)
-            for cond, _ in _numeric_conds(spec, v):
-                pred = pred & ~cond
-            return pred
-
-        return wrap(num_ok)
-    if isinstance(spec, S.StrSpec):
-        if not isinstance(dtype, T.StringType):
-            return lambda v: F.lit(False)
-
-        def str_ok(v: Column, spec=spec) -> Column:
-            pred = F.lit(True)
-            if spec.min_length is not None:
-                pred = pred & (F.length(v) >= spec.min_length)
-            if spec.max_length is not None:
-                pred = pred & (F.length(v) <= spec.max_length)
-            if spec.regex is not None:
-                pred = pred & v.rlike(spec.regex)
-            return pred
-
-        return wrap(str_ok)
-    if isinstance(spec, S.LiteralSpec):
-        chk = _compile_literal(spec, dtype)
-
-        def lit_ok(v: Column, chk=chk) -> Column:
-            return F.size(chk(v, F.lit(""))) == 0
-
-        return wrap(lit_ok)
-    return None  # composite specs: no cheap screen
+    if spec.nullable:
+        return lambda v: v.isNull() | ok(v)
+    return lambda v: v.isNotNull() & ok(v)
 
 
 def array_violation_screen(spec: S.Spec, dtype: T.DataType) -> Callable[[Column], Column] | None:
@@ -231,13 +267,8 @@ def array_violation_screen(spec: S.Spec, dtype: T.DataType) -> Callable[[Column]
     Returns None when no native screen exists (fall back to exists())."""
     if not isinstance(spec, (S.IntSpec, S.FloatSpec)) or spec.multiple_of is not None:
         return None
-    compatible = (
-        isinstance(dtype, _INTEGRAL)
-        if isinstance(spec, S.IntSpec)
-        else isinstance(dtype, (*_FLOATING, T.DecimalType))
-    )
-    if not compatible:
-        return None  # type mismatch: const error, no screen needed
+    if not isinstance(dtype, _SCALARS[spec.kind][0]):
+        return None  # type mismatch (const error) or VARIANT: no native screen
 
     def screen(arr: Column, spec=spec) -> Column:
         conds = []
@@ -268,59 +299,58 @@ def array_violation_screen(spec: S.Spec, dtype: T.DataType) -> Callable[[Column]
 
 
 def _compile_array(spec: S.ArraySpec, dtype: T.DataType) -> Checker:
-    if not isinstance(dtype, T.ArrayType):
-        return _const_error(M.not_valid(spec.type_name))
-    item_checker = compile_checker(spec.items, dtype.elementType)
-    item_ok = ok_predicate(spec.items, dtype.elementType)
+    def body() -> Checker:
+        item_type = dtype if _is_variant(dtype) else dtype.elementType
+        item_checker = compile_checker(spec.items, item_type)
+        item_ok = ok_predicate(spec.items, item_type)
+        native_screen = array_violation_screen(spec.items, item_type)
 
-    def check(value: Column, path: Column) -> Column:
-        parts: list[Column] = []
-        size_conds: list[tuple[Column, Column | str]] = []
-        n = F.size(value)
-        if spec.min_items is not None:
-            size_conds.append(
-                (
-                    n < spec.min_items,
-                    F.concat(
-                        F.lit(M.list_min_items_prefix(spec.min_items)), n.cast("string")
-                    ),
+        def check(value: Column, path: Column) -> Column:
+            size_conds: Conds = []
+            n = F.size(value)
+            if spec.min_items is not None:
+                size_conds.append(
+                    (
+                        n < spec.min_items,
+                        F.concat(
+                            F.lit(M.list_min_items_prefix(spec.min_items)), n.cast("string")
+                        ),
+                    )
+                )
+            if spec.max_items is not None:
+                size_conds.append(
+                    (
+                        n > spec.max_items,
+                        F.concat(
+                            F.lit(M.list_max_items_prefix(spec.max_items)), n.cast("string")
+                        ),
+                    )
+                )
+            detail = F.flatten(
+                F.transform(
+                    value,
+                    lambda e, i: item_checker(e, _child_path(path, i.cast("string"), dtype)),
                 )
             )
-        if spec.max_items is not None:
-            size_conds.append(
-                (
-                    n > spec.max_items,
-                    F.concat(
-                        F.lit(M.list_max_items_prefix(spec.max_items)), n.cast("string")
-                    ),
-                )
-            )
-        parts.append(_collect_with_path(path, size_conds))
-        detail = F.flatten(
-            F.transform(
-                value,
-                lambda e, i: item_checker(
-                    e, F.concat(path, F.lit("."), i.cast("string"))
-                ),
-            )
-        )
-        native_screen = array_violation_screen(spec.items, dtype.elementType)
-        if native_screen is not None:
-            # Native screen-then-detail: array_min/array_max/array_compact
-            # (no interpreted lambda) decide whether ANY element violates;
-            # the expensive struct-building detail pass runs only on rows
-            # that actually contain a violation.
-            detail = F.when(native_screen(value), detail).otherwise(empty_errors())
-        elif item_ok is not None:
-            # exists() screen: still per-element, but no struct allocation
-            # for clean rows.
-            detail = F.when(
-                F.exists(value, lambda e: ~item_ok(e)), detail
-            ).otherwise(empty_errors())
-        parts.append(detail)
-        return F.concat(*parts)
+            if native_screen is not None:
+                # Native screen-then-detail: array_min/array_max/array_compact
+                # (no interpreted lambda) decide whether ANY element violates;
+                # the expensive struct-building detail pass runs only on rows
+                # that actually contain a violation.
+                detail = F.when(native_screen(value), detail).otherwise(empty_errors())
+            elif item_ok is not None:
+                # exists() screen: still per-element, but no struct allocation
+                # for clean rows.
+                detail = F.when(
+                    F.exists(value, lambda e: ~item_ok(e)), detail
+                ).otherwise(empty_errors())
+            return F.concat(_collect_with_path(path, size_conds), detail)
 
-    return check
+        return check
+
+    return _guarded(
+        dtype, T.ArrayType, _is_array, _as_array, M.not_valid(spec.type_name), body
+    )
 
 
 def _compile_fixed_array(spec: S.FixedArraySpec, dtype: T.DataType) -> Checker:
@@ -335,98 +365,110 @@ def _compile_fixed_array(spec: S.FixedArraySpec, dtype: T.DataType) -> Checker:
         def check_struct(value: Column, path: Column) -> Column:
             parts = []
             for i, chk in enumerate(checkers):
-                ipath = F.concat(path, F.lit(f".{i}"))
+                ipath = _child_path(path, F.lit(str(i)), dtype)
                 parts.append(chk(value.getField(names[i]), ipath))
             if len(dtype.fields) > n:
                 parts.append(F.array(_err(path, M.tuple_max_items(n))))
             if len(dtype.fields) < n:
                 for i in range(len(dtype.fields), n):
-                    parts.append(F.array(_err(F.concat(path, F.lit(f".{i}")), M.REQUIRED)))
+                    parts.append(F.array(_err(_child_path(path, F.lit(str(i)), dtype), M.REQUIRED)))
             return F.concat(*parts)
 
         return check_struct
 
-    if not isinstance(dtype, T.ArrayType):
-        return _const_error(M.not_valid(spec.type_name))
+    def body() -> Checker:
+        item_type = dtype if _is_variant(dtype) else dtype.elementType
+        checkers_arr = [compile_checker(ispec, item_type) for ispec in spec.items]
 
-    checkers_arr = [compile_checker(ispec, dtype.elementType) for ispec in spec.items]
-
-    def check(value: Column, path: Column) -> Column:
-        size = F.size(value)
-        parts = []
-        for i, chk in enumerate(checkers_arr):
-            ipath = F.concat(path, F.lit(f".{i}"))
+        def check(value: Column, path: Column) -> Column:
+            size = F.size(value)
+            parts = []
+            for i, chk in enumerate(checkers_arr):
+                ipath = _child_path(path, F.lit(str(i)), dtype)
+                parts.append(
+                    F.when(size <= i, F.array(_err(ipath, M.REQUIRED))).otherwise(
+                        chk(F.get(value, i), ipath)
+                    )
+                )
             parts.append(
-                F.when(size <= i, F.array(_err(ipath, M.REQUIRED))).otherwise(
-                    chk(F.get(value, i), ipath)
+                F.when(size > n, F.array(_err(path, M.tuple_max_items(n)))).otherwise(
+                    empty_errors()
                 )
             )
-        parts.append(
-            F.when(size > n, F.array(_err(path, M.tuple_max_items(n)))).otherwise(
-                empty_errors()
-            )
-        )
-        return F.concat(*parts)
+            return F.concat(*parts)
 
-    return check
+        return check
+
+    return _guarded(
+        dtype, T.ArrayType, _is_array, _as_array, M.not_valid(spec.type_name), body
+    )
 
 
 def _compile_object(spec: S.ObjectSpec, dtype: T.DataType) -> Checker:
-    if not isinstance(dtype, T.StructType):
-        return _const_error(M.not_valid(spec.type_name))
-    present = {f.name: f.dataType for f in dtype.fields}
-    compiled: list[tuple[str, Checker | None, S.Spec]] = []
-    for name, attr_spec in spec.attrs:
-        if name in present:
-            compiled.append((name, compile_checker(attr_spec, present[name]), attr_spec))
-        else:
-            compiled.append((name, None, attr_spec))
+    variant = _is_variant(dtype)
 
-    def check(value: Column, path: Column) -> Column:
-        parts = []
-        for name, chk, attr_spec in compiled:
-            apath = F.when(path == "", F.lit(name)).otherwise(
-                F.concat(path, F.lit("."), F.lit(name))
-            )
-            if chk is None:
-                # Attribute absent from the declared schema entirely: required
-                # unless nullable (reference: required-field semantics,
-                # schemas/json.py:170-172).
-                if not attr_spec.nullable:
-                    parts.append(F.array(_err(apath, M.REQUIRED)))
-            else:
-                parts.append(chk(value.getField(name), apath))
-        if not parts:
-            return empty_errors()
-        return F.concat(*parts)
+    def body() -> Checker:
+        present = {} if variant else {f.name: f.dataType for f in dtype.fields}
+        compiled: list[tuple[str, Checker | None, S.Spec]] = []
+        for name, attr_spec in spec.attrs:
+            child_type = dtype if variant else present.get(name)
+            chk = None if child_type is None else compile_checker(attr_spec, child_type)
+            compiled.append((name, chk, attr_spec))
 
-    return check
+        def check(value: Column, path: Column) -> Column:
+            parts = []
+            for name, chk, attr_spec in compiled:
+                apath = _child_path(path, F.lit(name), dtype)
+                if chk is None:
+                    # Attribute absent from the declared schema entirely: required
+                    # unless nullable (reference: required-field semantics,
+                    # schemas/json.py:170-172).
+                    if not attr_spec.nullable:
+                        parts.append(F.array(_err(apath, M.REQUIRED)))
+                elif variant:
+                    # a missing key is a SQL-null variant: "Field required"
+                    child = F.try_variant_get(value, f"$.{name}", "variant")
+                    parts.append(chk(child, apath))
+                else:
+                    parts.append(chk(value.getField(name), apath))
+            if not parts:
+                return empty_errors()
+            return F.concat(*parts)
+
+        return check
+
+    return _guarded(
+        dtype, T.StructType, _is_object, lambda v: v, M.not_valid(spec.type_name), body
+    )
 
 
 def _compile_dict(spec: S.DictSpec, dtype: T.DataType) -> Checker:
-    if not isinstance(dtype, T.MapType):
-        return _const_error(M.not_valid(spec.type_name))
-    key_checker = compile_checker(spec.keys, dtype.keyType)
-    value_checker = compile_checker(spec.values, dtype.valueType)
+    def body() -> Checker:
+        variant = _is_variant(dtype)
+        # JSON object keys are always strings
+        key_checker = compile_checker(spec.keys, T.StringType() if variant else dtype.keyType)
+        value_checker = compile_checker(spec.values, dtype if variant else dtype.valueType)
 
-    def check(value: Column, path: Column) -> Column:
-        entries = F.map_entries(value)
-        per_entry = F.transform(
-            entries,
-            lambda e: F.concat(
-                key_checker(
-                    e.getField("key"),
-                    F.concat(path, F.lit("."), e.getField("key").cast("string")),
-                ),
-                value_checker(
-                    e.getField("value"),
-                    F.concat(path, F.lit("."), e.getField("key").cast("string")),
-                ),
-            ),
-        )
-        return F.flatten(per_entry)
+        def check(value: Column, path: Column) -> Column:
+            def entry(e: Column) -> Column:
+                key = e.getField("key")
+                kpath = _child_path(path, key.cast("string"), dtype)
+                return F.concat(
+                    key_checker(key, kpath), value_checker(e.getField("value"), kpath)
+                )
 
-    return check
+            return F.flatten(F.transform(F.map_entries(value), entry))
+
+        return check
+
+    return _guarded(
+        dtype,
+        T.MapType,
+        _is_object,
+        lambda v: v.try_cast("map<string, variant>"),
+        M.not_valid(spec.type_name),
+        body,
+    )
 
 
 def _compile_enum(spec: S.EnumSpec, dtype: T.DataType) -> Checker:
@@ -442,7 +484,7 @@ def _compile_enum(spec: S.EnumSpec, dtype: T.DataType) -> Checker:
             if isinstance(vspec, S.LiteralSpec):
                 vpath = path
             else:
-                vpath = F.concat(path, F.lit("." + vspec.kind))
+                vpath = _child_path(path, F.lit(vspec.kind), dtype)
             errors_per_variant.append(chk(value, vpath))
         matches_any = None
         for errs in errors_per_variant:
@@ -456,11 +498,7 @@ def _compile_enum(spec: S.EnumSpec, dtype: T.DataType) -> Checker:
 
 
 _COMPILERS = {
-    S.BoolSpec: _compile_bool,
-    S.IntSpec: _compile_int,
-    S.FloatSpec: _compile_float,
-    S.StrSpec: _compile_str,
-    S.LiteralSpec: _compile_literal,
+    **{cls: _compile_scalar for cls in _SCALAR_SPECS},
     S.ArraySpec: _compile_array,
     S.FixedArraySpec: _compile_fixed_array,
     S.ObjectSpec: _compile_object,
@@ -470,21 +508,33 @@ _COMPILERS = {
 
 
 def compile_checker(spec: S.Spec, dtype: T.DataType) -> Checker:
-    """Compile `spec` against the declared `dtype` into a violations checker.
+    """Compile `spec` against `dtype` into a violations checker: a
+    column's declared type, or ``VariantType()`` for JSON values.
 
     The returned callable maps ``(value_column, path_column)`` to an
     ``array<struct<path,msg>>`` Column of violations (empty = valid),
     including null/required handling.
     """
     inner = _COMPILERS[type(spec)](spec, dtype)
-    return _wrap_nullable(spec, inner)
+    return _wrap_nullable(spec, dtype, inner)
+
+
+def json_column_violations(json_col: Column, spec: S.Spec) -> Column:
+    """Violations for a STRING column holding a JSON document.
+
+    Unparseable text reports "Invalid JSON"; a SQL-null document reports
+    "Field required" unless the top-level spec is nullable."""
+    checker = compile_checker(spec, T.VariantType())
+    v = F.try_parse_json(json_col)
+    parse_failed = json_col.isNotNull() & v.isNull()
+    return F.when(
+        parse_failed, F.array(_err(F.lit(""), "Invalid JSON"))
+    ).otherwise(checker(v, F.lit("")))
 
 
 def render_reason(path: Column, msg: Column) -> Column:
-    """Render the human-readable reason: ``\\`a.b\\`: msg`` or root form.
-
-    Mirrors the reference's dotted-path rendering
-    (/root/reference/fs_schema_validator/schemas/json.py:249-261).
+    """Render the human-readable reason: ``\\`a.b\\`: msg`` or root form,
+    the reference's dotted-path rendering (schemas/json.py:249-261).
     """
     return F.when(path == "", F.concat(F.lit("root object: "), msg)).otherwise(
         F.concat(F.lit("`"), path, F.lit("`: "), msg)

@@ -37,7 +37,7 @@ from pyspark.sql import types as T
 from ..rules import model as Mdl
 from ..rules.loader import RuleSet, RuleSetError
 from . import messages as M
-from .columns import compile_checker, render_reason
+from .columns import compile_checker, json_column_violations, render_reason
 
 VIOLATION_SCHEMA = "subject string, rule_id string, rule_seq int, reason string"
 
@@ -102,8 +102,6 @@ def _compile_row_rule(rule: Mdl.Rule, schema: T.StructType) -> Column:
         checker = compile_checker(rule.spec, dtype)
         return _checker_errs(rule, checker(F.col(rule.column), F.lit(rule.column)))
     if isinstance(rule, Mdl.JsonSpecRule):
-        from .variant_json import json_column_violations
-
         if rule.column not in schema.names:
             return _missing_column(rule)
         return _checker_errs(
@@ -518,16 +516,15 @@ class CompiledPlan:
         raise RuleSetError(f"unknown table rule: {rule}")
 
     def _drift_violations(self, rule: Mdl.DriftRule) -> DataFrame:
-        from ..functions.sketches import bucketize, ks_statistic
+        from ..functions.sketches import histogram, ks_statistic, psi
 
-        hist = (
-            self.fused_projection().groupBy(
-                F.col(rule.group_col).alias("grp"),
-                bucketize(F.col(rule.column), rule.lo, rule.hi, rule.buckets).alias(
-                    "bucket"
-                ),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
+        hist = histogram(
+            self.fused_projection(),
+            rule.column,
+            rule.group_col,
+            rule.lo,
+            rule.hi,
+            rule.buckets,
         )
         ref = self._aux(rule.ref).select(
             F.col(rule.group_col).alias("grp"), F.col("bucket"), F.col("p")
@@ -536,21 +533,7 @@ class CompiledPlan:
             stat = ks_statistic(hist, ref).select("grp", F.col("ks_d").alias("stat"))
             label = "KS"
         else:
-            eps = 1e-6
-            totals = hist.groupBy("grp").agg(F.sum("cnt").alias("total"))
-            q = hist.join(totals, "grp").select(
-                "grp", "bucket", (F.col("cnt") / F.col("total")).alias("q")
-            )
-            joined = q.join(ref, ["grp", "bucket"], "full_outer").select(
-                "grp",
-                F.coalesce(F.col("q"), F.lit(0.0)).alias("q"),
-                F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
-            )
-            qc = F.greatest(F.col("q"), F.lit(eps))
-            pc = F.greatest(F.col("p"), F.lit(eps))
-            stat = joined.groupBy("grp").agg(
-                F.sum((qc - pc) * F.log(qc / pc)).alias("stat")
-            )
+            stat = psi(hist, ref).select("grp", F.col("psi").alias("stat"))
             label = "PSI"
         reason = F.format_string(
             f"distribution drift: {label} %.4f > %s",

@@ -1,10 +1,12 @@
 """Single-pass distributed stats & distribution sketches.
 
 Everything here is one groupBy per pass (partial → final aggregation); no
-collect-driven loops. The drift math (PSI) is shared with the DriftRule in
-compiler/plan.py; this module adds the "vs global" variant used when no
-reference histogram table exists: compare each group's distribution to the
-whole table's, in one job (two aggregations over one cached scan).
+collect-driven loops. Each drift tail is written once: ``histogram`` buckets
+a column (nulls excluded), ``psi`` and ``ks_statistic`` compare a histogram
+with a reference mass. The DriftRule in compiler/plan.py compares with its
+reference table; the "vs global" forms, used when no reference table exists,
+compare each group with the whole table's distribution (``_global_grid``),
+in one job over one cached histogram.
 """
 
 from __future__ import annotations
@@ -43,6 +45,49 @@ def histogram(
     )
 
 
+def _mass(hist: DataFrame, p_mass: DataFrame) -> DataFrame:
+    """(grp, bucket, q, p): each group's share `q` of its (grp, bucket, cnt)
+    histogram next to the reference mass `p` of `p_mass` (grp, bucket, p),
+    over every cell either side has — a side missing a cell has mass 0."""
+    totals = hist.groupBy("grp").agg(F.sum("cnt").alias("total"))
+    q = hist.join(totals, "grp").select(
+        "grp", "bucket", (F.col("cnt") / F.col("total")).alias("q")
+    )
+    return q.join(p_mass, ["grp", "bucket"], "full_outer").select(
+        "grp",
+        "bucket",
+        F.coalesce(F.col("q"), F.lit(0.0)).alias("q"),
+        F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
+    )
+
+
+def psi(hist: DataFrame, p_mass: DataFrame) -> DataFrame:
+    """(grp, psi), unrounded — population-stability index of each group's
+    histogram against `p_mass`. Masses are clamped to EPS (standard PSI
+    practice) so the log stays finite, and a cell only one side has still
+    contributes its (q − p)·ln(q/p) term."""
+    qc = F.greatest(F.col("q"), F.lit(EPS))
+    pc = F.greatest(F.col("p"), F.lit(EPS))
+    return (
+        _mass(hist, p_mass)
+        .groupBy("grp")
+        .agg(F.sum((qc - pc) * F.log(qc / pc)).alias("psi"))
+    )
+
+
+def _global_grid(hist: DataFrame) -> DataFrame:
+    """(grp, bucket, p): the whole table's bucket mass, repeated for every
+    group of `hist` — the full grp × occupied-bucket grid, so a group
+    MISSING a bucket where the table has mass still contributes its term
+    (starting from the group histogram alone would silently drop exactly
+    the terms that make a concentrated group stand out). The grand total
+    is Σcnt of the histogram itself (no second scan of the table); an
+    empty histogram gives an empty grid."""
+    gtotal = hist.agg(F.sum("cnt")).first()[0] or 1
+    p = hist.groupBy("bucket").agg((F.sum("cnt") / F.lit(float(gtotal))).alias("p"))
+    return hist.select("grp").distinct().crossJoin(p)
+
+
 def psi_vs_global(
     df: DataFrame,
     col: str,
@@ -53,54 +98,23 @@ def psi_vs_global(
     digits: int = 4,
 ) -> DataFrame:
     """(group, psi) — population-stability index of each group's histogram
-    against the whole-table distribution. Zero-count buckets are clamped to EPS
-    (standard PSI practice) so the log stays finite.
-
-    The comparison runs over the full grp × bucket GRID (like
-    ks_vs_global), not just the group's occupied buckets: a group missing
-    a bucket where the global distribution has mass contributes its
-    (EPS - p)·ln(EPS/p) term — starting from the group histogram alone
-    would silently drop exactly the terms that make a severely drifted
-    (concentrated) group stand out."""
+    against the whole-table distribution, over the full grid
+    (``_global_grid``)."""
     from ..functions.cache import track
 
     # One scan of df: the histogram (groups × buckets rows — tiny) is
-    # cached and every downstream aggregate derives from it, including the
-    # grand total (Σcnt ≡ count(*)) — a naive df.count() would be a second
-    # full scan.
+    # cached and every downstream aggregate derives from it.
     hist = track(histogram(df, col, group_col, lo, hi, buckets).cache())
     return psi_from_hist(hist, digits)
 
 
 def psi_from_hist(hist: DataFrame, digits: int = 4) -> DataFrame:
-    """(grp, psi) from a prebuilt (grp, bucket, cnt) histogram — the
-    PSI-vs-global tail shared by the value-bucket form (psi_vs_global)
-    and bucketings that are not value ranges (embedding IVF cells).
-    Keeps the one grid + EPS-clamp convention: the comparison runs over
-    the full grp × occupied-bucket grid so a group MISSING a bucket
-    still contributes its (EPS − p) term (see psi_vs_global)."""
-    gtotal_row = hist.agg(F.sum("cnt")).first()[0]
-    gtotal = float(gtotal_row if gtotal_row is not None else 0.0) or 1.0
-    totals = hist.groupBy("grp").agg(F.sum("cnt").alias("total"))
-    q = hist.join(totals, "grp").select(
-        "grp", "bucket", (F.col("cnt") / F.col("total")).alias("q")
-    )
-    ghist = hist.groupBy("bucket").agg(F.sum("cnt").alias("gcnt"))
-    p = ghist.select("bucket", (F.col("gcnt") / F.lit(gtotal)).alias("p"))
-    grid = totals.select("grp").crossJoin(p)
-    joined = grid.join(q, ["grp", "bucket"], "left").select(
-        "grp",
-        F.greatest(F.coalesce(F.col("q"), F.lit(0.0)), F.lit(EPS)).alias("qc"),
-        F.greatest(F.col("p"), F.lit(EPS)).alias("pc"),
-    )
-    return (
-        joined.groupBy("grp")
-        .agg(
-            F.round(
-                F.sum((F.col("qc") - F.col("pc")) * F.log(F.col("qc") / F.col("pc"))),
-                digits,
-            ).alias("psi")
-        )
+    """(grp, psi) rounded to `digits`, from a prebuilt (grp, bucket, cnt)
+    histogram against the whole table's — the PSI-vs-global form shared by
+    value buckets (psi_vs_global) and bucketings that are not value ranges
+    (embedding IVF cells)."""
+    return psi(hist, _global_grid(hist)).select(
+        "grp", F.round("psi", digits).alias("psi")
     )
 
 
@@ -116,18 +130,8 @@ def ks_statistic(
     sketch-based KS at scale (exact KS needs a full sort)."""
     from pyspark.sql import Window
 
-    totals = hist_q.groupBy("grp").agg(F.sum("cnt").alias("total"))
-    q = hist_q.join(totals, "grp").select(
-        "grp", "bucket", (F.col("cnt") / F.col("total")).alias("q")
-    )
-    joined = q.join(hist_p, ["grp", "bucket"], "full_outer").select(
-        "grp",
-        "bucket",
-        F.coalesce(F.col("q"), F.lit(0.0)).alias("q"),
-        F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
-    )
     w = Window.partitionBy("grp").orderBy("bucket")
-    cdfs = joined.select(
+    cdfs = _mass(hist_q, hist_p).select(
         "grp",
         F.sum("q").over(w).alias("cq"),
         F.sum("p").over(w).alias("cp"),
@@ -157,9 +161,4 @@ def ks_vs_global(
     from ..functions.cache import track
 
     hist = track(histogram(df, col, group_col, lo, hi, buckets).cache())
-    gtotal = float(hist.agg(F.sum("cnt")).first()[0])
-    totals = hist.groupBy("grp").agg(F.sum("cnt").alias("total"))
-    ghist = hist.groupBy("bucket").agg(F.sum("cnt").alias("gcnt"))
-    p = ghist.select("bucket", (F.col("gcnt") / F.lit(gtotal)).alias("p"))
-    grid = totals.select("grp").crossJoin(p)
-    return ks_statistic(hist, grid, digits=digits)
+    return ks_statistic(hist, _global_grid(hist), digits=digits)

@@ -217,6 +217,36 @@ schema:
     assert rows[0].reason.startswith("distribution drift: PSI ")
 
 
+@pytest.mark.parametrize("metric", ["psi", "ks"])
+def test_drift_ignores_null_values(spark, metric):
+    """Nulls are not distribution mass: 160 uniform values plus 160 nulls
+    match a uniform reference exactly (nulls counted in bucket 0 would
+    read as drift)."""
+    rows = [(i, "g", (i % 16) * 32 + 1) for i in range(160)]
+    rows += [(1000 + i, "g", None) for i in range(160)]
+    seq = spark.createDataFrame(rows, "doc_id bigint, source string, n_tok int")
+    ref = spark.createDataFrame(
+        [("g", b, 1 / 16) for b in range(16)], "source string, bucket int, p double"
+    )
+    rules = f"""
+schema:
+  - type: drift_psi
+    id: ntok_drift
+    column: n_tok
+    group_col: source
+    ref: ref_distribution
+    metric: {metric}
+    buckets: 16
+    lo: 0
+    hi: 512
+    threshold: 0.2
+"""
+    res = ValidationEngine(subject_col="doc_id").validate(
+        seq, rules, {"ref_distribution": ref}
+    )
+    assert res.violations.collect() == []
+
+
 def test_empty_input_passes_all_rules(spark):
     from fs_schema_validator_spark.sources import synth
 

@@ -4,7 +4,8 @@ Same rich fixture spec and the same (mutation → expected reason) table as
 /root/reference/tests/test_json.py:155-302 — including every strict-typing
 case ("1" is not an int, 1 is not a bool, 2 is not 5.5) — evaluated over a
 DataFrame with one JSON document per case, all in one Spark pass.
-Assertions are membership (`reason in errors`) like the reference's."""
+The reference asserts membership (`reason in errors`); here each document's
+reasons are pinned exactly, so an extra or duplicated reason fails."""
 
 from __future__ import annotations
 
@@ -98,6 +99,24 @@ CASES: list[tuple[dict, str]] = [
 ]
 
 
+# Reasons a case's document commits beyond its own CASES entry.
+SECONDARY: dict[int, list[str]] = {
+    19: ["`str`: String should match pattern '^#(\\d+)$'"],
+    21: ["`str`: String should match pattern '^#(\\d+)$'"],
+    26: ["`tuple.1`: Field required", "`tuple.2`: Field required"],
+}
+
+
+def _expected_reasons(idx: int) -> list[str]:
+    """Every reason case `idx`'s document commits: "Field required" for each
+    attribute it lacks, every CASES reason for the same document, and its
+    SECONDARY reasons — each exactly once."""
+    doc = CASES[idx][0]
+    missing = [f"`{name}`: Field required" for name in FIXTURE_SPEC["attrs"] if name not in doc]
+    same_doc = [reason for d, reason in CASES if d == doc]
+    return sorted(set(missing + same_doc + SECONDARY.get(idx, [])))
+
+
 @pytest.fixture(scope="module")
 def corpus_errors(spark):
     rows = [
@@ -121,12 +140,10 @@ def corpus_errors(spark):
 
 
 @pytest.mark.parametrize(
-    ("idx", "expected"),
-    [(i, reason) for i, (_, reason) in enumerate(CASES)],
-    ids=[f"case{i}" for i in range(len(CASES))],
+    "idx", range(len(CASES)), ids=[f"case{i}" for i in range(len(CASES))]
 )
-def test_reference_corpus(corpus_errors, idx, expected):
-    assert expected in corpus_errors.get(str(idx), [])
+def test_reference_corpus(corpus_errors, idx):
+    assert sorted(corpus_errors.get(str(idx), [])) == _expected_reasons(idx)
 
 
 def test_fully_valid_document_has_no_errors(corpus_errors):
@@ -156,3 +173,21 @@ schema:
     reasons = {r.reason for r in res.violations.collect()}
     assert "`0`: Input should be a valid integer" in reasons
     assert not any(r.startswith("`.") for r in reasons)
+
+
+
+def test_dict_key_spec_matches_typed_map(spark):
+    """A JSON dict's keys are checked as strings, exactly as a typed
+    map<string, ...>'s keys: only the key that is not the literal fails."""
+    spec = "{type: dict, keys: {type: literal, value: a}, values: {type: int}}"
+    json_df = spark.createDataFrame([(1, '{"a": 1, "b": 2}')], "id int, m string")
+    typed_df = spark.createDataFrame([(1, {"a": 1, "b": 2})], "id int, m map<string,int>")
+    got = {}
+    for kind, df in (("json_spec", json_df), ("column_spec", typed_df)):
+        rules = f"schema:\n  - {{type: {kind}, id: m, column: m, spec: {spec}}}\n"
+        res = ValidationEngine(subject_col="id").validate(df, rules)
+        got[kind] = [r.reason for r in res.violations.collect()]
+    assert got == {
+        "json_spec": ["`b`: Input should be 'a'"],
+        "column_spec": ["`m.b`: Input should be 'a'"],
+    }

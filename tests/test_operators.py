@@ -126,6 +126,15 @@ def test_ks_vs_global_flags_shifted_group(spark):
     assert out["shifted"] == pytest.approx(0.5)
 
 
+def test_vs_global_drift_on_empty_input_returns_no_rows(spark):
+    from fs_schema_validator_spark.functions import sketches
+
+    df = spark.createDataFrame([], "id bigint, grp_name string, v double")
+    for fn in (sketches.ks_vs_global, sketches.psi_vs_global):
+        out = fn(df, col="v", group_col="grp_name", lo=0.0, hi=500.0, buckets=10)
+        assert out.collect() == []
+
+
 def test_simhash_near_dups_collide(docs):
     sigs = dedup.simhash_signatures(docs)
     cands = {

@@ -257,3 +257,20 @@ def test_strict_declared_type(spark, coltype, value, spec, reason):
         .collect()
     )
     assert [r.reason for r in got] == [f"`c`: {reason}"]
+
+
+def test_row_spec_tuple_paths_have_no_leading_dot(spark):
+    """A row is the root, so its tuple positions render bare ('1'), like a
+    root-level JSON array's elements — never '.1'."""
+    df = spark.createDataFrame([(1, "x", 3)], "id int, s string, n int")
+    rules = """
+schema:
+  - type: row_spec
+    id: r
+    spec: {type: fixed_array, items: [{type: int}, {type: int}, {type: str}]}
+"""
+    got = ValidationEngine(subject_col="id").validate(df, rules).violations.collect()
+    assert sorted(r.reason for r in got) == [
+        "`1`: Input should be a valid integer",
+        "`2`: Input should be a valid string",
+    ]

@@ -6,17 +6,25 @@ pure-Python implementation of the strict validation semantics
 (pydantic-style ge/gt/le/lt/multiple_of/length/regex/nullable — the
 reference's constraint model, /root/reference/fs_schema_validator/
 schemas/json.py:39-149). Seeded RNG keeps runs reproducible.
+
+Each test runs in both value models: ``typed`` checks a column of the
+declared Spark type, ``json`` checks the same values as JSON text through
+``json_column_violations``; the oracle is the same for both.
 """
 
 from __future__ import annotations
 
+import json
 import random
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from fs_schema_validator_spark.compiler.columns import compile_checker
+from fs_schema_validator_spark.compiler.columns import compile_checker, json_column_violations
 from fs_schema_validator_spark.rules import spec as S
+
+MODELS = pytest.mark.parametrize("model", ["typed", "json"])
 
 
 def _violates_int(spec: S.IntSpec, v) -> bool:
@@ -47,18 +55,24 @@ def _violates_str(spec: S.StrSpec, v) -> bool:
     return False
 
 
-def _run_cases(spark, dtype: str, spec, values):
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(values)], f"i int, v {dtype}"
-    )
-    checker = compile_checker(spec, df.schema["v"].dataType)
-    out = df.select(
-        "i", F.size(checker(F.col("v"), F.lit("v"))).alias("n_viol")
-    )
+def _run_cases(spark, model: str, dtype: str, spec, values):
+    if model == "json":
+        df = spark.createDataFrame(
+            [(i, json.dumps(v)) for i, v in enumerate(values)], "i int, v string"
+        )
+        errs = json_column_violations(F.col("v"), spec)
+    else:
+        df = spark.createDataFrame(
+            [(i, v) for i, v in enumerate(values)], f"i int, v {dtype}"
+        )
+        checker = compile_checker(spec, df.schema["v"].dataType)
+        errs = checker(F.col("v"), F.lit("v"))
+    out = df.select("i", F.size(errs).alias("n_viol"))
     return {r.i: r.n_viol > 0 for r in out.collect()}
 
 
-def test_int_spec_random_differential(spark):
+@MODELS
+def test_int_spec_random_differential(spark, model):
     rng = random.Random(1234)
     for trial in range(8):
         lo = rng.choice([None, rng.randint(-50, 0)])
@@ -77,13 +91,14 @@ def test_int_spec_random_differential(spark):
             if b is not None:
                 values += [b - 1, b, b + 1]
         values += [None] * 5
-        got = _run_cases(spark, "long", spec, values)
+        got = _run_cases(spark, model, "long", spec, values)
         for i, v in enumerate(values):
             want = _violates_int(spec, v)
             assert got[i] == want, f"trial {trial}: {spec} value={v}"
 
 
-def test_str_spec_random_differential(spark):
+@MODELS
+def test_str_spec_random_differential(spark, model):
     rng = random.Random(99)
     alphabet = "abc19 _-"
     for trial in range(6):
@@ -97,13 +112,14 @@ def test_str_spec_random_differential(spark):
             "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 10)))
             for _ in range(120)
         ] + [None] * 4
-        got = _run_cases(spark, "string", spec, values)
+        got = _run_cases(spark, model, "string", spec, values)
         for i, v in enumerate(values):
             want = _violates_str(spec, v)
             assert got[i] == want, f"trial {trial}: {spec} value={v!r}"
 
 
-def test_array_spec_random_differential(spark):
+@MODELS
+def test_array_spec_random_differential(spark, model):
     rng = random.Random(7)
     for trial in range(6):
         item = S.IntSpec(min=0, max=100, nullable=rng.random() < 0.5)
@@ -131,6 +147,6 @@ def test_array_spec_random_differential(spark):
                 return True
             return any(_violates_int(item, e) for e in v)
 
-        got = _run_cases(spark, "array<long>", spec, values)
+        got = _run_cases(spark, model, "array<long>", spec, values)
         for i, v in enumerate(values):
             assert got[i] == want_violation(v), f"trial {trial}: {spec} {v}"
