@@ -21,6 +21,10 @@ Physical strategy (designed for the 10^12-row table, tested at sf*):
     distribution, all aggregations partial-then-final.
 * Violation outputs union by name into the canonical schema
   ``(subject string, rule_id string, rule_seq int, reason string)``.
+* The union is materialised once, by ``engine.ValidationResult``: its
+  persist-and-count job also latches the scan metrics, observed on the
+  row-explode read of the cached projection. After that job nothing reads
+  the projection or the equality key sets, so ``release()`` frees them.
 
 Ordering contract: consumers sort by ``(subject, rule_seq)`` — declaration
 order within a subject, sorted across subjects (reference report.py:27-33).
@@ -30,7 +34,7 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -191,7 +195,7 @@ class CompiledPlan:
         # other DataFrames this plan persisted (equality-screen key sets);
         # release() unpersists them with the fused projection
         self._cached: list[DataFrame] = []
-        self._observation = None  # created lazily in fused_projection
+        self._observation = None  # created by row_violations()
 
     # -- fused projection ---------------------------------------------------
     #
@@ -296,24 +300,7 @@ class CompiledPlan:
         for rule in self._equality_rules():
             cols.append(F.xxhash64(F.col(rule.column)).alias(f"_th_{rule.seq}"))
             cols.append(F.size(F.col(rule.column)).alias(f"_ts_{rule.seq}"))
-        # Observation metrics piggyback on the (single) materialization of
-        # the fused pass — rows scanned and row-rule-violating rows come
-        # back with the job, no second scan (Spark's data-quality observe
-        # API; streaming surfaces the same metrics per micro-batch).
-        from pyspark.sql import Observation
-
-        self._observation = Observation()
-        fused = (
-            base.select(*cols)
-            .observe(
-                self._observation,
-                F.count(F.lit(1)).alias("rows_scanned"),
-                F.sum((F.size("_viols") > 0).cast("long")).alias(
-                    "rows_with_row_violations"
-                ),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        fused = base.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
         self._fused = fused
         return fused
 
@@ -326,33 +313,29 @@ class CompiledPlan:
         self._cached = []
 
     def observed_metrics(self) -> dict:
-        """Metrics latched by the fused pass's materialization (observe API).
-
-        Spark's Observation latches the metrics of the FIRST job that runs
-        the observed plan, so this accessor forces a full `count()` before
-        reading — if nothing has materialized the fused projection yet, the
-        count IS the first (full) job, and the metrics are exact. Callers
-        must not run partial actions (limit/show) on derivatives of the
-        fused projection before the first full materialization; metrics
-        latched by a partial job cannot be refreshed."""
-        if self._observation is None and self._fused is None:
-            self.fused_projection()
-        if self._observation is None:
-            return {}
-        self.fused_projection().count()  # no-op if already materialized
+        """Metrics latched by the job that ran row_violations() (observe API)."""
         return dict(self._observation.get)
 
     # -- row rules: one fused scan ----------------------------------------
 
     def row_violations(self) -> DataFrame:
-        """Row-rule violations, exploded from the fused projection — the
-        SAME observed/persisted pass every other consumer reads, so
-        scan_metrics() after a row-only validation does not trigger a
-        second scan of the wide table."""
-        if not self.ruleset.row_rules and not self._token_range_rules():
-            return self.spark.createDataFrame([], VIOLATION_SCHEMA)
+        """Row-rule violations, exploded from the fused projection.
+
+        The scan metrics (rows scanned, rows violating a row rule) are
+        observed here, on the read of the cached projection, so they latch
+        in the job that materialises the violation relation — not in
+        whichever query on the projection happens to finish first. Every
+        rule set takes this path, so every validation latches them."""
+        self._observation = Observation()
         return (
             self.fused_projection()
+            .observe(
+                self._observation,
+                F.count(F.lit(1)).alias("rows_scanned"),
+                F.sum((F.size("_viols") > 0).cast("long")).alias(
+                    "rows_with_row_violations"
+                ),
+            )
             .select("subject", F.explode("_viols").alias("v"))
             .select(
                 "subject",

@@ -5,6 +5,7 @@ Usage::
     engine = ValidationEngine(subject_col="doc_id")
     result = engine.validate(df, yaml_rules, tables={"dim_sources": dim})
     result.okay()                 # -> bool (reference: report.okay())
+    result.n_violations           # -> int, counted once at validate()
     result.violations             # canonical violations DataFrame
     result.sorted_violations()    # ordered by (subject, rule_seq)
     result.grouped_by_subject()   # reference: report.grouped_by_path()
@@ -21,6 +22,12 @@ array is ``compiler.plan.row_violation_array``; a table rule's violation
 rows are built by ``compiler.plan._violation_rows``; per-group attribution
 is ``group_attribution`` below, behind both ``summary()`` and the
 checkpoint manifest (``streaming.checkpoint``).
+
+``validate()`` runs the plan ONCE: ``ValidationResult`` persists the
+violation relation, counts it in one job that also latches the scan
+metrics, and then releases the plan's own caches (the fused projection,
+the equality screens' key sets), which nothing reads again. Every surface
+derives from that one persisted relation; ``release()`` frees it.
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ from typing import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from .compiler.plan import CompiledPlan, key_string
 from .evaluator import Bindings
@@ -81,12 +89,21 @@ class ValidationResult:
     is Spark's union/aggregation, realized.
     """
 
-    def __init__(self, plan: CompiledPlan, violations: DataFrame) -> None:
+    def __init__(self, plan: CompiledPlan) -> None:
         self._plan = plan
-        self.violations = violations
+        try:
+            self.violations = plan.violations().persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                self.n_violations = self.violations.count()
+                self._scan_metrics = plan.observed_metrics()
+            except BaseException:
+                self.violations.unpersist()  # no result owns it
+                raise
+        finally:
+            plan.release()
 
     def okay(self) -> bool:
-        return self.violations.isEmpty()
+        return self.n_violations == 0
 
     def exit_code(self) -> int:
         return 0 if self.okay() else 1
@@ -111,18 +128,17 @@ class ValidationResult:
         )
 
     def scan_metrics(self) -> dict:
-        """Metrics observed DURING the validation scan (no second pass):
-        rows_scanned and rows_with_row_violations, via Spark's observe API.
-        Delegates to CompiledPlan.observed_metrics(), which forces a full
-        materialization so the latched metrics cover every row."""
-        return self._plan.observed_metrics()
+        """rows_scanned and rows_with_row_violations, latched (Spark's
+        observe API) by the job that materialised the violation relation —
+        no second pass."""
+        return dict(self._scan_metrics)
 
     def release(self) -> None:
-        """Unpersist everything the plan cached — the fused projection
-        and the equality screens' key sets (long-lived sessions —
+        """Unpersist the violation relation (long-lived sessions —
         streaming foreachBatch, services — call this after the batch's
-        actions; one-shot CLIs can skip it)."""
-        self._plan.release()
+        actions; one-shot CLIs can skip it). Surfaces still work after
+        it; they re-execute the plan."""
+        self.violations.unpersist()
 
     def ok_subjects(self) -> DataFrame:
         """Subjects with zero violations (reference: valid_paths). Null
@@ -177,5 +193,4 @@ class ValidationEngine:
         tables: Mapping[str, DataFrame] | None = None,
         bindings: Bindings | None = None,
     ) -> ValidationResult:
-        plan = self.compile(df, rules, tables, bindings)
-        return ValidationResult(plan, plan.violations())
+        return ValidationResult(self.compile(df, rules, tables, bindings))

@@ -39,10 +39,14 @@ def validate_stream(
 ) -> StreamingQuery:
     """Attach the rule set to a streaming DataFrame.
 
-    Each micro-batch runs the full (row + table) rule pipeline; violations
-    are appended to `violations_path` (parquet) tagged with the batch id.
-    `on_batch(batch_id, violations_df, n_violations)` observes each batch
-    (manifest writes, alerting, kill-switches).
+    Each micro-batch runs the full (row + table) rule pipeline once;
+    violations are appended to `violations_path` (parquet) tagged with the
+    batch id. `on_batch(batch_id, violations_df, n_violations)` observes
+    each batch (manifest writes, alerting, kill-switches): `violations_df`
+    reads the batch's persisted violation relation and is valid only
+    during the callback (it is released when the callback returns), and
+    `n_violations` is the result's count, taken when that relation was
+    materialised.
     """
     engine = ValidationEngine(subject_col=subject_col)
     ruleset = RuleSet.from_yaml(rules_yaml)
@@ -58,42 +62,17 @@ def validate_stream(
                 # replayed batch must not duplicate its rows — dynamic
                 # partition overwrite on batch_id replaces exactly the
                 # replayed batch's partition and nothing else.
-                obs = None
-                out = violations
-                if on_batch is not None:
-                    # Count DURING the sink write via the observe API —
-                    # never re-read the accumulated sink (its cost grows
-                    # with total history per micro-batch).
-                    from pyspark.sql import Observation
-
-                    obs = Observation()
-                    out = violations.observe(
-                        obs, F.count(F.lit(1)).alias("n")
-                    )
                 (
-                    out.write.mode("overwrite")
+                    violations.write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
                     .parquet(violations_path)
                 )
-                if on_batch is not None:
-                    on_batch(batch_id, violations, int(obs.get["n"]))
-            elif on_batch is not None:
-                # Sink-less callers: cache-count-release so the batch
-                # pipeline executes ONCE — a bare .count() would run the
-                # whole validation again for anything the callback does
-                # with `violations` (the cache is released after the
-                # callback returns, so the DataFrame is only valid inside
-                # it — same contract as the batch engine's release()).
-                cached = violations.persist()
-                try:
-                    on_batch(batch_id, cached, cached.count())
-                finally:
-                    cached.unpersist()
+            if on_batch is not None:
+                on_batch(batch_id, violations, result.n_violations)
         finally:
-            # each micro-batch compiles its own plan with a persisted fused
-            # projection; release it or a long-running stream accumulates
-            # one cached DataFrame per batch
+            # each micro-batch persists its own violation relation; release
+            # it or a long-running stream accumulates one per batch
             result.release()
 
     writer = stream_df.writeStream.foreachBatch(process).outputMode("append")

@@ -140,8 +140,9 @@ def test_release_unpersists_everything_validation_persisted(spark):
     """ValidationResult.release() alone — without
     functions.cache.release_all() — leaves no RDD the validation
     persisted: the fused projection and the equality screen's
-    mismatch-key set both go (streaming micro-batches and resumed runs
-    call only release())."""
+    mismatch-key set go when validate() has materialised the violation
+    relation, and release() frees that relation (streaming micro-batches
+    and resumed runs call only release())."""
 
     def persisted() -> int:
         return int(spark.sparkContext._jsc.getPersistentRDDs().size())
@@ -149,9 +150,37 @@ def test_release_unpersists_everything_validation_persisted(spark):
     before = persisted()
     res = _validate_golden_table(spark)
     res.sorted_violations().collect()
-    assert persisted() >= before + 2
+    # validate() already released the plan's own caches: only the
+    # materialised violation relation remains
+    assert persisted() == before + 1
     res.release()
     assert persisted() == before
+
+
+def test_failed_validate_leaves_nothing_persisted(spark, monkeypatch):
+    """validate() materialises eagerly, so a rule failing at run time
+    raises there — and neither the plan's caches nor the half-built
+    violation relation stay persisted (no result exists to release them)."""
+    built = []
+    violations = plan.CompiledPlan.violations
+
+    def spy(compiled):
+        built.append(violations(compiled))
+        return built[-1]
+
+    monkeypatch.setattr(plan.CompiledPlan, "violations", spy)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rules = """
+schema:
+  - {type: expr, id: boom, assert: "raise_error('boom') IS NULL", reason: "'x'"}
+"""
+    with pytest.raises(Exception, match="boom"):
+        ValidationEngine(subject_col="doc_id").validate(
+            synth.gen_sequences(spark, 10), rules
+        )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    level = built[0].storageLevel
+    assert not (level.useMemory or level.useDisk)
 
 
 def test_verdict(result):
@@ -184,6 +213,48 @@ def test_pristine_table_passes(spark):
     res = ValidationEngine(subject_col="doc_id").validate(seq, RULES, tables)
     assert res.okay() is True
     assert res.exit_code() == 0
+    # a clean table under the completeness and array_equality rules still
+    # latches the full scan's metrics (cmd_validate --verbose reads them)
+    assert res.scan_metrics() == {"rows_scanned": 16, "rows_with_row_violations": 0}
+
+
+def test_surfaces_read_no_aux_table_after_validate(spark, tmp_path):
+    """validate() materialises the violation relation once; every surface
+    derives from it, so none re-runs a table rule — deleting the aux
+    tables' files after validate() must not break any of them, and
+    okay() runs no Spark job at all."""
+    import shutil
+
+    n = 10
+    seq = synth.with_duplicates(
+        synth.corrupt_sequences(synth.gen_sequences(spark, n), every=10),
+        every=101,
+    )
+    aux = {
+        "dim_sources": synth.gen_dim_sources(spark),
+        "reference_tokens": synth.gen_reference_tokens(spark, n),
+        "expected_manifest": synth.gen_expected_manifest(spark, n, extra=2),
+    }
+    tables = {}
+    for name, df in aux.items():
+        df.write.parquet(str(tmp_path / name))
+        tables[name] = spark.read.parquet(str(tmp_path / name))
+    res = ValidationEngine(subject_col="doc_id").validate(seq, RULES, tables)
+    for name in aux:
+        shutil.rmtree(tmp_path / name)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("okay-after-validate", "okay() reads the latched count")
+    try:
+        assert res.okay() is False
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("okay-after-validate")) == 0
+    got = [(r.subject, r.rule_id, r.reason) for r in res.sorted_violations().collect()]
+    assert got == GOLDEN
+    assert len(res.grouped_by_subject().collect()) == 11
+    assert sum(r["violations"] for r in res.summary("source").collect()) == 17
+    res.release()
 
 
 def test_drift_flags_only_shifted_source(spark):

@@ -2801,6 +2801,22 @@ def test_append_minhash_dedup_equals_full_rebuild(spark, tmp_path):
     ) == want
 
 
+def test_minhash_dedup_state_on_corpus_with_no_eligible_docs(spark, tmp_path):
+    """A corpus with no document to signature — no rows at all, or only
+    null and empty texts — writes a state that reads back with 0 pairs
+    (the empty bands parquet keeps its schema)."""
+    schema = "doc_id string, text string"
+    corpora = {
+        "none": [],
+        "degenerate": [("deg-null", None), ("deg-empty", ""), ("deg-null-2", None)],
+    }
+    for name, rows in corpora.items():
+        path = str(tmp_path / name)
+        dedup.write_minhash_dedup_state(spark.createDataFrame(rows, schema), path)
+        assert spark.read.parquet(f"{path}/pairs").count() == 0, name
+        assert spark.read.parquet(f"{path}/docs").count() == len(rows), name
+
+
 def test_embedding_cell_drift_flags_concentrated_group(spark):
     """PSI in IVF-cell space: a group whose vectors all collapse onto
     one planted direction must score far above a group that mirrors the
