@@ -18,9 +18,9 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from fs_schema_validator_spark.compiler.plan import first_mismatch_index  # noqa: E402
 from fs_schema_validator_spark.engine import ValidationEngine  # noqa: E402
 from fs_schema_validator_spark.functions import sketches  # noqa: E402
-from fs_schema_validator_spark.functions.arrays import first_mismatch_index  # noqa: E402
 from fs_schema_validator_spark.operators import (  # noqa: E402
     dedup,
     selection,
@@ -390,8 +390,12 @@ def array_mismatch_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cor = _corrupt_embeddings(emb).select(
         "vec_id", F.col("embedding").alias("corrupted")
     )
-    joined = emb.join(cor, "vec_id")
-    return first_mismatch_index(joined, "embedding", "corrupted", key="vec_id")
+    idx = first_mismatch_index(F.col("embedding"), F.col("corrupted"))
+    return (
+        emb.join(cor, "vec_id")
+        .select("vec_id", idx.alias("mismatch_idx"))
+        .filter(F.col("mismatch_idx") >= 0)
+    )
 
 
 # ---------------------------------------------------------------------------

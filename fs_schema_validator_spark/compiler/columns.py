@@ -3,8 +3,10 @@
 ``compile_checker(spec, dtype)(value, path)`` returns one Column of type
 ``array<struct<path:string, msg:string>>`` holding every violation the value
 commits against the spec — empty array means the value is valid. The whole
-check for a row is therefore a single vectorized expression evaluated inside
-whole-stage codegen; there is no per-row Python anywhere on this path.
+check for a row is therefore a single native expression; there is no
+per-row Python anywhere on this path. Its ``transform``/``filter`` lambdas
+are ``CodegenFallback``, so it is evaluated interpreted, outside
+whole-stage codegen.
 
 Design decisions (scale-driven):
 

@@ -4,8 +4,9 @@ Physical strategy (designed for the 10^12-row table, tested at sf*):
 
 * All row rules fuse into ONE narrow projection over the scan — a single
   ``select`` building per-rule violation arrays, flattened and exploded.
-  No shuffle; whole-stage codegen end to end; Parquet reader prunes to the
-  columns the rules actually reference.
+  No shuffle; Parquet reader prunes to the columns the rules actually
+  reference. The projection's ``transform``/``filter`` lambdas are
+  ``CodegenFallback``, so it runs interpreted, outside whole-stage codegen.
 * Table rules each contribute a small violations DataFrame:
   - uniqueness: groupBy(keys) with map-side partial counts (2-phase agg —
     the realized version of the reference's dead map/reduce seam,
@@ -14,9 +15,9 @@ Physical strategy (designed for the 10^12-row table, tested at sf*):
     **broadcast** so the big table never shuffles;
   - token-range: broadcast dim join + JVM-side higher-order functions
     (transform/filter) for the first out-of-range index — no Python;
-  - array-equality: equi-join on the key then a zero-copy Arrow kernel
-    (see functions/arrays.py) — Catalyst/AQE picks sort-merge vs shuffle
-    hash for the big join;
+  - array-equality: a hash screen over the cached projection, then the
+    first mismatching index of the flagged keys' arrays as a native
+    expression (``first_mismatch_index``) — no Python;
   - drift: bucketed histogram aggregation + PSI against a reference
     distribution, all aggregations partial-then-final.
 * Violation outputs union by name into the canonical schema
@@ -163,6 +164,28 @@ def _violation_rows(
         F.lit(rule.rule_id).alias("rule_id"),
         F.lit(rule.seq).alias("rule_seq"),
         reason.alias("reason"),
+    )
+
+
+def first_mismatch_index(a: Column, b: Column) -> Column:
+    """First index where arrays `a` and `b` differ, -1 where equal.
+
+    Elements compare null-safely and in their own type, so a null element
+    equals only a null and 2^53 differs from 2^53 + 1. A length mismatch
+    past a common prefix reports ``min(size(a), size(b))``, the first
+    position one side lacks; a null array reads as empty. Native
+    higher-order functions, no Python. The arrays are zipped whole: a form
+    that sliced them to the common prefix first ran ~3x slower."""
+    a0, b0 = F.coalesce(a, F.array()), F.coalesce(b, F.array())
+    m = F.least(F.size(a0), F.size(b0))
+    # zip_with pads the shorter array with nulls: a hit at p - 1 >= m is
+    # a padded position, which the length branch reports as m
+    p = F.array_position(F.zip_with(a0, b0, lambda x, y: x.eqNullSafe(y)), False)
+    return (
+        F.when((p > 0) & (p - 1 < m), p - 1)
+        .when(F.size(a0) != F.size(b0), m)
+        .otherwise(-1)
+        .cast("int")
     )
 
 
@@ -389,8 +412,6 @@ class CompiledPlan:
             )
 
         if isinstance(rule, Mdl.ArrayEqualityRule):
-            from ..functions.arrays import first_mismatch_index
-
             # Hash-screen join: shuffle (key, xxhash64(array)) — 16 bytes a
             # row — instead of the arrays themselves; re-join the arrays only
             # for keys whose hashes disagree (rare corruption). A hash match
@@ -461,10 +482,15 @@ class CompiledPlan:
                 joined = arrays.join(bad_keys, on=rule.key, how="inner").join(
                     ref, on=rule.key, how="inner"
                 )
-            mism = first_mismatch_index(joined, rule.column, "_ref_arr", key=rule.key)
+            mism = joined.select(
+                F.col(rule.key),
+                first_mismatch_index(
+                    F.col(rule.column), F.col("_ref_arr")
+                ).alias("mismatch_idx"),
+            )
             # mismatch_idx == -1 here means the screen flagged a null-vs-
-            # empty pair (hash/size differ) that the diagnosis kernel — and
-            # the DuckDB oracle's index arithmetic — deliberately treat as
+            # empty pair (hash/size differ) that the diagnosis — and the
+            # DuckDB oracle's index arithmetic — deliberately treat as
             # EQUAL (null ≡ empty for the array invariant; nullness itself
             # is the spec/required rules' job). Dropping them is the
             # contract, not a leak.

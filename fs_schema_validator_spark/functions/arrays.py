@@ -1,21 +1,16 @@
-"""Vectorized array kernels: token-array invariants without per-row Python.
+"""Vectorized Arrow kernels for the curation operators (``operators/``).
 
-The per-row invariant from the north rule — token-array equality against a
-reference table — is implemented in two stages so that at 10^12-row scale
-Python sees (almost) nothing:
+Each kernel runs inside ``mapInArrow`` (or a grouped ``applyInArrow``)
+over the Arrow ListArray's offsets/values buffers as NumPy views
+(zero-copy for non-null primitive values) — never Python lists, never
+per-row loops: MinHash and SimHash signatures, rolling and token-window
+hashes, span dedup, and the IVF/PQ/cosine scorers of the similarity
+joins.
 
-1. **JVM screen**: ``~(a <=> b)`` — Spark's native null-safe array equality
-   runs inside whole-stage codegen and filters the joined table down to the
-   (rare) corrupted rows. On a clean partition zero rows cross into Python.
-2. **Arrow diagnosis kernel**: for surviving rows, a ``mapInArrow`` kernel
-   computes the *first mismatching element index* for the violation reason.
-   It operates on the Arrow ListArray's offsets/values buffers as NumPy
-   views (zero-copy for non-null primitive values) — never Python lists,
-   never per-row loops.
-
-This mirrors the reference's checksum/decode probes (zip CRC:
-/root/reference/fs_schema_validator/schemas/zip.py:19-32; corrupted-gltf
-goldens: tests/test_gltf.py:25-38) re-expressed as a columnar kernel.
+The validation core uses none of them. Its array-equality diagnosis (the
+first mismatching token index) is a native expression,
+``compiler.plan.first_mismatch_index``, so validating crosses into Python
+nowhere.
 """
 
 from __future__ import annotations
@@ -26,8 +21,6 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_I64_MAX = np.iinfo(np.int64).max
 
 
 def _fixed_dim_matrix(
@@ -81,74 +74,6 @@ def _list_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.n
     else:
         validity = np.ones(len(arr), dtype=bool)
     return starts, lengths, values, validity
-
-
-def first_mismatch_kernel(
-    a: pa.Array, b: pa.Array
-) -> np.ndarray:
-    """First index where list rows of `a` and `b` differ; -1 where equal.
-
-    Length mismatches report index ``min(len_a, len_b)`` (the first position
-    where one side has no element). A null row is treated as length 0; two
-    null rows compare equal.
-    """
-    n = len(a)
-    sa, la, va, ok_a = _list_views(a)
-    sb, lb, vb, ok_b = _list_views(b)
-    la = np.where(ok_a, la, 0)
-    lb = np.where(ok_b, lb, 0)
-
-    min_len = np.minimum(la, lb)
-    total = int(min_len.sum())
-    first = np.full(n, -1, dtype=np.int64)
-
-    if total > 0:
-        row_of = np.repeat(np.arange(n), min_len)
-        cum = np.cumsum(min_len) - min_len
-        pos = np.arange(total) - np.repeat(cum, min_len)
-        flat_a = va[sa[row_of] + pos]
-        flat_b = vb[sb[row_of] + pos]
-        neq = flat_a != flat_b
-        # NaN != NaN is True in IEEE, but a null element should equal a null
-        # element for invariant purposes:
-        if flat_a.dtype.kind == "f" or flat_b.dtype.kind == "f":
-            both_nan = np.isnan(flat_a) & np.isnan(flat_b)
-            neq = neq & ~both_nan
-        if neq.any():
-            tmp = np.full(n, _I64_MAX, dtype=np.int64)
-            np.minimum.at(tmp, row_of[neq], pos[neq])
-            hit = tmp != _I64_MAX
-            first[hit] = tmp[hit]
-
-    len_mismatch = (la != lb) & (first == -1)
-    first[len_mismatch] = min_len[len_mismatch]
-    return first
-
-
-def first_mismatch_index(
-    df: DataFrame, col_a: str, col_b: str, key: str
-) -> DataFrame:
-    """(key, mismatch_idx) for rows whose arrays differ; equal rows dropped.
-
-    Stage 1 (JVM): null-safe inequality screen — only corrupted rows reach
-    Python. Stage 2 (Arrow): first-mismatch diagnosis kernel.
-    """
-    key_field = df.schema[key]
-    candidates = df.filter(~(F.col(col_a).eqNullSafe(F.col(col_b)))).select(
-        F.col(key), F.col(col_a).alias("_a"), F.col(col_b).alias("_b")
-    )
-
-    out_schema = f"{key} {key_field.dataType.simpleString()}, mismatch_idx int"
-
-    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            idx = first_mismatch_kernel(batch.column("_a"), batch.column("_b"))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(key), pa.array(idx, type=pa.int32())],
-                names=[key, "mismatch_idx"],
-            )
-
-    return candidates.mapInArrow(compute, out_schema)
 
 
 def minhash_mix_kernel(

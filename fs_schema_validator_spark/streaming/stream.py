@@ -15,9 +15,8 @@ batch after failure is idempotent because the manifest keys on
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Mapping
+from typing import Callable, Mapping
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -145,47 +144,20 @@ def stateful_violation_rate(
     group_col: str = "source",
     alert_rate: float = 0.1,
 ) -> DataFrame:
-    """Running violation rate per group with an alert flag — a custom
-    stateful operator via ``applyInPandasWithState``.
+    """Running violation rate per group with an alert flag — a native
+    streaming aggregation, no Python.
 
-    State per group is two counters (rows seen, bad rows) carried across
-    micro-batches; each batch updates them from Arrow-batched pandas
-    frames and emits the cumulative rate. This is the shape for stateful
-    checks the built-in windowed aggs can't express (cross-batch
-    cumulative metrics, session-style logic, kill-switch thresholds)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    The state store keeps two counters per group (rows seen, bad rows)
+    across micro-batches and restarts; in ``update`` mode each batch emits
+    ``<group> string, n_rows bigint, n_bad bigint, rate double, alert
+    boolean`` for the groups it touched. The caller attaches the sink."""
     ruleset = RuleSet.from_yaml(rules_yaml)
     nv = F.size(row_violation_array(ruleset.row_rules, stream_df.schema))
-    flagged = stream_df.select(F.col(group_col).alias("_g"), nv.alias("_nv"))
-    out_schema = (
-        f"{group_col} string, n_rows bigint, n_bad bigint, "
-        "rate double, alert boolean"
+    group = F.col(group_col).cast("string").alias(group_col)
+    counts = stream_df.groupBy(group).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum((nv > 0).cast("bigint")).alias("n_bad"),
     )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, bad = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            bad += int((pdf["_nv"] > 0).sum())
-        state.update((n, bad))
-        rate = (bad / n) if n else 0.0
-        yield pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "n_rows": [n],
-                "n_bad": [bad],
-                "rate": [rate],
-                "alert": [rate >= alert_rate],
-            }
-        )
-
-    return flagged.groupBy("_g").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType="n bigint, bad bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    rate = F.col("n_bad") / F.col("n_rows")
+    alert = (rate >= alert_rate).alias("alert")
+    return counts.select(group_col, "n_rows", "n_bad", rate.alias("rate"), alert)

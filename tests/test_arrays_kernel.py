@@ -1,61 +1,67 @@
-"""Unit tests for the zero-copy Arrow first-mismatch kernel + its Spark op."""
+"""Unit tests for the array kernels.
+
+The first-mismatch cases evaluate the native expression
+``compiler.plan.first_mismatch_index`` (the array-equality diagnosis) over
+small DataFrames; the rest test the Arrow kernels of ``functions.arrays``."""
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pytest
+from pyspark.sql import functions as F
 
-from fs_schema_validator_spark.functions.arrays import (
-    first_mismatch_index,
-    first_mismatch_kernel,
-)
+from fs_schema_validator_spark.compiler.plan import first_mismatch_index
 
 
-def _k(a, b, dtype=pa.int32()):
-    return first_mismatch_kernel(
-        pa.array(a, type=pa.list_(dtype)), pa.array(b, type=pa.list_(dtype))
-    ).tolist()
+def _k(spark, a, b, dtype="int"):
+    """first_mismatch_index over rows (a[i], b[i]), in row order."""
+    df = spark.createDataFrame(
+        list(enumerate(zip(a, b))),
+        f"i int, ab struct<a:array<{dtype}>, b:array<{dtype}>>",
+    )
+    got = df.select(
+        "i", first_mismatch_index(F.col("ab.a"), F.col("ab.b")).alias("m")
+    ).collect()
+    return [r.m for r in sorted(got, key=lambda r: r.i)]
 
 
-def test_equal_rows():
-    assert _k([[1, 2, 3], [], [7]], [[1, 2, 3], [], [7]]) == [-1, -1, -1]
+def test_equal_rows(spark):
+    assert _k(spark, [[1, 2, 3], [], [7]], [[1, 2, 3], [], [7]]) == [-1, -1, -1]
 
 
-def test_first_mismatch_positions():
-    assert _k([[1, 2, 3]], [[1, 9, 3]]) == [1]
-    assert _k([[5]], [[4]]) == [0]
-    assert _k([[1, 2, 3]], [[1, 2, 9]]) == [2]
+def test_first_mismatch_positions(spark):
+    assert _k(spark, [[1, 2, 3], [5], [1, 2, 3]], [[1, 9, 3], [4], [1, 2, 9]]) == [
+        1,
+        0,
+        2,
+    ]
 
 
-def test_multiple_mismatches_reports_first():
-    assert _k([[1, 2, 3]], [[9, 9, 9]]) == [0]
+def test_multiple_mismatches_reports_first(spark):
+    assert _k(spark, [[1, 2, 3]], [[9, 9, 9]]) == [0]
 
 
-def test_length_mismatch_reports_boundary():
-    assert _k([[1, 2]], [[1, 2, 3]]) == [2]
-    assert _k([[1, 2, 3]], [[1]]) == [1]
-    assert _k([[]], [[1]]) == [0]
+def test_length_mismatch_reports_boundary(spark):
+    assert _k(spark, [[1, 2], [1, 2, 3], []], [[1, 2, 3], [1], [1]]) == [2, 1, 0]
 
 
-def test_null_rows():
-    assert _k([None, None], [None, [1]]) == [-1, 0]
-    assert _k([[1]], [None]) == [0]
+def test_null_rows(spark):
+    assert _k(spark, [None, None], [None, [1]]) == [-1, 0]
+    assert _k(spark, [[1]], [None]) == [0]
 
 
-def test_mixed_batch():
+def test_mixed_batch(spark):
     a = [[1, 2, 3], [4, 5], None, [], [9, 9]]
     b = [[1, 2, 3], [4, 6], None, [], [9]]
-    assert _k(a, b) == [-1, 1, -1, -1, 1]
+    assert _k(spark, a, b) == [-1, 1, -1, -1, 1]
 
 
-def test_float_nan_equality():
-    a = pa.array([[1.0, float("nan")]], type=pa.list_(pa.float64()))
-    b = pa.array([[1.0, float("nan")]], type=pa.list_(pa.float64()))
-    assert first_mismatch_kernel(a, b).tolist() == [-1]
+def test_float_nan_equality(spark):
+    nan = float("nan")
+    assert _k(spark, [[1.0, nan]], [[1.0, nan]], dtype="double") == [-1]
 
 
-def test_large_random_agreement_with_naive():
+def test_large_random_agreement_with_naive(spark):
     rng = np.random.default_rng(42)
     a_rows, b_rows = [], []
     for _ in range(500):
@@ -80,7 +86,7 @@ def test_large_random_agreement_with_naive():
         return -1 if len(x) == len(y) else min(len(x), len(y))
 
     expected = [naive(x, y) for x, y in zip(a_rows, b_rows)]
-    assert _k(a_rows, b_rows) == expected
+    assert _k(spark, a_rows, b_rows) == expected
 
 
 def test_spark_operator_screens_equal_rows(spark):
@@ -93,11 +99,11 @@ def test_spark_operator_screens_equal_rows(spark):
         ],
         "k string, x array<int>, y array<int>",
     )
-    got = {
-        r.k: r.mismatch_idx
-        for r in first_mismatch_index(df, "x", "y", key="k").collect()
-    }
-    # row "a" is screened out JVM-side (arrays equal) and never reaches Python
+    mism = df.select(
+        "k", first_mismatch_index(F.col("x"), F.col("y")).alias("mismatch_idx")
+    ).filter(F.col("mismatch_idx") >= 0)
+    got = {r.k: r.mismatch_idx for r in mism.collect()}
+    # row "a" has equal arrays and is dropped, as the engine drops it
     assert got == {"b": 1, "c": 0, "d": 0}
 
 

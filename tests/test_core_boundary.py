@@ -1,0 +1,122 @@
+"""The validation core runs in the JVM alone.
+
+A fresh interpreter validates the golden fixture (tests/test_engine_golden.py)
+three ways — ``validate``, ``ResumableValidator.run`` and ``validate_stream`` —
+and builds ``stateful_violation_rate`` over it. Afterwards no curation module
+(``operators*``, ``functions.arrays``) may have been imported, and the
+executed plans of the golden violation relation and of the rate stream may
+hold no Python-evaluated node."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+
+PYTHON_NODES = (
+    "MapInArrow",
+    "PythonUDF",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandasWithState",
+)
+
+SCRIPT = r"""
+import json, sys
+
+from fs_schema_validator_spark.engine import ValidationEngine
+from fs_schema_validator_spark.session import get_spark
+from fs_schema_validator_spark.streaming.checkpoint import (
+    ParquetManifestStore,
+    ResumableValidator,
+)
+from fs_schema_validator_spark.streaming.stream import (
+    stateful_violation_rate,
+    validate_stream,
+)
+from tests.test_engine_golden import RULES, golden_inputs
+
+tmp = sys.argv[1]
+spark = get_spark(
+    master="local[2]",
+    app_name="fsv-core-boundary",
+    extra_conf={"spark.sql.warehouse.dir": f"{tmp}/warehouse"},
+)
+plans = {}
+
+seq, tables = golden_inputs(spark)
+res = ValidationEngine(subject_col="doc_id").validate(seq, RULES, tables)
+n_validate = res.n_violations
+plans["violations"] = res.violations._jdf.queryExecution().executedPlan().toString()
+res.release()
+
+store = ParquetManifestStore(spark, f"{tmp}/manifest")
+run = ResumableValidator(
+    ValidationEngine(subject_col="doc_id"), store, partition_col="source"
+).run(seq, RULES, tables)
+n_run = sum(r["n_violations"] for r in run.values())
+
+seq.write.parquet(f"{tmp}/incoming")
+stream = spark.readStream.schema(seq.schema).parquet(f"{tmp}/incoming")
+seen = []
+q = validate_stream(
+    stream,
+    RULES,
+    tables,
+    checkpoint_location=f"{tmp}/chk_validate",
+    on_batch=lambda bid, df, k: seen.append(k),
+)
+q.awaitTermination(120)
+
+q = (
+    stateful_violation_rate(stream, RULES)
+    .writeStream.format("noop")
+    .outputMode("update")
+    .option("checkpointLocation", f"{tmp}/chk_rate")
+    .trigger(availableNow=True)
+    .start()
+)
+q.awaitTermination(120)
+plans["rate"] = q._jsq.explainInternal(False)
+spark.stop()
+
+print(json.dumps({
+    "modules": sorted(
+        m for m in sys.modules
+        if m.startswith("fs_schema_validator_spark.operators")
+        or m == "fs_schema_validator_spark.functions.arrays"
+    ),
+    "plans": plans,
+    "counts": [n_validate, n_run, sum(seen)],
+}))
+"""
+
+
+def test_core_imports_no_curation_module_and_plans_no_python(tmp_path):
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", SCRIPT, str(tmp_path)],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+
+    # the three run modes really ran the golden fixture (17 violations)
+    assert got["counts"] == [17, 17, 17]
+    assert got["modules"] == []
+    # the persisted relation's string carries the plan that computed it
+    assert "InMemoryRelation" in got["plans"]["violations"]
+    for name, plan in got["plans"].items():
+        found = [node for node in PYTHON_NODES if node in plan]
+        assert found == [], (name, plan)

@@ -86,7 +86,8 @@ GOLDEN = [
 ]
 
 
-def _validate_golden_table(spark):
+def golden_inputs(spark):
+    """(sequences table, aux tables) whose violations under RULES are GOLDEN."""
     n = 10
     seq = synth.with_duplicates(
         synth.corrupt_sequences(synth.gen_sequences(spark, n), every=10),
@@ -97,6 +98,11 @@ def _validate_golden_table(spark):
         "reference_tokens": synth.gen_reference_tokens(spark, n),
         "expected_manifest": synth.gen_expected_manifest(spark, n, extra=2),
     }
+    return seq, tables
+
+
+def _validate_golden_table(spark):
+    seq, tables = golden_inputs(spark)
     return ValidationEngine(subject_col="doc_id").validate(seq, RULES, tables)
 
 
@@ -181,6 +187,46 @@ schema:
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
     level = built[0].storageLevel
     assert not (level.useMemory or level.useDisk)
+
+
+@pytest.mark.parametrize(
+    "dtype, bad, ref, idx",
+    [
+        ("bigint", [2**53, None], [2**53 + 1, None], 0),
+        ("double", [1.0, float("nan")], [1.0, None], 1),
+    ],
+    ids=["bigint", "double"],
+)
+def test_array_equality_compares_elements_exactly(spark, dtype, bad, ref, idx):
+    """Elements compare in their own type and null-safely: 2^53 differs
+    from 2^53 + 1 in an array that also holds a null, and NaN differs from
+    a null element. (A float64 read of nullable integer arrays, with null
+    as NaN, reported both rows equal.)"""
+    t = float if dtype == "double" else int
+    schema = f"doc_id string, tokens array<{dtype}>"
+    df = spark.createDataFrame(
+        [("a", bad), ("b", [t(1), t(2)]), ("c", [t(3)])], schema
+    )
+    reference = spark.createDataFrame(
+        [("a", ref), ("b", [t(1), t(3)]), ("c", [t(3)])], schema
+    )
+    rules = """
+schema:
+  - type: array_equality
+    id: tokens_match
+    column: tokens
+    reference: reference_tokens
+    key: doc_id
+"""
+    res = ValidationEngine(subject_col="doc_id").validate(
+        df, rules, {"reference_tokens": reference}
+    )
+    got = [(r.subject, r.rule_id, r.reason) for r in res.sorted_violations().collect()]
+    res.release()
+    assert got == [
+        ("a", "tokens_match", f"token mismatch at index {idx}"),
+        ("b", "tokens_match", "token mismatch at index 1"),
+    ]
 
 
 def test_verdict(result):
