@@ -24,7 +24,6 @@ from fs_schema_validator_spark.functions import sketches  # noqa: E402
 from fs_schema_validator_spark.operators import (  # noqa: E402
     dedup,
     selection,
-    similarity,
     textstats,
 )
 
@@ -339,31 +338,7 @@ def simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# embeddings: similarity search + array invariants
-
-_QUERY_VEC_CACHE: dict[str, list[float]] = {}
-
-
-def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    if sf_dir not in _QUERY_VEC_CACHE:
-        row = (
-            _t(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == 0)
-            .select("embedding")
-            .first()
-        )
-        _QUERY_VEC_CACHE[sf_dir] = [float(x) for x in row[0]]
-    return _QUERY_VEC_CACHE[sf_dir]
-
-
-def cosine_scores_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.cosine_scores(emb, _query_vec(spark, sf_dir), digits=5)
-
-
-def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.lsh_bucketed_topk(emb, _query_vec(spark, sf_dir), k=10)
+# embeddings: array invariants
 
 
 def _corrupt_embeddings(emb: DataFrame) -> DataFrame:
@@ -890,36 +865,6 @@ def drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, col="n_chars", group_col="lang", lo=0.0, hi=600.0, buckets=12
     )
     return out.select(F.col("grp").alias("lang"), "ks_d")
-
-
-def ann_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-k — the ANN baseline; ordering on the
-    rounded score + id so the ranking is engine-portable."""
-    emb = _t(spark, sf_dir, "embeddings")
-    scored = similarity.cosine_scores(emb, _query_vec(spark, sf_dir), digits=5)
-    return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(10)
-
-
-def _plant_near_dup_embeddings(emb: DataFrame) -> DataFrame:
-    """Every 50th vector gets a near-identical copy (first component +0.05,
-    double math — mirrored verbatim in the oracle CTE)."""
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = emb.select("vec_id", v.alias("e"))
-    copies = base.filter(F.col("vec_id") % 50 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at(F.col("e"), 1) + F.lit(0.05)),
-            F.slice(F.col("e"), 2, 63),
-        ).alias("e"),
-    )
-    return base.unionByName(copies)
-
-
-def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    planted = _plant_near_dup_embeddings(_t(spark, sf_dir, "embeddings"))
-    return similarity.near_dup_pairs(
-        planted, dim=64, threshold=0.9, vec_col="e", id_col="vec_id"
-    )
 
 
 def bucketed_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1623,612 +1568,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter((F.col("dup_line_frac") <= 0.5) & (F.col("entropy") >= 1.0))
 
 
-# Shared ANN gate parameters — ONE definition used by both the Spark
-# query functions and the DuckDB oracle builders, so a tuning edit on one
-# side cannot silently replay a different algorithm on the other (the
-# same one-sided-drift risk _CLF_BUCKETS/_CLF_BIAS guard for the
-# classifier gate).
-_ANN_K = 10
-_ANN_N_CENT = 16
-_ANN_PROBES = 4
-_ANN_PINNED_ITERS = 2
-_PQ_M = 8  # subspaces per vector
-_PQ_KS = 16  # codewords per subspace
-_PQ_SUB = 64 // _PQ_M  # dims per subspace
-_PQ_REFINE = 4  # exact-rerank shortlist = refine * k
-
-# Shared id-ordered seed window replayed by every ANN/semantic-dedup
-# oracle — mirrors similarity._collect_seed_matrix exactly: null id/vec,
-# zero-norm vectors (a directionless vector must not seed a cosine
-# quantizer; engine-side a zero centroid scores 0 while DuckDB's dp/0 is
-# NULL-ranked-last), AND vectors with null/NaN/Inf ELEMENTS (np.asarray
-# turns a None element into a NaN centroid that poisons every engine
-# argmax while DuckDB's sum() skips null terms; an Inf norm's unit row
-# carries NaN at the Inf position) all excluded;
-# 2*n_centroids head window, modal-dim (=64) filter, first n_centroids.
-_SEED_WINDOW_SQL = f"""(SELECT * FROM (
-        SELECT * FROM embeddings
-        WHERE embedding IS NOT NULL AND vec_id IS NOT NULL
-          AND len(list_filter(embedding, x -> x <> 0)) > 0
-          AND len(list_filter(embedding,
-                x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0
-        ORDER BY vec_id LIMIT {_ANN_N_CENT * 2})
-      WHERE len(embedding) = 64
-      ORDER BY vec_id LIMIT {_ANN_N_CENT})"""
-
-# Shared corpus-side vector-eligibility tail for the oracles' vn CTEs —
-# mirrors the kernels' finite-positive norm mask exactly (null element →
-# count < dim; NaN/Inf element → non-finite sum of squares; zero vector
-# → sum 0). ONE definition, interpolated into every vn, for the same
-# drift-prevention reason as _SEED_WINDOW_SQL.
-_VN_ELIGIBLE_HAVING = """HAVING sum(CAST(embedding[i] AS DOUBLE)
-                  * CAST(embedding[i] AS DOUBLE)) > 0
-          AND count(CAST(embedding[i] AS DOUBLE)) = 64
-          AND isfinite(sum(CAST(embedding[i] AS DOUBLE)
-                           * CAST(embedding[i] AS DOUBLE)))"""
-
-
-def ann_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with a k-means-TRAINED quantizer (distributed Lloyd,
-    operators/similarity.py::train_centroids_kmeans). Iterative floating
-    fixpoint — no SQL oracle by the driver contract's carve-out for
-    iterative algorithms (rows-only check); quality is pinned by tests
-    (inertia drop, recovered means, exact-top-k recall). The
-    ann_topk_ivf_kmeans_pinned sibling gives the SAME Lloyd machinery a
-    full value-level gate by pinning the init and iteration count."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk_kmeans(
-        emb,
-        _query_vec(spark, sf_dir),
-        k=_ANN_K,
-        n_centroids=_ANN_N_CENT,
-        probes=_ANN_PROBES,
-    )
-
-
-def ann_topk_ivf_kmeans_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The k-means IVF path under a VALUE-LEVEL gate: id-ordered seed
-    init (the same 32-window/modal-dim sample the plain IVF oracle
-    replays) + exactly 2 Lloyd iterations, so every centroid update is a
-    closed-form per-cell mean and DuckDB replays the whole run — seed,
-    two assignment+update rounds, probe ranking, and the exact top-k —
-    value for value. Frees the iterative carve-out the plain
-    ann_topk_ivf_kmeans ships under."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk_kmeans(
-        emb,
-        _query_vec(spark, sf_dir),
-        k=_ANN_K,
-        n_centroids=_ANN_N_CENT,
-        probes=_ANN_PROBES,
-        n_iter=_ANN_PINNED_ITERS,
-        init="sample",
-    )
-
-
-def ann_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ top-k (similarity.ivf_pq_topk): coarse IVF pruning +
-    product-quantized codes (8 bytes/vector instead of 256 — the ANN
-    family's shuffle/memory diet) ranked by asymmetric distance, exact
-    rerank of the 4k shortlist. Deterministic throughout (id-ordered
-    seeds, 2 pinned Lloyd iterations per subspace), so the oracle
-    replays seed, PQ training, encoding, ADC, and rerank value-for-value
-    — same fixture contract as the pinned k-means gate (non-null ids:
-    the engine's training pass never sees ids)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivf_pq_topk(
-        emb,
-        _query_vec(spark, sf_dir),
-        k=_ANN_K,
-        n_centroids=_ANN_N_CENT,
-        probes=_ANN_PROBES,
-        m=_PQ_M,
-        ks=_PQ_KS,
-        n_iter=_ANN_PINNED_ITERS,
-        refine=_PQ_REFINE,
-    )
-
-
-def knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch kNN join (similarity.ivf_knn_join): every 100th vector
-    queries the corpus for its 5 approximate nearest neighbors in ONE
-    distributed job — the kNN-graph primitive; one cell equi-join, no
-    per-query loop. Deterministic (id-ordered seeds, stable probe and
-    rank tie-breaks), so the whole join is replayed in SQL."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 100 == 0)
-    return similarity.ivf_knn_join(
-        emb, q, k=5, n_centroids=_ANN_N_CENT, probes=_ANN_PROBES
-    )
-
-
-def _ivf_assign_ctes() -> str:
-    """The shared coarse-assignment replay (cent, cn, vn, cdot, assign)
-    — ONE text used by the batch kNN oracle and the embedding-drift
-    oracle, so the two cannot model different quantizers."""
-    return f"""cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-                     embedding
-              FROM {_SEED_WINDOW_SQL}),
-cn AS (SELECT cell, sqrt(sum(CAST(embedding[i] AS DOUBLE)
-                             * CAST(embedding[i] AS DOUBLE))) AS nrm
-       FROM cent, generate_series(1, 64) g(i) GROUP BY cell),
-vn AS (SELECT vec_id FROM embeddings, generate_series(1, 64) g(i)
-       WHERE embedding IS NOT NULL AND len(embedding) = 64
-         AND vec_id IS NOT NULL
-       GROUP BY vec_id
-       {_VN_ELIGIBLE_HAVING}),
-cdot AS (SELECT v.vec_id, c.cell,
-                sum(CAST(e.embedding[g.i] AS DOUBLE)
-                    * CAST(c.embedding[g.i] AS DOUBLE)) AS dp
-         FROM embeddings e JOIN vn v USING (vec_id), cent c,
-              generate_series(1, 64) g(i)
-         GROUP BY v.vec_id, c.cell),
-assign AS (SELECT vec_id, cell FROM (
-             SELECT d.vec_id, d.cell,
-                    row_number() OVER (PARTITION BY d.vec_id
-                                       ORDER BY d.dp / n.nrm DESC,
-                                                d.cell ASC) AS rk
-             FROM cdot d JOIN cn n USING (cell)) WHERE rk = 1)"""
-
-
-def _knn_join_oracle(k: int = 5, probes: int = _ANN_PROBES) -> str:
-    """DuckDB replay of knn_join_topk: shared seed window, corpus
-    home-cell assignment (argmax dp/nrm, cell ASC ties), per-query
-    top-`probes` probe cells, candidate cell join, exact cosine,
-    row_number per query."""
-    return f"""
-WITH {_ivf_assign_ctes()},
-qprobe AS (SELECT vec_id AS qid, cell FROM (
-             SELECT d.vec_id, d.cell,
-                    row_number() OVER (PARTITION BY d.vec_id
-                                       ORDER BY d.dp / n.nrm DESC,
-                                                d.cell ASC) AS rk
-             FROM cdot d JOIN cn n USING (cell)
-             WHERE d.vec_id % 100 = 0) WHERE rk <= {probes}),
-cand AS (SELECT p.qid, a.vec_id FROM qprobe p JOIN assign a USING (cell)),
-x AS (SELECT c.qid, c.vec_id,
-             CAST(e.embedding[g.i] AS DOUBLE) AS a,
-             CAST(q.embedding[g.i] AS DOUBLE) AS b
-      FROM cand c
-           JOIN embeddings e ON e.vec_id = c.vec_id
-           JOIN embeddings q ON q.vec_id = c.qid,
-           generate_series(1, 64) g(i)),
-s AS (SELECT qid, vec_id, round(sum(a * b) /
-             (sqrt(sum(a * a)) * sqrt(sum(b * b))), 5) AS cos
-      FROM x GROUP BY qid, vec_id)
-SELECT qid, vec_id, cos FROM (
-  SELECT qid, vec_id, cos,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos DESC, vec_id ASC) AS rk
-  FROM s) WHERE rk <= {k}
-"""
-
-
-def _dir_fingerprint(path: str) -> str:
-    """Cheap content fingerprint of a parquet file/dir (names + sizes +
-    mtimes) — cache keys built from a PATH alone would silently reuse
-    artifacts across a regenerated fixture at the same location."""
-    import os
-
-    parts = []
-    if os.path.isdir(path):
-        for name in sorted(os.listdir(path)):
-            st = os.stat(os.path.join(path, name))
-            parts.append(f"{name}:{st.st_size}:{int(st.st_mtime)}")
-    elif os.path.exists(path):
-        st = os.stat(path)
-        parts.append(f"{st.st_size}:{int(st.st_mtime)}")
-    import hashlib
-
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
-
-
-def pq_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch kNN join against the STANDING IVF-PQ index
-    (similarity.write_pq_index → similarity.pq_knn_join): every 100th
-    vector gets its 5 approximate nearest neighbors; candidates are
-    ranked by ADC over the m-BYTE codes in one per-cell cogroup and
-    only each query's refine·k shortlist fetches raw vectors for the
-    exact-cosine rerank — the kNN-graph cost model. The index build is
-    deterministic (pinned seed window, pinned Lloyd iterations, frozen
-    sidecar), so the full train → encode → probe → ADC → rerank
-    composition is replayed in SQL — closing round 4's last ungated
-    operator (pq_knn_join was pytest-parity only)."""
-    import hashlib
-    import shutil
-    import tempfile
-    import uuid
-    from pathlib import Path as _P
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # content-keyed standing-index cache: the build is deterministic in
-    # (input dir, gate params, build semantics), so a completed build is
-    # reusable across invocations — which is the POINT of a standing
-    # index (and cuts this gate's dominant cost from the bench). The
-    # build-tag must be bumped whenever the index build's semantics
-    # change, or a stale cache would silently gate old behavior.
-    fp = _dir_fingerprint(f"{sf_dir}/embeddings.parquet")
-    key = (
-        f"{sf_dir}|{fp}|{_ANN_N_CENT}|{_PQ_M}|{_PQ_KS}|"
-        f"{_ANN_PINNED_ITERS}|r5a"
-    )
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    path = f"{tempfile.gettempdir()}/fsv_pq_knn_{tag}"
-    # the model sidecar is written LAST by write_pq_index, so its
-    # _SUCCESS marker implies the codes are complete too
-    if not (_P(path) / "model" / "_SUCCESS").exists():
-        # build into a private sibling, then rename it into place: two
-        # processes that both miss the marker never write into one
-        # directory, and the one whose rename loses drops its copy
-        build = f"{path}.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        similarity.write_pq_index(
-            emb,
-            build,
-            n_centroids=_ANN_N_CENT,
-            m=_PQ_M,
-            ks=_PQ_KS,
-            n_iter=_ANN_PINNED_ITERS,
-        )
-        try:
-            os.rename(build, path)
-        except OSError:
-            shutil.rmtree(build, ignore_errors=True)
-    q = emb.filter(F.col("vec_id") % 100 == 0)
-    return similarity.pq_knn_join(
-        spark, path, q, emb, k=5, probes=_ANN_PROBES, refine=_PQ_REFINE
-    )
-
-
-def knn_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gated union of the two batch-kNN-join strategies (the
-    window-consolidation trick): mode 'ivf' = ivf_knn_join (cogrouped
-    cell-BLAS exact scoring), mode 'pq' = pq_knn_join (standing-index
-    ADC scoring + shortlist rerank). Solo tail entries knn_join_topk /
-    pq_knn_join_topk diagnose each alone."""
-    ivf = knn_join_topk(spark, sf_dir).select(
-        F.lit("ivf").alias("mode"), "qid", "vec_id", "cos"
-    )
-    pq = pq_knn_join_topk(spark, sf_dir).select(
-        F.lit("pq").alias("mode"), "qid", "vec_id", "cos"
-    )
-    return ivf.unionByName(pq)
-
-
-def _pq_knn_join_oracle(
-    k: int = 5,
-    probes: int = _ANN_PROBES,
-    m: int = _PQ_M,
-    sub: int = _PQ_SUB,
-    n_iter: int = _ANN_PINNED_ITERS,
-) -> str:
-    """DuckDB replay of pq_knn_join_topk: the shared PQ training prefix
-    (_pq_train_parts — identical text to ann_topk_ivf_pq's replay) plus
-    the batch tail: per-QUERY probe cells (dp/nrm DESC, cell ASC — the
-    knn_join_topk probe contract), per-query ADC lookup tables ql(qid,
-    sub, cell), candidates = probe ⋈ home-cell, pairwise ADC = sum of
-    the query's LUT over each candidate's codes, per-query refine·k
-    shortlist (adist ASC, vec_id ASC), exact-cosine rerank, top-k."""
-    refine_k = _PQ_REFINE * k
-    parts, prev = _pq_train_parts(n_iter, m, sub)
-    parts.append(
-        f"""qprobe AS (SELECT vec_id AS qid, cell FROM (
-             SELECT d.vec_id, d.cell,
-                    row_number() OVER (PARTITION BY d.vec_id
-                                       ORDER BY d.dp / n.nrm DESC,
-                                                d.cell ASC) AS rk
-             FROM cd d JOIN cn0 n USING (cell)
-             WHERE d.vec_id % 100 = 0) WHERE rk <= {probes}),
-ql AS (SELECT u.vec_id AS qid, c.sub, c.cell,
-              sum((u.ux - c.x) * (u.ux - c.x)) AS qd
-       FROM u JOIN {prev} c ON u.i = c.sub * {sub} + c.j
-       WHERE u.vec_id % 100 = 0
-       GROUP BY u.vec_id, c.sub, c.cell),
-cand AS (SELECT p.qid, a.vec_id FROM qprobe p JOIN af a USING (cell)),
-adist AS (SELECT c.qid, c.vec_id, sum(l.qd) AS adist
-          FROM cand c JOIN pcode p ON p.vec_id = c.vec_id
-               JOIN ql l ON l.qid = c.qid AND l.sub = p.sub
-                        AND l.cell = p.cell
-          GROUP BY c.qid, c.vec_id),
-short AS (SELECT qid, vec_id FROM (
-            SELECT qid, vec_id,
-                   row_number() OVER (PARTITION BY qid
-                                      ORDER BY adist ASC,
-                                               vec_id ASC) AS rk
-            FROM adist) WHERE rk <= {refine_k}),
-x AS (SELECT sh.qid, sh.vec_id,
-             CAST(e.embedding[g.i] AS DOUBLE) AS a,
-             CAST(q.embedding[g.i] AS DOUBLE) AS b
-      FROM short sh
-           JOIN embeddings e ON e.vec_id = sh.vec_id
-           JOIN embeddings q ON q.vec_id = sh.qid,
-           generate_series(1, 64) g(i)),
-s AS (SELECT qid, vec_id, round(sum(a * b) /
-             (sqrt(sum(a * a)) * sqrt(sum(b * b))), 5) AS cos
-      FROM x GROUP BY qid, vec_id)"""
-    )
-    ctes = ",\n".join(parts)
-    return (
-        f"WITH {ctes}\n"
-        "SELECT qid, vec_id, cos FROM (\n"
-        "  SELECT qid, vec_id, cos,\n"
-        "         row_number() OVER (PARTITION BY qid\n"
-        "                            ORDER BY cos DESC, vec_id ASC) AS rk\n"
-        f"  FROM s) WHERE rk <= {k}"
-    )
-
-
-def embedding_drift_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space distribution drift per lang
-    (similarity.embedding_cell_drift): the drift validator family (PSI
-    vs global over the full group×bucket grid) applied to the embedding
-    column, with the pinned IVF quantizer's cells as the buckets and
-    lang labels joined from documents on the shared id. A lang whose
-    vectors crowd cells the corpus spreads over surfaces exactly like a
-    drifting scalar column in histogram_psi — the same EPS clamp, the
-    same missing-bucket terms."""
-    emb = _t(spark, sf_dir, "embeddings")
-    labels = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("vec_id"), F.col("lang").alias("grp"))
-    )
-    out = similarity.embedding_cell_drift(
-        emb, labels, n_centroids=_ANN_N_CENT
-    )
-    return out.select(F.col("grp").alias("lang"), "psi")
-
-
-def _embedding_drift_oracle() -> str:
-    """DuckDB replay of embedding_drift_cells: the shared coarse
-    assignment (_ivf_assign_ctes — identical text to the kNN-join
-    replay) + the lang label join + the PSI grid tail (clamp both
-    masses at 1e-6, full lang × occupied-cell grid)."""
-    return f"""
-WITH {_ivf_assign_ctes()},
-lab AS (SELECT a.vec_id, d.lang, a.cell AS bucket
-        FROM assign a JOIN documents d ON d.doc_id = a.vec_id
-        WHERE d.lang IS NOT NULL),
-hist AS (SELECT lang, bucket, count(*) AS cnt FROM lab GROUP BY 1, 2),
-tot AS (SELECT lang, sum(cnt) AS total FROM hist GROUP BY lang),
-g AS (SELECT bucket, sum(cnt) AS gcnt FROM hist GROUP BY bucket),
-gt AS (SELECT sum(cnt) AS gtotal FROM hist),
-p AS (SELECT bucket, gcnt / gt.gtotal AS p FROM g, gt),
-grid AS (SELECT t.lang, t.total, p.bucket, p.p FROM tot t CROSS JOIN p),
-j AS (SELECT grid.lang,
-             greatest(coalesce(h.cnt / grid.total, 0.0), 1e-6) AS qc,
-             greatest(grid.p, 1e-6) AS pc
-      FROM grid LEFT JOIN hist h
-           ON h.lang = grid.lang AND h.bucket = grid.bucket)
-SELECT lang, round(sum((qc - pc) * ln(qc / pc)), 4) AS psi
-FROM j GROUP BY lang
-"""
-
-
-def _pq_train_parts(
-    n_iter: int, m: int, sub: int
-) -> tuple[list[str], str]:
-    """The shared PQ-replay prefix (CTE list, final-codebook name):
-    eligibility (vn), unit vectors (u), the pinned seed window, the
-    coarse IVF assignment (af), the per-subspace Lloyd codebook
-    iterations (cb0..cbN), and the corpus encode (pcode). Composed by
-    BOTH _ivf_pq_oracle (single-query tail) and _pq_knn_join_oracle
-    (batch-query tail) — one training replay, two probe shapes."""
-    parts = [
-        f"""vn AS (SELECT vec_id,
-              sqrt(sum(CAST(embedding[i] AS DOUBLE)
-                       * CAST(embedding[i] AS DOUBLE))) AS nrm
-       FROM embeddings, generate_series(1, 64) g(i)
-       WHERE embedding IS NOT NULL AND len(embedding) = 64
-         AND vec_id IS NOT NULL
-       GROUP BY vec_id
-       {_VN_ELIGIBLE_HAVING})""",
-        """u AS (SELECT e.vec_id, g.i,
-             CAST(e.embedding[g.i] AS DOUBLE) / v.nrm AS ux
-      FROM embeddings e JOIN vn v USING (vec_id),
-           generate_series(1, 64) g(i))""",
-        f"""seed AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-                   embedding
-            FROM {_SEED_WINDOW_SQL})""",
-        # coarse IVF: raw seed rows, argmax cosine (scored on dot/|c|)
-        """cent0 AS (SELECT cell, i, CAST(embedding[i] AS DOUBLE) AS x
-            FROM seed, generate_series(1, 64) g(i))""",
-        """cn0 AS (SELECT cell, sqrt(sum(x * x)) AS nrm
-           FROM cent0 GROUP BY cell)""",
-        """cd AS (SELECT u2.vec_id, c.cell,
-                 sum(CAST(e.embedding[c.i] AS DOUBLE) * c.x) AS dp
-          FROM embeddings e JOIN vn u2 USING (vec_id), cent0 c
-          GROUP BY u2.vec_id, c.cell)""",
-        """af AS (SELECT vec_id, cell FROM (
-            SELECT d.vec_id, d.cell,
-                   row_number() OVER (PARTITION BY d.vec_id
-                                      ORDER BY d.dp / n.nrm DESC,
-                                               d.cell ASC) AS rk
-            FROM cd d JOIN cn0 n USING (cell)) WHERE rk = 1)""",
-        # PQ codebook seed: UNIT seed rows sliced into m subspaces
-        f"""sn AS (SELECT cell, sqrt(sum(CAST(embedding[i] AS DOUBLE)
-                             * CAST(embedding[i] AS DOUBLE))) AS nrm
-          FROM seed, generate_series(1, 64) g(i) GROUP BY cell)""",
-        f"""cb0 AS (SELECT (g.i - 1) // {sub} AS sub, s.cell,
-                  ((g.i - 1) % {sub}) + 1 AS j,
-                  CAST(s.embedding[g.i] AS DOUBLE) / sn.nrm AS x
-           FROM seed s JOIN sn USING (cell),
-                generate_series(1, 64) g(i))""",
-    ]
-    prev = "cb0"
-    for it in range(n_iter):
-        nxt = f"cb{it + 1}"
-        parts.append(
-            f"""pd{it} AS (SELECT u.vec_id, c.sub, c.cell,
-                  sum((u.ux - c.x) * (u.ux - c.x)) AS dist
-           FROM u JOIN {prev} c ON u.i = c.sub * {sub} + c.j
-           GROUP BY u.vec_id, c.sub, c.cell),
-pa{it} AS (SELECT vec_id, sub, cell FROM (
-             SELECT vec_id, sub, cell,
-                    row_number() OVER (PARTITION BY vec_id, sub
-                                       ORDER BY dist ASC, cell ASC) AS rk
-             FROM pd{it}) WHERE rk = 1),
-pm{it} AS (SELECT a.sub, a.cell, u.i - a.sub * {sub} AS j, avg(u.ux) AS x
-           FROM pa{it} a JOIN u ON u.vec_id = a.vec_id
-           WHERE u.i > a.sub * {sub} AND u.i <= a.sub * {sub} + {sub}
-           GROUP BY a.sub, a.cell, u.i - a.sub * {sub}),
-{nxt} AS (SELECT p.sub, p.cell, p.j, coalesce(m.x, p.x) AS x
-          FROM {prev} p LEFT JOIN pm{it} m
-          USING (sub, cell, j))"""
-        )
-        prev = nxt
-    parts.append(
-        f"""pe AS (SELECT u.vec_id, c.sub, c.cell,
-                 sum((u.ux - c.x) * (u.ux - c.x)) AS dist
-          FROM u JOIN {prev} c ON u.i = c.sub * {sub} + c.j
-          GROUP BY u.vec_id, c.sub, c.cell),
-pcode AS (SELECT vec_id, sub, cell FROM (
-            SELECT vec_id, sub, cell,
-                   row_number() OVER (PARTITION BY vec_id, sub
-                                      ORDER BY dist ASC, cell ASC) AS rk
-            FROM pe) WHERE rk = 1)"""
-    )
-    return parts, prev
-
-
-def _ivf_pq_oracle(
-    n_iter: int = _ANN_PINNED_ITERS,
-    probes: int = _ANN_PROBES,
-    m: int = _PQ_M,
-    sub: int = _PQ_SUB,
-    refine_k: int = _PQ_REFINE * _ANN_K,
-) -> str:
-    """DuckDB replay of ann_topk_ivf_pq. Long-form relations throughout:
-    unit vectors u(vec_id, i, ux), codebooks cbN(sub, cell, j, x); each
-    per-subspace Lloyd iteration = argmin-L2 assignment + per-codeword
-    mean with empty codewords carrying over; encode = final argmin; ADC
-    = per-(sub, cell) query lookup table summed over each candidate's
-    codes; exact-cosine rerank of the (adist, vec_id)-ordered shortlist.
-    The coarse IVF layer is the plain seed quantizer (no Lloyd), exactly
-    _ANN_IVF_ORACLE's assignment. PQ trains on unit vectors, so both
-    the codeword means and the LUT divide by the row norms the vn CTE
-    guarantees positive."""
-    parts, prev = _pq_train_parts(n_iter, m, sub)
-    parts.append(
-        f"""qv AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-qn AS (SELECT sqrt(sum(CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE))) AS nrm
-       FROM qv, generate_series(1, 64) g(i)),
-qu AS (SELECT g.i, CAST(q.qv[g.i] AS DOUBLE) / qn.nrm AS ux
-       FROM qv q, qn, generate_series(1, 64) g(i)),
-ql AS (SELECT c.sub, c.cell, sum((qu.ux - c.x) * (qu.ux - c.x)) AS qd
-       FROM qu JOIN {prev} c ON qu.i = c.sub * {sub} + c.j
-       GROUP BY c.sub, c.cell),
-qd0 AS (SELECT c.cell, sum(CAST(q.qv[c.i] AS DOUBLE) * c.x) AS dp
-        FROM qv q, cent0 c GROUP BY c.cell),
-qprobe AS (SELECT qd0.cell FROM qd0 JOIN cn0 USING (cell)
-           ORDER BY qd0.dp / cn0.nrm DESC, qd0.cell ASC LIMIT {probes}),
-adist AS (SELECT p.vec_id, sum(l.qd) AS adist
-          FROM pcode p JOIN ql l USING (sub, cell)
-               JOIN af a ON a.vec_id = p.vec_id
-               JOIN qprobe qp ON qp.cell = a.cell
-          GROUP BY p.vec_id),
-short AS (SELECT vec_id FROM adist
-          ORDER BY adist ASC, vec_id ASC LIMIT {refine_k}),
-x AS (SELECT e.vec_id, CAST(e.embedding[i] AS DOUBLE) AS a,
-             CAST(q.qv[i] AS DOUBLE) AS b
-      FROM embeddings e JOIN short USING (vec_id), qv q,
-           generate_series(1, 64) g(i)),
-s AS (SELECT vec_id, round(sum(a * b) /
-             (sqrt(sum(a * a)) * sqrt(sum(b * b))), 5) AS cos
-      FROM x GROUP BY vec_id)"""
-    )
-    ctes = ",\n".join(parts)
-    return (
-        f"WITH {ctes}\n"
-        f"SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id LIMIT {_ANN_K}"
-    )
-
-
-def _kmeans_pinned_oracle(
-    n_iter: int = _ANN_PINNED_ITERS, probes: int = _ANN_PROBES
-) -> str:
-    """DuckDB replay of ann_topk_ivf_kmeans_pinned: long-form centroids
-    (cell, i, x), each Lloyd iteration = argmax-cosine assignment (the
-    vn CTE keeps null/wrong-dim/zero-norm vectors ineligible, mirroring
-    ivf_partial_sums_kernel) followed by a per-cell mean with empty
-    cells keeping the previous centroid; then the standard IVF probe
-    tail. Every update is a plain aggregate of the pinned seed, so only
-    fp addition order differs from the engine's NumPy partial sums.
-
-    Fixture contract: non-null vec_ids. The engine's training pass never
-    sees ids (ivf_partial_sums_arrow projects the vector column alone),
-    so a null-id row with a valid vector would vote in the engine's
-    centroid means but cannot join back here; candidate sets are
-    null-id-free in both engines either way (left_semi on the id)."""
-    parts = [
-        f"""vn AS (SELECT vec_id FROM embeddings, generate_series(1, 64) g(i)
-       WHERE embedding IS NOT NULL AND len(embedding) = 64
-         AND vec_id IS NOT NULL
-       GROUP BY vec_id
-       {_VN_ELIGIBLE_HAVING})""",
-        f"""seed AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-                   embedding
-            FROM {_SEED_WINDOW_SQL})""",
-        """c0 AS (SELECT cell, i, CAST(embedding[i] AS DOUBLE) AS x
-          FROM seed, generate_series(1, 64) g(i))""",
-    ]
-    prev = "c0"
-    for it in range(n_iter):
-        nxt = f"c{it + 1}"
-        parts.append(
-            f"""n{it} AS (SELECT cell, sqrt(sum(x * x)) AS nrm
-          FROM {prev} GROUP BY cell),
-d{it} AS (SELECT e.vec_id, c.cell,
-                 sum(CAST(e.embedding[c.i] AS DOUBLE) * c.x) AS dp
-          FROM embeddings e JOIN vn USING (vec_id), {prev} c
-          GROUP BY e.vec_id, c.cell),
-a{it} AS (SELECT vec_id, cell FROM (
-            SELECT d.vec_id, d.cell,
-                   row_number() OVER (PARTITION BY d.vec_id
-                                      ORDER BY d.dp / n.nrm DESC,
-                                               d.cell ASC) AS rk
-            FROM d{it} d JOIN n{it} n USING (cell)) WHERE rk = 1),
-m{it} AS (SELECT a.cell, g.i,
-                 avg(CAST(e.embedding[g.i] AS DOUBLE)) AS x
-          FROM a{it} a JOIN embeddings e USING (vec_id),
-               generate_series(1, 64) g(i)
-          GROUP BY a.cell, g.i),
-{nxt} AS (SELECT p.cell, p.i, coalesce(m.x, p.x) AS x
-          FROM {prev} p LEFT JOIN m{it} m
-          ON m.cell = p.cell AND m.i = p.i)"""
-        )
-        prev = nxt
-    parts.append(
-        f"""nf AS (SELECT cell, sqrt(sum(x * x)) AS nrm FROM {prev} GROUP BY cell),
-df AS (SELECT e.vec_id, c.cell,
-              sum(CAST(e.embedding[c.i] AS DOUBLE) * c.x) AS dp
-       FROM embeddings e JOIN vn USING (vec_id), {prev} c
-       GROUP BY e.vec_id, c.cell),
-af AS (SELECT vec_id, cell FROM (
-         SELECT d.vec_id, d.cell,
-                row_number() OVER (PARTITION BY d.vec_id
-                                   ORDER BY d.dp / n.nrm DESC,
-                                            d.cell ASC) AS rk
-         FROM df d JOIN nf n USING (cell)) WHERE rk = 1),
-qv AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-qd AS (SELECT c.cell, sum(CAST(q.qv[c.i] AS DOUBLE) * c.x) AS dp
-       FROM qv q, {prev} c GROUP BY c.cell),
-qprobe AS (SELECT qd.cell FROM qd JOIN nf USING (cell)
-           ORDER BY qd.dp / nf.nrm DESC, qd.cell ASC LIMIT {probes}),
-cand AS (SELECT vec_id FROM af JOIN qprobe USING (cell)),
-x AS (SELECT e.vec_id, CAST(e.embedding[i] AS DOUBLE) AS a,
-             CAST(q.qv[i] AS DOUBLE) AS b
-      FROM embeddings e JOIN cand USING (vec_id), qv q,
-           generate_series(1, 64) g(i)),
-s AS (SELECT vec_id, round(sum(a * b) /
-             (sqrt(sum(a * a)) * sqrt(sum(b * b))), 5) AS cos
-      FROM x GROUP BY vec_id)"""
-    )
-    ctes = ",\n".join(parts)
-    return (
-        f"WITH {ctes}\n"
-        f"SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id LIMIT {_ANN_K}"
-    )
-
-
 def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals (operators/textstats.py::
     repetition_features): duplicate-line fraction + top word-2-gram share,
@@ -2486,28 +1825,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # individual siblings remain as tail entries for oracle_parity diagnosis.
 
 
-def ann_topk_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All five ANN strategies in one gated query: exact brute force,
-    multi-probe hyperplane LSH, seed-quantizer IVF, pinned-Lloyd-trained
-    IVF, and IVF-PQ (asymmetric-distance codes + exact rerank) — each
-    mode's (vec_id, cos) top-10 value-matched against its own full SQL
-    replay."""
-    parts = [
-        ("exact", ann_topk_exact),
-        ("lsh", ann_topk),
-        ("ivf", ann_topk_ivf),
-        ("ivf_kmeans", ann_topk_ivf_kmeans_pinned),
-        ("ivf_pq", ann_topk_ivf_pq),
-    ]
-    out = None
-    for mode, fn in parts:
-        cur = fn(spark, sf_dir).select(
-            F.lit(mode).alias("mode"), "vec_id", "cos"
-        )
-        out = cur if out is None else out.unionByName(cur)
-    return out
-
-
 def cc_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both connected-components strategies over the same LSH pairs —
     O(diameter) min-label propagation and O(log n) large-star/small-star
@@ -2551,12 +1868,7 @@ def drift_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     ks = drift_ks(spark, sf_dir).select(
         F.lit("ks").alias("mode"), "lang", F.col("ks_d").alias("stat")
     )
-    # round 5: the same drift family over the EMBEDDING column (IVF
-    # cells as buckets) — solo tail entry embedding_drift_cells
-    cells = embedding_drift_cells(spark, sf_dir).select(
-        F.lit("cell_psi").alias("mode"), "lang", F.col("psi").alias("stat")
-    )
-    return psi.unionByName(ks).unionByName(cells)
+    return psi.unionByName(ks)
 
 
 def token_count_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2599,9 +1911,8 @@ def window_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_events").cast("double").alias("val"),
     )
     # rank-per-group top-N rides as 'topn_<status>' modes (the group
-    # string folds into the mode tag so no column is lost) — its slot
-    # in the driver window went to knn_strategies in round 5; the solo
-    # topn_per_group tail entry still gates the unmelted output
+    # string folds into the mode tag so no column is lost); the solo
+    # topn_per_group entry still gates the unmelted output
     t = topn_per_group(spark, sf_dir).select(
         F.concat(F.lit("topn_"), F.col("o_orderstatus")).alias("mode"),
         F.col("o_orderkey").cast("bigint").alias("k1"),
@@ -2616,11 +1927,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (observed in round 2 — entries 51+ got no CORRECTNESS row), so every
     # distinct operator sits inside the first 50; the tail entries are
     # oracle-sibling / diagnostic variants of operators already gated
-    # above (exact-Jaccard vs MinHash, brute cosine vs ANN, keep-first vs
-    # exact dedup, md5-fingerprint vs exact-dedup key, resize vs features
-    # codec-seam plumbing, rolling dup-groups vs fingerprints, prefix vs
-    # exact groups). tools/oracle_parity.py still checks all of them
-    # locally.
+    # above (exact-Jaccard vs MinHash, keep-first vs exact dedup,
+    # md5-fingerprint vs exact-dedup key, resize vs features codec-seam
+    # plumbing, rolling dup-groups vs fingerprints, prefix vs exact
+    # groups). tools/oracle_parity.py still checks all of them locally.
     return {
         "flagship_violations": flagship_violations,
         "sequences_validation": sequences_validation,
@@ -2644,7 +1954,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_ngram_dup_stats": token_ngram_dup_stats,
         "token_ngram_dedup_clean": token_ngram_dedup_clean,
         "simhash_sigs": simhash_sigs,
-        "ann_topk_strategies": ann_topk_strategies,
         "temperature_sample_ids": temperature_sample_ids,
         "array_mismatch_index": array_mismatch_index,
         "multimodal_features": multimodal_features,
@@ -2654,9 +1963,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "window_ops": window_ops,
         "stats_threshold_violations": stats_threshold_violations,
         "curation_pipeline": curation_pipeline,
-        "embedding_near_dup_pairs": embedding_near_dup_pairs,
         "bucketed_join_stats": bucketed_join_stats,
-        "semantic_dup_flags": semantic_dup_flags,
         "dsir_importance_weights": dsir_importance_weights,
         "skew_salted_stats": skew_salted_stats,
         "asof_join_marks": asof_join_marks,
@@ -2671,29 +1978,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_top_terms_by_lang": vocab_top_terms_by_lang,
         "contamination_screen": contamination_screen,
         "token_ngram_contamination": token_ngram_contamination,
-        "knn_strategies": knn_strategies,
-        # --- tail: oracle-sibling / diagnostic variants (operators gated
-        # above); may fall outside the driver's 50-entry window ---
-        # (minhash_lsh_pairs is the banding-stage diagnostic of the
-        # MinHash operator gated end-to-end via minhash_dedup_verified;
-        # the two contamination_* entries gate each text screen alone —
-        # both operators sit in the window via contamination_screen;
-        # the per-mode members of the consolidated gates
-        # ann_topk_strategies / cc_strategies / fingerprints /
-        # drift_tests / token_count_modes / window_ops sit here so
-        # oracle_parity still diagnoses each alone)
-        # (topn_per_group and sequence_packing moved to the tail in
-        # round 5 to free window slots for knn_strategies and
-        # packing_pipelines — rank-per-group top-N stays gated via
-        # window_ops' 'topn_<status>' modes; concat-and-chop packing
-        # stays gated via packing_pipelines' 'chars' mode)
+        # (the last four window entries are diagnostic siblings that fit
+        # in the window: rank-per-group top-N is also gated via
+        # window_ops' 'topn_<status>' modes, concat-and-chop packing via
+        # packing_pipelines' 'chars' mode, the banding stage of
+        # minhash_lsh_pairs end-to-end via minhash_dedup_verified, and
+        # histogram_psi via drift_tests' 'psi' mode)
         "topn_per_group": topn_per_group,
         "sequence_packing": sequence_packing,
         "minhash_lsh_pairs": minhash_lsh_pairs,
-        "ann_topk_exact": ann_topk_exact,
-        "ann_topk": ann_topk,
-        "ann_topk_ivf": ann_topk_ivf,
         "histogram_psi": histogram_psi,
+        # --- tail: oracle-sibling / diagnostic variants (operators gated
+        # above); may fall outside the driver's 50-entry window ---
+        # (the two contamination_* entries gate each text screen alone —
+        # both operators sit in the window via contamination_screen;
+        # the per-mode members of the consolidated gates cc_strategies /
+        # fingerprints / drift_tests / token_count_modes / window_ops
+        # sit here so oracle_parity still diagnoses each alone)
         "drift_ks": drift_ks,
         "token_counts": token_counts,
         "subword_token_counts": subword_token_counts,
@@ -2713,21 +2014,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_resize": multimodal_resize,
         "prefix_dup_groups": prefix_dup_groups,
         "jaccard_pairs": jaccard_pairs,
-        "cosine_scores_all": cosine_scores_all,
         "dedup_keep_first": dedup_keep_first,
         "multimodal_frame_sample": multimodal_frame_sample,
         "dedup_clusters_star": dedup_clusters_star,
         "window_running_total": window_running_total,
         "embedding_dim_violations": embedding_dim_violations,
-        "ann_topk_ivf_kmeans": ann_topk_ivf_kmeans,
         "sessionize_events": sessionize_events,
-        "ann_topk_ivf_kmeans_pinned": ann_topk_ivf_kmeans_pinned,
-        "ann_topk_ivf_pq": ann_topk_ivf_pq,
-        "knn_join_topk": knn_join_topk,
-        "pq_knn_join_topk": pq_knn_join_topk,
         "minhash_dedup_incremental": minhash_dedup_incremental,
         "token_dedup_incremental": token_dedup_incremental,
-        "embedding_drift_cells": embedding_drift_cells,
     }
 
 
@@ -2899,109 +2193,6 @@ FROM cbanded l JOIN bbanded r
 """
 
 
-def _ann_topk_oracle() -> str:
-    """DuckDB replay of hyperplane-LSH multi-probe top-k: the 8 projection
-    planes are embedded as literals from the same deterministic generator
-    the Spark operator uses; probes=9 over 8 planes makes the probe set
-    exactly the Hamming<=1 ball, i.e. bit_count(xor(sig, qsig)) <= 1."""
-    from fs_schema_validator_spark.operators.similarity import (
-        _projection_matrix,
-    )
-
-    planes = _projection_matrix(64, 8, 42)
-    vals = ", ".join(
-        f"({i}, {j}, {w!r})"
-        for i, row in enumerate(planes)
-        for j, w in enumerate(row)
-    )
-    return f"""
-WITH planes AS (SELECT * FROM (VALUES {vals}) t(i, j, w)),
-dots AS (SELECT e.vec_id, p.i,
-                sum(CAST(e.embedding[p.j + 1] AS DOUBLE) * p.w) AS dp
-         FROM embeddings e CROSS JOIN planes p GROUP BY e.vec_id, p.i),
-sigs AS (SELECT vec_id,
-                CAST(sum(CASE WHEN dp >= 0 THEN CAST(1 AS BIGINT) << i
-                              ELSE 0 END) AS BIGINT) AS sig
-         FROM dots GROUP BY vec_id),
-q AS (SELECT sig AS qsig FROM sigs WHERE vec_id = 0),
-cand AS (SELECT s.vec_id FROM sigs s, q
-         WHERE bit_count(xor(s.sig, q.qsig)) <= 1),
-qv AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-x AS (SELECT e.vec_id, CAST(e.embedding[i] AS DOUBLE) AS a,
-             CAST(q.qv[i] AS DOUBLE) AS b
-      FROM embeddings e JOIN cand USING (vec_id), qv q,
-           generate_series(1, 64) g(i)),
-s AS (SELECT vec_id, round(sum(a * b) /
-             (sqrt(sum(a * a)) * sqrt(sum(b * b))), 5) AS cos
-      FROM x GROUP BY vec_id)
-SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10
-"""
-
-
-# SemDeDup replay: same IVF-assignment CTEs as _ANN_IVF_ORACLE (seeds =
-# 16 smallest base ids; the planted copies' ids are negative so the
-# non-negative seed window is unchanged at any scale), then uncapped
-# within-cell ordered pairs, exact cosine on round-5 doubles, keep-first
-# dup flags. The len(embedding) = 64 guard and the vn zero-norm filter
-# mirror ivf_assign_arrow's NULL cell for null / wrong-dimension /
-# zero-norm vectors (none at these SFs, but fixtures exercise it) — a
-# zero vector is ineligible everywhere, so the kernel's cosine-0, the
-# pairs strategy's null, and DuckDB's NaN can never disagree. The cent CTE replicates the engine's seed
-# sample EXACTLY: 32-smallest-id window first, THEN the dimension
-# filter, then the first 16 — so a window short on 64-dim rows yields
-# the same (fewer) seeds in both engines; the only remaining fixture
-# contract is that 64 is the MODAL length in that window (the engine
-# keeps the modal length, this SQL pins 64).
-_SEMANTIC_DUP_ORACLE = f"""
-WITH corpus AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT -vec_id - 1 AS vec_id, embedding FROM embeddings
-  WHERE vec_id % 20 = 0
-),
-cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-                embedding
-         FROM {_SEED_WINDOW_SQL}),
-cn AS (SELECT cell, sqrt(sum(CAST(embedding[i] AS DOUBLE)
-                             * CAST(embedding[i] AS DOUBLE))) AS nrm
-       FROM cent, generate_series(1, 64) g(i) GROUP BY cell),
-vn AS (SELECT vec_id FROM corpus, generate_series(1, 64) g(i)
-       WHERE embedding IS NOT NULL AND len(embedding) = 64
-       GROUP BY vec_id
-       {_VN_ELIGIBLE_HAVING}),
-cdot AS (SELECT e.vec_id, c.cell,
-                sum(CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(c.embedding[i] AS DOUBLE)) AS dot_vc
-         FROM corpus e JOIN vn USING (vec_id) CROSS JOIN cent c,
-              generate_series(1, 64) g(i)
-         GROUP BY e.vec_id, c.cell),
-scored AS (SELECT vec_id, cdot.cell, dot_vc / nrm AS sim
-           FROM cdot JOIN cn USING (cell)),
-assign AS (SELECT vec_id, CAST(cell AS INTEGER) AS cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id
-                                       ORDER BY sim DESC, cell ASC) AS rk
-             FROM scored) WHERE rk = 1),
-pv AS (SELECT a.vec_id AS ia, b.vec_id AS ib
-       FROM assign a JOIN assign b
-       ON a.cell = b.cell AND a.vec_id < b.vec_id),
-px AS (SELECT pv.ia, pv.ib,
-              CAST(ea.embedding[i] AS DOUBLE) AS va,
-              CAST(eb.embedding[i] AS DOUBLE) AS vb
-       FROM pv JOIN corpus ea ON ea.vec_id = pv.ia
-               JOIN corpus eb ON eb.vec_id = pv.ib,
-            generate_series(1, 64) g(i)),
-ps AS (SELECT ia, ib, round(sum(va * vb) /
-             (sqrt(sum(va * va)) * sqrt(sum(vb * vb))), 5) AS cos
-       FROM px GROUP BY ia, ib),
-dup AS (SELECT DISTINCT ib AS vec_id FROM ps WHERE cos >= 0.6)
-SELECT c.vec_id, a.cell, (d.vec_id IS NOT NULL) AS is_dup
-FROM corpus c
-LEFT JOIN assign a ON c.vec_id = a.vec_id
-LEFT JOIN dup d ON c.vec_id = d.vec_id
-"""
-
-
 def _dsir_oracle(n_buckets: int = 256, modulus: int = 25) -> str:
     """DSIR replay: portable 'dsir'-salted 60-bit word hash into
     n_buckets, add-1-smoothed bucket log-likelihood-ratio weights from
@@ -3029,45 +2220,6 @@ per AS (SELECT doc_id, sum(k) AS n, sum(k * w) AS s
 SELECT d.doc_id, CAST(coalesce(per.n, 0) AS BIGINT) AS n_words,
        coalesce(round(per.s, 4), 0.0) AS dsir_score
 FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-"""
-
-
-_ANN_IVF_ORACLE = f"""
-WITH cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-                     embedding
-              FROM {_SEED_WINDOW_SQL}),
-cn AS (SELECT cell, sqrt(sum(CAST(embedding[i] AS DOUBLE)
-                             * CAST(embedding[i] AS DOUBLE))) AS nrm
-       FROM cent, generate_series(1, 64) g(i) GROUP BY cell),
-vn AS (SELECT vec_id FROM embeddings, generate_series(1, 64) g(i)
-       WHERE embedding IS NOT NULL AND len(embedding) = 64
-       GROUP BY vec_id
-       {_VN_ELIGIBLE_HAVING}),
-cdot AS (SELECT e.vec_id, c.cell,
-                sum(CAST(e.embedding[i] AS DOUBLE)
-                    * CAST(c.embedding[i] AS DOUBLE)) AS dot_vc
-         FROM embeddings e JOIN vn USING (vec_id) CROSS JOIN cent c,
-              generate_series(1, 64) g(i)
-         GROUP BY e.vec_id, c.cell),
-scored AS (SELECT vec_id, cdot.cell, dot_vc / nrm AS sim
-           FROM cdot JOIN cn USING (cell)),
-assign AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id
-                                       ORDER BY sim DESC, cell ASC) AS rk
-             FROM scored) WHERE rk = 1),
-qprobe AS (SELECT cell FROM scored WHERE vec_id = 0
-           ORDER BY sim DESC, cell ASC LIMIT {_ANN_PROBES}),
-cand AS (SELECT vec_id FROM assign JOIN qprobe USING (cell)),
-qv AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-x AS (SELECT e.vec_id, CAST(e.embedding[i] AS DOUBLE) AS a,
-             CAST(q.qv[i] AS DOUBLE) AS b
-      FROM embeddings e JOIN cand USING (vec_id), qv q,
-           generate_series(1, 64) g(i)),
-s AS (SELECT vec_id, round(sum(a * b) /
-             (sqrt(sum(a * a)) * sqrt(sum(b * b))), 5) AS cos
-      FROM x GROUP BY vec_id)
-SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id LIMIT {_ANN_K}
 """
 
 
@@ -3282,16 +2434,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(a.n + b.n - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 4) "
             ">= 0.5"
         ),
-        "cosine_scores_all": (
-            # embeddings are fixed 64-dim, so the series bound is constant
-            "WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), "
-            "x AS (SELECT e.vec_id, i, "
-            "CAST(e.embedding[i] AS DOUBLE) AS a, CAST(q.qv[i] AS DOUBLE) AS b "
-            "FROM embeddings e, q, generate_series(1, 64) AS g(i)) "
-            "SELECT vec_id, round(sum(a * b) / "
-            "(sqrt(sum(a * a)) * sqrt(sum(b * b))), 5) AS cos "
-            "FROM x GROUP BY vec_id"
-        ),
         "embedding_dim_violations": (
             "WITH c AS (SELECT vec_id, CASE WHEN vec_id % 41 = 0 "
             "THEN list_append(embedding, 0.0) ELSE embedding END AS embedding "
@@ -3505,42 +2647,10 @@ def oracle_sql() -> dict[str, str]:
             "SELECT grp AS lang, round(max(abs(cq - cp)), 4) AS ks_d "
             "FROM c GROUP BY grp"
         ),
-        "ann_topk_exact": (
-            "WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), "
-            "x AS (SELECT e.vec_id, i, "
-            "CAST(e.embedding[i] AS DOUBLE) AS a, CAST(q.qv[i] AS DOUBLE) AS b "
-            "FROM embeddings e, q, generate_series(1, 64) AS g(i)), "
-            "s AS (SELECT vec_id, round(sum(a * b) / "
-            "(sqrt(sum(a * a)) * sqrt(sum(b * b))), 5) AS cos "
-            "FROM x GROUP BY vec_id) "
-            "SELECT vec_id, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10"
-        ),
-        "embedding_near_dup_pairs": (
-            "WITH base AS (SELECT vec_id, "
-            "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e "
-            "FROM embeddings), "
-            "planted AS (SELECT * FROM base UNION ALL "
-            "SELECT vec_id + 100000, list_concat([e[1] + 0.05], e[2:]) "
-            "FROM base WHERE vec_id % 50 = 0), "
-            "x AS (SELECT a.vec_id AS ia, b.vec_id AS ib, a.e AS ae, b.e AS be "
-            "FROM planted a JOIN planted b ON a.vec_id < b.vec_id), "
-            "y AS (SELECT ia, ib, sum(ae[i] * be[i]) AS dot, "
-            "sqrt(sum(ae[i] * ae[i])) AS na, sqrt(sum(be[i] * be[i])) AS nb "
-            "FROM x, generate_series(1, 64) AS g(i) GROUP BY ia, ib) "
-            "SELECT ia AS id_a, ib AS id_b, round(dot / (na * nb), 5) AS cos "
-            "FROM y WHERE round(dot / (na * nb), 5) >= 0.9"
-        ),
         "simhash_sigs": _SIMHASH_ORACLE,
         "minhash_lsh_pairs": _minhash_lsh_oracle(),
-        "ann_topk": _ann_topk_oracle(),
-        "ann_topk_ivf": _ANN_IVF_ORACLE,
-        "semantic_dup_flags": _SEMANTIC_DUP_ORACLE,
         "dsir_importance_weights": _dsir_oracle(),
         "classifier_scores": _clf_oracle(),
-        "ann_topk_ivf_kmeans_pinned": _kmeans_pinned_oracle(),
-        "ann_topk_ivf_pq": _ivf_pq_oracle(),
-        "knn_join_topk": _knn_join_oracle(),
-        "pq_knn_join_topk": _pq_knn_join_oracle(),
         "bucketed_join_stats": (
             "SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders, "
             "round(sum(o_totalprice), 4) AS sum_price "
@@ -3688,20 +2798,9 @@ FROM reach GROUP BY a
     # Consolidated-gate oracles, built FROM the sibling oracles above so
     # the union gates replay exactly what each sibling gate replays (a
     # hand-copied union could silently drift from its siblings).
-    d["ann_topk_strategies"] = "\nUNION ALL\n".join(
-        f"SELECT '{mode}' AS mode, vec_id, cos FROM ({d[name]})"
-        for mode, name in [
-            ("exact", "ann_topk_exact"),
-            ("lsh", "ann_topk"),
-            ("ivf", "ann_topk_ivf"),
-            ("ivf_kmeans", "ann_topk_ivf_kmeans_pinned"),
-            ("ivf_pq", "ann_topk_ivf_pq"),
-        ]
-    )
     # the incremental state must accumulate the SAME pair set the batch
     # pipeline (and its O(n²) exact oracle) produces
     d["minhash_dedup_incremental"] = d["minhash_dedup_verified"]
-    d["embedding_drift_cells"] = _embedding_drift_oracle()
     d["token_dedup_incremental"] = d["token_ngram_dedup_clean"]
     d["packing_pipelines"] = (
         "SELECT 'chars' AS mode, lang AS grp, CAST(doc_id AS VARCHAR) AS k, "
@@ -3710,13 +2809,6 @@ FROM reach GROUP BY a
         "UNION ALL "
         "SELECT 'dedup_tokens' AS mode, grp, k, length, start_bin, "
         f"start_offset, end_bin FROM ({_dedup_pack_oracle()})"
-    )
-    d["knn_strategies"] = "\nUNION ALL\n".join(
-        f"SELECT '{mode}' AS mode, qid, vec_id, cos FROM ({d[name]})"
-        for mode, name in [
-            ("ivf", "knn_join_topk"),
-            ("pq", "pq_knn_join_topk"),
-        ]
     )
     # both CC strategies produce the identical labeling, so one
     # transitive-closure replay serves both mode tags
@@ -3736,11 +2828,7 @@ FROM reach GROUP BY a
     d["drift_tests"] = (
         f"SELECT 'psi' AS mode, lang, psi AS stat FROM ({d['histogram_psi']}) "
         "UNION ALL "
-        f"SELECT 'ks' AS mode, lang, ks_d AS stat FROM ({d['drift_ks']}) "
-        "UNION ALL "
-        "SELECT 'cell_psi' AS mode, lang, psi AS stat FROM ("
-        + d["embedding_drift_cells"]
-        + ")"
+        f"SELECT 'ks' AS mode, lang, ks_d AS stat FROM ({d['drift_ks']})"
     )
     d["token_count_modes"] = (
         "SELECT 'ws' AS mode, doc_id, m.metric, m.value FROM ("
@@ -3774,41 +2862,3 @@ FROM reach GROUP BY a
     )
     return d
 
-
-def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(
-        emb,
-        _query_vec(spark, sf_dir),
-        k=_ANN_K,
-        n_centroids=_ANN_N_CENT,
-        probes=_ANN_PROBES,
-    )
-
-
-def semantic_dup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup semantic dedup (similarity.semantic_dedup): corpus =
-    embeddings plus an exact copy of every 20th vector under id
-    `-vec_id - 1` (planted dup clusters — the in-query derivation
-    pattern contamination_overlap uses; negative ids can NEVER collide
-    with base ids at any scale, unlike an additive offset). IVF cells
-    from the 16 id-ordered seeds, within-cell cosine >= 0.6 under
-    keep-first-by-id — the negative copy is the keeper, so the flagged
-    set is exactly the originals that have a planted twin (the base
-    vectors are random, max off-pair cosine ~0.51, so the margin is wide
-    on both sides of the threshold). The default kernel strategy has no
-    pair cap, so the checked pipeline is algebraically identical to the
-    uncapped oracle replay."""
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    planted = emb.filter(F.col("vec_id") % 20 == 0).select(
-        (-F.col("vec_id") - 1).alias("vec_id"), "embedding"
-    )
-    corpus = emb.unionByName(planted)
-    # quantizer seeded from the BASE table (the oracle's cent CTE does
-    # the same) — seeding from the corpus would put the negative planted
-    # ids first in the id-ordered sample
-    return similarity.semantic_dedup(
-        corpus,
-        threshold=0.6,
-        centroids=similarity.seed_centroids(emb, 16),
-    )

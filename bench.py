@@ -63,10 +63,6 @@ HEADLINE = [
     "simhash_sigs",
     "rolling_fingerprints",
     "drift_ks",
-    "cosine_scores_all",
-    "embedding_near_dup_pairs",
-    "ann_topk",
-    "ann_topk_ivf",
     "array_mismatch_index",
     "curation_pipeline",
     "asof_join_marks",
@@ -79,7 +75,6 @@ HEADLINE = [
     # contamination_near_dup's pipeline is timed inside the
     # contamination_screen union — listing both would run the
     # cross-table LSH screen twice per pass
-    "semantic_dup_flags",
     "dsir_importance_weights",
     "contamination_screen",
     "token_ngram_dup_stats",
@@ -88,12 +83,8 @@ HEADLINE = [
     "bigram_xent_scores",
     # round-4 additions (new operators, timed from this round on)
     "classifier_scores",
-    "ann_topk_ivf_pq",
-    "ann_topk_ivf_kmeans_pinned",
     "token_ngram_dedup_clean",
-    "knn_join_topk",
     # round-5 additions (new operators, timed from this round on)
-    "pq_knn_join_topk",
     "packing_pipelines",
 ]
 
@@ -104,7 +95,6 @@ VALUE_EXCLUDED = {
     "repetition_quality",
     "unigram_entropy",
     "pii_scrub_counts",
-    "semantic_dup_flags",
     "dsir_importance_weights",
     "contamination_screen",
     "token_ngram_dup_stats",
@@ -112,11 +102,7 @@ VALUE_EXCLUDED = {
     "temperature_sample_ids",
     "bigram_xent_scores",
     "classifier_scores",
-    "ann_topk_ivf_pq",
-    "ann_topk_ivf_kmeans_pinned",
     "token_ngram_dedup_clean",
-    "knn_join_topk",
-    "pq_knn_join_topk",
     "packing_pipelines",
 }
 

@@ -110,9 +110,8 @@ def psi_vs_global(
 
 def psi_from_hist(hist: DataFrame, digits: int = 4) -> DataFrame:
     """(grp, psi) rounded to `digits`, from a prebuilt (grp, bucket, cnt)
-    histogram against the whole table's — the PSI-vs-global form shared by
-    value buckets (psi_vs_global) and bucketings that are not value ranges
-    (embedding IVF cells)."""
+    histogram against the whole table's — the PSI-vs-global tail of
+    psi_vs_global."""
     return psi(hist, _global_grid(hist)).select(
         "grp", F.round("psi", digits).alias("psi")
     )

@@ -531,9 +531,8 @@ def simhash_signatures(
     strategy="arrow" (default): word hashes JVM-side (codegen), bit votes
     as ONE mapInArrow NumPy kernel (functions.arrays.simhash_kernel) —
     the previous pure-expression form evaluated 60+ interpreted
-    F.aggregate lambdas per row (HOF lambdas don't codegen; ~100x slower
-    than the Arrow path, the repo-wide measurement in
-    similarity.near_dup_pairs). strategy="sql" keeps that expression form
+    F.aggregate lambdas per row (HOF lambdas don't codegen, so it ran far
+    slower than the Arrow path). strategy="sql" keeps that expression form
     for differential testing.
 
     The word hash is engine-portable (portable_word_hashes), so the DuckDB
@@ -903,9 +902,8 @@ def write_token_dedup_state(
     mod: int = 2147483647,
     seed: int = 7,
 ) -> str:
-    """Materialize the STANDING state of token-level exact k-gram dedup
-    — the append_pq_index pattern for the token-window family: one
-    Arrow pass over the corpus persists
+    """Materialize the STANDING state of token-level exact k-gram dedup:
+    one Arrow pass over the corpus persists
 
       * ``counts``: (h, n_docs) — row instances per distinct window
         hash (the table the >= min_docs threshold reads), and
@@ -960,10 +958,10 @@ def append_token_dedup(
 
     State updates are written back (counts merged, delta pairs
     appended). `skip_existing` anti-joins delta ids already in the
-    state (idempotent retries — the id-column-pruned membership scan,
-    same contract as append_pq_index). Returns (id, tokens_clean,
-    n_removed, *passthrough) for the rewrite set; append-then-rewrite
-    ≡ full token_ngram_dedup rebuild on old ∪ new (asserted in tests).
+    state (idempotent retries — an id-column-pruned membership scan).
+    Returns (id, tokens_clean, n_removed, *passthrough) for the rewrite
+    set; append-then-rewrite ≡ full token_ngram_dedup rebuild on
+    old ∪ new (asserted in tests).
     NOT atomic across the two state writes — wrap in your table
     format's transaction (Iceberg/Delta) for concurrent ingest."""
     from ..functions.arrays import (

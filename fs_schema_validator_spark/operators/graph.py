@@ -1,5 +1,5 @@
 """Connected components over a pair list — the clustering step that turns
-near-duplicate PAIRS (LSH/SimHash/embedding output) into dedup CLUSTERS
+near-duplicate PAIRS (MinHash-LSH or SimHash output) into dedup CLUSTERS
 with one keeper per cluster.
 
 Iterative min-label propagation: every node starts labeled with itself;

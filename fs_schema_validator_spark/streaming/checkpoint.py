@@ -33,6 +33,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import __version__
 from ..compiler.plan import key_string
 from ..engine import ValidationEngine, ValidationResult, group_attribution
 from ..rules.loader import RuleSet
@@ -86,12 +87,10 @@ class ResumableValidator:
         engine: ValidationEngine,
         store: ParquetManifestStore,
         partition_col: str,
-        engine_version: str = "0.1.0",
     ) -> None:
         self.engine = engine
         self.store = store
         self.partition_col = partition_col
-        self.engine_version = engine_version
 
     def pending_partitions(
         self, df: DataFrame, rules_yaml: str, snapshot_id: str = "-"
@@ -131,9 +130,11 @@ class ResumableValidator:
         serialize one Spark job (+2 actions) per partition: 10^4-10^5 jobs
         at real partition counts.
 
-        Table rules see the pending set as a whole, which is the stronger
-        contract: cross-partition duplicate keys are now detected, and
-        referential/completeness checks run once instead of per-slice.
+        Table rules see the pending set as a whole: duplicate keys across
+        partitions of ONE run's pending set are detected, and
+        referential/completeness checks run once instead of per-slice. A
+        duplicate between an already-validated partition and a pending one
+        is NOT detected — earlier partitions are never re-read.
         Every violation is counted EXACTLY ONCE, under the minimum
         partition containing its subject, so per-partition n_violations
         sum to the total. Violations whose subject does not occur in the
@@ -167,7 +168,7 @@ class ResumableValidator:
                 "input_rows": by_part[p]["rows"],
                 "n_violations": n_violations,
                 "verdict": "PASS" if n_violations == 0 else "FAIL",
-                "engine_version": self.engine_version,
+                "engine_version": __version__,
                 "snapshot_id": snapshot_id,
                 "validated_at": now,
             }

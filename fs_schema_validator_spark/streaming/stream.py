@@ -3,14 +3,15 @@
 The reference is a one-shot batch CLI; the engine's incremental story is
 the checkpoint manifest (checkpoint.py). This module adds the streaming
 deployment shape on top: a ``readStream`` source validated per micro-batch
-via ``foreachBatch``, violations appended to a sink, per-batch stats to the
-manifest. ``foreachBatch`` is the right tool (vs continuous operators)
+via ``foreachBatch``, violations written to a sink partitioned by batch id,
+per-batch counts handed to an optional callback (this module writes no
+manifest). ``foreachBatch`` is the right tool (vs continuous operators)
 because validation needs multi-pass table rules (joins/aggs) that the
 per-row streaming operators cannot express.
 
-Late/duplicate data: the batch id is the snapshot handle; re-processing a
-batch after failure is idempotent because the manifest keys on
-(partition, rules_hash, snapshot_id=batch-{id}).
+Late/duplicate data: re-processing a batch after failure is idempotent
+because the sink write is a dynamic partition overwrite on ``batch_id``,
+so a replayed batch replaces its own partition and nothing else.
 """
 
 from __future__ import annotations

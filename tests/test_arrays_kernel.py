@@ -107,53 +107,6 @@ def test_spark_operator_screens_equal_rows(spark):
     assert got == {"b": 1, "c": 0, "d": 0}
 
 
-def test_hyperplane_band_chunks_match_numpy_reference(spark):
-    from fs_schema_validator_spark.functions.arrays import (
-        hyperplane_band_chunks_arrow,
-    )
-    from fs_schema_validator_spark.operators.similarity import (
-        _projection_matrix,
-    )
-
-    rng = np.random.default_rng(7)
-    dim, n_planes, bands = 12, 32, 4
-    vecs = rng.normal(size=(50, dim))
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)],
-        "vec_id bigint, embedding array<double>",
-    )
-    planes = _projection_matrix(dim, n_planes, seed=9)
-    got = {
-        r.vec_id: list(r.chunks)
-        for r in hyperplane_band_chunks_arrow(df, planes, bands).collect()
-    }
-
-    pl = np.asarray(planes).T
-    bits = (vecs @ pl >= 0).astype(np.int64)
-    w = 1 << np.arange(n_planes // bands, dtype=np.int64)
-    want = bits.reshape(len(vecs), bands, -1) @ w
-    for i in range(len(vecs)):
-        assert got[i] == want[i].tolist(), i
-
-
-def test_ivf_assign_matches_naive_argmax(spark):
-    from fs_schema_validator_spark.functions.arrays import ivf_assign_arrow
-
-    rng = np.random.default_rng(3)
-    vecs = rng.normal(size=(80, 6))
-    cents = rng.normal(size=(5, 6))
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)],
-        "vec_id bigint, embedding array<double>",
-    )
-    got = {r.vec_id: r.cell for r in ivf_assign_arrow(df, cents).collect()}
-    vn = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-    cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    want = np.argmax(vn @ cn.T, axis=1)
-    for i in range(len(vecs)):
-        assert got[i] == want[i], i
-
-
 def test_minhash_kernel_deterministic_and_monotone():
     from fs_schema_validator_spark.functions.arrays import minhash_mix_kernel
 
@@ -322,49 +275,3 @@ def test_token_window_hashes_arrow_spark_roundtrip(spark):
     assert rows["c"] == []
     assert rows["d"] is None
 
-
-def test_pairwise_cosine_arrow_matches_hof_and_masks(spark):
-    """The Arrow pairwise-cosine kernel must agree with the HOF
-    zip_with/aggregate expression it replaced on every eligible pair,
-    and mirror Spark's NULL classes (null / wrong-dim vector on either
-    side, zero norm product) rather than leaking IEEE nan/inf."""
-    import math
-    import random
-
-    from pyspark.sql import functions as F
-
-    from fs_schema_validator_spark.functions.arrays import (
-        pairwise_cosine_arrow,
-    )
-
-    rng = random.Random(7)
-    dim = 8
-    rows = [
-        (i, i + 100,
-         [rng.uniform(-1, 1) for _ in range(dim)],
-         [rng.uniform(-1, 1) for _ in range(dim)])
-        for i in range(50)
-    ]
-    rows += [
-        (900, 901, None, [1.0] * dim),          # null query vector
-        (902, 903, [1.0] * dim, [1.0] * (dim - 1)),  # wrong dim corpus
-        (904, 905, [0.0] * dim, [1.0] * dim),   # zero-norm query
-    ]
-    df = spark.createDataFrame(
-        rows, "qid long, vid long, qv array<double>, cv array<double>"
-    )
-    got = {
-        (r.qid, r.vid): r.cos
-        for r in pairwise_cosine_arrow(df, dim, "qv", "cv", "qid", "vid")
-        .collect()
-    }
-    assert got[(900, 901)] is None
-    assert got[(902, 903)] is None
-    assert got[(904, 905)] is None
-    for qid, vid, qv, cv in rows[:50]:
-        dot = sum(a * b for a, b in zip(qv, cv))
-        ref = dot / (
-            math.sqrt(sum(a * a for a in qv))
-            * math.sqrt(sum(b * b for b in cv))
-        )
-        assert abs(got[(qid, vid)] - ref) < 1e-12

@@ -328,9 +328,11 @@ def test_pyfiles_zip_imports_standalone(tmp_path):
     subprocess."""
     import subprocess
     import sys
+    from pathlib import Path
 
+    tool = Path(__file__).resolve().parent.parent / "tools" / "package_pyfiles.py"
     build = subprocess.run(
-        [sys.executable, "/root/repo/tools/package_pyfiles.py", str(tmp_path)],
+        [sys.executable, str(tool), str(tmp_path)],
         capture_output=True,
         text=True,
     )

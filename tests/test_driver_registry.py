@@ -1,0 +1,40 @@
+"""The driver's registries agree with each other, checked without Spark.
+
+`queries()` and `oracle_sql()` must name the same entries, and every query
+that `bench.py` times or excludes must exist. `bench.py` is read with
+`ast`, not imported: it edits `sys.path` and imports the benchmark's own
+dependencies at module level."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+import __spark_entry__ as entrymod
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def _bench_names(var: str) -> list[str]:
+    tree = ast.parse((REPO / "bench.py").read_text())
+    for node in tree.body:
+        if (
+            isinstance(node, ast.Assign)
+            and len(node.targets) == 1
+            and isinstance(node.targets[0], ast.Name)
+            and node.targets[0].id == var
+        ):
+            return [elt.value for elt in node.value.elts]
+    raise AssertionError(f"bench.py defines no {var}")
+
+
+def test_every_query_has_an_oracle_and_every_oracle_a_query():
+    assert set(entrymod.queries()) == set(entrymod.oracle_sql())
+
+
+def test_bench_names_only_registered_queries():
+    queries = set(entrymod.queries())
+    for var in ("HEADLINE", "VALUE_EXCLUDED"):
+        names = _bench_names(var)
+        assert names, var
+        assert sorted(set(names) - queries) == [], var

@@ -159,70 +159,6 @@ def test_list_kernels_honor_sliced_arrays():
     rows=st.lists(
         st.one_of(
             st.none(),
-            st.lists(
-                st.floats(-10, 10, allow_nan=False), min_size=0, max_size=6
-            ),
-        ),
-        min_size=1,
-        max_size=24,
-    ),
-    offset=st.integers(0, 4),
-)
-def test_ivf_partial_sums_kernel_property(rows, offset):
-    """The partial-sums k-means kernel must match a direct NumPy replay on
-    arbitrary batches — including null rows, wrong-dimension vectors, zero
-    vectors (INELIGIBLE: a directionless vector must not vote in a cosine
-    quantizer — the pinned contract shared with ivf_assign_arrow and the
-    SQL oracle), zero-norm CENTROIDS (guarded), and SLICED Arrow arrays
-    (the offset-rebasing class that bit reduceat before)."""
-    from fs_schema_validator_spark.functions.arrays import (
-        _fixed_dim_matrix,
-    )
-
-    dim = 4
-    cents = np.array(
-        [[1.0, 0, 0, 0], [0, 1.0, 0, 0], [0, 0, 0, 0]]  # incl. zero centroid
-    )
-    arr = pa.array(rows, type=pa.list_(pa.float64()))
-    arr = arr.slice(min(offset, len(arr) - 1))
-
-    # replicate the kernel's contract directly
-    mat, good = _fixed_dim_matrix(arr, dim)
-    good = good & (np.linalg.norm(mat, axis=1) > 0.0)
-    cn = cents.copy()
-    norms = np.linalg.norm(cn, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    cn = cn / norms
-    expect_cnt = np.zeros(3, dtype=np.int64)
-    expect_sums = np.zeros((3, dim))
-    if good.any():
-        m = mat[good]
-        mn = np.linalg.norm(m, axis=1, keepdims=True)
-        mn[mn == 0] = 1.0
-        cell = np.argmax((m / mn) @ cn.T, axis=1)
-        expect_cnt = np.bincount(cell, minlength=3).astype(np.int64)
-        np.add.at(expect_sums, cell, m)
-        assert not np.isnan((m / mn) @ cn.T).any()  # zero-centroid guard
-
-    # drive the REAL kernel
-    from fs_schema_validator_spark.functions.arrays import (
-        ivf_partial_sums_kernel,
-    )
-
-    cells, cnt, sums = ivf_partial_sums_kernel(arr, cents)
-    got_cnt = np.zeros(3, dtype=np.int64)
-    got_sums = np.zeros((3, dim))
-    got_cnt[cells] = cnt
-    got_sums[cells] = sums
-    assert (got_cnt == expect_cnt).all()
-    assert np.allclose(got_sums, expect_sums)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    rows=st.lists(
-        st.one_of(
-            st.none(),
             st.lists(st.integers(0, 2**40), min_size=0, max_size=8),
         ),
         min_size=1,
@@ -288,126 +224,3 @@ def test_token_window_hash_kernel_property(rows, k):
             want.append(h)
         assert got[i] == want, (i, r, k)
 
-
-@settings(max_examples=40, deadline=None)
-@given(
-    rows=st.lists(
-        st.one_of(
-            st.none(),
-            st.lists(
-                st.floats(-10, 10, allow_nan=False), min_size=0, max_size=6
-            ),
-        ),
-        min_size=1,
-        max_size=24,
-    ),
-    offset=st.integers(0, 4),
-)
-def test_training_and_query_assignment_agree(rows, offset):
-    """ivf_partial_sums_kernel's per-cell counts must equal the bincount
-    of the assignment the query path would produce on the same batch —
-    if the Lloyd training pass and ivf_assign_arrow's math ever diverge
-    (eligibility, tie-break, normalization), the pinned-kmeans oracle
-    would break subtly rather than loudly."""
-    from fs_schema_validator_spark.functions.arrays import (
-        _fixed_dim_matrix,
-        ivf_partial_sums_kernel,
-    )
-
-    dim = 4
-    cents = np.array(
-        [[1.0, 0, 0, 0], [0, 1.0, 0, 0], [1.0, 0, 0, 0]]  # dup centroid
-    )
-    arr = pa.array(rows, type=pa.list_(pa.float64()))
-    arr = arr.slice(min(offset, len(arr) - 1))
-
-    # replicate ivf_assign_arrow's compute() contract directly
-    cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    mat, good = _fixed_dim_matrix(arr, dim)
-    norms = np.linalg.norm(mat, axis=1)
-    good = good & np.isfinite(norms) & (norms > 0.0)
-    expect = np.zeros(3, dtype=np.int64)
-    if good.any():
-        m = mat[good] / norms[good][:, None]
-        expect = np.bincount(
-            np.argmax(m @ cn.T, axis=1), minlength=3
-        ).astype(np.int64)
-
-    cells, cnt, _ = ivf_partial_sums_kernel(arr, cents)
-    got = np.zeros(3, dtype=np.int64)
-    got[cells] = cnt
-    assert (got == expect).all()
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.one_of(
-                st.none(),
-                st.lists(
-                    st.floats(-5, 5, allow_nan=False),
-                    min_size=0,
-                    max_size=6,
-                ),
-            ),
-            st.one_of(
-                st.none(), st.binary(min_size=0, max_size=3)
-            ),
-        ),
-        min_size=1,
-        max_size=16,
-    ),
-    offset=st.integers(0, 3),
-)
-def test_pq_adc_gather_sliced_views_property(rows, offset):
-    """The vectorized ADC codeword gather over ``_binary_views`` must
-    match a direct per-row NumPy replay on arbitrary (query vector,
-    codes) rows — null/wrong-dim/zero-norm queries and null/wrong-length
-    codes get NULL adist; SLICED arrays honored (the binary-views offset
-    class every code-reading kernel depends on)."""
-    from fs_schema_validator_spark.functions.arrays import (
-        _binary_views,
-        _unit_rows_masked,
-    )
-
-    dim, m, sub, ks = 4, 2, 2, 3
-    cb = (
-        np.arange(m * ks * sub, dtype=np.float64).reshape(m, ks, sub) / 10.0
-    )
-    qarr = pa.array([r[0] for r in rows], type=pa.list_(pa.float64()))
-    # clamp code bytes into the ks range
-    codes = [
-        None if r[1] is None else bytes(b % ks for b in r[1]) for r in rows
-    ]
-    carr = pa.array(codes, type=pa.binary())
-    off = min(offset, len(qarr) - 1)
-    qarr, carr = qarr.slice(off), carr.slice(off)
-
-    # direct replay of the kernel's contract
-    un, qgood = _unit_rows_masked(qarr, dim)
-    starts, lengths, values, validity = _binary_views(carr)
-    good = qgood & validity & (lengths == m)
-    expect = np.full(len(qarr), np.nan)
-    for i in np.nonzero(good)[0]:
-        cw = values[starts[i] : starts[i] + m]
-        parts = [
-            ((un[i, s * sub : (s + 1) * sub] - cb[s, cw[s]]) ** 2).sum()
-            for s in range(m)
-        ]
-        expect[i] = np.sum(parts)
-
-    # the vectorized gather the code-reading kernels use, on the same
-    # arrays (their mapInArrow wrappers are covered by the Spark tests)
-    sub_idx = np.arange(m)
-    adist = np.full(len(qarr), np.nan)
-    if good.any():
-        cw = values[starts[good][:, None] + sub_idx].astype(np.int64)
-        u = un[good]
-        parts = np.empty((len(u), m))
-        for s in range(m):
-            diff = u[:, s * sub : (s + 1) * sub] - cb[s, cw[:, s]]
-            parts[:, s] = (diff * diff).sum(axis=1)
-        adist[good] = parts.sum(axis=1)
-    both_nan = np.isnan(adist) & np.isnan(expect)
-    assert (both_nan | np.isclose(adist, expect, equal_nan=True)).all()

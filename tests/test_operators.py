@@ -1,4 +1,4 @@
-"""Operator tests: dedup recall on planted near-dups, ANN recall, text
+"""Operator tests: dedup recall on planted near-dups, text
 stats, multimodal plumbing, skew-safe aggregation, KS drift."""
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from fs_schema_validator_spark.engine import ValidationEngine
 from fs_schema_validator_spark.functions import skew
-from fs_schema_validator_spark.operators import dedup, multimodal, similarity, textstats
+from fs_schema_validator_spark.operators import dedup, multimodal, textstats
 
 WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -87,28 +87,6 @@ def test_verify_candidate_pairs_filters_lsh_output(docs):
     assert verified == exact
 
 
-def test_embedding_near_dup_pairs(spark):
-    import math
-
-    rows = []
-    for i in range(100):
-        rows.append((i, [math.sin(i * 1.7 + d * 0.9) for d in range(16)]))
-    # planted near-identical copies of vectors 3 and 42
-    for j, src in enumerate((3, 42)):
-        vec = [math.sin(src * 1.7 + d * 0.9) for d in range(16)]
-        vec[0] += 0.01
-        rows.append((1000 + j, vec))
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    pairs = {
-        (r.id_a, r.id_b): r.cos
-        for r in similarity.near_dup_pairs(emb, dim=16, threshold=0.99).collect()
-    }
-    assert (3, 1000) in pairs and pairs[(3, 1000)] > 0.999
-    assert (42, 1001) in pairs and pairs[(42, 1001)] > 0.999
-    for (a, b) in pairs:
-        assert (a, b) in {(3, 1000), (42, 1001)} or pairs[(a, b)] >= 0.99
-
-
 def test_ks_vs_global_flags_shifted_group(spark):
     from fs_schema_validator_spark.functions import sketches
 
@@ -144,23 +122,6 @@ def test_simhash_near_dups_collide(docs):
     assert (7, 2000) in cands
     hits = sum((i, 1000 + i) in cands for i in range(5))
     assert hits >= 3
-
-
-def test_ann_topk_exact_vs_lsh(spark):
-    import math
-
-    rows = []
-    for i in range(200):
-        vec = [math.sin(i * 0.1 + d) for d in range(8)]
-        rows.append((i, vec))
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    query = [math.sin(0.5 + d) for d in range(8)]  # equals vec 5
-
-    exact = [r.vec_id for r in similarity.topk_cosine(emb, query, k=5).collect()]
-    assert exact[0] == 5  # the identical vector ranks first
-
-    approx = similarity.lsh_bucketed_topk(emb, query, k=5, n_planes=4).collect()
-    assert [r.vec_id for r in approx][0] == 5  # same bucket as itself
 
 
 def test_quality_and_tokens(spark):
@@ -364,40 +325,6 @@ def test_rolling_hashes(spark):
     # short docs fall back to the whole-document hash
     assert out[3].min_kgram_hash == out[3].rhash
     assert out[4].rhash == 7  # empty text -> seed
-
-
-def test_ivf_topk_on_clustered_data(spark):
-    import math
-
-    # 8 well-separated clusters of 25 vectors each; cluster centers are the
-    # first row of each cluster, so the deterministic-sample quantizer
-    # (first n_centroids rows by id) picks one representative per cluster
-    rows = []
-    for c in range(8):
-        center = [math.sin(c * 2.3 + d) * 5 for d in range(8)]
-        for j in range(25):
-            jitter = [math.sin(c * 31 + j * 7 + d) * 0.1 for d in range(8)]
-            rows.append((c * 1000 + j, [a + b for a, b in zip(center, jitter)]))
-    # ids sorted: 0..24 are cluster 0, 1000.. cluster 1, etc.; first 8 rows
-    # by id are all cluster 0 — so pass explicit per-cluster seeds instead
-    emb = spark.createDataFrame(
-        sorted(rows), "vec_id bigint, embedding array<double>"
-    )
-    query = [math.sin(3 * 2.3 + d) * 5 for d in range(8)]  # cluster 3 center
-
-    from fs_schema_validator_spark.operators.similarity import (
-        ivf_topk,
-        topk_cosine,
-    )
-
-    exact = [r.vec_id for r in topk_cosine(emb, query, k=10).collect()]
-    approx = [
-        r.vec_id
-        for r in ivf_topk(emb, query, k=10, n_centroids=16, probes=4).collect()
-    ]
-    # all exact top-10 live in cluster 3; IVF probes must find them
-    overlap = len(set(exact) & set(approx))
-    assert overlap >= 8, (exact, approx)
 
 
 def test_load_table_format_dispatch(spark, tmp_path):
@@ -671,32 +598,6 @@ def test_pack_offsets_concat_and_chop(spark):
         3: (1, 22, 2),
         4: (0, 0, 2),
     }
-
-
-def test_ann_index_bucket_pruning(spark):
-    """The materialized LSH index prunes buckets at the scan: the probe
-    filter's executed plan selects only the probed buckets, and results
-    equal the in-flight lsh_bucketed_topk."""
-    import math
-
-    rows = [(i, [math.sin(i * 0.37 + d) for d in range(16)]) for i in range(400)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    query = [math.sin(7 * 0.37 + d) for d in range(16)]
-
-    similarity.write_ann_index(
-        emb, dim=16, n_planes=6, table="fsv_ann_test", buckets=16
-    )
-    got = similarity.topk_from_index(
-        spark, "fsv_ann_test", query, k=5, n_planes=6, probes=7
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan, plan
-    live = similarity.lsh_bucketed_topk(
-        emb, query, k=5, n_planes=6, probes=7
-    )
-    assert [(r.vec_id, r.cos) for r in got.collect()] == [
-        (r.vec_id, r.cos) for r in live.collect()
-    ]
 
 
 def test_vocab_top_terms_global_and_grouped(spark):
@@ -1146,65 +1047,6 @@ def test_pii_scrub_counts_and_replacement(spark):
     assert got[2].scrubbed_len == len("call <PHONE> today")
 
 
-def test_kmeans_quantizer_tightens_cells_and_keeps_recall(spark):
-    """Lloyd training must (a) move the deterministic-sample seeds onto
-    the true cluster means, (b) strictly reduce quantization inertia, and
-    (c) match exact top-k through the probed cells on clustered data."""
-    import math
-
-    import numpy as np
-
-    from fs_schema_validator_spark.operators.similarity import (
-        ivf_topk_kmeans,
-        topk_cosine,
-        train_centroids_kmeans,
-    )
-
-    rows = []
-    centers = []
-    for c in range(8):
-        center = [math.sin(c * 2.3 + d) * 5 for d in range(8)]
-        centers.append(center)
-        for j in range(25):
-            jitter = [math.sin(c * 31 + j * 7 + d) * 0.1 for d in range(8)]
-            rows.append((c * 1000 + j, [a + b for a, b in zip(center, jitter)]))
-    emb = spark.createDataFrame(
-        sorted(rows), "vec_id bigint, embedding array<double>"
-    )
-
-    def inertia(cent):
-        data = np.asarray([v for _, v in sorted(rows)])
-        cn = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-        dn = data / np.linalg.norm(data, axis=1, keepdims=True)
-        best = np.argmax(dn @ cn.T, axis=1)
-        return float(((data - cent[best]) ** 2).sum())
-
-    seeds = train_centroids_kmeans(emb, n_centroids=8, n_iter=0, init="sample")
-    trained = train_centroids_kmeans(emb, n_centroids=8, n_iter=3)
-    assert inertia(trained) < inertia(seeds) * 0.5
-    # every true cluster mean is approximated by some trained centroid
-    true_means = np.asarray(
-        [
-            np.mean(
-                [v for i, v in rows if i // 1000 == c], axis=0
-            )
-            for c in range(8)
-        ]
-    )
-    for m in true_means:
-        assert np.min(np.linalg.norm(trained - m, axis=1)) < 0.2
-
-    query = [math.sin(3 * 2.3 + d) * 5 for d in range(8)]
-    exact = [r.vec_id for r in topk_cosine(emb, query, k=10).collect()]
-    approx = [
-        r.vec_id
-        for r in ivf_topk_kmeans(
-            emb, query, k=10, n_centroids=8, probes=2, n_iter=3
-        ).collect()
-    ]
-    assert set(exact) == set(approx)
-
-
 def test_cross_table_lsh_catches_edited_benchmark_leak(spark):
     """A one-word-edited copy of a benchmark doc must surface in the
     fuzzy cross-table screen while the exact-fingerprint screen misses
@@ -1226,304 +1068,6 @@ def test_cross_table_lsh_catches_edited_benchmark_leak(spark):
         for r in textstats.cross_table_overlap(corpus, bench).collect()
     }
     assert (50, 903) not in exact      # the case exact fingerprints miss
-
-
-def _vec(i: int, dim: int = 64) -> list:
-    import random
-
-    rng = random.Random(7000 + i)
-    return [rng.uniform(-1.0, 1.0) for _ in range(dim)]
-
-
-def test_semantic_dedup_flags_planted_copies(spark):
-    """SemDeDup keep-first semantics: an exact copy under a larger id is
-    flagged, the original is not; random non-dup rows are not flagged;
-    null-vector, wrong-dimension, and null-id rows get a NULL cell and
-    never pair."""
-    rows = [(i, _vec(i)) for i in range(40)]
-    rows += [(1000 + i, _vec(i)) for i in range(3)]     # exact copies
-    rows += [(2000, None), (2001, [1.0, 2.0, 3.0])]     # degenerate rows
-    rows += [(2002, _vec(0) + [0.5])]                   # LONGER than dim
-    rows += [(None, _vec(5))]                           # null id, valid vec
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<double>"
-    )
-    out = {
-        r.vec_id: r
-        for r in similarity.semantic_dedup(
-            emb, n_centroids=4, threshold=0.95
-        ).collect()
-    }
-    assert len(out) == 47
-    for i in range(3):
-        assert out[1000 + i].is_dup
-        assert not out[i].is_dup
-        assert out[1000 + i].cell == out[i].cell  # identical vec, same cell
-    assert sum(bool(r.is_dup) for r in out.values()) == 3
-    # 2002 is a 65-dim vector equal to vec 0 plus one extra component: a
-    # LONGER-than-dim row must get a NULL cell (strict == dim mask), not
-    # a truncated assignment that would crash the rectangular cell
-    # matrix or flag vec 0
-    for bad in (2000, 2001, 2002, None):
-        assert out[bad].cell is None and not out[bad].is_dup
-    # the null-id copy of vec 5 must NOT flag vec 5 (it never pairs)
-    assert not out[5].is_dup
-
-
-def test_semantic_dedup_kernel_blockwise_matches_small_blocks(spark):
-    """The kernel's block loop must not change flags across block sizes
-    (a 20-member exact clique spans several 4-row blocks, exercising the
-    earlier-blocks comparison path)."""
-    base = _vec(0)
-    rows = [(i, base) for i in range(20)]
-    rows += [(100 + i, _vec(50 + i)) for i in range(5)]
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<double>"
-    )
-    from fs_schema_validator_spark.operators.similarity import (
-        _cell_dedup_kernel,
-        _collect_seed_matrix,
-    )
-    from fs_schema_validator_spark.functions.arrays import ivf_assign_arrow
-
-    cents = _collect_seed_matrix(emb, 2, "embedding", "vec_id")
-    eligible = ivf_assign_arrow(emb, cents).filter(F.col("cell").isNotNull())
-    flags = {}
-    for blk in (4, 256):
-        flags[blk] = sorted(
-            (r.vec_id, r.is_dup)
-            for r in _cell_dedup_kernel(
-                emb, eligible, 0.95, "embedding", "vec_id", 5, dim=64,
-                block=blk,
-            ).collect()
-        )
-    assert flags[4] == flags[256]
-    assert sum(d for _, d in flags[4]) == 19
-
-
-def test_pq_encode_eligibility_and_adc_roundtrip(spark):
-    """pq_encode_arrow: null / wrong-dim / zero-norm rows get NULL codes;
-    eligible rows get m one-byte codes whose ADC distance under a
-    query-derived LUT reproduces the NumPy computation exactly."""
-    import numpy as np
-
-    from fs_schema_validator_spark.functions.arrays import (
-        pq_adc_scores_arrow,
-        pq_encode_arrow,
-    )
-
-    rng = np.random.RandomState(11)
-    cb = rng.uniform(-1, 1, size=(8, 16, 8))
-    rows = [(i, [float(x) for x in rng.uniform(-1, 1, 64)]) for i in range(20)]
-    rows += [(50, None), (51, [0.5] * 3), (52, [0.0] * 64)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    codes = {r.vec_id: r.codes for r in pq_encode_arrow(df, cb).collect()}
-    for bad in (50, 51, 52):
-        assert codes[bad] is None
-    assert all(len(codes[i]) == 8 for i in range(20))
-    # ADC against a fixed LUT
-    lut = rng.uniform(0, 2, size=(8, 16))
-    out = {
-        r.vec_id: r.adist
-        for r in pq_adc_scores_arrow(
-            pq_encode_arrow(df, cb), lut
-        ).collect()
-    }
-    for bad in (50, 51, 52):
-        assert out[bad] is None
-    for i in range(20):
-        want = float(lut[np.arange(8), np.frombuffer(codes[i], np.uint8)].sum())
-        assert abs(out[i] - want) < 1e-12
-
-
-def test_pq_training_tightens_quantization(spark):
-    """Per-subspace Lloyd iterations must not increase total quantization
-    error on unit vectors (Lloyd is monotone); trained codebooks keep
-    shape (m, ks, sub)."""
-    import numpy as np
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = np.random.RandomState(5)
-    rows = [
-        (i, [float(x) for x in rng.uniform(-1, 1, 64)]) for i in range(120)
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-
-    def qerr(cb):
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        u = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        tot = 0.0
-        for s in range(8):
-            us = u[:, s * 8 : (s + 1) * 8]
-            d = ((us[:, None, :] - cb[s][None]) ** 2).sum(-1)
-            tot += d.min(axis=1).sum()
-        return tot
-
-    cb0 = similarity.train_pq_codebooks(df, m=8, ks=16, n_iter=0)
-    cb2 = similarity.train_pq_codebooks(df, m=8, ks=16, n_iter=2)
-    assert cb0.shape == cb2.shape == (8, 16, 8)
-    assert qerr(cb2) <= qerr(cb0) + 1e-9
-
-
-def test_ivf_pq_recall_vs_exact_and_oracle(spark, tmp_path):
-    """ivf_pq_topk recall ≥ 0.9 against exact top-k on a clustered
-    fixture, and the REAL driver query matches its REAL DuckDB oracle
-    value-for-value on the same fixture."""
-    import random
-
-    import duckdb
-
-    import __spark_entry__ as entrymod
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(777)
-    centers = [_vec(9100 + c) for c in range(4)]
-    rows = [
-        (i, [v + rng.uniform(-0.08, 0.08) for v in centers[i % 4]])
-        for i in range(80)
-    ]
-    rows += [(200, [0.25] * 5), (201, [0.0] * 64)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    q = rows[0][1]
-    # exact baseline over the clean rows only: cosine_scores is the
-    # raw ANSI expression, undefined on zero-norm/wrong-dim rows (the
-    # PQ path excludes them via kernel eligibility instead)
-    clean = emb.filter(F.col("vec_id") < 100)
-    exact = {
-        r.vec_id for r in similarity.topk_cosine(clean, q, k=10).collect()
-    }
-    approx = {
-        r.vec_id
-        for r in similarity.ivf_pq_topk(
-            emb, q, k=10, n_centroids=8, probes=4, m=8, ks=8, n_iter=2
-        ).collect()
-    }
-    assert len(exact & approx) >= 9
-
-    sf_dir = str(tmp_path)
-    emb.coalesce(1).write.parquet(f"{sf_dir}/embeddings.parquet")
-    got = sorted(
-        tuple(r)
-        for r in entrymod.queries()["ann_topk_ivf_pq"](spark, sf_dir).collect()
-    )
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet/*.parquet')"
-    )
-    want = sorted(
-        tuple(r)
-        for r in con.sql(entrymod.oracle_sql()["ann_topk_ivf_pq"]).fetchall()
-    )
-    assert got == want
-
-
-def test_kmeans_pinned_oracle_agrees_on_clustered_fixture(spark, tmp_path):
-    """Cross-engine: the REAL pinned-kmeans driver query vs its REAL
-    DuckDB oracle on a clustered fixture (3 planted clusters + noise +
-    a wrong-dim and a zero-norm row) — the value-level gate for the
-    Lloyd path, where the previous rows-only check couldn't see a wrong
-    centroid update."""
-    import random
-
-    import duckdb
-
-    import __spark_entry__ as entrymod
-
-    rng = random.Random(424242)
-    centers = [_vec(9000 + c) for c in range(3)]
-    rows = []
-    for i in range(60):
-        c = centers[i % 3]
-        rows.append(
-            (i, [v + rng.uniform(-0.05, 0.05) for v in c])
-        )
-    rows += [(100, _vec(100)), (101, [0.25] * 5), (102, [0.0] * 64)]
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<float>"
-    )
-    sf_dir = str(tmp_path)
-    emb.coalesce(1).write.parquet(f"{sf_dir}/embeddings.parquet")
-    got = sorted(
-        tuple(r)
-        for r in entrymod.queries()["ann_topk_ivf_kmeans_pinned"](
-            spark, sf_dir
-        ).collect()
-    )
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet/*.parquet')"
-    )
-    want = sorted(
-        tuple(r)
-        for r in con.sql(
-            entrymod.oracle_sql()["ann_topk_ivf_kmeans_pinned"]
-        ).fetchall()
-    )
-    assert got == want
-    ids = {v for v, _ in got}
-    # the query vector is vec_id 0; its own cluster (ids ≡ 0 mod 3)
-    # must dominate the top-k after two Lloyd rounds
-    assert 0 in ids
-    assert sum(1 for v in ids if v % 3 == 0 and v < 60) >= 8
-
-
-def test_semantic_dedup_oracle_agrees_on_null_and_wrong_dim(spark, tmp_path):
-    """Cross-engine: the REAL driver query vs the REAL oracle SQL on a
-    fixture with null and wrong-dimension vectors (one of them at a
-    vec_id the query's planted-copy derivation picks up, so the copy of
-    a null row is exercised too)."""
-    import duckdb
-
-    import __spark_entry__ as entrymod
-
-    rows = [(i, _vec(i)) for i in range(36)]
-    rows += [(40, None), (41, [0.5] * 3)]   # 40 % 20 == 0: planted-null copy
-    rows += [(None, _vec(3))]               # null id, valid vector
-    # zero-norm contract: a directionless vector is ineligible like
-    # null/wrong-dim (kernel cosine-0, pairs-null, and DuckDB NaN would
-    # otherwise three-way diverge); 60 % 20 == 0 exercises its copy too
-    rows += [(42, [0.0] * 64), (60, [0.0] * 64)]
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<float>"
-    )
-    sf_dir = str(tmp_path)
-    emb.coalesce(1).write.parquet(f"{sf_dir}/embeddings.parquet")
-
-    got = {
-        (r.vec_id, r.cell, r.is_dup)
-        for r in entrymod.queries()["semantic_dup_flags"](
-            spark, sf_dir
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet/*.parquet')"
-    )
-    want = {
-        tuple(r)
-        for r in con.sql(
-            entrymod.oracle_sql()["semantic_dup_flags"]
-        ).fetchall()
-    }
-    assert got == want
-    by_id = {v: (c, d) for v, c, d in got}
-    # keep-first with the negative planted ids: the COPY (smaller id) is
-    # the keeper, the original gets flagged
-    assert by_id[0] == (by_id[-1][0], True)
-    assert not by_id[-1][1]
-    assert by_id[40] == (None, False)             # null vec: no cell
-    assert by_id[-41] == (None, False)            # copy of the null vec
-    assert by_id[41] == (None, False)             # wrong-dim vec
-    assert by_id[None] == (None, False)           # null id: masked cell
-    assert by_id[42] == (None, False)             # zero-norm vec: no cell
-    assert by_id[60] == (None, False)             # zero-norm at a copy id
-    assert by_id[-61] == (None, False)            # its planted zero copy
-    # the null-id duplicate of vec 3 must not flag vec 3
-    assert not by_id[3][1]
 
 
 def test_dsir_scores_target_lookalikes_higher(spark):
@@ -1727,22 +1271,18 @@ def test_token_ngram_dup_stats_oracle_parity():
     """Cross-engine: the REAL driver query vs its REAL DuckDB oracle
     (generator + closed-form window-hash replay) must agree bit-exactly."""
     import duckdb
-    import importlib.util
 
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    import __spark_entry__ as entrymod
     from fs_schema_validator_spark.session import get_spark
 
     spark = get_spark(master="local[4]", shuffle_partitions=4)
     got = sorted(
-        tuple(r) for r in m.token_ngram_dup_stats(spark, "unused").collect()
+        tuple(r)
+        for r in entrymod.token_ngram_dup_stats(spark, "unused").collect()
     )
     con = duckdb.connect()
     want = sorted(
-        tuple(r) for r in con.sql(m._token_ngram_oracle()).fetchall()
+        tuple(r) for r in con.sql(entrymod._token_ngram_oracle()).fetchall()
     )
     assert got == want
 
@@ -1814,43 +1354,21 @@ def test_token_ngram_dedup_clean_oracle_parity():
     """Cross-engine: the REAL driver query vs its REAL DuckDB oracle
     (generator + positional window-hash + span-union replay)."""
     import duckdb
-    import importlib.util
 
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    import __spark_entry__ as entrymod
     from fs_schema_validator_spark.session import get_spark
 
     spark = get_spark(master="local[4]", shuffle_partitions=4)
     got = sorted(
         tuple(r)
-        for r in m.token_ngram_dedup_clean(spark, "unused").collect()
+        for r in entrymod.token_ngram_dedup_clean(spark, "unused").collect()
     )
     con = duckdb.connect()
     want = sorted(
-        tuple(r) for r in con.sql(m._token_span_dedup_oracle()).fetchall()
+        tuple(r)
+        for r in con.sql(entrymod._token_span_dedup_oracle()).fetchall()
     )
     assert got == want
-
-
-def test_semantic_dedup_kernel_duplicate_id_wrong_dim_sibling(spark):
-    """Regression: a DUPLICATED id whose sibling row has a wrong (longer)
-    dimension must not crash the cell kernel — the join back that
-    re-fetches vectors by id would otherwise mix both siblings into one
-    ragged cell matrix."""
-    rows = [(i, _vec(i)) for i in range(20)]
-    rows += [(3, _vec(3) + [0.5])]   # duplicate id, 65-dim sibling
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<double>"
-    )
-    out = similarity.semantic_dedup(
-        emb, n_centroids=4, threshold=0.95
-    ).collect()
-    assert len(out) == 21
-    assert sum(bool(r.is_dup) for r in out) == 0
-    assert sum(r.cell is None for r in out) == 1   # the 65-dim sibling
 
 
 def test_token_ngram_contamination_semantics(spark):
@@ -1891,24 +1409,19 @@ def test_token_ngram_contamination_semantics(spark):
 def test_token_ngram_contamination_oracle_parity():
     """Cross-engine: the REAL driver query vs its REAL DuckDB oracle."""
     import duckdb
-    import importlib.util
 
-    spec = importlib.util.spec_from_file_location(
-        "entrymod2", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    import __spark_entry__ as entrymod
     from fs_schema_validator_spark.session import get_spark
 
     spark = get_spark(master="local[4]", shuffle_partitions=4)
     got = sorted(
         tuple(r)
-        for r in m.token_ngram_contamination(spark, "unused").collect()
+        for r in entrymod.token_ngram_contamination(spark, "unused").collect()
     )
     con = duckdb.connect()
     want = sorted(
         tuple(r)
-        for r in con.sql(m._token_contamination_oracle()).fetchall()
+        for r in con.sql(entrymod._token_contamination_oracle()).fetchall()
     )
     assert got == want
 
@@ -1956,11 +1469,11 @@ def test_temperature_sample_degenerate_groups_cross_engine(spark):
     divide-by-zero abort, no least(1.0, NULL) full inclusion), and
     null-id rows are excluded — verified CROSS-ENGINE against the real
     oracle SQL on the same hostile fixture."""
-    import importlib.util
 
     import duckdb
     import pandas as pd
 
+    import __spark_entry__ as entrymod
     from fs_schema_validator_spark.operators.sampling import (
         temperature_sample,
     )
@@ -1980,17 +1493,14 @@ def test_temperature_sample_degenerate_groups_cross_engine(spark):
     assert all(v[1] == "en" for v in got)
     assert all(v[0] is not None for v in got)
 
-    spec = importlib.util.spec_from_file_location(
-        "entrymod3", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
     con = duckdb.connect()
     con.register(
         "documents",
         pd.DataFrame(rows, columns=["doc_id", "lang", "n_chars"]),
     )
-    want = sorted(tuple(r) for r in con.sql(m._temperature_oracle()).fetchall())
+    want = sorted(
+        tuple(r) for r in con.sql(entrymod._temperature_oracle()).fetchall()
+    )
     assert got == want
 
 
@@ -2028,9 +1538,10 @@ def test_bigram_xent_oracle_agrees_on_null_and_empty_text(spark, tmp_path):
     """Cross-engine: the REAL driver query vs the REAL oracle SQL on a
     hostile fixture — null text, empty text, one-word docs, and a null
     text INSIDE the LM set (doc_id % 25 == 0)."""
-    import importlib.util
 
     import duckdb
+
+    import __spark_entry__ as entrymod
 
     rows = [(i, f"w{i % 7} common text w{i % 5} tail") for i in range(40)]
     rows += [(50, None), (75, ""), (77, "solo"), (100, None)]  # 50,75,100 in LM
@@ -2038,645 +1549,22 @@ def test_bigram_xent_oracle_agrees_on_null_and_empty_text(spark, tmp_path):
     path = str(tmp_path / "documents.parquet")
     docs.write.mode("overwrite").parquet(path)
 
-    spec = importlib.util.spec_from_file_location(
-        "entrymod4", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-
     got = sorted(
         tuple(r)
-        for r in m.bigram_xent_scores(spark, str(tmp_path)).collect()
+        for r in entrymod.bigram_xent_scores(spark, str(tmp_path)).collect()
     )
     con = duckdb.connect()
     # Spark writes a DIRECTORY of part files — glob it for DuckDB
     con.sql(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')"
     )
-    want = sorted(tuple(r) for r in con.sql(m._bigram_xent_oracle()).fetchall())
+    want = sorted(
+        tuple(r) for r in con.sql(entrymod._bigram_xent_oracle()).fetchall()
+    )
     assert got == want
     by_id = {v[0]: v for v in got}
     for deg in (50, 75, 77, 100):
         assert by_id[deg][1:] == (0, 0.0)
-
-
-def test_ann_oracles_agree_with_zero_vector_in_seed_window(spark, tmp_path):
-    """Cross-engine contract pin: a ZERO vector planted inside the
-    id-ordered seed window must not become a centroid on either side.
-    Before the shared _SEED_WINDOW_SQL exclusion, the engine kept it as
-    a real zero centroid (guarded norm -> cosine 0, can win over
-    all-negative scores) while DuckDB's dp/0 is NULL-ranked-last — a
-    silent seed divergence. Fixture also plants a null embedding, a
-    wrong-dimension row, a NULL-ELEMENT vector, and an INF-ELEMENT
-    vector inside the window
-    (np.asarray turns a None element into a NaN centroid that poisons
-    every engine argmax, while DuckDB's sum() skips null terms — the
-    opposite-polarity divergence of the zero-vector case)."""
-    import duckdb
-
-    import __spark_entry__ as entrymod
-
-    dim = 64
-    rows = []
-    for vid in range(60):
-        if vid == 3:
-            vec = [0.0] * dim                      # zero-norm, in-window
-        elif vid == 5:
-            vec = None                             # null, in-window
-        elif vid == 7:
-            vec = [1.0] * 8                        # wrong dim, in-window
-        elif vid == 9:
-            vec = [1.0] * (dim - 1) + [None]       # null element, in-window
-        elif vid == 11:
-            vec = [1.0] * (dim - 1) + [float("inf")]  # inf elem, in-window
-        else:
-            vec = [
-                float(((vid * 31 + i * 7) % 13) - 6) for i in range(dim)
-            ]
-        rows.append((vid, vec, 0))
-    emb = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<float>, label int"
-    )
-    sf_dir = str(tmp_path)
-    emb.coalesce(1).write.parquet(f"{sf_dir}/embeddings.parquet")
-    entrymod._QUERY_VEC_CACHE.pop(sf_dir, None)
-
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet/*.parquet')"
-    )
-    for name in ("ann_topk_ivf", "ann_topk_ivf_kmeans_pinned",
-                 "ann_topk_ivf_pq"):
-        got = sorted(
-            tuple(r)
-            for r in entrymod.queries()[name](spark, sf_dir).collect()
-        )
-        want = sorted(
-            tuple(r) for r in con.sql(entrymod.oracle_sql()[name]).fetchall()
-        )
-        assert got == want, name
-        assert len(got) == 10, name
-        ids = {r[0] for r in got}
-        assert 3 not in ids, name                  # zero vec ineligible
-        assert 9 not in ids, name                  # null-element ineligible
-        assert 11 not in ids, name                 # inf-element ineligible
-
-
-def test_coarse_probe_tie_break_is_deterministic(spark):
-    """Bit-identical duplicate seed centroids must probe the LOWER cell
-    first (the oracles' ORDER BY sim DESC, cell ASC) — a bare
-    np.argsort(-sims) is quicksort, unstable on ties."""
-    import numpy as np
-
-    from fs_schema_validator_spark.operators.similarity import _coarse_probe
-
-    dup = [1.0, 0.0, 0.0, 0.0]
-    cents = np.array([dup, dup, dup, [0.0, 1.0, 0.0, 0.0]])
-    df = spark.createDataFrame(
-        [(i, [float(i + 1), 1.0, 0.0, 0.0]) for i in range(8)],
-        "vec_id bigint, embedding array<float>",
-    )
-    in_cells, qn = _coarse_probe(df, cents, dup, probes=2, vec_col="embedding",
-                                 id_col="vec_id")
-    assert np.allclose(qn, dup)
-    # all 8 vectors score highest on the duplicated direction; the argmax
-    # assignment and the probe ranking must both resolve ties to the
-    # LOWEST cell, so probing cells {0, 1} covers every vector
-    assert in_cells.count() == 8
-
-
-def test_pq_index_build_query_matches_direct_and_prunes_partitions(
-    spark, tmp_path
-):
-    """The standing IVF-PQ index: write_pq_index + pq_topk_from_index
-    must return EXACTLY what the one-shot ivf_pq_topk computes (same
-    deterministic seeds/params), ineligible rows must not be indexed,
-    and the probe query's code scan must carry a `cell` PARTITION filter
-    (directory-level pruning — the point of the layout)."""
-    import random
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(424)
-    centers = [_vec(9300 + c) for c in range(4)]
-    rows = [
-        (i, [v + rng.uniform(-0.08, 0.08) for v in centers[i % 4]])
-        for i in range(80)
-    ]
-    rows += [(200, [0.25] * 5), (201, [0.0] * 64), (202, None)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    q = rows[0][1]
-    params = dict(n_centroids=8, m=8, ks=8, n_iter=2)
-
-    path = str(tmp_path / "pq_index")
-    similarity.write_pq_index(emb, path, **params)
-
-    direct = [
-        tuple(r)
-        for r in similarity.ivf_pq_topk(
-            emb, q, k=10, probes=4, refine=4, **params
-        ).collect()
-    ]
-    from_index = similarity.pq_topk_from_index(
-        spark, path, q, emb, k=10, probes=4, refine=4
-    )
-    assert [tuple(r) for r in from_index.collect()] == direct
-    assert len(direct) == 10
-
-    codes = spark.read.parquet(f"{path}/codes")
-    assert codes.count() == 80          # ineligible rows not indexed
-    assert codes.filter(F.col("cell").isNull()).count() == 0
-
-    pruned = codes.filter(F.col("cell").isin([0, 1]))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # the filter must be INSIDE the PartitionFilters bracket list — an
-    # unpartitioned regression would show 'PartitionFilters: []' with
-    # the cell filter demoted to PushedFilters (row-group, not
-    # directory-level pruning) and still contain 'cell' nearby
-    import re
-
-    mpf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert mpf is not None and "cell" in mpf.group(1), plan[:500]
-
-
-def test_pq_index_one_pass_equals_two_pass_kernels(spark):
-    """ivf_pq_index_arrow (the standing-index build pass) must emit, for
-    EVERY row, exactly the cell ivf_assign_arrow assigns and the codes
-    pq_encode_arrow produces — including the NULL contract on
-    null / wrong-dimension / zero-norm rows."""
-    import numpy as np
-
-    from fs_schema_validator_spark.functions.arrays import (
-        ivf_assign_arrow,
-        ivf_pq_index_arrow,
-        pq_encode_arrow,
-    )
-
-    dim, m, ks = 8, 4, 4
-    rows = [
-        (i, [float(((i + 1) * 7 + j * 3) % 11 - 5) for j in range(dim)])
-        for i in range(40)
-    ]
-    rows += [(100, None), (101, [1.0] * 3), (102, [0.0] * dim)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    cents = np.asarray([r[1] for r in rows[:6]])
-    cb = (
-        np.asarray([r[1] for r in rows[:ks]])
-        .reshape(ks, m, dim // m)
-        .transpose(1, 0, 2)
-        .copy()
-    )
-
-    one = {
-        r.vec_id: (r.cell, r.codes)
-        for r in ivf_pq_index_arrow(df, cents, cb).collect()
-    }
-    cells = {r.vec_id: r.cell for r in ivf_assign_arrow(df, cents).collect()}
-    codes = {r.vec_id: r.codes for r in pq_encode_arrow(df, cb).collect()}
-    assert set(one) == set(cells) == set(codes)
-    for vid in one:
-        assert one[vid] == (cells[vid], codes[vid]), vid
-    for vid in (100, 101, 102):
-        assert one[vid] == (None, None)
-
-
-def test_pq_index_append_extends_without_retraining(spark, tmp_path):
-    """append_pq_index must encode the delta with the FROZEN sidecar
-    models (same codes the original build would give those rows) and
-    leave existing entries untouched; a post-append probe query sees
-    the new vectors."""
-    import random
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(515)
-    centers = [_vec(9400 + c) for c in range(4)]
-    base_rows = [
-        (i, [v + rng.uniform(-0.08, 0.08) for v in centers[i % 4]])
-        for i in range(60)
-    ]
-    new_rows = [
-        (1000 + i, [v + rng.uniform(-0.08, 0.08) for v in centers[0]])
-        for i in range(12)
-    ] + [(2000, [0.0] * 64)]                    # ineligible delta row
-    base = spark.createDataFrame(
-        base_rows, "vec_id bigint, embedding array<float>"
-    )
-    delta = spark.createDataFrame(
-        new_rows, "vec_id bigint, embedding array<float>"
-    )
-    path = str(tmp_path / "pq_index")
-    similarity.write_pq_index(base, path, n_centroids=8, m=8, ks=8, n_iter=2)
-    before = {
-        r.vec_id: (r.cell, bytes(r.codes))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    }
-    similarity.append_pq_index(delta, path)
-    after = {
-        r.vec_id: (r.cell, bytes(r.codes))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    }
-    assert len(after) == 60 + 12                # zero-norm row skipped
-    for vid, entry in before.items():
-        assert after[vid] == entry              # history untouched
-    # the frozen models give the delta the same codes a joint build's
-    # kernel would (same centroids/codebooks ship either way)
-    coarse, cb = similarity._load_pq_model(spark, path)
-    from fs_schema_validator_spark.functions.arrays import ivf_pq_index_arrow
-
-    expect = {
-        r.vec_id: (r.cell, bytes(r.codes))
-        for r in ivf_pq_index_arrow(delta, coarse, cb)
-        .filter(F.col("cell").isNotNull())
-        .collect()
-    }
-    for vid, entry in expect.items():
-        assert after[vid] == entry
-    # a query near centers[0] can now surface appended ids
-    got = {
-        r.vec_id
-        for r in similarity.pq_topk_from_index(
-            spark, path, centers[0], base.unionByName(delta), k=10,
-            probes=2, refine=4,
-        ).collect()
-    }
-    assert got & {1000 + i for i in range(12)}
-
-
-def test_pq_index_append_is_idempotent_and_dim_guard(spark, tmp_path):
-    """Re-appending the same delta must be a no-op (skip_existing
-    anti-join), and ivf_pq_index_arrow must fail fast on centroid /
-    codebook dimension mismatch instead of silently half-encoding."""
-    import random
-
-    import numpy as np
-    import pytest
-
-    from fs_schema_validator_spark.functions.arrays import ivf_pq_index_arrow
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(616)
-    centers = [_vec(9500 + c) for c in range(4)]
-    base = spark.createDataFrame(
-        [
-            (i, [v + rng.uniform(-0.08, 0.08) for v in centers[i % 4]])
-            for i in range(40)
-        ],
-        "vec_id bigint, embedding array<float>",
-    )
-    delta = spark.createDataFrame(
-        [
-            (1000 + i, [v + rng.uniform(-0.08, 0.08) for v in centers[1]])
-            for i in range(6)
-        ],
-        "vec_id bigint, embedding array<float>",
-    )
-    path = str(tmp_path / "pq_index")
-    similarity.write_pq_index(base, path, n_centroids=8, m=8, ks=8, n_iter=2)
-    similarity.append_pq_index(delta, path)
-    similarity.append_pq_index(delta, path)       # retried ingest
-    counts = (
-        spark.read.parquet(f"{path}/codes")
-        .groupBy("vec_id").count().filter(F.col("count") > 1).count()
-    )
-    assert counts == 0
-    assert spark.read.parquet(f"{path}/codes").count() == 46
-
-    cents = np.eye(8)[:4]                          # dim 8
-    cb = np.zeros((4, 4, 1))                       # covers 4 dims only
-    with pytest.raises(ValueError, match="dims"):
-        ivf_pq_index_arrow(base, cents, cb)
-
-
-def test_ivf_knn_join_matches_per_query_ivf_topk(spark):
-    """The batch kNN join must return, for EVERY query id, exactly what
-    the single-query IVF path returns for that query vector (same
-    seeds, same probe contract) — including ineligible corpus rows
-    (null / wrong-dim / zero) never appearing, and self-matches ranking
-    first at cos 1."""
-    import random
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(717)
-    centers = [_vec(9600 + c) for c in range(4)]
-    rows = [
-        (i, [v + rng.uniform(-0.08, 0.08) for v in centers[i % 4]])
-        for i in range(60)
-    ]
-    rows += [(200, [0.25] * 5), (201, [0.0] * 64), (202, None)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    queries = emb.filter((F.col("vec_id") % 20 == 0) & (F.col("vec_id") < 100))
-
-    joined = similarity.ivf_knn_join(
-        emb, queries, k=5, n_centroids=8, probes=3
-    ).collect()
-    by_q = {}
-    for r in joined:
-        by_q.setdefault(r.qid, []).append((r.vec_id, r.cos))
-
-    qrows = {r.vec_id: list(r.embedding) for r in queries.collect()}
-    assert set(by_q) == set(qrows)
-    for qid, qvec in qrows.items():
-        single = [
-            (r.vec_id, r.cos)
-            for r in similarity.ivf_topk(
-                emb, qvec, k=5, n_centroids=8, probes=3
-            ).collect()
-        ]
-        assert by_q[qid] == single, qid
-        assert by_q[qid][0] == (qid, 1.0)          # self-match first
-        assert {200, 201, 202} & {v for v, _ in by_q[qid]} == set()
-
-
-def test_pq_knn_join_matches_per_query_index_topk(spark, tmp_path):
-    """The PQ batch kNN join must return, per query id, exactly what the
-    single-query pq_topk_from_index path returns against the same index
-    (same sidecar models, probe contract, ADC math, rerank)."""
-    import random
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(818)
-    centers = [_vec(9700 + c) for c in range(4)]
-    rows = [
-        (i, [v + rng.uniform(-0.08, 0.08) for v in centers[i % 4]])
-        for i in range(60)
-    ]
-    rows += [(201, [0.0] * 64), (202, None)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    path = str(tmp_path / "pq_index")
-    similarity.write_pq_index(emb, path, n_centroids=8, m=8, ks=8, n_iter=2)
-
-    queries = emb.filter((F.col("vec_id") % 15 == 0) & (F.col("vec_id") < 100))
-    joined = similarity.pq_knn_join(
-        spark, path, queries, emb, k=5, probes=3, refine=4
-    ).collect()
-    by_q = {}
-    for r in joined:
-        by_q.setdefault(r.qid, []).append((r.vec_id, r.cos))
-
-    qrows = {r.vec_id: list(r.embedding) for r in queries.collect()}
-    assert set(by_q) == set(qrows)
-    for qid, qvec in qrows.items():
-        single = [
-            (r.vec_id, r.cos)
-            for r in similarity.pq_topk_from_index(
-                spark, path, qvec, emb, k=5, probes=3, refine=4
-            ).collect()
-        ]
-        assert by_q[qid] == single, qid
-        assert by_q[qid][0] == (qid, 1.0)
-        # a shared eligibility regression letting the zero/null rows
-        # into the index would keep parity green on BOTH paths — pin it
-        assert {201, 202} & {v for v, _ in by_q[qid]} == set()
-
-
-def test_ivf_knn_join_accepts_trained_quantizer(spark):
-    """The centroids override must match the per-query probe path with
-    the SAME matrix, and malformed matrices must fail fast instead of
-    silently returning an empty graph."""
-    import random
-
-    import numpy as np
-    import pytest
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(919)
-    centers = [_vec(9800 + c) for c in range(4)]
-    rows = [
-        (i, [v + rng.uniform(-0.08, 0.08) for v in centers[i % 4]])
-        for i in range(40)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    queries = emb.filter(F.col("vec_id") % 10 == 0)
-    cents = similarity.train_centroids_kmeans(emb, n_centroids=4, n_iter=2)
-
-    joined = similarity.ivf_knn_join(
-        emb, queries, k=3, probes=2, centroids=cents
-    ).collect()
-    by_q = {}
-    for r in joined:
-        by_q.setdefault(r.qid, []).append((r.vec_id, r.cos))
-    qrows = {r.vec_id: list(r.embedding) for r in queries.collect()}
-    assert set(by_q) == set(qrows)
-    for qid, qvec in qrows.items():
-        single = [
-            (r.vec_id, r.cos)
-            for r in similarity._probe_topk(
-                emb, cents, qvec, k=3, probes=2,
-                vec_col="embedding", id_col="vec_id",
-            ).collect()
-        ]
-        assert by_q[qid] == single, qid
-
-    with pytest.raises(ValueError, match="2-D"):
-        similarity.ivf_knn_join(
-            emb, queries, centroids=np.array([], dtype=np.float64)
-        )
-
-
-def test_ivf_knn_join_corpus_blocks_identical(spark):
-    """Salting the corpus side of the cell cogroup into sub-blocks
-    changes task boundaries, never results: every (qid, vec_id, cos)
-    row must be identical with corpus_blocks=3."""
-    import random
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(522)
-    centers = [_vec(7300 + c) for c in range(4)]
-    rows = [
-        (i, [v + rng.uniform(-0.1, 0.1) for v in centers[i % 4]])
-        for i in range(80)
-    ]
-    rows += [(300, [1.0] * 3), (301, [0.0] * 64), (302, None)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    queries = emb.filter(F.col("vec_id") % 10 == 0)
-
-    def rows_of(**kw):
-        return sorted(
-            (r.qid, r.vec_id, r.cos)
-            for r in similarity.ivf_knn_join(
-                emb, queries, k=4, n_centroids=8, probes=3, **kw
-            ).collect()
-        )
-
-    base = rows_of()
-    assert base == rows_of(corpus_blocks=3)
-    assert len(base) > 0
-
-
-def test_pq_knn_join_corpus_blocks_identical(spark, tmp_path):
-    """The per-cell ADC-top-k cogroup must produce the identical kNN
-    join when each cell's codes are salted into sub-blocks (each
-    block's top-k is a superset of its share of the cell's top-k)."""
-    import random
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(914)
-    centers = [_vec(8200 + c) for c in range(4)]
-    rows = [
-        (i, [v + rng.uniform(-0.1, 0.1) for v in centers[i % 4]])
-        for i in range(90)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    path = str(tmp_path / "pqidx")
-    similarity.write_pq_index(emb, path, n_centroids=8, m=4, ks=8, n_iter=2)
-    queries = emb.filter(F.col("vec_id") % 9 == 0)
-
-    def rows_of(**kw):
-        return sorted(
-            (r.qid, r.vec_id, r.cos)
-            for r in similarity.pq_knn_join(
-                spark, path, queries, emb, k=4, probes=3, refine=2, **kw
-            ).collect()
-        )
-
-    base = rows_of()
-    assert base == rows_of(corpus_blocks=3)
-    assert len(base) > 0
-
-
-@pytest.mark.parametrize(
-    "name", ["knn_join_topk", "pq_knn_join_topk", "semantic_dup_flags"]
-)
-def test_similarity_query_matches_duckdb_oracle(spark, name):
-    """Each similarity operator's one scoring path against its
-    independent DuckDB replay: the driver query on the smoke-scale
-    fixture vs its oracle_sql(), compared the way the driver gate
-    compares (same column names; order-insensitive normalized rows)."""
-    from pathlib import Path
-
-    import duckdb
-
-    import __spark_entry__ as entrymod
-    from tools.oracle_parity import norm_rows
-    from tools.plan_audit import SF_DIR
-
-    # the smoke-scale fixture sits beside the audit's sf0.01 directory
-    sf_dir = str(Path(SF_DIR).with_name("sf0.001"))
-    sdf = entrymod.queries()[name](spark, sf_dir)
-    got = norm_rows(sdf.columns, sdf.collect())
-
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    )
-    rel = con.sql(entrymod.oracle_sql()[name])
-    dcols = [d[0] for d in rel.description]
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert got == norm_rows(dcols, rel.fetchall())
-    assert len(got) > 0
-
-
-def test_semantic_dedup_pq_matches_all_pairs_kernel(spark, tmp_path):
-    """SemDeDup over the standing PQ index (code-bound screen + exact
-    verify of the uncertain band) must flag EXACTLY the rows the
-    all-pairs kernel flags — same quantizer, same rounding contract —
-    including near-threshold pairs, exact duplicates, and ineligible
-    rows (null / wrong-dim / zero vectors, null id)."""
-    import random
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(333)
-    centers = [_vec(4100 + c) for c in range(4)]
-    rows = []
-    for i in range(60):
-        base = centers[i % 4]
-        rows.append((i, [v + rng.uniform(-0.2, 0.2) for v in base]))
-    # exact duplicates and near-duplicates of earlier rows
-    for j, src in enumerate([3, 7, 11]):
-        rows.append((100 + j, list(rows[src][1])))
-    for j, src in enumerate([4, 8]):
-        rows.append(
-            (200 + j, [v + rng.uniform(-0.01, 0.01) for v in rows[src][1]])
-        )
-    rows += [(300, None), (301, [1.0] * 5), (302, [0.0] * 64), (None, [1.0] * 64)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-
-    base_flags = {
-        (r.vec_id): (r.cell, r.is_dup)
-        for r in similarity.semantic_dedup(
-            emb, n_centroids=8, threshold=0.95
-        ).collect()
-        if r.vec_id is not None
-    }
-    path = str(tmp_path / "sdidx")
-    similarity.write_pq_index(emb, path, n_centroids=8, m=8, ks=16, n_iter=2)
-    pq_flags = {
-        (r.vec_id): (r.cell, r.is_dup)
-        for r in similarity.semantic_dedup_pq(
-            spark, path, emb, threshold=0.95
-        ).collect()
-        if r.vec_id is not None
-    }
-    assert pq_flags == base_flags
-    assert any(d for _, d in base_flags.values())  # fixture plants dups
-
-    # OFF-GRID threshold: round(cos, 5) >= 0.951234 is the same
-    # condition as >= 0.95124 — the screen's certainty grid must ceil
-    # to the rounding grid or the lower-bound proof flags pairs the
-    # exact kernel rejects
-    for thr in (0.951234, 0.89999):
-        a = {
-            r.vec_id: r.is_dup
-            for r in similarity.semantic_dedup(
-                emb, n_centroids=8, threshold=thr
-            ).collect()
-            if r.vec_id is not None
-        }
-        b = {
-            r.vec_id: r.is_dup
-            for r in similarity.semantic_dedup_pq(
-                spark, path, emb, threshold=thr
-            ).collect()
-            if r.vec_id is not None
-        }
-        assert a == b, thr
-
-    # SUBSET df whose dup keepers are left out, on an index with EXACT
-    # codes: 12 distinct vectors, all among the ks=16 seed rows, so qerr
-    # is 0 and the screen proves copies certain from codes alone. Ids
-    # 20-24 copy 0-4; `sub` drops 0-4, so only its own rows may prove or
-    # verify a dup and the copies become keepers — semantic_dedup(sub)
-    # on the index quantizer
-    exact = spark.createDataFrame(
-        [(i, _vec(4200 + i)) for i in range(12)]
-        + [(20 + i, _vec(4200 + i)) for i in range(5)],
-        "vec_id bigint, embedding array<float>",
-    )
-    xpath = str(tmp_path / "sdidx_exact")
-    similarity.write_pq_index(exact, xpath, n_centroids=2, m=8, ks=16)
-    full = {
-        r.vec_id
-        for r in similarity.semantic_dedup_pq(
-            spark, xpath, exact, threshold=0.95
-        ).collect()
-        if r.is_dup
-    }
-    assert full == {20, 21, 22, 23, 24}
-    sub = exact.filter(F.col("vec_id") >= 5)
-    coarse = similarity._load_pq_model(spark, xpath)[0]
-    want = {
-        r.vec_id: (r.cell, r.is_dup)
-        for r in similarity.semantic_dedup(
-            sub, threshold=0.95, centroids=coarse
-        ).collect()
-    }
-    got = {
-        r.vec_id: (r.cell, r.is_dup)
-        for r in similarity.semantic_dedup_pq(
-            spark, xpath, sub, threshold=0.95
-        ).collect()
-    }
-    assert not any(d for _, d in want.values())
-    assert got == want
 
 
 def test_append_token_dedup_equals_full_rebuild(spark, tmp_path):
@@ -2816,35 +1704,3 @@ def test_minhash_dedup_state_on_corpus_with_no_eligible_docs(spark, tmp_path):
         assert spark.read.parquet(f"{path}/pairs").count() == 0, name
         assert spark.read.parquet(f"{path}/docs").count() == len(rows), name
 
-
-def test_embedding_cell_drift_flags_concentrated_group(spark):
-    """PSI in IVF-cell space: a group whose vectors all collapse onto
-    one planted direction must score far above a group that mirrors the
-    corpus mix; ineligible vectors and null labels never count."""
-    import random
-
-    from fs_schema_validator_spark.operators import similarity
-
-    rng = random.Random(88)
-    centers = [_vec(6600 + c) for c in range(4)]
-    rows, labels = [], []
-    for i in range(80):
-        c = i % 4
-        rows.append((i, [v + rng.uniform(-0.05, 0.05) for v in centers[c]]))
-        labels.append((i, "balanced"))
-    for i in range(100, 140):
-        rows.append((i, [v + rng.uniform(-0.05, 0.05) for v in centers[0]]))
-        labels.append((i, "drifted"))
-    rows += [(900, None), (901, [0.0] * 64), (902, [1.0] * 64)]
-    labels += [(900, "drifted"), (901, "drifted"), (902, None)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    grp = spark.createDataFrame(labels, "vec_id bigint, grp string")
-    out = {
-        r.grp: r.psi
-        for r in similarity.embedding_cell_drift(
-            emb, grp, n_centroids=8
-        ).collect()
-    }
-    assert set(out) == {"balanced", "drifted"}
-    assert out["drifted"] > out["balanced"] + 0.5
-    assert out["balanced"] >= 0.0

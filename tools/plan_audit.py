@@ -157,19 +157,12 @@ def main() -> None:
         )
     )
 
-    # near-dup pipelines: candidate generation is one groupBy (no
-    # self-join); verify joins are broadcast (candidate side is tiny)
+    # near-dup pipeline: candidate generation is one groupBy (no
+    # self-join); the verify join is broadcast (candidate side is tiny)
     sections.append(
         audit(
             "minhash_dedup_verified (LSH candidates + exact verify)",
             qs["minhash_dedup_verified"](spark, SF_DIR),
-            {"has_broadcast": True},
-        )
-    )
-    sections.append(
-        audit(
-            "embedding_near_dup_pairs (hyperplane LSH + cosine verify)",
-            qs["embedding_near_dup_pairs"](spark, SF_DIR),
             {"has_broadcast": True},
         )
     )
@@ -324,17 +317,6 @@ def main() -> None:
         )
     )
 
-    # SemDeDup: one Arrow-matmul assignment pass, one cell-keyed groupBy
-    # for the pair expansion, broadcast semi-joins for the verify — the
-    # candidate pipeline never self-joins the corpus
-    sections.append(
-        audit(
-            "semantic_dup_flags (IVF cells + within-cell verify)",
-            qs["semantic_dup_flags"](spark, SF_DIR),
-            {"has_broadcast": True, "plan_contains": "MapInArrow",
-             "plan_excludes": "CartesianProduct"},
-        )
-    )
     # DSIR: two bucket-count aggregations (map-side partials over a
     # 256-bucket key space), broadcast weight join, one per-doc agg —
     # pure codegen, no UDF, no sort-merge join
@@ -411,16 +393,6 @@ def main() -> None:
              "schema_excludes": "lang", "plan_excludes": "MapInArrow"},
         )
     )
-    # IVF-PQ: Arrow kernels for assignment/encode/ADC, broadcast
-    # semi-joins for probed cells and the rerank shortlist, no self-join
-    sections.append(
-        audit(
-            "ann_topk_ivf_pq (coarse probe + PQ ADC + exact rerank)",
-            qs["ann_topk_ivf_pq"](spark, SF_DIR),
-            {"plan_contains": "MapInArrow", "has_broadcast": True,
-             "plan_excludes": "CartesianProduct"},
-        )
-    )
 
     # window family melt: BOTH running-total metrics stack() from ONE
     # window pass — 3 scans total (orders + events + orders for the
@@ -430,34 +402,6 @@ def main() -> None:
             "window_ops (stack-melted window family, one pass per table)",
             qs["window_ops"](spark, SF_DIR),
             {"max_scans": 3, "plan_excludes": "CartesianProduct"},
-        )
-    )
-
-    # batch kNN join (round-5 cogrouped cell-BLAS scoring): exactly 3
-    # exchanges — the two cogroup sides ship (id, cell, vec) ONCE per
-    # row (keep_vec kernels, no id-keyed vector refetch joins) and the
-    # per-query top-k window ranks the 24-byte pair stream. The round-4
-    # join shape showed 2 exchanges only because AQE broadcast the
-    # vector-fetch joins at sf0.01 — at kNN-graph scale those were
-    # corpus-wide vector shuffles.
-    sections.append(
-        audit(
-            "knn_join_topk (batch IVF kNN join, cogrouped cell scoring)",
-            qs["knn_join_topk"](spark, SF_DIR),
-            {"plan_contains": "FlatMapCoGroupsInArrow", "max_exchanges": 3,
-             "max_scans": 2, "plan_excludes": "CartesianProduct"},
-        )
-    )
-
-    # standing-index batch kNN join: codes ride the candidate join
-    # (m bytes/row), raw vectors fetched only for the rerank shortlist;
-    # probe side partition-prunes the code scan
-    sections.append(
-        audit(
-            "pq_knn_join_topk (standing-index kNN join, ADC candidates)",
-            qs["pq_knn_join_topk"](spark, SF_DIR),
-            {"plan_contains": "MapInArrow",
-             "plan_excludes": "CartesianProduct"},
         )
     )
 
