@@ -11,15 +11,22 @@ Physical strategy (designed for the 10^12-row table, tested at sf*):
   - uniqueness: groupBy(keys) with map-side partial counts (2-phase agg —
     the realized version of the reference's dead map/reduce seam,
     report.py:44-48);
-  - referential / completeness: ``left_anti`` joins with the small side
-    **broadcast** so the big table never shuffles;
-  - token-range: broadcast dim join + JVM-side higher-order functions
-    (transform/filter) for the first out-of-range index — no Python;
+  - token-range and referential are LIFTED into the fused scan: each
+    dimension joins the scan once as a broadcast lookup of its distinct
+    keys (rules reading the same ``(dim, dim_key)`` on the same column
+    share it), and a rule's violation is one more element of the row's
+    violation array — an out-of-range index found by JVM-side higher-order
+    functions (transform/filter), or "unknown <column>" where the lookup
+    finds no key. No job of their own;
+  - completeness: a ``left_anti`` join of the small manifest against the
+    distinct subject keys;
   - array-equality: a hash screen over the cached projection, then the
     first mismatching index of the flagged keys' arrays as a native
     expression (``first_mismatch_index``) — no Python;
-  - drift: bucketed histogram aggregation + PSI against a reference
-    distribution, all aggregations partial-then-final.
+  - drift: one bucketed-histogram aggregation over the cached projection,
+    collected with the reference mass in one job; PSI or KS is finished on
+    the driver (``functions.sketches.drift``) and comes back as literal
+    rows, so the rule adds no shuffle to the violation relation.
 * Violation outputs union by name into the canonical schema
   ``(subject string, rule_id string, rule_seq int, reason string)``.
 * The union is materialised once, by ``engine.ValidationResult``: its
@@ -52,6 +59,9 @@ _ROW_ERR_TYPE = "array<struct<rule_seq:int,rule_id:string,reason:string>>"
 # Equality re-fetch tiers by count of hash-mismatched keys (_table_violations).
 _BROADCAST_REFETCH_MAX_KEYS = 100_000
 _KEYSET_REFETCH_MAX_KEYS = 5_000_000
+
+# Table rules checked inside the fused scan, as row rules are.
+_LIFTED = (Mdl.TokenRangeRule, Mdl.ReferentialRule)
 
 
 def key_string(col: str) -> Column:
@@ -149,7 +159,7 @@ def row_violation_array(
     array<struct<rule_seq,rule_id,reason>> — a stateless expression, so
     it runs in the fused batch scan and inside native streaming operators
     alike. `extra` appends further per-row violation arrays (the fused
-    scan's lifted token-range checks)."""
+    scan's lifted token-range and referential checks)."""
     arrays = [_compile_row_rule(r, schema) for r in rules]
     arrays.extend(extra)
     return F.flatten(F.array(*arrays)) if arrays else _no_errs()
@@ -227,8 +237,9 @@ class CompiledPlan:
     # long before CPUs do), so the plan touches them exactly ONCE:
     #
     #   * every row rule's violation array,
-    #   * token-range rules LIFTED into the row pass (vocab broadcast-joined
-    #     onto the scan instead of a separate join job),
+    #   * token-range and referential rules LIFTED into the row pass (each
+    #     dim's key lookup broadcast-joined onto the scan instead of a
+    #     separate join job),
     #   * the equality rules' screen hashes xxhash64(arr)/size(arr),
     #   * the scalar columns the remaining table rules group/join on,
     #
@@ -238,8 +249,8 @@ class CompiledPlan:
     # projection; the only second touch of an array column is the equality
     # diagnosis re-fetch, which reads only hash-mismatched keys.
 
-    def _token_range_rules(self) -> list[Mdl.TokenRangeRule]:
-        return [r for r in self.ruleset.table_rules if isinstance(r, Mdl.TokenRangeRule)]
+    def _lifted_rules(self) -> list[Mdl.TokenRangeRule | Mdl.ReferentialRule]:
+        return [r for r in self.ruleset.table_rules if isinstance(r, _LIFTED)]
 
     def _equality_rules(self) -> list[Mdl.ArrayEqualityRule]:
         return [
@@ -251,8 +262,6 @@ class CompiledPlan:
         for r in self.ruleset.table_rules:
             if isinstance(r, Mdl.UniqueRule):
                 cols.update(r.keys)
-            elif isinstance(r, Mdl.ReferentialRule):
-                cols.add(r.column)
             elif isinstance(r, (Mdl.DriftRule, Mdl.StatsThresholdRule)):
                 cols.update((r.column, r.group_col))
             elif isinstance(r, Mdl.ArrayEqualityRule):
@@ -289,30 +298,68 @@ class CompiledPlan:
             _no_errs()
         )
 
+    def _lifted_referential(self, rule: Mdl.ReferentialRule) -> Column:
+        """Referential check as a row-scan violation array: the lookup's
+        ``_known_{seq}`` marker is null where no dim key matched. A null
+        key matches nothing, so it is unknown too."""
+        if rule.column not in self.df.columns:
+            return _missing_column(rule)
+        return _rule_errs(
+            rule,
+            F.lit(f"unknown {rule.column}"),
+            F.col(f"_known_{rule.seq}").isNull(),
+        )
+
+    def _lookups(self) -> dict[tuple[str, str, str], list]:
+        """Lifted rules by the (dim, dim_key, scan column) lookup they read.
+        A referential rule over an absent column reads none: it reports
+        'does not exist' per subject."""
+        out: dict[tuple[str, str, str], list] = {}
+        for r in self._lifted_rules():
+            if isinstance(r, Mdl.TokenRangeRule):
+                col = r.group_col
+            elif r.column in self.df.columns:
+                col = r.column
+            else:
+                continue
+            out.setdefault((r.dim, r.dim_key, col), []).append(r)
+        return out
+
     def fused_projection(self) -> DataFrame:
         if self._fused is not None:
             return self._fused
         from pyspark.storagelevel import StorageLevel
 
         base = self.df
-        for rule in self._token_range_rules():
-            # one vocab per key, enforced: a dim with duplicate keys (a
+        for (dim, dim_key, col), rules in self._lookups().items():
+            # one row per key, enforced: a dim with duplicate keys (a
             # versioned dim, a bad export) would MULTIPLY every matching
             # base row through the left join, double-emitting violations
-            # and corrupting every other rule's counts (ReferentialRule
-            # guards with .distinct(); here the max vocab wins,
-            # deterministically)
-            dim = (
-                self._aux(rule.dim)
-                .groupBy(F.col(rule.dim_key).alias(rule.group_col))
-                .agg(F.max(rule.vocab_col).alias(f"_vocab_{rule.seq}"))
+            # and corrupting every other rule's counts (the max vocab
+            # wins, deterministically)
+            lookup = (
+                self._aux(dim)
+                .groupBy(F.col(dim_key).alias(col))
+                .agg(
+                    *[
+                        F.max(r.vocab_col).alias(f"_vocab_{r.seq}")
+                        if isinstance(r, Mdl.TokenRangeRule)
+                        else F.lit(True).alias(f"_known_{r.seq}")
+                        for r in rules
+                    ]
+                )
             )
-            base = base.join(F.broadcast(dim), on=rule.group_col, how="left")
+            base = base.join(F.broadcast(lookup), on=col, how="left")
 
         viols = row_violation_array(
             self.ruleset.row_rules,
             self.df.schema,
-            [self._lifted_token_range(r) for r in self._token_range_rules()],
+            [
+                self._lifted_token_range(r)
+                if isinstance(r, Mdl.TokenRangeRule)
+                else self._lifted_referential(r)
+                for r in self._lifted_rules()
+            ],
         )
 
         cols = [
@@ -344,11 +391,13 @@ class CompiledPlan:
     def row_violations(self) -> DataFrame:
         """Row-rule violations, exploded from the fused projection.
 
-        The scan metrics (rows scanned, rows violating a row rule) are
-        observed here, on the read of the cached projection, so they latch
-        in the job that materialises the violation relation — not in
-        whichever query on the projection happens to finish first. Every
-        rule set takes this path, so every validation latches them."""
+        The scan metrics are observed here: rows scanned, and rows
+        violating any rule evaluated in the row pass — the row rules and
+        the lifted token-range and referential rules. They are observed on
+        the read of the cached projection, so they latch in the job that
+        materialises the violation relation — not in whichever query on
+        the projection happens to finish first. Every rule set takes this
+        path, so every validation latches them."""
         self._observation = Observation()
         return (
             self.fused_projection()
@@ -389,15 +438,6 @@ class CompiledPlan:
             )
             subject = F.concat_ws("|", *[c.cast("string") for c in keys])
             return _violation_rows(dupes, subject, rule, F.lit("duplicate key"))
-
-        if isinstance(rule, Mdl.ReferentialRule):
-            dim = self._aux(rule.dim).select(
-                F.col(rule.dim_key).alias(rule.column)
-            ).distinct()
-            missing = fused.join(F.broadcast(dim), on=rule.column, how="left_anti")
-            return _violation_rows(
-                missing, F.col("subject"), rule, F.lit(f"unknown {rule.column}")
-            )
 
         if isinstance(rule, Mdl.CompletenessRule):
             manifest = self._aux(rule.manifest).select(rule.key).distinct()
@@ -525,7 +565,7 @@ class CompiledPlan:
         raise RuleSetError(f"unknown table rule: {rule}")
 
     def _drift_violations(self, rule: Mdl.DriftRule) -> DataFrame:
-        from ..functions.sketches import histogram, ks_statistic, psi
+        from ..functions.sketches import drift, histogram
 
         hist = histogram(
             self.fused_projection(),
@@ -538,12 +578,10 @@ class CompiledPlan:
         ref = self._aux(rule.ref).select(
             F.col(rule.group_col).alias("grp"), F.col("bucket"), F.col("p")
         )
-        if rule.metric == "ks":
-            stat = ks_statistic(hist, ref).select("grp", F.col("ks_d").alias("stat"))
-            label = "KS"
-        else:
-            stat = psi(hist, ref).select("grp", F.col("psi").alias("stat"))
-            label = "PSI"
+        # KS D is rounded to 4 digits before the threshold, PSI is not
+        ks = rule.metric == "ks"
+        stat = drift(hist, ref, rule.metric, digits=4 if ks else None)
+        label = "KS" if ks else "PSI"
         reason = F.format_string(
             f"distribution drift: {label} %.4f > %s",
             F.col("stat"),
@@ -558,15 +596,16 @@ class CompiledPlan:
     def violations(self) -> DataFrame:
         """Canonical violations DataFrame from ONE pass over the wide scan.
 
-        Row rules + lifted token-range rules explode out of the cached
-        fused projection; every other table rule aggregates/joins the same
-        cached projection. Only the equality diagnosis re-fetch touches an
-        array column a second time, and only for hash-mismatched keys."""
+        Row rules + lifted token-range and referential rules explode out of
+        the cached fused projection; every other table rule aggregates/joins
+        the same cached projection. Only the equality diagnosis re-fetch
+        touches an array column a second time, and only for hash-mismatched
+        keys."""
         parts = [self.row_violations()]
         parts.extend(
             self._table_violations(r)
             for r in self.ruleset.table_rules
-            if not isinstance(r, Mdl.TokenRangeRule)  # lifted into the scan
+            if not isinstance(r, _LIFTED)  # checked in the fused scan
         )
         out = parts[0]
         for p in parts[1:]:

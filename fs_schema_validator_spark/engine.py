@@ -130,7 +130,9 @@ class ValidationResult:
     def scan_metrics(self) -> dict:
         """rows_scanned and rows_with_row_violations, latched (Spark's
         observe API) by the job that materialised the violation relation —
-        no second pass."""
+        no second pass. A row counts as violating when any rule evaluated
+        in the row pass flags it: the row rules, and the token-range and
+        referential rules lifted into the fused scan."""
         return dict(self._scan_metrics)
 
     def release(self) -> None:

@@ -1,20 +1,32 @@
-"""Single-pass distributed stats & distribution sketches.
+"""Distribution sketches: a bucketed histogram in Spark, drift on the driver.
 
-Everything here is one groupBy per pass (partial → final aggregation); no
-collect-driven loops. Each drift tail is written once: ``histogram`` buckets
-a column (nulls excluded), ``psi`` and ``ks_statistic`` compare a histogram
-with a reference mass. The DriftRule in compiler/plan.py compares with its
-reference table; the "vs global" forms, used when no reference table exists,
-compare each group with the whole table's distribution (``_global_grid``),
-in one job over one cached histogram.
+``histogram`` buckets a column per group (nulls excluded) in one partial →
+final aggregation. A drift statistic needs only that histogram — groups ×
+buckets rows — and a reference mass of the same shape, so ``drift``
+collects both in one job and computes PSI or KS in plain Python: one tail
+for the DriftRule in compiler/plan.py (reference table) and for the "vs
+global" forms (the whole table's distribution, when no reference table
+exists). The per-group result comes back as a relation of literals, so
+rounding, filtering and reason rendering stay Spark expressions and run no
+job of their own. The collect is capped (``_DRIFT_MAX_CELLS``): a group
+column with too many values fails loud instead of exhausting the driver.
 """
 
 from __future__ import annotations
 
+import math
+from collections import defaultdict
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..rules.loader import RuleSetError
 
 EPS = 1e-6
+
+# Most (grp, bucket) cells — histogram plus reference rows — drift collects.
+_DRIFT_MAX_CELLS = 1_000_000
 
 
 def bucketize(col: Column, lo: float, hi: float, buckets: int) -> Column:
@@ -45,47 +57,128 @@ def histogram(
     )
 
 
-def _mass(hist: DataFrame, p_mass: DataFrame) -> DataFrame:
-    """(grp, bucket, q, p): each group's share `q` of its (grp, bucket, cnt)
-    histogram next to the reference mass `p` of `p_mass` (grp, bucket, p),
-    over every cell either side has — a side missing a cell has mass 0."""
-    totals = hist.groupBy("grp").agg(F.sum("cnt").alias("total"))
-    q = hist.join(totals, "grp").select(
-        "grp", "bucket", (F.col("cnt") / F.col("total")).alias("q")
+def _collect(hist: DataFrame, ref: DataFrame | None) -> tuple[list, list]:
+    """The histogram's (grp, bucket, cnt) rows and the reference's
+    (grp, bucket, p) rows, in one collect of at most _DRIFT_MAX_CELLS rows."""
+    cells = hist.select(
+        F.lit(True).alias("_hist"), "grp", "bucket", "cnt",
+        F.lit(None).cast("double").alias("p"),
     )
-    return q.join(p_mass, ["grp", "bucket"], "full_outer").select(
-        "grp",
-        "bucket",
-        F.coalesce(F.col("q"), F.lit(0.0)).alias("q"),
-        F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
-    )
+    if ref is not None:
+        cells = cells.unionByName(
+            ref.select(
+                F.lit(False).alias("_hist"), "grp", "bucket",
+                F.lit(None).cast("long").alias("cnt"),
+                F.col("p").cast("double").alias("p"),
+            )
+        )
+    rows = cells.limit(_DRIFT_MAX_CELLS + 1).collect()
+    if len(rows) > _DRIFT_MAX_CELLS:
+        raise RuleSetError(
+            f"drift: more than {_DRIFT_MAX_CELLS} (group, bucket) cells in the "
+            "histogram and reference; the group column has too many values"
+        )
+    hist_rows = [(r.grp, r.bucket, r.cnt) for r in rows if r._hist]
+    ref_rows = [(r.grp, r.bucket, r.p) for r in rows if not r._hist]
+    return hist_rows, ref_rows
 
 
-def psi(hist: DataFrame, p_mass: DataFrame) -> DataFrame:
-    """(grp, psi), unrounded — population-stability index of each group's
-    histogram against `p_mass`. Masses are clamped to EPS (standard PSI
+def _global_mass(hist_rows: list) -> list:
+    """(grp, bucket, p): the whole table's bucket mass, repeated for every
+    group of the histogram — the full grp × occupied-bucket grid, so a
+    group MISSING a bucket where the table has mass still contributes its
+    term. The grand total is Σcnt of the histogram itself."""
+    gtotal = float(sum(c for _, _, c in hist_rows) or 1)
+    per_bucket: dict = defaultdict(int)
+    for _, b, c in hist_rows:
+        per_bucket[b] += c
+    groups = dict.fromkeys(g for g, _, _ in hist_rows)
+    return [(g, b, n / gtotal) for g in groups for b, n in per_bucket.items()]
+
+
+def _cells(hist_rows: list, ref_rows: list) -> dict:
+    """grp -> [(bucket, q, p)]: each group's share `q` of its histogram next
+    to the reference mass `p`, over the full outer join of the two on
+    (grp, bucket) — a side missing a cell has mass 0. As in a Spark join,
+    null never matches null: the histogram's null group has no total to
+    divide by and drops out, and the reference's null-group rows stay
+    unmatched, forming a group of their own."""
+    totals: dict = defaultdict(int)
+    for g, _, c in hist_rows:
+        totals[g] += c
+    ref_by_cell: dict = defaultdict(list)
+    for g, b, p in ref_rows:
+        if g is not None and b is not None:
+            ref_by_cell[(g, b)].append(0.0 if p is None else p)
+    out: dict = defaultdict(list)
+    for g, b, c in hist_rows:
+        if g is None:
+            continue
+        q = c / totals[g]
+        for p in ref_by_cell.get((g, b)) or [0.0]:
+            out[g].append((b, q, p))
+    matched = {(g, b) for g, b, _ in hist_rows if g is not None}
+    for g, b, p in ref_rows:
+        if g is None or b is None or (g, b) not in matched:
+            out[g].append((b, 0.0, 0.0 if p is None else p))
+    return out
+
+
+def _psi(cells: list) -> float:
+    """Population-stability index. Masses are clamped to EPS (standard PSI
     practice) so the log stays finite, and a cell only one side has still
     contributes its (q − p)·ln(q/p) term."""
-    qc = F.greatest(F.col("q"), F.lit(EPS))
-    pc = F.greatest(F.col("p"), F.lit(EPS))
-    return (
-        _mass(hist, p_mass)
-        .groupBy("grp")
-        .agg(F.sum((qc - pc) * F.log(qc / pc)).alias("psi"))
+    total = 0.0
+    for _, q, p in cells:
+        qc, pc = max(q, EPS), max(p, EPS)
+        total += (qc - pc) * math.log(qc / pc)
+    return total
+
+
+def _ks(cells: list) -> float:
+    """Two-sample Kolmogorov–Smirnov D from bucketed masses: the largest
+    |CDF_q − CDF_p| over buckets in ascending order (a null bucket first).
+    Histogram granularity bounds the error at one bucket width — the
+    standard sketch-based KS at scale (exact KS needs a full sort)."""
+    order = sorted(cells, key=lambda c: (c[0] is not None, c[0] or 0))
+    cq = cp = d = 0.0
+    for i, (b, q, p) in enumerate(order):
+        cq += q
+        cp += p
+        # cells sharing a bucket are one step of the CDF
+        if i + 1 == len(order) or order[i + 1][0] != b:
+            d = max(d, abs(cq - cp))
+    return d
+
+
+def drift(
+    hist: DataFrame,
+    ref: DataFrame | None,
+    metric: str,
+    digits: int | None = None,
+) -> DataFrame:
+    """(grp, stat): PSI (``metric="psi"``) or KS D (``"ks"``) of each
+    group's (grp, bucket, cnt) histogram against the reference mass
+    ``ref`` (grp, bucket, p), or against the whole table's distribution
+    when ``ref`` is None. Histogram and reference are collected together,
+    once; the result is a relation of literals, with ``stat`` rounded to
+    ``digits`` by Spark when given."""
+    hist_rows, ref_rows = _collect(hist, ref)
+    if ref is None:
+        ref_rows = _global_mass(hist_rows)
+    stat_of = _ks if metric == "ks" else _psi
+    stats = [(g, stat_of(c)) for g, c in _cells(hist_rows, ref_rows).items()]
+    grp_type = hist.schema["grp"].dataType
+    item = T.StructType(
+        [T.StructField("grp", grp_type), T.StructField("stat", T.DoubleType())]
     )
-
-
-def _global_grid(hist: DataFrame) -> DataFrame:
-    """(grp, bucket, p): the whole table's bucket mass, repeated for every
-    group of `hist` — the full grp × occupied-bucket grid, so a group
-    MISSING a bucket where the table has mass still contributes its term
-    (starting from the group histogram alone would silently drop exactly
-    the terms that make a concentrated group stand out). The grand total
-    is Σcnt of the histogram itself (no second scan of the table); an
-    empty histogram gives an empty grid."""
-    gtotal = hist.agg(F.sum("cnt")).first()[0] or 1
-    p = hist.groupBy("bucket").agg((F.sum("cnt") / F.lit(float(gtotal))).alias("p"))
-    return hist.select("grp").distinct().crossJoin(p)
+    rows = F.array(
+        *[F.struct(F.lit(g).cast(grp_type), F.lit(s)) for g, s in stats]
+    ).cast(T.ArrayType(item))
+    out = hist.sparkSession.range(1, numPartitions=1).select(F.inline(rows))
+    if digits is not None:
+        out = out.select("grp", F.round("stat", digits).alias("stat"))
+    return out
 
 
 def psi_vs_global(
@@ -97,47 +190,10 @@ def psi_vs_global(
     buckets: int,
     digits: int = 4,
 ) -> DataFrame:
-    """(group, psi) — population-stability index of each group's histogram
-    against the whole-table distribution, over the full grid
-    (``_global_grid``)."""
-    from ..functions.cache import track
-
-    # One scan of df: the histogram (groups × buckets rows — tiny) is
-    # cached and every downstream aggregate derives from it.
-    hist = track(histogram(df, col, group_col, lo, hi, buckets).cache())
-    return psi_from_hist(hist, digits)
-
-
-def psi_from_hist(hist: DataFrame, digits: int = 4) -> DataFrame:
-    """(grp, psi) rounded to `digits`, from a prebuilt (grp, bucket, cnt)
-    histogram against the whole table's — the PSI-vs-global tail of
-    psi_vs_global."""
-    return psi(hist, _global_grid(hist)).select(
-        "grp", F.round("psi", digits).alias("psi")
-    )
-
-
-def ks_statistic(
-    hist_q: DataFrame, hist_p: DataFrame, digits: int = 4
-) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov D per group from bucketed histograms.
-
-    D = max over buckets |CDF_q - CDF_p|, with CDFs built by a cumulative
-    window over bucket index. Inputs: (grp, bucket, cnt) for the subject
-    side, (grp, bucket, p) probability masses for the reference. Histogram
-    granularity bounds the error at one bucket width — the standard
-    sketch-based KS at scale (exact KS needs a full sort)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("grp").orderBy("bucket")
-    cdfs = _mass(hist_q, hist_p).select(
-        "grp",
-        F.sum("q").over(w).alias("cq"),
-        F.sum("p").over(w).alias("cp"),
-    )
-    return cdfs.groupBy("grp").agg(
-        F.round(F.max(F.abs(F.col("cq") - F.col("cp"))), digits).alias("ks_d")
-    )
+    """(grp, psi) — population-stability index of each group's histogram
+    against the whole-table distribution, over the full grid."""
+    hist = histogram(df, col, group_col, lo, hi, buckets)
+    return drift(hist, None, "psi", digits).withColumnRenamed("stat", "psi")
 
 
 def ks_vs_global(
@@ -150,14 +206,6 @@ def ks_vs_global(
     digits: int = 4,
 ) -> DataFrame:
     """(grp, ks_d) — sketch-based two-sample KS of each group's bucketed
-    distribution against the whole table's. The reference side is the
-    global histogram broadcast across groups (grps × buckets grid), so the
-    whole check is two aggregations over one scan plus a tiny window over
-    the grid — no sort of the raw data.
-
-    Like psi_vs_global, the histogram is cached so the table is scanned
-    exactly once; the grand total comes from the histogram itself."""
-    from ..functions.cache import track
-
-    hist = track(histogram(df, col, group_col, lo, hi, buckets).cache())
-    return ks_statistic(hist, _global_grid(hist), digits=digits)
+    distribution against the whole table's, with no sort of the raw data."""
+    hist = histogram(df, col, group_col, lo, hi, buckets)
+    return drift(hist, None, "ks", digits).withColumnRenamed("stat", "ks_d")

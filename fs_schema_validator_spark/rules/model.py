@@ -7,11 +7,13 @@ table, rules split into two physical families:
 * **Row rules** — compile to Column expressions evaluated in ONE scan pass
   (fused into a single select; no shuffle). ``ColumnSpecRule``,
   ``RowSpecRule``, ``ExprRule``, ``NotEmptyRule``.
-* **Table rules** — need a join or aggregation (anti-joins, duplicate
-  detection, drift). Each builds its own small violations DataFrame which is
-  unioned with the row-rule violations. ``UniqueRule``, ``ReferentialRule``,
-  ``CompletenessRule``, ``TokenRangeRule``, ``ArrayEqualityRule``,
-  ``DriftRule``, ``StatsThresholdRule``.
+* **Table rules** — need a join or aggregation (dimension lookups,
+  anti-joins, duplicate detection, drift). ``UniqueRule``,
+  ``ReferentialRule``, ``CompletenessRule``, ``TokenRangeRule``,
+  ``ArrayEqualityRule``, ``DriftRule``, ``StatsThresholdRule``. Most build
+  their own small violations DataFrame, unioned with the row-rule
+  violations; ``TokenRangeRule`` and ``ReferentialRule`` join a broadcast
+  dimension lookup onto the fused scan and are checked there, per row.
 
 Every rule carries ``rule_id`` (stable name) and receives a ``seq`` ordinal
 in schema declaration order — the ordering contract (violations sort by
@@ -97,15 +99,15 @@ class UniqueRule(RuleBase):
 
 @dataclass(frozen=True)
 class ReferentialRule(RuleBase):
-    """Every value of ``column`` must exist in ``dim[dim_key]``. Reason:
-    "unknown {column}".
+    """Every value of ``column`` must exist in ``dim[dim_key]``; a null
+    value never does. Reason: "unknown {column}"; a ``column`` absent from
+    the table fails every subject with "`{column}`: does not exist".
 
-    Physical strategy: broadcast left_anti for dims under the broadcast
-    threshold; past it, Catalyst's runtime bloom-filter injection
-    (``spark.sql.optimizer.runtime.bloomFilter.enabled``, on in
-    session.py defaults) builds the dim-side bloom during the shuffle
-    join and screens fact rows before the exchange — the "bloom
-    precheck + exact anti-join" pattern without hand-built filters."""
+    Physical strategy: checked inside the fused row scan. The dim's
+    distinct keys are always broadcast (``F.broadcast``, whatever the
+    dim's size) and left-joined onto the scan, shared with any other
+    lifted rule reading the same ``(dim, dim_key)`` on the same column;
+    a row whose key finds no match gets the violation."""
 
     column: str
     dim: str

@@ -303,7 +303,14 @@ def test_surfaces_read_no_aux_table_after_validate(spark, tmp_path):
     res.release()
 
 
-def test_drift_flags_only_shifted_source(spark):
+@pytest.mark.parametrize(
+    "metric, stat",
+    [("psi", "PSI 3.1630"), ("ks", "KS 0.2500")],
+    ids=["psi", "ks"],
+)
+def test_drift_flags_only_shifted_source(spark, metric, stat):
+    """Only the shifted source drifts, with the exact reason: PSI is
+    rendered unrounded, KS D is rounded to 4 digits first."""
     from pyspark.sql import functions as F
 
     n = 4096
@@ -314,13 +321,14 @@ def test_drift_flags_only_shifted_source(spark):
             F.least(F.col("n_tok") + 128, F.lit(512)),
         ).otherwise(F.col("n_tok")),
     )
-    rules = """
+    rules = f"""
 schema:
   - type: drift_psi
     id: ntok_drift
     column: n_tok
     group_col: source
     ref: ref_distribution
+    metric: {metric}
     buckets: 16
     lo: 0
     hi: 512
@@ -329,9 +337,56 @@ schema:
     res = ValidationEngine(subject_col="doc_id").validate(
         seq, rules, {"ref_distribution": synth.gen_ref_distribution(spark)}
     )
-    rows = res.violations.collect()
-    assert [r.subject for r in rows] == ["code"]
-    assert rows[0].reason.startswith("distribution drift: PSI ")
+    rows = [(r.subject, r.rule_id, r.reason) for r in res.violations.collect()]
+    assert rows == [("code", "ntok_drift", f"distribution drift: {stat} > 0.2")]
+
+
+@pytest.mark.parametrize(
+    "metric, stats",
+    [
+        ("psi", {None: "PSI 12.4292", "data_only": "PSI 12.4292", "ref_only": "PSI 11.0427"}),
+        ("ks", {None: "KS 1.0000", "data_only": "KS 1.0000", "ref_only": "KS 1.0000"}),
+    ],
+    ids=["psi", "ks"],
+)
+def test_drift_groups_on_one_side_only(spark, metric, stats):
+    """The cells are the full outer join of the histogram and the
+    reference: a group only in the reference is compared against an
+    all-zero histogram, and a group only in the data against an all-zero
+    reference. A null group never matches (a join never matches null to
+    null): the data's null-group rows drop out, and the reference's
+    null-group rows form a group of their own, reported with a null
+    subject. A group in both with the reference's exact shape passes."""
+    rows = [(i, "both", (i % 16) * 32 + 1) for i in range(160)]
+    rows += [(200 + i, "data_only", (i % 4) * 32 + 1) for i in range(40)]
+    rows += [(300 + i, None, (i % 8) * 64 + 1) for i in range(40)]
+    data = spark.createDataFrame(rows, "doc_id bigint, source string, n_tok int")
+    ref = spark.createDataFrame(
+        [(g, b, 1 / 16) for g in ("both", "ref_only") for b in range(16)]
+        + [(None, b, 1 / 4) for b in range(4)],
+        "source string, bucket int, p double",
+    )
+    rules = f"""
+schema:
+  - type: drift_psi
+    id: ntok_drift
+    column: n_tok
+    group_col: source
+    ref: ref_distribution
+    metric: {metric}
+    buckets: 16
+    lo: 0
+    hi: 512
+    threshold: 0.2
+"""
+    res = ValidationEngine(subject_col="doc_id").validate(
+        data, rules, {"ref_distribution": ref}
+    )
+    got = {r.subject: r.reason for r in res.violations.collect()}
+    res.release()
+    assert got == {
+        g: f"distribution drift: {stat} > 0.2" for g, stat in stats.items()
+    }
 
 
 @pytest.mark.parametrize("metric", ["psi", "ks"])
@@ -362,6 +417,34 @@ schema:
         seq, rules, {"ref_distribution": ref}
     )
     assert res.violations.collect() == []
+
+
+def test_drift_over_the_collect_cap_fails_loud(spark, monkeypatch):
+    """Drift finishes on the driver, so a histogram too large to collect
+    raises RuleSetError (and leaves nothing persisted) instead of
+    exhausting the driver's memory."""
+    from fs_schema_validator_spark.functions import sketches
+    from fs_schema_validator_spark.rules.loader import RuleSetError
+
+    monkeypatch.setattr(sketches, "_DRIFT_MAX_CELLS", 8)
+    seq = synth.gen_sequences(spark, 64)
+    rules = """
+schema:
+  - type: drift_psi
+    id: ntok_drift
+    column: n_tok
+    group_col: source
+    ref: ref_distribution
+    buckets: 16
+    lo: 0
+    hi: 512
+"""
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuleSetError, match="more than 8"):
+        ValidationEngine(subject_col="doc_id").validate(
+            seq, rules, {"ref_distribution": synth.gen_ref_distribution(spark)}
+        )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
 def test_empty_input_passes_all_rules(spark):
@@ -502,6 +585,62 @@ schema:
     # max vocab (50) wins: token 99 violates once; NO phantom duplicate-key
     # violations from join multiplication
     assert [(r.subject, r.rule_id) for r in rows] == [("d2", "vocab_check")]
+
+
+REFERENTIAL_RULES = """
+schema:
+  - type: referential
+    id: source_known
+    column: source
+    dim: dim
+    dim_key: source
+  - {type: unique, id: uniq, keys: [doc_id]}
+"""
+
+
+def _referential(spark, rows, schema):
+    dim = spark.createDataFrame(
+        [("en", 10), ("en", 50), ("de", 10)], "source string, vocab_size int"
+    )
+    df = spark.createDataFrame(rows, schema)
+    res = ValidationEngine(subject_col="doc_id").validate(
+        df, REFERENTIAL_RULES, {"dim": dim}
+    )
+    got = sorted(
+        (r.subject, r.rule_id, r.reason) for r in res.violations.collect()
+    )
+    res.release()
+    return got
+
+
+def test_referential_dim_with_duplicate_keys_does_not_multiply_rows(spark):
+    """A dim with two rows for one key must not duplicate rows: a known
+    key passes once and every other rule's counts stay exact."""
+    got = _referential(
+        spark,
+        [("d1", "en"), ("d2", "en"), ("d3", "xx")],
+        "doc_id string, source string",
+    )
+    assert got == [("d3", "source_known", "unknown source")]
+
+
+def test_referential_null_key_is_unknown(spark):
+    """A null key matches no dim key, so it fails the rule."""
+    got = _referential(
+        spark, [("d1", "en"), ("d2", None)], "doc_id string, source string"
+    )
+    assert got == [("d2", "source_known", "unknown source")]
+
+
+def test_referential_on_missing_column_is_a_violation(spark):
+    """A referential column absent from the table fails every subject
+    with 'does not exist', as the row rules do; it is neither a crash nor
+    a silent pass."""
+    got = _referential(spark, [("d1", 1), ("d2", 2)], "doc_id string, n int")
+    assert got == [
+        ("d1", "source_known", "`source`: does not exist"),
+        ("d2", "source_known", "`source`: does not exist"),
+    ]
 
 
 def test_scan_metrics_with_row_only_ruleset_uses_the_observed_pass(spark):

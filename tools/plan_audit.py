@@ -174,12 +174,25 @@ def main() -> None:
             {"max_scans": 1, "max_exchanges": 1},
         )
     )
-    # drift: two aggregations over one scan + tiny grid window
+    # drift: the one collected job is a histogram aggregate over one
+    # pruned scan; KS is finished on the driver, so the returned relation
+    # is literal rows that read no table
+    from fs_schema_validator_spark.functions import sketches
+
     sections.append(
         audit(
-            "drift_ks (bucketed KS vs global)",
+            "drift_ks histogram job (one scan, one exchange)",
+            sketches.histogram(
+                entry._t(spark, SF_DIR, "documents"), "n_chars", "lang", 0.0, 600.0, 12
+            ),
+            {"schema_excludes": "text", "max_scans": 1, "max_exchanges": 1},
+        )
+    )
+    sections.append(
+        audit(
+            "drift_ks (KS vs global, finished on the driver)",
             qs["drift_ks"](spark, SF_DIR),
-            {"schema_excludes": "text", "has_broadcast": True},
+            {"max_scans": 0, "max_exchanges": 0},
         )
     )
     # kernelized signatures: single pruned scan straight into mapInArrow,
