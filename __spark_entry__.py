@@ -23,7 +23,6 @@ from fs_schema_validator_spark.engine import ValidationEngine  # noqa: E402
 from fs_schema_validator_spark.functions import sketches  # noqa: E402
 from fs_schema_validator_spark.operators import (  # noqa: E402
     dedup,
-    selection,
     textstats,
 )
 
@@ -688,123 +687,6 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# multimodal plumbing (rows-only; binary payloads)
-
-
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fs_schema_validator_spark.operators import multimodal
-
-    media = _media_table(spark, sf_dir)
-    # FakeCodec pinned: these fixtures are synthetic IMG:/VID: containers
-    # and the DuckDB oracle replays the fake's md5 math — auto codec
-    # selection (Pillow on a real machine) would break the gate
-    feats = multimodal.extract_features(media, codec=multimodal.FakeCodec)
-    return multimodal.metadata_violations(feats, media)
-
-
-def _media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.when(
-            F.col("doc_id") % 31 == 0, F.encode(F.lit("GARBAGE"), "utf-8")
-        )
-        .otherwise(
-            F.encode(
-                F.format_string(
-                    "IMG:%dx%d:payload-%d",
-                    (F.col("doc_id") % 64 + 1).cast("int"),
-                    (F.col("doc_id") % 48 + 1).cast("int"),
-                    F.col("doc_id"),
-                ),
-                "utf-8",
-            )
-        )
-        .alias("payload"),
-        F.lit("image").alias("media_type"),
-        (F.col("doc_id") % 64 + 1).cast("int").alias("declared_width"),
-        (F.col("doc_id") % 48 + 1).cast("int").alias("declared_height"),
-    )
-
-
-def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing, fully oracle-checked: the deterministic FakeCodec
-    re-emits the container with target dims + md5(payload), which DuckDB
-    replays as string math; undecodable payloads pass through ok=false."""
-    from fs_schema_validator_spark.operators import multimodal
-
-    media = _media_table(spark, sf_dir)
-    out = multimodal.resize(
-        media, target_width=8, target_height=6, codec=multimodal.FakeCodec
-    )
-    return out.select(
-        "media_id",
-        "ok",
-        "width",
-        "height",
-        F.decode(F.col("payload"), "utf-8").alias("resized"),
-    )
-
-
-def skew_salted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe holistic aggregation (SURVEY §2.3 J4): salted two-stage
-    collect_list + count by lang — the hot key spreads over salt_buckets
-    tasks in stage 1, stage 2 merges partials. Output is salt-invariant
-    (sorted list), so a plain-groupBy DuckDB oracle value-checks it.
-
-    The merged list is serialized to a comma-joined string (the
-    `violations_grouped` reasons pattern): the driver's pandas
-    canonicalizer hashes cells, and raw array cells are unhashable —
-    round-2's one red row."""
-    from fs_schema_validator_spark.functions import skew
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    counts = skew.salted_count(docs, ["lang"], salt_buckets=16)
-    lists = skew.salted_collect_list(
-        docs, ["lang"], "doc_id", salt_buckets=16
-    ).withColumnRenamed("values", "doc_ids")
-    # null-SAFE join key: both aggregations emit a NULL-lang group row,
-    # and the oracle's plain GROUP BY lang does too — a bare
-    # join(..., "lang") would silently drop it
-    joined = counts.alias("c").join(
-        lists.alias("l"), F.col("c.lang").eqNullSafe(F.col("l.lang"))
-    )
-    return joined.select(
-        F.col("c.lang").alias("lang"),
-        "n",
-        F.array_join(
-            F.transform("doc_ids", lambda x: x.cast("string")), ","
-        ).alias("doc_ids"),
-    )
-
-
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plumbing (every-10th frame of a synthetic
-    container); fully oracle-checked because the fake decode is
-    deterministic (md5-derived frame payloads)."""
-    from fs_schema_validator_spark.operators import multimodal
-
-    docs = _t(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.encode(
-            F.format_string(
-                "VID:%d:vid-%d",
-                (F.col("doc_id") % 30 + 1).cast("int"),
-                F.col("doc_id"),
-            ),
-            "utf-8",
-        ).alias("payload"),
-    )
-    frames = multimodal.sample_frames(media, every_n=10)
-    return frames.select(
-        "media_id",
-        "frame_idx",
-        F.decode(F.col("frame_payload"), "utf-8").alias("frame"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # candidate+verify dedup pipelines and drift (oracle-matched scale paths)
 
 
@@ -891,48 +773,6 @@ def bucketed_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 4).alias("sum_price"),
     )
-
-
-def asof_join_marks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (engine extension, no reference analog): every event is
-    enriched with the latest 'mark' event (event_id % 37 == 0) at or
-    before its timestamp per user — the union+window carry-forward
-    formulation (one shuffle, no range probe; operators/joins.py) checked
-    against DuckDB's native ASOF LEFT JOIN."""
-    from fs_schema_validator_spark.operators import joins
-
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 40)
-        .select("event_id", "user_id", "ts")
-    )
-    marks = (
-        ev.filter(F.col("event_id") % 37 == 0)
-        .groupBy("user_id", F.col("ts").alias("mts"))
-        .agg(F.max("event_id").alias("mark_id"))
-    )
-    out = joins.asof_join(ev, marks, on="user_id", left_ts="ts", right_ts="mts")
-    return out.select(
-        "event_id", "user_id", F.col("asof_mark_id").alias("mark_id")
-    )
-
-
-def range_join_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-interval join via fixed-width overlap buckets (equi-join,
-    not BroadcastNestedLoop): documents assigned to every overlapping
-    length band [i*25, i*25+60]."""
-    from fs_schema_validator_spark.operators import joins
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.col("n_chars").cast("double").alias("p")
-    )
-    iv = spark.range(20).select(
-        F.col("id").alias("interval_id"),
-        (F.col("id") * 25).cast("double").alias("lo"),
-        (F.col("id") * 25 + 60).cast("double").alias("hi"),
-    )
-    out = joins.bucketed_range_join(docs, iv, "p", "lo", "hi", bucket_width=50.0)
-    return out.select("doc_id", "interval_id")
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1181,129 +1021,6 @@ def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.cross_table_overlap(docs, bench)
 
 
-def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR data-selection scores (selection.dsir_importance): every
-    corpus document scored by hashed-unigram log-likelihood ratio against
-    the target distribution — target = every 25th document (the same
-    benchmark set the decontamination queries use), 256 portable-hash
-    buckets, add-1 smoothing."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    target = docs.filter(F.col("doc_id") % 25 == 0)
-    return selection.dsir_importance(docs, target, n_buckets=256, alpha=1.0)
-
-
-# classifier_scores' model parameters — shared by the Spark query and
-# the oracle so a one-sided tuning cannot silently diverge the gate
-_CLF_BUCKETS = 512
-_CLF_BIAS = -0.25
-
-
-def _clf_weights(spark: SparkSession) -> DataFrame:
-    """The fixture's 'trained' model: one deterministic weight per
-    bucket in [-1, 1] from a Knuth-multiplier mix of the bucket id (a
-    real pipeline loads the offline-trained table from parquet; the gate
-    needs a model both engines can synthesize exactly)."""
-    return spark.range(_CLF_BUCKETS).select(
-        F.col("id").alias("bucket"),
-        (
-            ((F.col("id") * 2654435761) % 1000003) % 2001 / 1000.0 - 1.0
-        ).alias("w"),
-    )
-
-
-def classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fastText-style quality-classifier inference
-    (selection.classifier_score): hashed unigram+bigram bag, broadcast
-    weight table, sigmoid of the mean feature weight — the classifier
-    leg of the CCNet / DSIR / classifier selection triad."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return selection.classifier_score(
-        docs,
-        _clf_weights(spark),
-        n_buckets=_CLF_BUCKETS,
-        bias=_CLF_BIAS,
-    )
-
-
-def _clf_oracle(n_buckets: int = _CLF_BUCKETS, bias: float = _CLF_BIAS) -> str:
-    """Classifier replay: portable 'clf'-salted 60-bit hash of unigrams
-    and space-joined bigrams into n_buckets, the same synthesized weight
-    table, sigmoid of bias + mean k·w (every aggregated term a function
-    of integer counts and the deterministic weight formula, so only fp
-    addition order differs — the dsir_score precedent)."""
-    return f"""
-WITH tok AS (SELECT doc_id, {_WORDS} AS ws FROM documents),
-feat AS (
-  SELECT doc_id, u AS f FROM tok, UNNEST(ws) AS t(u)
-  UNION ALL
-  SELECT doc_id, u AS f
-  FROM tok, UNNEST(list_transform(range(2, len(ws) + 1),
-                                  i -> ws[i - 1] || ' ' || ws[i])) AS t(u)
-),
-bf AS (SELECT doc_id, {_hex15("'clf' || f")} % {n_buckets} AS b FROM feat),
-pdc AS (SELECT doc_id, b, count(*) AS k FROM bf GROUP BY doc_id, b),
-wts AS (SELECT b, ((b * 2654435761) % 1000003) % 2001 / 1000.0 - 1.0 AS w
-        FROM generate_series(0, {n_buckets - 1}) g(b)),
-per AS (SELECT doc_id, sum(k) AS n, sum(k * w) AS s
-        FROM pdc JOIN wts ON pdc.b = wts.b GROUP BY doc_id)
-SELECT d.doc_id, CAST(coalesce(per.n, 0) AS BIGINT) AS n_features,
-       round(1.0 / (1.0 + exp(-({bias!r} +
-             CASE WHEN coalesce(per.n, 0) > 0 THEN per.s / per.n
-                  ELSE 0.0 END))), 4) AS clf_score
-FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-"""
-
-
-def bigram_xent_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style perplexity quality filter
-    (selection.bigram_cross_entropy): every document's cross-entropy
-    under an add-1-smoothed 64-bucket hashed-bigram model counted on
-    the benchmark set (every 25th document — the same reference corpus
-    DSIR targets); documents unlike the reference score high."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    lm = docs.filter(F.col("doc_id") % 25 == 0)
-    return selection.bigram_cross_entropy(docs, lm, n_buckets=64, alpha=1.0)
-
-
-def _bigram_xent_oracle(n_buckets: int = 64, modulus: int = 25) -> str:
-    """Bigram cross-entropy replay: per-word 'blm'-salted 60-bit hash
-    into n_buckets, adjacent pairs via 1-based list indexing (DuckDB's
-    range(2, n+1) is empty when n < 2, mirroring the engine's size
-    guard), add-1-smoothed conditional log-probs from the benchmark
-    counts, per-doc mean of -ln P rounded at 4 (the dsir precedent:
-    every log argument is a function of integer counts, so only fp
-    addition order differs between engines)."""
-    b = float(n_buckets)
-    hb = (
-        "list_transform("
-        + _WORDS
-        + ", t -> "
-        + _hex15("'blm' || t")
-        + f" % {n_buckets})"
-    )
-    return f"""
-WITH tok AS (SELECT doc_id, {hb} AS hb FROM documents),
-pr AS (SELECT doc_id,
-              unnest(list_transform(range(2, len(hb) + 1),
-                     i -> [hb[i - 1], hb[i]])) AS p
-       FROM tok),
-ab AS (SELECT doc_id, p[1] AS a, p[2] AS b FROM pr),
-cab AS (SELECT a, b, count(*) AS cab FROM ab
-        WHERE doc_id % {modulus} = 0 GROUP BY a, b),
-ca AS (SELECT a, sum(cab) AS ca FROM cab GROUP BY a),
-pdc AS (SELECT doc_id, a, b, count(*) AS k FROM ab GROUP BY doc_id, a, b),
-per AS (SELECT doc_id, sum(k) AS n,
-               sum(k * ln((coalesce(cab, 0) + 1.0)
-                          / (coalesce(ca, 0) + {b}))) AS s
-        FROM pdc LEFT JOIN cab USING (a, b) LEFT JOIN ca USING (a)
-        GROUP BY doc_id)
-SELECT d.doc_id, CAST(coalesce(per.n, 0) AS BIGINT) AS n_bigrams,
-       CASE WHEN coalesce(per.n, 0) > 0 THEN round(-per.s / per.n, 4)
-            ELSE 0.0 END AS cross_entropy
-FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-"""
-
-
 def contamination_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FUZZY decontamination (dedup.cross_table_lsh_pairs): corpus docs
     that are NEAR-dups of benchmark docs via cross-table portable-MinHash
@@ -1317,8 +1034,8 @@ def contamination_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NGRAM_N = 400
 _NGRAM_K = 8
 # capacity of the token-context packer in the curate→rewrite→pack gate —
-# shared by packing_pipelines and _dedup_pack_oracle (the _CLF_BUCKETS
-# one-definition rule)
+# shared by packing_pipelines and _dedup_pack_oracle (one definition, so
+# a one-sided tuning cannot silently diverge the gate)
 _PACK_TOK_CAP = 1024
 
 
@@ -1928,9 +1645,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # distinct operator sits inside the first 50; the tail entries are
     # oracle-sibling / diagnostic variants of operators already gated
     # above (exact-Jaccard vs MinHash, keep-first vs exact dedup,
-    # md5-fingerprint vs exact-dedup key, resize vs features codec-seam
-    # plumbing, rolling dup-groups vs fingerprints, prefix vs exact
-    # groups). tools/oracle_parity.py still checks all of them locally.
+    # md5-fingerprint vs exact-dedup key, rolling dup-groups vs
+    # fingerprints, prefix vs exact groups). tools/oracle_parity.py still
+    # checks all of them locally.
     return {
         "flagship_violations": flagship_violations,
         "sequences_validation": sequences_validation,
@@ -1941,14 +1658,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "uniqueness_duplicates": uniqueness_duplicates,
         "referential_orphans": referential_orphans,
         "completeness_missing": completeness_missing,
-        "bigram_xent_scores": bigram_xent_scores,
         "stats_rollup": stats_rollup,
         "quantiles_by_group": quantiles_by_group,
         "drift_tests": drift_tests,
         "token_count_modes": token_count_modes,
         "quality_scores": quality_scores,
         "lang_id_agreement": lang_id_agreement,
-        "classifier_scores": classifier_scores,
         "fingerprints": fingerprints,
         "dedup_exact_groups": dedup_exact_groups,
         "token_ngram_dup_stats": token_ngram_dup_stats,
@@ -1956,7 +1671,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_sigs": simhash_sigs,
         "temperature_sample_ids": temperature_sample_ids,
         "array_mismatch_index": array_mismatch_index,
-        "multimodal_features": multimodal_features,
         "json_props_validation": json_props_validation,
         "violations_grouped": violations_grouped,
         "minhash_dedup_verified": minhash_dedup_verified,
@@ -1964,10 +1678,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stats_threshold_violations": stats_threshold_violations,
         "curation_pipeline": curation_pipeline,
         "bucketed_join_stats": bucketed_join_stats,
-        "dsir_importance_weights": dsir_importance_weights,
-        "skew_salted_stats": skew_salted_stats,
-        "asof_join_marks": asof_join_marks,
-        "range_join_sizes": range_join_sizes,
         "cc_strategies": cc_strategies,
         "repetition_quality": repetition_quality,
         "unigram_entropy": unigram_entropy,
@@ -1978,23 +1688,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_top_terms_by_lang": vocab_top_terms_by_lang,
         "contamination_screen": contamination_screen,
         "token_ngram_contamination": token_ngram_contamination,
-        # (the last four window entries are diagnostic siblings that fit
-        # in the window: rank-per-group top-N is also gated via
-        # window_ops' 'topn_<status>' modes, concat-and-chop packing via
-        # packing_pipelines' 'chars' mode, the banding stage of
-        # minhash_lsh_pairs end-to-end via minhash_dedup_verified, and
-        # histogram_psi via drift_tests' 'psi' mode)
+        # (the last eleven window entries are diagnostic siblings of
+        # operators gated above that fit in the window: rank-per-group
+        # top-N is also gated via window_ops' 'topn_<status>' modes,
+        # concat-and-chop packing via packing_pipelines' 'chars' mode, the
+        # banding stage of minhash_lsh_pairs end-to-end via
+        # minhash_dedup_verified, histogram_psi and drift_ks via
+        # drift_tests, token_counts / subword_token_counts via
+        # token_count_modes, rolling_fingerprints via fingerprints,
+        # dedup_clusters via cc_strategies, and the two contamination_*
+        # entries, which gate each text screen alone, via
+        # contamination_screen)
         "topn_per_group": topn_per_group,
         "sequence_packing": sequence_packing,
         "minhash_lsh_pairs": minhash_lsh_pairs,
         "histogram_psi": histogram_psi,
-        # --- tail: oracle-sibling / diagnostic variants (operators gated
-        # above); may fall outside the driver's 50-entry window ---
-        # (the two contamination_* entries gate each text screen alone —
-        # both operators sit in the window via contamination_screen;
-        # the per-mode members of the consolidated gates cc_strategies /
-        # fingerprints / drift_tests / token_count_modes / window_ops
-        # sit here so oracle_parity still diagnoses each alone)
         "drift_ks": drift_ks,
         "token_counts": token_counts,
         "subword_token_counts": subword_token_counts,
@@ -2002,6 +1710,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_clusters": dedup_clusters,
         "contamination_overlap": contamination_overlap,
         "contamination_near_dup": contamination_near_dup,
+        # --- tail: oracle-sibling / diagnostic variants (operators gated
+        # above); may fall outside the driver's 50-entry window; the
+        # remaining per-mode members of the consolidated gates sit here
+        # so oracle_parity still diagnoses each alone ---
         # (split_assignment / stratified_sample_ids gate each sampling
         # operator alone — both sit in the window via sampling_assignments;
         # stats_by_group's per-group rows are a subset of the gated
@@ -2011,11 +1723,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stats_by_group": stats_by_group,
         "rolling_dup_groups": rolling_dup_groups,
         "doc_fingerprints": doc_fingerprints,
-        "multimodal_resize": multimodal_resize,
         "prefix_dup_groups": prefix_dup_groups,
         "jaccard_pairs": jaccard_pairs,
         "dedup_keep_first": dedup_keep_first,
-        "multimodal_frame_sample": multimodal_frame_sample,
         "dedup_clusters_star": dedup_clusters_star,
         "window_running_total": window_running_total,
         "embedding_dim_violations": embedding_dim_violations,
@@ -2190,36 +1900,6 @@ bsrc AS (SELECT doc_id + 500000 AS doc_id, text FROM documents
 SELECT DISTINCT l.doc_id AS corpus_id, r.doc_id AS bench_id
 FROM cbanded l JOIN bbanded r
   ON l.band = r.band AND l.key = r.key
-"""
-
-
-def _dsir_oracle(n_buckets: int = 256, modulus: int = 25) -> str:
-    """DSIR replay: portable 'dsir'-salted 60-bit word hash into
-    n_buckets, add-1-smoothed bucket log-likelihood-ratio weights from
-    the count merge, per-document k·w sums over the same per-(doc,
-    bucket) count table the engine aggregates, rounded at 4 (the
-    unigram_entropy precedent: every aggregated term is a function of
-    integer counts, so only fp addition order differs)."""
-    b = float(n_buckets)
-    return f"""
-WITH tok AS (SELECT doc_id, unnest({_WORDS}) AS w FROM documents),
-btok AS (SELECT doc_id, {_hex15("'dsir' || w")} % {n_buckets} AS b FROM tok),
-cb AS (SELECT b, count(*) AS c FROM btok GROUP BY b),
-tb AS (SELECT b, count(*) AS t FROM btok
-       WHERE doc_id % {modulus} = 0 GROUP BY b),
-m AS (SELECT coalesce(cb.b, tb.b) AS b, coalesce(c, 0) AS c,
-             coalesce(t, 0) AS t
-      FROM cb FULL OUTER JOIN tb ON cb.b = tb.b),
-tot AS (SELECT sum(c) AS c_tot, sum(t) AS t_tot FROM m),
-wts AS (SELECT b, ln((t + 1.0) / (t_tot + {b})) -
-                  ln((c + 1.0) / (c_tot + {b})) AS w
-        FROM m CROSS JOIN tot),
-pdc AS (SELECT doc_id, b, count(*) AS k FROM btok GROUP BY doc_id, b),
-per AS (SELECT doc_id, sum(k) AS n, sum(k * w) AS s
-        FROM pdc JOIN wts USING (b) GROUP BY doc_id)
-SELECT d.doc_id, CAST(coalesce(per.n, 0) AS BIGINT) AS n_words,
-       coalesce(round(per.s, 4), 0.0) AS dsir_score
-FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
 """
 
 
@@ -2485,7 +2165,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "token_ngram_dup_stats": _token_ngram_oracle(),
         "token_ngram_dedup_clean": _token_span_dedup_oracle(),
-        "bigram_xent_scores": _bigram_xent_oracle(),
         "token_ngram_contamination": _token_contamination_oracle(),
         "contamination_screen": (
             # both sibling oracles nest as derived tables (DuckDB allows
@@ -2539,23 +2218,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id AS dropped_id FROM (SELECT doc_id, row_number() OVER "
             "(PARTITION BY md5(lower(trim(text))) ORDER BY doc_id) AS rk FROM u) "
             "WHERE rk > 1"
-        ),
-        "multimodal_features": (
-            # the fake codec is deterministic: declared dims equal decoded
-            # dims by construction, so the only violations are the planted
-            # undecodable payloads (doc_id % 31 == 0)
-            "SELECT CAST(doc_id AS VARCHAR) AS subject, "
-            "'file does not contain a valid image' AS reason "
-            "FROM documents WHERE doc_id % 31 = 0"
-        ),
-        "multimodal_frame_sample": (
-            "WITH m AS (SELECT CAST(doc_id AS VARCHAR) AS media_id, "
-            "'VID:' || (doc_id % 30 + 1) || ':vid-' || doc_id AS payload, "
-            "doc_id % 30 + 1 AS nf FROM documents) "
-            "SELECT media_id, CAST(i AS INT) AS frame_idx, "
-            "'FRM:' || i || ':' || md5(payload) AS frame "
-            "FROM m, generate_series(0, 29) AS g(i) "
-            "WHERE i < nf AND i % 10 = 0"
         ),
         "curation_pipeline": (
             # v2: dedup + quality + lang agreement as before, then the
@@ -2649,43 +2311,11 @@ def oracle_sql() -> dict[str, str]:
         ),
         "simhash_sigs": _SIMHASH_ORACLE,
         "minhash_lsh_pairs": _minhash_lsh_oracle(),
-        "dsir_importance_weights": _dsir_oracle(),
-        "classifier_scores": _clf_oracle(),
         "bucketed_join_stats": (
             "SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders, "
             "round(sum(o_totalprice), 4) AS sum_price "
             "FROM orders JOIN customer ON o_custkey = c_custkey "
             "GROUP BY c_mktsegment"
-        ),
-        "multimodal_resize": (
-            "WITH m AS (SELECT CAST(doc_id AS VARCHAR) AS media_id, "
-            "CASE WHEN doc_id % 31 = 0 THEN 'GARBAGE' "
-            "ELSE 'IMG:' || (doc_id % 64 + 1) || 'x' || (doc_id % 48 + 1) "
-            "|| ':payload-' || doc_id END AS payload FROM documents) "
-            "SELECT media_id, (payload LIKE 'IMG:%') AS ok, "
-            "CAST(8 AS INT) AS width, CAST(6 AS INT) AS height, "
-            "CASE WHEN payload LIKE 'IMG:%' "
-            "THEN 'IMG:8x6:' || md5(payload) ELSE NULL END AS resized "
-            "FROM m"
-        ),
-        "skew_salted_stats": (
-            "SELECT lang, CAST(count(*) AS BIGINT) AS n, "
-            "string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) "
-            "AS doc_ids FROM documents GROUP BY lang"
-        ),
-        "asof_join_marks": (
-            "WITH e AS (SELECT event_id, user_id, ts FROM events "
-            "WHERE user_id < 40), "
-            "m AS (SELECT user_id, ts, CAST(max(event_id) AS BIGINT) "
-            "AS mark_id FROM e WHERE event_id % 37 = 0 GROUP BY user_id, ts) "
-            "SELECT e.event_id, e.user_id, m.mark_id "
-            "FROM e ASOF LEFT JOIN m "
-            "ON e.user_id = m.user_id AND e.ts >= m.ts"
-        ),
-        "range_join_sizes": (
-            "SELECT d.doc_id, CAST(t.i AS BIGINT) AS interval_id "
-            "FROM documents d, range(0, 20) t(i) "
-            "WHERE d.n_chars BETWEEN t.i * 25 AND t.i * 25 + 60"
         ),
         "table_profile_documents": " UNION ALL ".join(
             f"SELECT '{c}' AS col_name, CAST(count(*) AS BIGINT) AS n_rows, "

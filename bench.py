@@ -65,8 +65,6 @@ HEADLINE = [
     "drift_ks",
     "array_mismatch_index",
     "curation_pipeline",
-    "asof_join_marks",
-    "range_join_sizes",
     "dedup_clusters",
     # round-3 additions (new operators, timed from this round on)
     "repetition_quality",
@@ -75,14 +73,11 @@ HEADLINE = [
     # contamination_near_dup's pipeline is timed inside the
     # contamination_screen union — listing both would run the
     # cross-table LSH screen twice per pass
-    "dsir_importance_weights",
     "contamination_screen",
     "token_ngram_dup_stats",
     "token_ngram_contamination",
     "temperature_sample_ids",
-    "bigram_xent_scores",
     # round-4 additions (new operators, timed from this round on)
-    "classifier_scores",
     "token_ngram_dedup_clean",
     # round-5 additions (new operators, timed from this round on)
     "packing_pipelines",
@@ -95,13 +90,10 @@ VALUE_EXCLUDED = {
     "repetition_quality",
     "unigram_entropy",
     "pii_scrub_counts",
-    "dsir_importance_weights",
     "contamination_screen",
     "token_ngram_dup_stats",
     "token_ngram_contamination",
     "temperature_sample_ids",
-    "bigram_xent_scores",
-    "classifier_scores",
     "token_ngram_dedup_clean",
     "packing_pipelines",
 }

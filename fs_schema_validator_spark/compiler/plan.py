@@ -64,11 +64,13 @@ _KEYSET_REFETCH_MAX_KEYS = 5_000_000
 _LIFTED = (Mdl.TokenRangeRule, Mdl.ReferentialRule)
 
 
-def key_string(col: str) -> Column:
-    """A subject or partition key as a string, nulls rendered '<null>' —
-    on every surface, so a null key never falls out of a join or an
-    ``isin`` filter (misattributed, never validated, or reported OK)."""
-    return F.coalesce(F.col(col).cast("string"), F.lit("<null>"))
+def key_string(col: str | Column) -> Column:
+    """A subject or partition key (a column name or expression) as a
+    string, nulls rendered '<null>' — on every surface, so a null key never
+    falls out of a join or an ``isin`` filter (misattributed, never
+    validated, or reported OK)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.coalesce(c.cast("string"), F.lit("<null>"))
 
 
 def _no_errs() -> Column:
@@ -168,9 +170,10 @@ def row_violation_array(
 def _violation_rows(
     df: DataFrame, subject: Column, rule: Mdl.RuleBase, reason: Column
 ) -> DataFrame:
-    """A table rule's output in the canonical VIOLATION_SCHEMA."""
+    """A table rule's output in the canonical VIOLATION_SCHEMA; a null
+    subject renders '<null>' (key_string), as on every other surface."""
     return df.select(
-        subject.cast("string").alias("subject"),
+        key_string(subject).alias("subject"),
         F.lit(rule.rule_id).alias("rule_id"),
         F.lit(rule.seq).alias("rule_seq"),
         reason.alias("reason"),
@@ -436,7 +439,8 @@ class CompiledPlan:
                 .agg(F.count(F.lit(1)).alias("_n"))
                 .filter(F.col("_n") > 1)
             )
-            subject = F.concat_ws("|", *[c.cast("string") for c in keys])
+            # concat_ws skips nulls, so each key renders through key_string
+            subject = F.concat_ws("|", *[key_string(k) for k in rule.keys])
             return _violation_rows(dupes, subject, rule, F.lit("duplicate key"))
 
         if isinstance(rule, Mdl.CompletenessRule):

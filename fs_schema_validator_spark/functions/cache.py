@@ -8,7 +8,7 @@ long-lived job. This registry mirrors ``CompiledPlan.release()``: operators
 ``track()`` what they persist, and the caller releases everything after the
 consuming action::
 
-    pairs = near_dup_pairs(emb, dim=64).collect()
+    dups = dedup.verify_candidate_pairs(docs, candidates).collect()
     cache.release_all()
 
 At cluster scale the same seam is where you would swap the cache for a

@@ -9,6 +9,9 @@ The spark-submit entry point (reference analog: validate_schema CLI,
         --aux dim_sources=/data/dims --aux reference_tokens=/data/ref \
         -b idx=0..3 --subject doc_id --output /out/violations
 
+``--table`` and each ``--aux`` take a path or a catalog table name
+(``catalog.db.sequences`` for an Iceberg table).
+
 Exit codes keep the reference contract: 0 = all rules pass, 1 = violations
 found, 127 = the rule spec itself is invalid.
 """
@@ -19,23 +22,36 @@ import argparse
 import os
 import sys
 
+from pyspark.sql import DataFrame, SparkSession
+
 from ..engine import ValidationEngine
 from ..evaluator import ParseError, parse_assignment
 from ..rules.loader import RuleSetError
 from ..session import get_spark
+from ..sources.tables import load_table
 
 
 class UsageError(Exception):
     """Bad invocation (exit 2, distinct from validation failure's exit 1)."""
 
 
+def _load(spark: SparkSession, ref: str) -> DataFrame:
+    """A --table or --aux reference: a catalog table by name (Iceberg or
+    hive, through the session catalog) or a path, as ``load_table``
+    dispatches it. A bare relative directory name would dispatch to the
+    catalog; an existing local path is always a path."""
+    if os.path.exists(ref) and "/" not in ref:
+        ref = f"./{ref}"
+    return load_table(spark, ref)
+
+
 def _parse_aux(values: list[str]) -> dict[str, str]:
     out = {}
     for v in values:
         if "=" not in v:
-            raise UsageError(f"--aux expects name=path, got {v!r}")
-        name, path = v.split("=", 1)
-        out[name] = path
+            raise UsageError(f"--aux expects name=table, got {v!r}")
+        name, ref = v.split("=", 1)
+        out[name] = ref
     return out
 
 
@@ -57,7 +73,8 @@ def build_parser() -> argparse.ArgumentParser:
     v.add_argument(
         "--table",
         default=os.environ.get("VALIDATION_ROOT_DIR"),
-        help="subject table path (default: $VALIDATION_ROOT_DIR)",
+        help="subject table path or catalog table name "
+        "(default: $VALIDATION_ROOT_DIR)",
     )
     v.add_argument(
         "--show-valid",
@@ -65,7 +82,8 @@ def build_parser() -> argparse.ArgumentParser:
         help="print sorted ✅ lines for subjects with zero violations "
         "(limited by --max-print; reference prints these unconditionally)",
     )
-    v.add_argument("--aux", action="append", default=[], help="name=path auxiliary table")
+    v.add_argument("--aux", action="append", default=[],
+                   help="name=table auxiliary table (path or catalog table name)")
     v.add_argument("-b", "--binding", action="append", default=[],
                    help="binding override, e.g. -b idx=0..3 (repeatable)")
     v.add_argument("--subject", default="doc_id", help="subject key column")
@@ -78,7 +96,7 @@ def build_parser() -> argparse.ArgumentParser:
     pr.add_argument(
         "--table",
         default=os.environ.get("VALIDATION_ROOT_DIR"),
-        help="table path (default: $VALIDATION_ROOT_DIR)",
+        help="table path or catalog table name (default: $VALIDATION_ROOT_DIR)",
     )
     pr.add_argument("--columns", default=None,
                     help="comma-separated columns (default: all)")
@@ -125,8 +143,8 @@ def cmd_validate(args: argparse.Namespace) -> int:
 
     spark = get_spark(app_name="fsv-validate")
     spark.sparkContext.setLogLevel("WARN")
-    df = spark.read.parquet(args.table)
-    tables = {name: spark.read.parquet(path) for name, path in aux.items()}
+    df = _load(spark, args.table)
+    tables = {name: _load(spark, ref) for name, ref in aux.items()}
 
     engine = ValidationEngine(subject_col=args.subject)
     try:
@@ -170,16 +188,10 @@ def cmd_profile(args: argparse.Namespace) -> int:
         print("missing --table (or $VALIDATION_ROOT_DIR)", file=sys.stderr)
         return 2
     from ..operators.profile import table_profile
-    from ..sources.tables import load_table
 
     spark = get_spark(app_name="fsv-profile")
     spark.sparkContext.setLogLevel("WARN")
-    ref = args.table
-    # a bare relative directory name would dispatch to the session catalog
-    # in load_table; an existing local path is always a path
-    if os.path.exists(ref) and "/" not in ref:
-        ref = f"./{ref}"
-    df = load_table(spark, ref)
+    df = _load(spark, args.table)
     cols = args.columns.split(",") if args.columns else None
     for row in table_profile(df, cols, exact=args.exact).collect():
         print(

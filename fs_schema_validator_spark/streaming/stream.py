@@ -83,28 +83,6 @@ def validate_stream(
     return writer.start()
 
 
-def dedup_stream(
-    stream_df: DataFrame,
-    key_cols: list[str],
-    ts_col: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact-dedup: drop rows whose key was already seen.
-
-    With `ts_col`, uses `dropDuplicatesWithinWatermark` — state for a key
-    is held only until the watermark passes it, so state size is bounded
-    by (keys per watermark window), the production form for unbounded
-    streams (re-deliveries and retries land within minutes, not days).
-    Without `ts_col`, plain dropDuplicates keeps ALL keys in state —
-    exact, but state grows with the key universe; only for bounded
-    backfills. Returns the streaming DataFrame; caller attaches the sink."""
-    if ts_col is None:
-        return stream_df.dropDuplicates(key_cols)
-    return stream_df.withWatermark(
-        ts_col, watermark
-    ).dropDuplicatesWithinWatermark(key_cols)
-
-
 def windowed_violation_counts(
     stream_df: DataFrame,
     rules_yaml: str,

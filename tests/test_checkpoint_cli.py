@@ -137,6 +137,47 @@ def test_cli_exit_codes(spark, tmp_path, capsys):
     assert main(["validate", "--rules", str(rules_bad), "--table", table]) == 127
 
 
+def test_cli_validates_a_catalog_table_by_name(spark, tmp_path, capsys):
+    """--table and --aux take a session-catalog table name as well as a
+    path: validating the table by name exits and prints exactly as
+    validating its parquet path does."""
+    from fs_schema_validator_spark.plans.cli import main
+
+    table = str(tmp_path / "seqn")
+    synth.corrupt_sequences(synth.gen_sequences(spark, 20), every=10).write.parquet(
+        table
+    )
+    manifest = str(tmp_path / "manifestn")
+    synth.gen_expected_manifest(spark, 20, extra=2).write.parquet(manifest)
+    spark.read.parquet(table).createOrReplaceTempView("cli_seq")
+    spark.read.parquet(manifest).createOrReplaceTempView("cli_manifest")
+    rules = tmp_path / "n.yaml"
+    rules.write_text(
+        RULES
+        + """  - type: completeness
+    id: manifest_complete
+    manifest: expected_manifest
+    key: doc_id
+"""
+    )
+
+    def run(table_ref, manifest_ref):
+        code = main(
+            ["validate", "--rules", str(rules), "--table", table_ref,
+             "--aux", f"expected_manifest={manifest_ref}", "--show-valid"]
+        )
+        return code, capsys.readouterr().out
+
+    by_path = run(table, manifest)
+    try:
+        by_name = run("cli_seq", "cli_manifest")
+    finally:
+        spark.catalog.dropTempView("cli_seq")
+        spark.catalog.dropTempView("cli_manifest")
+    assert by_path[0] == 1 and "does not exist" in by_path[1]
+    assert by_name == by_path
+
+
 def test_cli_binding_override(spark, tmp_path):
     from fs_schema_validator_spark.plans.cli import main
 

@@ -1,9 +1,10 @@
 """The driver's registries agree with each other, checked without Spark.
 
 `queries()` and `oracle_sql()` must name the same entries, and every query
-that `bench.py` times or excludes must exist. `bench.py` is read with
-`ast`, not imported: it edits `sys.path` and imports the benchmark's own
-dependencies at module level."""
+that `bench.py` times or excludes, or that `tools/plan_audit.py` audits,
+must exist. Both scripts are read with `ast`, not imported: they edit
+`sys.path` and start Spark or import the benchmark's own dependencies at
+module level."""
 
 from __future__ import annotations
 
@@ -38,3 +39,17 @@ def test_bench_names_only_registered_queries():
         names = _bench_names(var)
         assert names, var
         assert sorted(set(names) - queries) == [], var
+
+
+def test_plan_audit_names_only_registered_queries():
+    tree = ast.parse((REPO / "tools" / "plan_audit.py").read_text())
+    names = [
+        node.slice.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Subscript)
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "qs"
+        and isinstance(node.slice, ast.Constant)
+    ]
+    assert names
+    assert sorted(set(names) - set(entrymod.queries())) == []

@@ -248,6 +248,38 @@ def test_grouped_by_subject(result):
     ]
 
 
+def test_null_unique_key_is_reported_as_null_on_every_surface(spark, tmp_path):
+    """Two rows with a null `doc_id` are a duplicate key. It is reported
+    under '<null>', not '' (concat_ws skips a null key), so the null
+    subject is not listed as valid, and the violation counts under the
+    minimum group of its rows, in the summary and in the checkpoint
+    manifest alike."""
+    from fs_schema_validator_spark.streaming.checkpoint import (
+        ParquetManifestStore,
+        ResumableValidator,
+    )
+
+    df = spark.createDataFrame(
+        [("a", "cc"), (None, "cc"), (None, "wiki"), ("b", "wiki")],
+        "doc_id string, source string",
+    )
+    rules = "schema: [{type: unique, id: doc_id_unique, keys: [doc_id]}]"
+    engine = ValidationEngine(subject_col="doc_id")
+    res = engine.validate(df, rules)
+    rows = [
+        (r.subject, r.rule_id, r.reason) for r in res.sorted_violations().collect()
+    ]
+    assert rows == [("<null>", "doc_id_unique", "duplicate key")]
+    assert [r.subject for r in res.ok_subjects().collect()] == ["a", "b"]
+    summary = [tuple(r) for r in res.summary("source").collect()]
+    assert summary == [("cc", 2, 1, 1, "FAIL"), ("wiki", 2, 0, 0, "PASS")]
+    res.release()
+
+    store = ParquetManifestStore(spark, str(tmp_path / "manifest"))
+    run = ResumableValidator(engine, store, partition_col="source").run(df, rules)
+    assert {p: s["n_violations"] for p, s in run.items()} == {"cc": 1, "wiki": 0}
+
+
 def test_pristine_table_passes(spark):
     n = 16
     seq = synth.gen_sequences(spark, n)
@@ -344,8 +376,8 @@ schema:
 @pytest.mark.parametrize(
     "metric, stats",
     [
-        ("psi", {None: "PSI 12.4292", "data_only": "PSI 12.4292", "ref_only": "PSI 11.0427"}),
-        ("ks", {None: "KS 1.0000", "data_only": "KS 1.0000", "ref_only": "KS 1.0000"}),
+        ("psi", {"<null>": "PSI 12.4292", "data_only": "PSI 12.4292", "ref_only": "PSI 11.0427"}),
+        ("ks", {"<null>": "KS 1.0000", "data_only": "KS 1.0000", "ref_only": "KS 1.0000"}),
     ],
     ids=["psi", "ks"],
 )
@@ -355,8 +387,8 @@ def test_drift_groups_on_one_side_only(spark, metric, stats):
     all-zero histogram, and a group only in the data against an all-zero
     reference. A null group never matches (a join never matches null to
     null): the data's null-group rows drop out, and the reference's
-    null-group rows form a group of their own, reported with a null
-    subject. A group in both with the reference's exact shape passes."""
+    null-group rows form a group of their own, reported under the subject
+    '<null>'. A group in both with the reference's exact shape passes."""
     rows = [(i, "both", (i % 16) * 32 + 1) for i in range(160)]
     rows += [(200 + i, "data_only", (i % 4) * 32 + 1) for i in range(40)]
     rows += [(300 + i, None, (i % 8) * 64 + 1) for i in range(40)]

@@ -1,5 +1,5 @@
 """Operator tests: dedup recall on planted near-dups, text
-stats, multimodal plumbing, skew-safe aggregation, KS drift."""
+stats, sampling, graph clustering, KS drift."""
 
 from __future__ import annotations
 
@@ -7,8 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fs_schema_validator_spark.engine import ValidationEngine
-from fs_schema_validator_spark.functions import skew
-from fs_schema_validator_spark.operators import dedup, multimodal, textstats
+from fs_schema_validator_spark.operators import dedup, textstats
 
 WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -149,81 +148,6 @@ def test_lang_id(spark):
     assert got[1] == "en"
     assert got[2] == "de"
     assert got[3] == "und"
-
-
-def test_multimodal_declared_vs_actual(spark):
-    media = spark.createDataFrame(
-        [
-            ("m1", b"IMG:4x3:data", "image", 4, 3),
-            ("m2", b"IMG:4x3:data", "image", 8, 8),
-            ("m3", b"NOT AN IMAGE", "image", 4, 3),
-            ("m4", None, "image", 4, 3),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    feats = multimodal.extract_features(media, codec=multimodal.FakeCodec)
-    violations = {
-        r.subject: r.reason
-        for r in multimodal.metadata_violations(feats, media).collect()
-    }
-    assert "m1" not in violations
-    assert violations["m2"] == "image dims 4x3 do not match declared 8x8"
-    assert violations["m3"] == "file does not contain a valid image"
-    assert violations["m4"] == "file does not contain a valid image"
-
-
-def test_multimodal_resize(spark):
-    media = spark.createDataFrame(
-        [
-            ("m1", b"IMG:4x3:data", "image", 4, 3),
-            ("m2", b"NOT AN IMAGE", "image", 8, 8),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    out = {
-        r.media_id: r
-        for r in multimodal.resize(
-            media, 32, 24, codec=multimodal.FakeCodec
-        ).collect()
-    }
-    assert out["m1"].ok and (out["m1"].width, out["m1"].height) == (32, 24)
-    assert bytes(out["m1"].payload).startswith(b"IMG:32x24:")
-    assert not out["m2"].ok and out["m2"].payload is None
-
-
-def test_multimodal_frame_sampling(spark):
-    media = spark.createDataFrame(
-        [("v1", b"VID:25:data"), ("v2", b"VID:7:x"), ("v3", b"IMG:4x3:d")],
-        "media_id string, payload binary",
-    )
-    frames = multimodal.sample_frames(media, every_n=10).collect()
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r.frame_idx)
-    # every 10th frame; non-video payloads are skipped entirely
-    assert sorted(by_media["v1"]) == [0, 10, 20]
-    assert sorted(by_media["v2"]) == [0]
-    assert "v3" not in by_media
-    # frame payloads are deterministic functions of (payload, frame_idx)
-    f0 = [bytes(r.frame_payload) for r in frames if r.media_id == "v1" and r.frame_idx == 10]
-    assert f0[0].startswith(b"FRM:10:")
-
-
-def test_salted_collect_list_matches_plain(spark):
-    from fs_schema_validator_spark.sources import synth
-
-    df = synth.gen_sequences(spark, 500, skew=True).select("source", "n_tok")
-    salted = {
-        r.source: r.values
-        for r in skew.salted_collect_list(df, ["source"], "n_tok").collect()
-    }
-    plain = {
-        r.source: sorted(r.vals)
-        for r in df.groupBy("source")
-        .agg(F.collect_list("n_tok").alias("vals"))
-        .collect()
-    }
-    assert salted == plain
 
 
 def test_skewed_source_distribution(spark):
@@ -448,60 +372,6 @@ def test_bucketed_join_has_no_exchange(spark):
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan, plan
     assert "Exchange" not in plan, plan
-
-
-def test_asof_join_semantics(spark):
-    from fs_schema_validator_spark.operators import joins
-
-    left = spark.createDataFrame(
-        [(1, "u", "2024-01-01 10:00:00"),
-         (2, "u", "2024-01-01 10:05:00"),
-         (3, "u", "2024-01-01 09:00:00"),   # before any mark
-         (4, "v", "2024-01-01 10:10:00")],
-        "id bigint, k string, ts string",
-    ).select("id", "k", F.col("ts").cast("timestamp").alias("ts"))
-    right = spark.createDataFrame(
-        [("u", "2024-01-01 10:00:00", 100),  # equal ts matches (backward)
-         ("u", "2024-01-01 10:04:00", 101),
-         ("v", "2024-01-01 08:00:00", 200)],
-        "k string, mts string, mark bigint",
-    ).select("k", F.col("mts").cast("timestamp").alias("mts"), "mark")
-    out = {
-        r.id: r.asof_mark
-        for r in joins.asof_join(left, right, "k", "ts", "mts").collect()
-    }
-    assert out == {1: 100, 2: 101, 3: None, 4: 200}
-    # tolerance: v's mark is >2h stale -> nulled
-    tol = {
-        r.id: r.asof_mark
-        for r in joins.asof_join(
-            left, right, "k", "ts", "mts", tolerance_sec=3600
-        ).collect()
-    }
-    assert tol == {1: 100, 2: 101, 3: None, 4: None}
-
-
-def test_bucketed_range_join_matches_naive(spark):
-    from fs_schema_validator_spark.operators import joins
-
-    pts = spark.createDataFrame(
-        [(i, float(i * 7 % 100)) for i in range(60)], "pid bigint, p double"
-    )
-    iv = spark.createDataFrame(
-        [(j, float(j * 10 - 5), float(j * 10 + 12)) for j in range(11)],
-        "iid bigint, lo double, hi double",
-    )
-    got = {
-        (r.pid, r.iid)
-        for r in joins.bucketed_range_join(pts, iv, "p", "lo", "hi", 8.0).collect()
-    }
-    naive = {
-        (r.pid, r.iid)
-        for r in pts.crossJoin(iv)
-        .filter(F.col("p").between(F.col("lo"), F.col("hi")))
-        .collect()
-    }
-    assert got == naive and len(got) > 60  # overlapping bands: multi-match
 
 
 def test_connected_components_and_summary(spark):
@@ -919,73 +789,6 @@ def test_hot_bucket_cap_keeps_planted_cluster_connected(spark):
     release_all()
 
 
-def test_default_codec_selection():
-    """FakeCodec in this sandbox (no Pillow); PillowCodec picked up
-    automatically where the real library exists."""
-    expected = (
-        multimodal.PillowCodec
-        if multimodal.pillow_available()
-        else multimodal.FakeCodec
-    )
-    assert multimodal.default_codec() is expected
-
-
-@pytest.mark.skipif(
-    "not __import__('fs_schema_validator_spark.operators.multimodal', "
-    "fromlist=['multimodal']).pillow_available()",
-    reason="Pillow not installed in this sandbox",
-)
-def test_pillow_codec_real_image_roundtrip(spark):
-    """Exercised only where Pillow exists: a real PNG decodes to its true
-    dims through the same Spark plumbing the FakeCodec path uses."""
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (32, 16)).save(buf, "PNG")
-    df = spark.createDataFrame(
-        [("m1", bytearray(buf.getvalue()), "image", 32, 16)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    feats = multimodal.extract_features(df, codec=multimodal.PillowCodec).collect()
-    assert feats[0].ok and (feats[0].actual_width, feats[0].actual_height) == (32, 16)
-    resized = multimodal.resize(
-        df, target_width=8, target_height=6, codec=multimodal.PillowCodec
-    ).collect()
-    assert resized[0].ok
-    with Image.open(io.BytesIO(resized[0].payload)) as im:
-        assert im.size == (8, 6)
-
-
-def test_skew_salted_stats_keeps_null_lang_group(spark, tmp_path):
-    """The counts↔lists join is null-SAFE: a NULL-lang group must appear
-    in engine output exactly as the oracle's plain GROUP BY emits it."""
-    import duckdb
-
-    import __spark_entry__ as entrymod
-
-    rows = [(1, "en"), (2, "en"), (3, None), (4, None), (5, "de")]
-    docs = spark.createDataFrame(rows, "doc_id bigint, lang string")
-    sf_dir = str(tmp_path)
-    docs.coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-
-    got = {
-        (r.lang, r.n, r.doc_ids)
-        for r in entrymod.queries()["skew_salted_stats"](spark, sf_dir).collect()
-    }
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-    )
-    want = {tuple(r) for r in con.sql(
-        entrymod.oracle_sql()["skew_salted_stats"]
-    ).fetchall()}
-    assert got == want
-    assert (None, 2, "3,4") in got
-
-
 def test_repetition_features_flags_boilerplate(spark):
     """Planted: a templated doc (repeated lines + dominant 2-gram) vs a
     varied doc; Gopher-style signals must separate them."""
@@ -1068,169 +871,6 @@ def test_cross_table_lsh_catches_edited_benchmark_leak(spark):
         for r in textstats.cross_table_overlap(corpus, bench).collect()
     }
     assert (50, 903) not in exact      # the case exact fingerprints miss
-
-
-def test_dsir_scores_target_lookalikes_higher(spark):
-    """DSIR importance: corpus docs made of target-domain words must
-    outscore corpus docs from the off-domain vocabulary; null/empty
-    docs score 0.0 with n_words = 0."""
-    from fs_schema_validator_spark.operators import selection
-
-    a_words = "alpha bravo charlie delta echo"
-    b_words = "uniform victor whiskey xray yankee"
-    corpus = spark.createDataFrame(
-        [
-            (1, a_words), (2, a_words + " foxtrot"),
-            (3, b_words), (4, b_words + " zulu"),
-            (5, None), (6, ""),
-        ],
-        "doc_id bigint, text string",
-    )
-    target = spark.createDataFrame(
-        [(100, b_words), (101, b_words)], "doc_id bigint, text string"
-    )
-    out = {
-        r.doc_id: r
-        for r in selection.dsir_importance(
-            corpus, target, n_buckets=64
-        ).collect()
-    }
-    assert len(out) == 6
-    assert min(out[3].dsir_score, out[4].dsir_score) > max(
-        out[1].dsir_score, out[2].dsir_score
-    )
-    for null_doc in (5, 6):
-        assert out[null_doc].n_words == 0
-        assert out[null_doc].dsir_score == 0.0
-    assert out[1].n_words == 5 and out[2].n_words == 6
-
-
-def test_classifier_score_hand_computed(spark):
-    """fastText-style inference on a 1-bucket model: every feature hashes
-    to bucket 0 with weight w0, so logit = bias + w0 exactly; a 3-word
-    doc has 3 unigrams + 2 bigrams; null/empty docs score sigmoid(bias)
-    with n_features = 0."""
-    import math
-
-    from fs_schema_validator_spark.operators import selection
-
-    corpus = spark.createDataFrame(
-        [(1, "aa bb cc"), (2, "dd"), (3, None), (4, "")],
-        "doc_id bigint, text string",
-    )
-    weights = spark.createDataFrame([(0, 2.0)], "bucket bigint, w double")
-    out = {
-        r.doc_id: r
-        for r in selection.classifier_score(
-            corpus, weights, n_buckets=1, bias=-1.0
-        ).collect()
-    }
-    sig = lambda x: round(1.0 / (1.0 + math.exp(-x)), 4)  # noqa: E731
-    assert out[1].n_features == 5 and out[1].clf_score == sig(1.0)
-    assert out[2].n_features == 1 and out[2].clf_score == sig(1.0)
-    for d in (3, 4):
-        assert out[d].n_features == 0 and out[d].clf_score == sig(-1.0)
-
-
-def test_classifier_score_unigram_only_and_missing_buckets(spark):
-    """word_ngrams=1 drops the bigram features; a feature whose bucket is
-    absent from the weight table weighs 0 (not null-poisoned)."""
-    from fs_schema_validator_spark.operators import selection
-
-    corpus = spark.createDataFrame(
-        [(1, "aa bb cc")], "doc_id bigint, text string"
-    )
-    empty = spark.createDataFrame([], "bucket bigint, w double")
-    out = selection.classifier_score(
-        corpus, empty, n_buckets=64, bias=0.0, word_ngrams=1
-    ).collect()[0]
-    assert out.n_features == 3          # no bigrams
-    assert out.clf_score == 0.5         # all-zero weights -> sigmoid(0)
-    import pytest
-
-    with pytest.raises(ValueError, match="word_ngrams"):
-        selection.classifier_score(corpus, empty, word_ngrams=3)
-
-
-def test_classifier_oracle_agrees_on_null_and_empty_text(spark, tmp_path):
-    """Cross-engine: REAL driver query vs REAL oracle SQL on a fixture
-    with null, empty, single-word (no bigram), and repeated-word
-    documents."""
-    import duckdb
-
-    import __spark_entry__ as entrymod
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox", "en"),
-            (2, "the the the", "en"),          # repeated uni+bigrams
-            (3, "solo", "en"),                 # 1 word: no bigram
-            (4, None, "en"),
-            (5, "", "en"),
-            (6, "  ", "en"),                   # whitespace-only
-        ],
-        "doc_id bigint, text string, lang string",
-    )
-    sf_dir = str(tmp_path)
-    docs.coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        tuple(r)
-        for r in entrymod.queries()["classifier_scores"](
-            spark, sf_dir
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-    )
-    want = {
-        tuple(r)
-        for r in con.sql(entrymod.oracle_sql()["classifier_scores"]).fetchall()
-    }
-    assert got == want
-    by_id = {r[0]: r[1:] for r in got}
-    assert by_id[1][0] == 7             # 4 unigrams + 3 bigrams
-    assert by_id[3][0] == 1
-    for d in (4, 5, 6):
-        assert by_id[d][0] == 0
-
-
-def test_dsir_oracle_agrees_on_null_and_empty_text(spark, tmp_path):
-    """Cross-engine: REAL driver query vs REAL oracle SQL on a fixture
-    with null and empty documents, including a null doc inside the
-    target set (doc_id % 25 == 0)."""
-    import duckdb
-
-    import __spark_entry__ as entrymod
-
-    rows = [(i, _doc(i)) for i in range(30)]
-    rows += [(100, None), (102, ""), (103, "   ")]  # 100 % 25 == 0
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    sf_dir = str(tmp_path)
-    docs.coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-
-    got = {
-        (r.doc_id, r.n_words, r.dsir_score)
-        for r in entrymod.queries()["dsir_importance_weights"](
-            spark, sf_dir
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-    )
-    want = {
-        tuple(r)
-        for r in con.sql(
-            entrymod.oracle_sql()["dsir_importance_weights"]
-        ).fetchall()
-    }
-    assert got == want
-    by_id = {d: (n, s) for d, n, s in got}
-    for deg in (100, 102, 103):
-        assert by_id[deg] == (0, 0.0)
 
 
 def test_token_ngram_dup_stats_planted_and_degenerate(spark):
@@ -1502,69 +1142,6 @@ def test_temperature_sample_degenerate_groups_cross_engine(spark):
         tuple(r) for r in con.sql(entrymod._temperature_oracle()).fetchall()
     )
     assert got == want
-
-
-def test_bigram_cross_entropy_semantics(spark):
-    """Perplexity-filter semantics: documents matching the LM corpus
-    score the same, low cross-entropy; an out-of-distribution doc
-    scores strictly higher; docs with < 2 words (incl. null/empty
-    text) report (0, 0.0)."""
-    from fs_schema_validator_spark.operators.selection import (
-        bigram_cross_entropy,
-    )
-
-    rows = [
-        ("a", "the cat sat on the mat"),
-        ("b", "the cat sat on the mat"),
-        ("c", "zq xv qq zz pp ww"),
-        ("d", "one"),
-        ("e", None),
-        ("f", ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    lm = df.filter("doc_id in ('a', 'b')")
-    out = {
-        r.doc_id: (r.n_bigrams, r.cross_entropy)
-        for r in bigram_cross_entropy(df, lm, n_buckets=16).collect()
-    }
-    assert len(out) == 6
-    assert out["a"] == out["b"] and out["a"][0] == 5
-    assert out["c"][0] == 5 and out["c"][1] > out["a"][1]
-    for z in ("d", "e", "f"):
-        assert out[z] == (0, 0.0)
-
-
-def test_bigram_xent_oracle_agrees_on_null_and_empty_text(spark, tmp_path):
-    """Cross-engine: the REAL driver query vs the REAL oracle SQL on a
-    hostile fixture — null text, empty text, one-word docs, and a null
-    text INSIDE the LM set (doc_id % 25 == 0)."""
-
-    import duckdb
-
-    import __spark_entry__ as entrymod
-
-    rows = [(i, f"w{i % 7} common text w{i % 5} tail") for i in range(40)]
-    rows += [(50, None), (75, ""), (77, "solo"), (100, None)]  # 50,75,100 in LM
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    path = str(tmp_path / "documents.parquet")
-    docs.write.mode("overwrite").parquet(path)
-
-    got = sorted(
-        tuple(r)
-        for r in entrymod.bigram_xent_scores(spark, str(tmp_path)).collect()
-    )
-    con = duckdb.connect()
-    # Spark writes a DIRECTORY of part files — glob it for DuckDB
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')"
-    )
-    want = sorted(
-        tuple(r) for r in con.sql(entrymod._bigram_xent_oracle()).fetchall()
-    )
-    assert got == want
-    by_id = {v[0]: v for v in got}
-    for deg in (50, 75, 77, 100):
-        assert by_id[deg][1:] == (0, 0.0)
 
 
 def test_append_token_dedup_equals_full_rebuild(spark, tmp_path):

@@ -146,35 +146,6 @@ def test_stateful_violation_rate_accumulates(spark, tmp_path):
     assert sum(r.n_bad for r in out2.values()) == 18
 
 
-def test_dedup_stream_drops_replayed_keys(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from fs_schema_validator_spark.streaming.stream import dedup_stream
-
-    src = tmp_path / "dedup_in"
-    out = tmp_path / "dedup_out"
-    chk = tmp_path / "dedup_chk"
-
-    base = synth.gen_sequences(spark, 30).select("doc_id", "n_tok")
-    dup = base.filter(F.col("n_tok") % 3 == 0)  # replayed subset
-    base.unionByName(dup).write.mode("append").parquet(str(src))
-
-    stream = spark.readStream.schema(base.schema).parquet(str(src))
-    q = (
-        dedup_stream(stream, ["doc_id"])
-        .writeStream.format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(chk))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(out))
-    assert got.count() == 30
-    assert got.select("doc_id").distinct().count() == 30
-
-
 def test_sinkless_on_batch_caches_and_releases(spark, tmp_path):
     """violations_path=None callers get a frame over the batch's CACHED
     violation relation: the callback's actions read the cache instead of

@@ -231,33 +231,6 @@ def main() -> None:
             {"max_exchanges": 1, "plan_contains": "SortMergeJoin"},
         )
     )
-    # salted two-stage holistic agg: partial on (group, salt), final merge
-    sections.append(
-        audit(
-            "skew_salted_stats (salted two-stage agg)",
-            qs["skew_salted_stats"](spark, SF_DIR),
-            {"schema_excludes": "text", "plan_excludes": "CartesianProduct"},
-        )
-    )
-
-    # as-of join: union + carry-forward window — never a nested loop
-    sections.append(
-        audit(
-            "asof_join_marks (union + carry-forward window, no nested loop)",
-            qs["asof_join_marks"](spark, SF_DIR),
-            {"max_scans": 2, "max_exchanges": 2,
-             "plan_excludes": "CartesianProduct"},
-        )
-    )
-    # range join: overlap-bucket equi-join against the tiny interval grid
-    sections.append(
-        audit(
-            "range_join_sizes (overlap-bucket equi-join)",
-            qs["range_join_sizes"](spark, SF_DIR),
-            {"max_scans": 1, "has_broadcast": True,
-             "plan_excludes": "CartesianProduct"},
-        )
-    )
     # curation pipeline v2: the row-local gates (quality, lang, PII,
     # dup-line fraction) stack on ONE lineage — still 2 scans (union
     # branches) and 1 dedup-window shuffle; the unigram-entropy feature
@@ -330,18 +303,6 @@ def main() -> None:
         )
     )
 
-    # DSIR: two bucket-count aggregations (map-side partials over a
-    # 256-bucket key space), broadcast weight join, one per-doc agg —
-    # pure codegen, no UDF, no sort-merge join
-    sections.append(
-        audit(
-            "dsir_importance_weights (hashed-unigram LLR, broadcast weights)",
-            qs["dsir_importance_weights"](spark, SF_DIR),
-            {"has_broadcast": True, "schema_excludes": "lang",
-             "plan_excludes": "SortMergeJoin"},
-        )
-    )
-
     # token k-gram dedup: one Arrow window-hash pass, then compact
     # (hash, count) aggregations — the corpus never self-joins and no
     # pair set materializes
@@ -382,28 +343,6 @@ def main() -> None:
             qs["temperature_sample_ids"](spark, SF_DIR),
             {"has_broadcast": True, "plan_excludes": "SortMergeJoin",
              "max_scans": 2},
-        )
-    )
-
-    # bigram LM scoring: pure codegen (no UDF), model tables broadcast,
-    # corpus pair counts partial-agg before any move
-    sections.append(
-        audit(
-            "bigram_xent_scores (hashed-bigram LM, broadcast model)",
-            qs["bigram_xent_scores"](spark, SF_DIR),
-            {"has_broadcast": True, "schema_excludes": "lang",
-             "plan_excludes": "MapInArrow"},
-        )
-    )
-
-    # quality-classifier inference: pure codegen (no UDF), weight model
-    # broadcast, one explode collapsed by map-side partial agg
-    sections.append(
-        audit(
-            "classifier_scores (hashed ngram linear model, broadcast weights)",
-            qs["classifier_scores"](spark, SF_DIR),
-            {"has_broadcast": True, "max_scans": 1,
-             "schema_excludes": "lang", "plan_excludes": "MapInArrow"},
         )
     )
 
