@@ -21,10 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from fs_schema_validator_spark.compiler.plan import first_mismatch_index  # noqa: E402
 from fs_schema_validator_spark.engine import ValidationEngine  # noqa: E402
 from fs_schema_validator_spark.functions import sketches  # noqa: E402
-from fs_schema_validator_spark.operators import (  # noqa: E402
-    dedup,
-    textstats,
-)
+from fs_schema_validator_spark.operators import dedup  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -235,56 +232,6 @@ def histogram_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, col="n_chars", group_col="lang", lo=0.0, hi=600.0, buckets=12
     )
     return out.select(F.col("grp").alias("lang"), "psi")
-
-
-# ---------------------------------------------------------------------------
-# text-analysis operators
-
-
-def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.token_count(_t(spark, sf_dir, "documents"))
-
-
-def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.quality_features(_t(spark, sf_dir, "documents"))
-
-
-def lang_id_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.lang_id(_t(spark, sf_dir, "documents"))
-
-
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.fingerprint(_t(spark, sf_dir, "documents"))
-
-
-def subword_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.subword_token_count(_t(spark, sf_dir, "documents"))
-
-
-def rolling_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.rolling_hashes(_t(spark, sf_dir, "documents"), k=8)
-
-
-def rolling_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup screen on the min-k-gram rolling hash: docs sharing their
-    minimal 8-char-gram collide even after prefix/suffix edits (planted
-    here as 'EDITED ' prefixes on every 10th doc — md5 dedup misses these,
-    the rolling fingerprint does not)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    edited = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.lit("EDITED "), F.col("text")).alias("text"),
-    )
-    both = docs.unionByName(edited)
-    fps = textstats.rolling_hashes(both, k=8)
-    return (
-        fps.groupBy("min_kgram_hash")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.min("doc_id").alias("keeper"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -823,220 +770,22 @@ def table_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-split (train/val/test 8/1/1): assignment is a
-    pure engine-portable function of doc_id, replayed row-for-row by the
-    DuckDB oracle — the leakage-proof split a training pipeline needs."""
-    from fs_schema_validator_spark.operators import sampling
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return sampling.hash_split(
-        docs, "doc_id", {"train": 8, "val": 1, "test": 1}
-    )
-
-
-def stratified_sample_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ~20% stratified sample per lang — row-local portable
-    hash filter, replayed exactly by the oracle."""
-    from fs_schema_validator_spark.operators import sampling
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    return sampling.stratified_sample(docs, "doc_id", 20, group_cols=["lang"])
-
-
-def sampling_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both row-local deterministic sampling operators in one gated
-    slot: 'split' rows carry the hash-split assignment
-    (sampling.hash_split), 'stratified' rows the per-lang 20% sample
-    (sampling.stratified_sample). The solo queries stay in the
-    diagnostic tail — same consolidation pattern as
-    contamination_screen."""
-    s = split_assignment(spark, sf_dir).select(
-        F.lit("split").alias("mode"), "doc_id", F.col("split").alias("val")
-    )
-    st = stratified_sample_ids(spark, sf_dir).select(
-        F.lit("stratified").alias("mode"),
-        "doc_id",
-        F.col("lang").cast("string").alias("val"),
-    )
-    return s.unionByName(st)
-
-
-def temperature_sample_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-balanced source mixing
-    (sampling.temperature_sample): per-lang keep rates proportional to
-    w^0.7 flatten the language distribution at half the corpus weight;
-    the oracle replays the rate computation and the portable hash keep
-    decision row-for-row."""
-    from fs_schema_validator_spark.operators import sampling
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    return sampling.temperature_sample(
-        docs, "lang", "n_chars", alpha=_TEMP_ALPHA, target_frac=_TEMP_FRAC
-    )
-
-
-def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chop packing of documents into 2048-char context windows
-    per lang (operators/sampling.pack_offsets): placement is one windowed
-    running sum — no UDF, no sequential state — replayed by the oracle
-    with the same SUM() OVER."""
-    from fs_schema_validator_spark.operators import sampling
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    return sampling.pack_offsets(
-        docs, "n_chars", capacity=2048, group_cols=["lang"], order_col="doc_id"
-    )
-
-
-def packing_pipelines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both packing lineages in one gated slot. Mode 'chars' = concat-
-    and-chop of raw documents per lang (the sequence_packing sibling,
-    now a tail diagnostic). Mode 'dedup_tokens' = the full
-    curate→rewrite→pack lineage a training pipeline actually ships: the
-    shared token-dedup corpus flows through duplicate-SPAN removal
-    (dedup.token_ngram_dedup — `source` rides the rewrite kernel as a
-    passthrough column, so the packer's group key needs NO join-back)
-    and the CLEANED lengths feed sampling.pack_offsets per source.
-    Fully-erased duplicates pack as zero-length placements (they occupy
-    no window but keep their deterministic slot); the null-tokens
-    degenerate row packs at length 0, the short row at its full length.
-    Plan: the dedup stages' compact (hash, count) shuffles + its ONE
-    doc-keyed join-back, then a per-source window — packing adds no new
-    corpus-wide exchange."""
-    from fs_schema_validator_spark.operators import dedup, sampling
-
-    chars = sequence_packing(spark, sf_dir).select(
-        F.lit("chars").alias("mode"),
-        F.col("lang").alias("grp"),
-        F.col("doc_id").cast("string").alias("k"),
-        F.col("n_chars").cast("bigint").alias("length"),
-        "start_bin",
-        "start_offset",
-        "end_bin",
-    )
-    cleaned = dedup.token_ngram_dedup(
-        _ngram_corpus(spark), k=_NGRAM_K, passthrough=["source"]
-    )
-    lens = cleaned.select(
-        "doc_id",
-        "source",
-        F.coalesce(F.size("tokens_clean"), F.lit(0))
-        .cast("bigint")
-        .alias("n_clean"),
-    )
-    packed = sampling.pack_offsets(
-        lens,
-        "n_clean",
-        capacity=_PACK_TOK_CAP,
-        group_cols=["source"],
-        order_col="doc_id",
-    )
-    toks = packed.select(
-        F.lit("dedup_tokens").alias("mode"),
-        F.col("source").alias("grp"),
-        F.col("doc_id").alias("k"),
-        F.col("n_clean").alias("length"),
-        "start_bin",
-        "start_offset",
-        "end_bin",
-    )
-    return chars.unionByName(toks)
-
-
-def _dedup_pack_oracle(
-    n: "int | None" = None,
-    k: "int | None" = None,
-    cap: "int | None" = None,
-    base: int = 1000003,
-    mod: int = 2147483647,
-    seed: int = 7,
-) -> str:
-    """DuckDB replay of packing_pipelines' 'dedup_tokens' mode: the
-    span-removal replay reduced to per-doc CLEANED lengths (n_tok minus
-    the count of distinct covered positions — only the length reaches
-    the packer, so the value regeneration/serialization of the full
-    span oracle is unnecessary) followed by the same SUM() OVER
-    concat-and-chop placement as the sequence_packing oracle. (Defaults
-    resolve at call time — the _NGRAM_*/_PACK_* constants are defined
-    further down the module, in the token-window section.)"""
-    n = _NGRAM_N if n is None else n
-    k = _NGRAM_K if k is None else k
-    cap = _PACK_TOK_CAP if cap is None else cap
-    ctes, _ = _seq_window_sql(n, k, base, mod, seed)
-    h_expr = _window_hash_expr(k, base, mod, seed)
-    return f"""
-WITH {ctes}, corpus AS (
-  SELECT doc_id, i, n_tok, vocab, source FROM v
-  UNION ALL
-  SELECT printf('dup-%08d', i), i, n_tok, vocab, source
-  FROM v WHERE i % 20 = 0
-), wh AS (
-  SELECT doc_id, j0, {h_expr} AS h
-  FROM (SELECT doc_id, i, n_tok, vocab,
-               unnest(range(0, n_tok - {k - 1})) AS j0
-        FROM corpus WHERE n_tok >= {k})
-), pdc AS (
-  SELECT doc_id, h FROM wh GROUP BY doc_id, h
-), dup AS (
-  SELECT h FROM pdc GROUP BY h HAVING count(*) >= 2
-), cov AS (
-  SELECT doc_id, count(DISTINCT j) AS n_cov FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(0, {k}), t -> j0 + t)) AS j
-    FROM wh WHERE h IN (SELECT h FROM dup)) GROUP BY doc_id
-), lens AS (
-  SELECT doc_id, source,
-         CAST(n_tok - coalesce(n_cov, 0) AS BIGINT) AS n_clean
-  FROM corpus LEFT JOIN cov USING (doc_id)
-  UNION ALL SELECT 'deg-null', 'cc', 0
-  UNION ALL SELECT 'deg-short', 'cc', 3
-), st AS (
-  SELECT doc_id, source, n_clean,
-         CAST(COALESCE(sum(n_clean) OVER (PARTITION BY source
-              ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-              AND 1 PRECEDING), 0) AS BIGINT) AS s0
-  FROM lens)
-SELECT source AS grp, doc_id AS k, n_clean AS length,
-       CAST(s0 // {cap} AS BIGINT) AS start_bin,
-       CAST(s0 % {cap} AS BIGINT) AS start_offset,
-       CAST(floor((s0 + n_clean - 1) / CAST({cap} AS DOUBLE)) AS BIGINT)
-           AS end_bin
-FROM st
-"""
-
-
-def vocab_top_terms_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary pass: top-10 tokens per lang (explode -> partial-agg
-    count -> rank window), ties on the token string."""
-    docs = _t(spark, sf_dir, "documents")
-    return textstats.vocab_top_terms(docs, k=10, group_col="lang")
-
-
-def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination screen: every 25th document plays the benchmark
-    set (shifted ids); fingerprint join returns the corpus docs that
-    would leak eval content into training."""
-    docs, bench = _contamination_inputs(spark, sf_dir)
-    return textstats.cross_table_overlap(docs, bench)
-
-
 def contamination_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FUZZY decontamination (dedup.cross_table_lsh_pairs): corpus docs
     that are NEAR-dups of benchmark docs via cross-table portable-MinHash
-    banding — catches lightly-edited eval leaks the exact-fingerprint
-    screen (contamination_overlap) misses. Benchmark side broadcast; the
-    oracle replays both banding pipelines in SQL."""
-    docs, bench = _contamination_inputs(spark, sf_dir)
+    banding — catches lightly-edited eval leaks an exact text hash
+    misses. Every 25th document plays the benchmark set under a shifted
+    id. Benchmark side broadcast; the oracle replays both banding
+    pipelines in SQL."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    bench = docs.filter(F.col("doc_id") % 25 == 0).select(
+        (F.col("doc_id") + 500000).alias("doc_id"), "text"
+    )
     return dedup.cross_table_lsh_pairs(docs, bench)
 
 
 _NGRAM_N = 400
 _NGRAM_K = 8
-# capacity of the token-context packer in the curate→rewrite→pack gate —
-# shared by packing_pipelines and _dedup_pack_oracle (one definition, so
-# a one-sided tuning cannot silently diverge the gate)
-_PACK_TOK_CAP = 1024
 
 
 def _degenerate_sequences(spark: SparkSession) -> DataFrame:
@@ -1095,38 +844,6 @@ def _window_hash_expr(k: int, base: int, mod: int, seed: int) -> str:
     return f"({seed_pk} + {terms}) % {mod}"
 
 
-def _contamination_inputs(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(corpus docs, benchmark) for ALL text decontamination queries:
-    every 25th document plays the benchmark set under a shifted id. One
-    definition so the gated union query and the solo diagnostics screen
-    the identical input."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 25 == 0).select(
-        (F.col("doc_id") + 500000).alias("doc_id"), "text"
-    )
-    return docs, bench
-
-
-def contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both text decontamination screens in one gated query: 'exact'
-    rows are whole-document fingerprint hits
-    (textstats.cross_table_overlap), 'near_dup' rows are cross-table
-    MinHash-LSH candidates (dedup.cross_table_lsh_pairs) that catch
-    lightly-edited leaks. The sibling queries contamination_overlap /
-    contamination_near_dup (diagnostic tail) gate each operator alone;
-    this union keeps both under the driver window in one slot."""
-    docs, bench = _contamination_inputs(spark, sf_dir)
-    exact = textstats.cross_table_overlap(docs, bench).select(
-        F.lit("exact").alias("mode"), "corpus_id", "bench_id"
-    )
-    fuzzy = dedup.cross_table_lsh_pairs(docs, bench).select(
-        F.lit("near_dup").alias("mode"), "corpus_id", "bench_id"
-    )
-    return exact.unionByName(fuzzy)
-
-
 def token_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-level decontamination (dedup.token_ngram_contamination)
     over the north-rule sequences shape: corpus = 300 generated docs +
@@ -1182,129 +899,6 @@ SELECT ids.doc_id,
             ELSE 0.0 END AS contamination_rate
 FROM ids LEFT JOIN per USING (doc_id)
 """
-
-
-def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-data curation v2: plant duplicates, keep-first
-    exact dedup, then EVERY row-local quality gate fused into one
-    projection on the deduped lineage — length/word-shape, language
-    agreement, PII scrub length, Gopher duplicate-line fraction — and
-    unigram entropy via the groupBy-CARRY pattern (the row-local
-    features ride the per-(doc, word) partial aggregation as grouping
-    keys, so no join-back and no second execution of the dedup window —
-    the round-2 lesson about double lineages).
-
-    Plan shape (asserted in the audit): 2 parquet scans (union sides),
-    ONE dedup window shuffle, and exactly the two partial-agg exchanges
-    the entropy feature costs — at 10^12 rows the explode shuffles
-    (doc, word) partial counts, never word instances."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    dupes = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-    )
-    both = docs.unionByName(dupes)
-    w = Window.partitionBy(F.md5(F.lower(F.trim(F.col("text"))))).orderBy(
-        "doc_id"
-    )
-    kept = (
-        both.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-    )
-    feats = textstats.lang_id(
-        textstats.quality_features(kept, passthrough=["text", "lang"]),
-        passthrough=["text", "n_words", "avg_word_len"],
-    )
-    gated = feats.filter(
-        (F.col("n_words") >= 30)
-        & F.col("agree")
-        & (F.col("avg_word_len") <= 10.0)
-    )
-    lines = F.filter(
-        F.split(F.col("text"), "\n"), lambda ln: ln != F.lit("")
-    )
-    n_lines = F.size(lines)
-    dup_line_frac = F.when(
-        n_lines > 0,
-        F.round(
-            F.lit(1.0)
-            - F.size(F.array_distinct(lines)) / n_lines.cast("double"),
-            4,
-        ),
-    ).otherwise(F.lit(0.0))
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(F.col("text"), textstats.EMAIL_RE, "<EMAIL>"),
-        textstats.PHONE_RE,
-        "<PHONE>",
-    )
-    # Stage the expensive per-doc features in their OWN projection, then
-    # explode in a second select. A single select would land them in the
-    # Project ABOVE Generate (ExtractGenerator keeps non-generator
-    # expressions upstairs), re-running the scrub regexes and the line
-    # array_distinct once PER WORD INSTANCE (~20x; measured 4.4s -> <1s
-    # at sf0.1). Split this way the Generate child computes them once per
-    # doc and only attribute references ride above the explode. Raw text
-    # is dropped at the explode, so only compact features hit the shuffle.
-    staged = gated.select(
-        "doc_id",
-        F.col("n_words"),
-        "predicted_lang",
-        dup_line_frac.alias("dup_line_frac"),
-        F.length(scrubbed).cast("bigint").alias("scrubbed_len"),
-        "text",
-    )
-    pre = staged.select(
-        "doc_id",
-        "n_words",
-        "predicted_lang",
-        "dup_line_frac",
-        "scrubbed_len",
-        F.explode_outer(textstats.words(F.lower(F.col("text")))).alias("_w"),
-    )
-    keys = [
-        "doc_id", "n_words", "predicted_lang", "dup_line_frac",
-        "scrubbed_len",
-    ]
-    counts = pre.groupBy(*keys, "_w").agg(F.count(F.lit(1)).alias("_c"))
-    per = counts.groupBy(*keys).agg(
-        F.sum(F.when(F.col("_w").isNotNull(), F.col("_c"))).alias("_n"),
-        F.sum(
-            F.when(
-                F.col("_w").isNotNull(),
-                F.col("_c") * F.log(F.col("_c").cast("double")),
-            )
-        ).alias("_s"),
-    )
-    entropy = F.round(
-        F.log(F.col("_n").cast("double")) - F.col("_s") / F.col("_n"), 4
-    )
-    return per.select(
-        *keys, F.coalesce(entropy, F.lit(0.0)).alias("entropy")
-    ).filter((F.col("dup_line_frac") <= 0.5) & (F.col("entropy") >= 1.0))
-
-
-def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition signals (operators/textstats.py::
-    repetition_features): duplicate-line fraction + top word-2-gram share,
-    the standard boilerplate screens for pretraining corpora."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return textstats.repetition_features(docs)
-
-
-def unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document unigram Shannon entropy (nats) — low-entropy docs are
-    templated/repetitive; explode → two partial-agg groupBys."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return textstats.unigram_entropy(docs)
-
-
-def pii_scrub_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection/redaction counts (emails, phone-like runs) and the
-    post-scrub length — pure codegen regex, oracle-replayed in RE2."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return textstats.pii_scrub(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -1538,8 +1132,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Consolidated gate queries: sibling operators union'd under a mode column
 # so each family costs ONE slot of the driver's 50-entry window while every
-# member stays value-gated (the contamination_screen pattern). The
-# individual siblings remain as tail entries for oracle_parity diagnosis.
+# member stays value-gated. The individual siblings stay registered, so
+# oracle_parity diagnoses each alone.
 
 
 def cc_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1555,26 +1149,6 @@ def cc_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prop.unionByName(star)
 
 
-def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both document-fingerprint families: md5 of the normalized text
-    (exact-dedup key) and the O(n) rolling polynomial hash pair
-    (whole-doc + min-8-gram, the edit-robust near-dup key), serialized
-    to strings under one schema."""
-    md = doc_fingerprints(spark, sf_dir).select(
-        F.lit("md5").alias("mode"),
-        "doc_id",
-        F.col("fingerprint").alias("fp_a"),
-        F.lit("").alias("fp_b"),
-    )
-    rh = rolling_fingerprints(spark, sf_dir).select(
-        F.lit("rolling").alias("mode"),
-        "doc_id",
-        F.col("rhash").cast("string").alias("fp_a"),
-        F.col("min_kgram_hash").cast("string").alias("fp_b"),
-    )
-    return md.unionByName(rh)
-
-
 def drift_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both per-group distribution-drift tests against the global
     distribution — PSI over the full group×bucket grid and the
@@ -1588,33 +1162,13 @@ def drift_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi.unionByName(ks)
 
 
-def token_count_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both tokenizer families melted long — whitespace word counts and
-    the GPT-2-style BPE pre-split counts (with alpha/numeric class
-    splits) — every metric of both siblings value-gated in one slot."""
-    ws = token_counts(spark, sf_dir).selectExpr(
-        "'ws' AS mode",
-        "doc_id",
-        "stack(2, 'n_words', n_words, 'n_chars_seen', n_chars_seen) "
-        "AS (metric, value)",
-    )
-    sw = subword_token_counts(spark, sf_dir).selectExpr(
-        "'bpe' AS mode",
-        "doc_id",
-        "stack(3, 'n_subwords', n_subwords, 'n_alpha', n_alpha, "
-        "'n_numeric', n_numeric) AS (metric, value)",
-    )
-    return ws.unionByName(sw)
-
-
 def window_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The window-function extension family in one slot: per-customer
     running order totals + order ranks, and gap-based sessionization
     event counts, melted to (mode, k1, k2, val)."""
     # stack() melts both window metrics from ONE pass over the window
     # lineage — feeding rt into two union branches would re-run the
-    # orders scan and the per-customer window sort once per branch
-    # (the token_count_modes idiom).
+    # orders scan and the per-customer window sort once per branch.
     ab = window_running_total(spark, sf_dir).selectExpr(
         "CAST(o_custkey AS bigint) AS k1",
         "CAST(o_orderkey AS bigint) AS k2",
@@ -1640,14 +1194,10 @@ def window_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering contract: the driver evaluates the FIRST 50 dict entries
-    # (observed in round 2 — entries 51+ got no CORRECTNESS row), so every
-    # distinct operator sits inside the first 50; the tail entries are
-    # oracle-sibling / diagnostic variants of operators already gated
-    # above (exact-Jaccard vs MinHash, keep-first vs exact dedup,
-    # md5-fingerprint vs exact-dedup key, rolling dup-groups vs
-    # fingerprints, prefix vs exact groups). tools/oracle_parity.py still
-    # checks all of them locally.
+    # The driver gates only the FIRST 50 dict entries (entries 51+ got no
+    # CORRECTNESS row), so the registry holds at most 50 and every entry
+    # is gated (tests/test_driver_registry.py checks the limit).
+    # tools/oracle_parity.py checks all of them locally.
     return {
         "flagship_violations": flagship_violations,
         "sequences_validation": sequences_validation,
@@ -1661,68 +1211,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stats_rollup": stats_rollup,
         "quantiles_by_group": quantiles_by_group,
         "drift_tests": drift_tests,
-        "token_count_modes": token_count_modes,
-        "quality_scores": quality_scores,
-        "lang_id_agreement": lang_id_agreement,
-        "fingerprints": fingerprints,
         "dedup_exact_groups": dedup_exact_groups,
         "token_ngram_dup_stats": token_ngram_dup_stats,
         "token_ngram_dedup_clean": token_ngram_dedup_clean,
         "simhash_sigs": simhash_sigs,
-        "temperature_sample_ids": temperature_sample_ids,
         "array_mismatch_index": array_mismatch_index,
         "json_props_validation": json_props_validation,
         "violations_grouped": violations_grouped,
         "minhash_dedup_verified": minhash_dedup_verified,
         "window_ops": window_ops,
         "stats_threshold_violations": stats_threshold_violations,
-        "curation_pipeline": curation_pipeline,
         "bucketed_join_stats": bucketed_join_stats,
         "cc_strategies": cc_strategies,
-        "repetition_quality": repetition_quality,
-        "unigram_entropy": unigram_entropy,
-        "pii_scrub_counts": pii_scrub_counts,
         "table_profile_documents": table_profile_documents,
-        "sampling_assignments": sampling_assignments,
-        "packing_pipelines": packing_pipelines,
-        "vocab_top_terms_by_lang": vocab_top_terms_by_lang,
-        "contamination_screen": contamination_screen,
         "token_ngram_contamination": token_ngram_contamination,
-        # (the last eleven window entries are diagnostic siblings of
-        # operators gated above that fit in the window: rank-per-group
-        # top-N is also gated via window_ops' 'topn_<status>' modes,
-        # concat-and-chop packing via packing_pipelines' 'chars' mode, the
-        # banding stage of minhash_lsh_pairs end-to-end via
-        # minhash_dedup_verified, histogram_psi and drift_ks via
-        # drift_tests, token_counts / subword_token_counts via
-        # token_count_modes, rolling_fingerprints via fingerprints,
-        # dedup_clusters via cc_strategies, and the two contamination_*
-        # entries, which gate each text screen alone, via
-        # contamination_screen)
         "topn_per_group": topn_per_group,
-        "sequence_packing": sequence_packing,
         "minhash_lsh_pairs": minhash_lsh_pairs,
         "histogram_psi": histogram_psi,
         "drift_ks": drift_ks,
-        "token_counts": token_counts,
-        "subword_token_counts": subword_token_counts,
-        "rolling_fingerprints": rolling_fingerprints,
         "dedup_clusters": dedup_clusters,
-        "contamination_overlap": contamination_overlap,
         "contamination_near_dup": contamination_near_dup,
-        # --- tail: oracle-sibling / diagnostic variants (operators gated
-        # above); may fall outside the driver's 50-entry window; the
-        # remaining per-mode members of the consolidated gates sit here
-        # so oracle_parity still diagnoses each alone ---
-        # (split_assignment / stratified_sample_ids gate each sampling
-        # operator alone — both sit in the window via sampling_assignments;
-        # stats_by_group's per-group rows are a subset of the gated
-        # stats_rollup grouping sets)
-        "split_assignment": split_assignment,
-        "stratified_sample_ids": stratified_sample_ids,
         "stats_by_group": stats_by_group,
-        "rolling_dup_groups": rolling_dup_groups,
-        "doc_fingerprints": doc_fingerprints,
         "prefix_dup_groups": prefix_dup_groups,
         "jaccard_pairs": jaccard_pairs,
         "dedup_keep_first": dedup_keep_first,
@@ -1737,84 +1246,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 _WORDS = "list_filter(string_split_regex(lower(text), '\\s+'), w -> w != '')"
 
-# the temperature query's parameters — used by BOTH the Spark query and
-# its oracle so a one-sided tuning cannot silently diverge the kept set
-_TEMP_ALPHA = 0.7
-_TEMP_FRAC = 0.5
-
-
-def _sql_group_enc(expr: str) -> str:
-    """DuckDB mirror of sampling._group_enc: never-null, delimiter-free
-    hash-key part encoding ('n' for null, 'v'||md5 otherwise)."""
-    return (
-        f"(CASE WHEN {expr} IS NULL THEN 'n' "
-        f"ELSE 'v' || md5(CAST({expr} AS VARCHAR)) END)"
-    )
-
-
-# single SQL source of truth for the two row-local sampling oracles,
-# shared by the solo entries and the sampling_assignments union
-def _split_oracle() -> str:
-    return (
-        "WITH b AS (SELECT doc_id, "
-        + _hex15("'split' || CAST(doc_id AS VARCHAR)")
-        + " % 10 AS bucket FROM documents) "
-        "SELECT doc_id, CASE WHEN bucket < 8 THEN 'train' "
-        "WHEN bucket < 9 THEN 'val' ELSE 'test' END AS split FROM b"
-    )
-
-
-def _stratified_oracle() -> str:
-    return (
-        "SELECT doc_id, lang FROM documents WHERE doc_id IS NOT NULL AND "
-        + _hex15(
-            "'sample' || '|' || " + _sql_group_enc("lang")
-            + " || '|' || CAST(doc_id AS VARCHAR)"
-        )
-        + " % 100 < 20"
-    )
-
-
-def _temperature_oracle(
-    alpha: float = _TEMP_ALPHA, target_frac: float = _TEMP_FRAC
-) -> str:
-    """Replay of sampling.temperature_sample over documents(lang,
-    n_chars): per-group w^alpha rates, portable-hash keep decision on
-    10^6 buckets; NULL/zero-weight groups rate 0.0 and null-id rows
-    excluded, mirroring the operator. Float-boundary risk (pow/sum ulp
-    differences flipping round(q*10^6) or round(q, 6)) is the same
-    measure-zero class the rounded-output oracles accept."""
-    keep_hash = _hex15(
-        "'temp' || '|' || " + _sql_group_enc("d.lang")
-        + " || '|' || CAST(d.doc_id AS VARCHAR)"
-    )
-    return f"""
-WITH t AS (SELECT lang, sum(CAST(n_chars AS DOUBLE)) AS w
-           FROM documents GROUP BY lang),
-g AS (SELECT sum(w) AS w_tot, sum(pow(w, {alpha})) AS s_tot FROM t),
-r AS (SELECT lang,
-             CASE WHEN w > 0 AND s_tot > 0
-                  THEN least(1.0, {target_frac} * w_tot
-                             * (pow(w, {alpha}) / s_tot) / w)
-                  ELSE 0.0 END AS q
-      FROM t CROSS JOIN g)
-SELECT d.doc_id, d.lang, round(r.q, 6) AS keep_rate
-FROM documents d JOIN r ON d.lang IS NOT DISTINCT FROM r.lang
-WHERE d.doc_id IS NOT NULL
-  AND {keep_hash} % 1000000 < CAST(round(r.q * 1000000) AS BIGINT)
-"""
-
-
-# one SQL source of truth for the exact decontamination fingerprint
-# normalization (mirror of textstats.cross_table_overlap), shared by the
-# contamination_overlap oracle and contamination_screen's exact branch
-_CONTAM_EXACT_CTES = (
-    "b AS (SELECT doc_id + 500000 AS bench_id, "
-    "md5(lower(trim(text))) AS fingerprint FROM documents "
-    "WHERE doc_id % 25 = 0), "
-    "c AS (SELECT doc_id AS corpus_id, md5(lower(trim(text))) "
-    "AS fingerprint FROM documents)"
-)
 
 # 60-bit engine-portable word hash (mirror of dedup.portable_word_hashes):
 # first 15 hex chars of md5, folded base-16 with list_reduce.
@@ -2005,86 +1436,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT lang, round(sum((qc - pc) * ln(qc / pc)), 4) AS psi "
             "FROM j GROUP BY lang"
         ),
-        "token_counts": (
-            f"SELECT doc_id, CAST(len({_WORDS}) AS BIGINT) AS n_words, "
-            "CAST(length(text) AS BIGINT) AS n_chars_seen FROM documents"
-        ),
-        "quality_scores": (
-            f"WITH w AS (SELECT doc_id, length(text) AS n_chars_seen, {_WORDS} AS w "
-            "FROM documents) "
-            "SELECT doc_id, CAST(n_chars_seen AS BIGINT) AS n_chars_seen, "
-            "CAST(len(w) AS BIGINT) AS n_words, "
-            "CASE WHEN len(w) > 0 THEN round(list_sum(list_transform(w, "
-            "t -> length(t))) / CAST(len(w) AS DOUBLE), 4) ELSE 0.0 END "
-            "AS avg_word_len, "
-            "CASE WHEN len(w) > 0 THEN round(len(list_filter(w, "
-            "t -> t IN ('the','a','of','and','to'))) / CAST(len(w) AS DOUBLE), 4) "
-            "ELSE 0.0 END AS stopword_ratio FROM w"
-        ),
-        "lang_id_agreement": (
-            "WITH w AS (SELECT doc_id, lang AS labeled_lang, "
-            f"{_WORDS.replace('lower(text)', 'lower(text)')} AS w FROM documents), "
-            "v AS (SELECT doc_id, labeled_lang, "
-            "len(list_filter(w, t -> t IN ('the','a','of','and','to'))) AS v_en, "
-            "len(list_filter(w, t -> t IN ('der','die','das','und','zu'))) AS v_de, "
-            "len(list_filter(w, t -> t IN ('le','la','les','et','de'))) AS v_fr, "
-            "len(list_filter(w, t -> t IN ('el','la','los','y','de'))) AS v_es "
-            "FROM w), "
-            "s AS (SELECT *, greatest(v_en, v_de, v_fr, v_es) AS best FROM v) "
-            "SELECT doc_id, labeled_lang, "
-            "CASE WHEN best = 0 THEN 'und' "
-            "WHEN v_en = best THEN 'en' WHEN v_de = best THEN 'de' "
-            "WHEN v_fr = best THEN 'fr' WHEN v_es = best THEN 'es' "
-            "ELSE 'und' END AS predicted_lang, "
-            "(CASE WHEN best = 0 THEN 'und' "
-            "WHEN v_en = best THEN 'en' WHEN v_de = best THEN 'de' "
-            "WHEN v_fr = best THEN 'fr' WHEN v_es = best THEN 'es' "
-            "ELSE 'und' END) = labeled_lang AS agree FROM s"
-        ),
-        "doc_fingerprints": (
-            "SELECT doc_id, md5(lower(trim(text))) AS fingerprint FROM documents"
-        ),
-        "subword_token_counts": (
-            r"WITH t AS (SELECT doc_id, regexp_extract_all(text, "
-            r"'''s|''t|''re|''ve|''m|''ll|''d| ?[A-Za-z]+| ?[0-9]+"
-            r"| ?[^\sA-Za-z0-9]+|\s+') AS toks FROM documents) "
-            "SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_subwords, "
-            "CAST(len(list_filter(toks, x -> regexp_matches(x, "
-            "'^ ?[A-Za-z]+$'))) AS BIGINT) AS n_alpha, "
-            "CAST(len(list_filter(toks, x -> regexp_matches(x, "
-            "'^ ?[0-9]+$'))) AS BIGINT) AS n_numeric FROM t"
-        ),
-        "rolling_fingerprints": (
-            "WITH c AS (SELECT doc_id, list_transform(list_filter("
-            "string_split_regex(text, ''), x -> x != ''), x -> "
-            "CAST(ascii(x) AS BIGINT)) AS codes FROM documents), "
-            "w AS (SELECT doc_id, codes, len(codes) AS n, "
-            "list_reduce(list_prepend(CAST(7 AS BIGINT), codes), "
-            "(h, x) -> (h * 31 + x) % 2147483647) AS rhash FROM c) "
-            "SELECT doc_id, rhash, CASE WHEN n < 8 THEN rhash ELSE "
-            "list_min(list_transform(range(1, n - 6), i -> "
-            "list_reduce(list_prepend(CAST(7 AS BIGINT), codes[i:i+7]), "
-            "(h, x) -> (h * 31 + x) % 2147483647))) END AS min_kgram_hash "
-            "FROM w"
-        ),
-        "rolling_dup_groups": (
-            "WITH u AS (SELECT doc_id, text FROM documents UNION ALL "
-            "SELECT doc_id + 1000000, 'EDITED ' || text FROM documents "
-            "WHERE doc_id % 10 = 0), "
-            "c AS (SELECT doc_id, list_transform(list_filter("
-            "string_split_regex(text, ''), x -> x != ''), x -> "
-            "CAST(ascii(x) AS BIGINT)) AS codes FROM u), "
-            "w AS (SELECT doc_id, codes, len(codes) AS n, "
-            "list_reduce(list_prepend(CAST(7 AS BIGINT), codes), "
-            "(h, x) -> (h * 31 + x) % 2147483647) AS rhash FROM c), "
-            "f AS (SELECT doc_id, CASE WHEN n < 8 THEN rhash ELSE "
-            "list_min(list_transform(range(1, n - 6), i -> "
-            "list_reduce(list_prepend(CAST(7 AS BIGINT), codes[i:i+7]), "
-            "(h, x) -> (h * 31 + x) % 2147483647))) END AS min_kgram_hash "
-            "FROM w) "
-            "SELECT min_kgram_hash, CAST(count(*) AS BIGINT) AS n_docs, "
-            "min(doc_id) AS keeper FROM f GROUP BY 1 HAVING count(*) > 1"
-        ),
         "dedup_exact_groups": (
             "WITH u AS (SELECT doc_id, text FROM documents UNION ALL "
             "SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0), "
@@ -2166,17 +1517,6 @@ def oracle_sql() -> dict[str, str]:
         "token_ngram_dup_stats": _token_ngram_oracle(),
         "token_ngram_dedup_clean": _token_span_dedup_oracle(),
         "token_ngram_contamination": _token_contamination_oracle(),
-        "contamination_screen": (
-            # both sibling oracles nest as derived tables (DuckDB allows
-            # WITH inside a parenthesized subquery) under a mode tag
-            "SELECT 'exact' AS mode, corpus_id, bench_id FROM ("
-            f"WITH {_CONTAM_EXACT_CTES} "
-            "SELECT b.bench_id, c.corpus_id FROM b JOIN c USING (fingerprint)"
-            ") UNION ALL "
-            "SELECT 'near_dup' AS mode, corpus_id, bench_id FROM ("
-            + _contamination_near_dup_oracle()
-            + ")"
-        ),
         "stats_threshold_violations": (
             "SELECT CAST(l_returnflag AS VARCHAR) AS subject, "
             "'qty_mean_bound' AS rule_id, "
@@ -2218,60 +1558,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id AS dropped_id FROM (SELECT doc_id, row_number() OVER "
             "(PARTITION BY md5(lower(trim(text))) ORDER BY doc_id) AS rk FROM u) "
             "WHERE rk > 1"
-        ),
-        "curation_pipeline": (
-            # v2: dedup + quality + lang agreement as before, then the
-            # fused row-local gates (Gopher dup-line fraction, PII scrub
-            # length) and per-doc unigram entropy over the kept set
-            "WITH u AS (SELECT doc_id, text, lang FROM documents UNION ALL "
-            "SELECT doc_id + 1000000, text, lang FROM documents "
-            "WHERE doc_id % 10 = 0), "
-            "k AS (SELECT doc_id, text, lang FROM (SELECT *, row_number() "
-            "OVER (PARTITION BY md5(lower(trim(text))) ORDER BY doc_id) AS rk "
-            "FROM u) WHERE rk = 1), "
-            f"w AS (SELECT doc_id, lang, text, {_WORDS} AS w FROM k), "
-            "q AS (SELECT doc_id, lang, text, w, len(w) AS n_words, "
-            "CASE WHEN len(w) > 0 THEN round(list_sum(list_transform(w, "
-            "t -> length(t))) / CAST(len(w) AS DOUBLE), 4) ELSE 0.0 END "
-            "AS awl FROM w), "
-            "v AS (SELECT doc_id, lang, text, n_words, awl, "
-            "len(list_filter(w, t -> t IN ('the','a','of','and','to'))) AS v_en, "
-            "len(list_filter(w, t -> t IN ('der','die','das','und','zu'))) AS v_de, "
-            "len(list_filter(w, t -> t IN ('le','la','les','et','de'))) AS v_fr, "
-            "len(list_filter(w, t -> t IN ('el','la','los','y','de'))) AS v_es "
-            "FROM q), "
-            "s AS (SELECT *, greatest(v_en, v_de, v_fr, v_es) AS best FROM v), "
-            # predicted_lang is computed ONCE here; the language-match /
-            # length / word-length gates filter on it one CTE later so a
-            # tie-break edit can never drift between projection and filter
-            "p AS (SELECT doc_id, n_words, awl, lang, text, "
-            "CASE WHEN best = 0 THEN 'und' "
-            "WHEN v_en = best THEN 'en' WHEN v_de = best THEN 'de' "
-            "WHEN v_fr = best THEN 'fr' WHEN v_es = best THEN 'es' "
-            "ELSE 'und' END AS predicted_lang FROM s), "
-            "g AS (SELECT doc_id, n_words, predicted_lang, "
-            "CASE WHEN len(list_filter(string_split(text, chr(10)), "
-            "ln -> ln != '')) > 0 THEN round(1.0 - "
-            "len(list_distinct(list_filter(string_split(text, chr(10)), "
-            "ln -> ln != ''))) / CAST(len(list_filter(string_split(text, "
-            "chr(10)), ln -> ln != '')) AS DOUBLE), 4) ELSE 0.0 END "
-            "AS dup_line_frac, "
-            "CAST(length(regexp_replace(regexp_replace(text, "
-            f"'{textstats.EMAIL_RE}', '<EMAIL>', 'g'), "
-            f"'{textstats.PHONE_RE}', '<PHONE>', 'g')) AS BIGINT) "
-            "AS scrubbed_len, text FROM p "
-            "WHERE n_words >= 30 AND predicted_lang = lang "
-            "AND awl <= 10.0), "
-            f"tok AS (SELECT doc_id, unnest({_WORDS}) AS t FROM g), "
-            "tc AS (SELECT doc_id, t, count(*) AS c FROM tok GROUP BY 1, 2), "
-            "ent AS (SELECT doc_id, sum(c) AS n, sum(c * ln(c)) AS sc "
-            "FROM tc GROUP BY doc_id) "
-            "SELECT g.doc_id, CAST(g.n_words AS BIGINT) AS n_words, "
-            "g.predicted_lang, g.dup_line_frac, g.scrubbed_len, "
-            "coalesce(round(ln(ent.n) - ent.sc / ent.n, 4), 0.0) AS entropy "
-            "FROM g LEFT JOIN ent ON g.doc_id = ent.doc_id "
-            "WHERE g.dup_line_frac <= 0.5 "
-            "AND coalesce(round(ln(ent.n) - ent.sc / ent.n, 4), 0.0) >= 1.0"
         ),
         "minhash_dedup_verified": (
             # LSH recall is 1 at the planted near-dups' Jaccard (≥0.9), so
@@ -2325,82 +1611,6 @@ def oracle_sql() -> dict[str, str]:
             f"CAST(max({c}) AS VARCHAR) AS max_value FROM documents"
             for c in ["doc_id", "lang", "source", "n_chars"]
         ),
-        "split_assignment": _split_oracle(),
-        "sampling_assignments": (
-            "SELECT 'split' AS mode, doc_id, split AS val FROM ("
-            + _split_oracle()
-            + ") UNION ALL SELECT 'stratified' AS mode, doc_id, "
-            "CAST(lang AS VARCHAR) AS val FROM ("
-            + _stratified_oracle()
-            + ")"
-        ),
-        "temperature_sample_ids": _temperature_oracle(),
-        "vocab_top_terms_by_lang": (
-            f"WITH w AS (SELECT lang, unnest({_WORDS}) AS token FROM documents), "
-            "c AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS n "
-            "FROM w GROUP BY lang, token), "
-            "r AS (SELECT lang, token, n, CAST(row_number() OVER "
-            "(PARTITION BY lang ORDER BY n DESC, token ASC) AS BIGINT) AS rank "
-            "FROM c) "
-            "SELECT lang, token, n, rank FROM r WHERE rank <= 10"
-        ),
-        "contamination_overlap": (
-            f"WITH {_CONTAM_EXACT_CTES} "
-            "SELECT b.bench_id, c.corpus_id, b.fingerprint "
-            "FROM b JOIN c USING (fingerprint)"
-        ),
-        "stratified_sample_ids": _stratified_oracle(),
-        "sequence_packing": (
-            "WITH s AS (SELECT doc_id, lang, n_chars, "
-            "CAST(COALESCE(sum(n_chars) OVER (PARTITION BY lang ORDER BY doc_id "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) "
-            "AS st FROM documents) "
-            "SELECT doc_id, lang, n_chars, "
-            "CAST(st // 2048 AS BIGINT) AS start_bin, "
-            "CAST(st % 2048 AS BIGINT) AS start_offset, "
-            "CAST(floor((st + n_chars - 1) / 2048.0) AS BIGINT) AS end_bin "
-            "FROM s"
-        ),
-        "repetition_quality": (
-            "WITH t AS (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x != '') AS w, "
-            "list_filter(string_split(text, chr(10)), x -> x != '') AS lines "
-            "FROM documents), "
-            "g AS (SELECT doc_id, lines, CASE WHEN len(w) >= 2 "
-            "THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) "
-            "ELSE [] END AS grams FROM t), "
-            "c AS (SELECT doc_id, gram, count(*) AS c FROM g, "
-            "UNNEST(grams) AS u(gram) GROUP BY doc_id, gram), "
-            "tp AS (SELECT doc_id, max(c) AS top, sum(c) AS tot FROM c "
-            "GROUP BY doc_id) "
-            "SELECT g.doc_id, CAST(len(lines) AS BIGINT) AS n_lines, "
-            "CASE WHEN len(lines) > 0 THEN round(1.0 - "
-            "len(list_distinct(lines)) / CAST(len(lines) AS DOUBLE), 4) "
-            "ELSE 0.0 END AS dup_line_frac, "
-            "COALESCE(round(top / CAST(tot AS DOUBLE), 4), 0.0) "
-            "AS top_2gram_frac "
-            "FROM g LEFT JOIN tp USING (doc_id)"
-        ),
-        "unigram_entropy": (
-            "WITH t AS (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x != '') AS w FROM documents), "
-            "c AS (SELECT doc_id, word, count(*) AS c FROM t, "
-            "UNNEST(w) AS u(word) GROUP BY doc_id, word), "
-            "a AS (SELECT doc_id, sum(c) AS n, sum(c * ln(c)) AS s FROM c "
-            "GROUP BY doc_id) "
-            "SELECT t.doc_id, CAST(COALESCE(n, 0) AS BIGINT) AS n_words, "
-            "COALESCE(round(ln(n) - s / n, 4), 0.0) AS entropy "
-            "FROM t LEFT JOIN a USING (doc_id)"
-        ),
-        "pii_scrub_counts": (
-            "SELECT doc_id, "
-            f"CAST(len(regexp_extract_all(text, '{textstats.EMAIL_RE}')) "
-            "AS BIGINT) AS n_emails, "
-            f"CAST(len(regexp_extract_all(text, '{textstats.PHONE_RE}')) "
-            "AS BIGINT) AS n_phones, "
-            "CAST(length(regexp_replace(regexp_replace(text, "
-            f"'{textstats.EMAIL_RE}', '<EMAIL>', 'g'), "
-            f"'{textstats.PHONE_RE}', '<PHONE>', 'g')) AS BIGINT) "
-            "AS scrubbed_len FROM documents"
-        ),
         "contamination_near_dup": _contamination_near_dup_oracle(),
         "dedup_clusters": f"""
 WITH RECURSIVE
@@ -2432,14 +1642,6 @@ FROM reach GROUP BY a
     # pipeline (and its O(n²) exact oracle) produces
     d["minhash_dedup_incremental"] = d["minhash_dedup_verified"]
     d["token_dedup_incremental"] = d["token_ngram_dedup_clean"]
-    d["packing_pipelines"] = (
-        "SELECT 'chars' AS mode, lang AS grp, CAST(doc_id AS VARCHAR) AS k, "
-        "CAST(n_chars AS BIGINT) AS length, start_bin, start_offset, "
-        f"end_bin FROM ({d['sequence_packing']}) "
-        "UNION ALL "
-        "SELECT 'dedup_tokens' AS mode, grp, k, length, start_bin, "
-        f"start_offset, end_bin FROM ({_dedup_pack_oracle()})"
-    )
     # both CC strategies produce the identical labeling, so one
     # transitive-closure replay serves both mode tags
     d["cc_strategies"] = (
@@ -2447,30 +1649,10 @@ FROM reach GROUP BY a
         + d["dedup_clusters"]
         + ") t CROSS JOIN (VALUES ('propagate'), ('star')) m(mode)"
     )
-    d["fingerprints"] = (
-        "SELECT 'md5' AS mode, doc_id, fingerprint AS fp_a, '' AS fp_b "
-        f"FROM ({d['doc_fingerprints']}) "
-        "UNION ALL "
-        "SELECT 'rolling' AS mode, doc_id, CAST(rhash AS VARCHAR) AS fp_a, "
-        "CAST(min_kgram_hash AS VARCHAR) AS fp_b "
-        f"FROM ({d['rolling_fingerprints']})"
-    )
     d["drift_tests"] = (
         f"SELECT 'psi' AS mode, lang, psi AS stat FROM ({d['histogram_psi']}) "
         "UNION ALL "
         f"SELECT 'ks' AS mode, lang, ks_d AS stat FROM ({d['drift_ks']})"
-    )
-    d["token_count_modes"] = (
-        "SELECT 'ws' AS mode, doc_id, m.metric, m.value FROM ("
-        + d["token_counts"]
-        + ") t, LATERAL (VALUES ('n_words', t.n_words), "
-        "('n_chars_seen', t.n_chars_seen)) m(metric, value) "
-        "UNION ALL "
-        "SELECT 'bpe' AS mode, doc_id, m.metric, m.value FROM ("
-        + d["subword_token_counts"]
-        + ") t, LATERAL (VALUES ('n_subwords', t.n_subwords), "
-        "('n_alpha', t.n_alpha), ('n_numeric', t.n_numeric)) "
-        "m(metric, value)"
     )
     d["window_ops"] = (
         "SELECT 'running_total' AS mode, CAST(o_custkey AS BIGINT) AS k1, "

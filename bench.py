@@ -54,48 +54,27 @@ HEADLINE = [
     "stats_by_group",
     "quantiles_by_group",
     "histogram_psi",
-    "token_counts",
-    "quality_scores",
-    "lang_id_agreement",
     "dedup_exact_groups",
     "minhash_dedup_verified",
     "minhash_lsh_pairs",
     "simhash_sigs",
-    "rolling_fingerprints",
     "drift_ks",
     "array_mismatch_index",
-    "curation_pipeline",
     "dedup_clusters",
     # round-3 additions (new operators, timed from this round on)
-    "repetition_quality",
-    "unigram_entropy",
-    "pii_scrub_counts",
-    # contamination_near_dup's pipeline is timed inside the
-    # contamination_screen union — listing both would run the
-    # cross-table LSH screen twice per pass
-    "contamination_screen",
     "token_ngram_dup_stats",
     "token_ngram_contamination",
-    "temperature_sample_ids",
     # round-4 additions (new operators, timed from this round on)
     "token_ngram_dedup_clean",
-    # round-5 additions (new operators, timed from this round on)
-    "packing_pipelines",
 ]
 
 # Timed and reported in `queries`, but EXCLUDED from the summed headline
 # `value` so cross-round comparisons of `value` stay apples-to-apples with
 # rounds that predate these workloads (same policy as skew_lsh_dedup).
 VALUE_EXCLUDED = {
-    "repetition_quality",
-    "unigram_entropy",
-    "pii_scrub_counts",
-    "contamination_screen",
     "token_ngram_dup_stats",
     "token_ngram_contamination",
-    "temperature_sample_ids",
     "token_ngram_dedup_clean",
-    "packing_pipelines",
 }
 
 SEQ_RULES = r"""

@@ -3,7 +3,7 @@
 Each kernel runs inside ``mapInArrow`` over the Arrow ListArray's
 offsets/values buffers as NumPy views (zero-copy for non-null primitive
 values) — never Python lists, never per-row loops: MinHash and SimHash
-signatures, rolling and token-window hashes, and span dedup.
+signatures, token-window hashes, and span dedup.
 
 The validation core uses none of them. Its array-equality diagnosis (the
 first mismatching token index) is a native expression,
@@ -193,169 +193,6 @@ def minhash_signatures_from_hashes_mod(
     return src.mapInArrow(compute, out_schema)
 
 
-def _utf8_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(starts, byte_lengths, data, validity) NumPy views of a string array."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    bufs = arr.buffers()
-    off_dt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
-    offsets = np.frombuffer(bufs[1], dtype=off_dt)[
-        arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
-    data = (
-        np.frombuffer(bufs[2], dtype=np.uint8)
-        if bufs[2] is not None
-        else np.empty(0, dtype=np.uint8)
-    )
-    starts, lengths = offsets[:-1], offsets[1:] - offsets[:-1]
-    if arr.null_count:
-        validity = np.asarray(arr.is_valid())
-    else:
-        validity = np.ones(len(arr), dtype=bool)
-    return starts, lengths, data, validity
-
-
-def rolling_hash_kernel(
-    texts: pa.Array,
-    k: int,
-    base: int = 31,
-    mod: int = 2147483647,
-    seed: int = 7,
-) -> tuple[np.ndarray, np.ndarray]:
-    """(whole, min_kgram) polynomial rolling hashes per string row.
-
-    whole[i]     = fold h -> (h*base + code) % mod over all codepoints,
-                   starting from `seed` (the Rabin-Karp document hash).
-    min_kgram[i] = min over all k-codepoint windows of the same fold
-                   (winnowing-style fingerprint); rows shorter than k fall
-                   back to `whole`.
-
-    True O(n) vectorization — no per-window refold: the closed form
-    h = seed*base^n + sum(code_j * base^(n-1-j)) (mod m) turns the whole-doc
-    hash into one aligned-powers product + segment sum, and the k-gram
-    hashes into k shifted vector products. This replaces the pure-SQL form
-    that re-folded every k-gram with an interpreted HOF `aggregate` over a
-    per-character `slice` — O(n*k) interpreted ops per row, the hottest
-    loop of the near-dup screen at corpus scale.
-
-    Codepoints: ASCII batches take the zero-copy byte path (byte == code-
-    point); a batch containing any multibyte UTF-8 decodes per row (the
-    rare path — kept for correctness parity with Spark/DuckDB `ascii()`
-    semantics on BMP text).
-    """
-    starts, blens, data, validity = _utf8_views(texts)
-    n = len(blens)
-    m = np.uint64(mod)
-    if n == 0:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    lo, hi = int(starts[0]), int(starts[-1] + blens[-1])
-    region = data[lo:hi]
-    if len(region) and (region >= 0x80).any():
-        codes_list = []
-        for i in range(n):
-            if not validity[i]:
-                codes_list.append(np.empty(0, dtype=np.uint64))
-                continue
-            raw = data[starts[i] : starts[i] + blens[i]].tobytes()
-            s = raw.decode("utf-8")
-            codes_list.append(
-                np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(
-                    np.uint64
-                )
-            )
-        clens = np.array([len(c) for c in codes_list], dtype=np.int64)
-        flat = (
-            np.concatenate(codes_list)
-            if clens.sum()
-            else np.empty(0, dtype=np.uint64)
-        )
-    elif validity.all():
-        clens = blens
-        flat = region.astype(np.uint64)
-    else:
-        keep = np.repeat(validity, blens)
-        clens = np.where(validity, blens, 0)
-        flat = region[keep].astype(np.uint64)
-
-    total = int(clens.sum())
-    rstart = np.zeros(n, dtype=np.int64)
-    np.cumsum(clens[:-1], out=rstart[1:])
-    maxlen = int(clens.max()) if n else 0
-    # powers of `base` mod `mod` (base*P < 2^36 — no overflow)
-    P = np.empty(max(maxlen, k) + 2, dtype=np.uint64)
-    P[0] = 1
-    b64 = np.uint64(base)
-    for j in range(1, len(P)):
-        P[j] = P[j - 1] * b64 % m
-
-    seed64 = np.uint64(seed % mod)
-    whole = np.full(n, seed64, dtype=np.uint64)
-    mink = whole.copy()
-    nonempty = clens > 0
-    if total == 0:
-        return whole.astype(np.int64), mink.astype(np.int64)
-
-    row_of = np.repeat(np.arange(n), clens)
-    pos = np.arange(total) - rstart[row_of]
-    expo = clens[row_of] - 1 - pos
-    # terms < mod^2 < 2^62; per-term mod keeps the segment sum < len*2^31
-    terms = (flat % m) * P[expo] % m
-    sums = np.add.reduceat(terms, rstart[nonempty])
-    whole[nonempty] = (P[clens[nonempty]] * seed64 % m + sums) % m
-    mink = whole.copy()
-
-    if total >= k and (clens >= k).any():
-        nw = total - k + 1
-        fm = flat % m
-        W = np.zeros(nw, dtype=np.uint64)
-        for j in range(k):
-            W += fm[j : j + nw] * P[k - 1 - j] % m  # k terms, each < mod
-        kh = (seed64 * P[k] % m + W) % m
-        BIG = np.uint64(1) << np.uint64(62)
-        kh_full = np.full(total, BIG, dtype=np.uint64)
-        valid_w = pos[:nw] <= (clens[row_of[:nw]] - k)
-        np.copyto(kh_full[:nw], kh, where=valid_w)
-        mins = np.minimum.reduceat(kh_full, rstart[nonempty])
-        tmp = np.full(n, BIG, dtype=np.uint64)
-        tmp[nonempty] = mins
-        mink = np.where(clens >= k, tmp, whole)
-    return whole.astype(np.int64), mink.astype(np.int64)
-
-
-def rolling_hashes_arrow(
-    df: DataFrame,
-    text_col: str,
-    id_col: str = "doc_id",
-    k: int = 8,
-    base: int = 31,
-    mod: int = 2147483647,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, rhash, min_kgram_hash) via the vectorized rolling-hash kernel."""
-    id_field = df.schema[id_col]
-    out_schema = (
-        f"{id_col} {id_field.dataType.simpleString()}, "
-        "rhash bigint, min_kgram_hash bigint"
-    )
-    src = df.select(F.col(id_col), F.col(text_col).alias("_t"))
-
-    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            whole, mk = rolling_hash_kernel(
-                batch.column("_t"), k, base, mod, seed
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(id_col),
-                    pa.array(whole, type=pa.int64()),
-                    pa.array(mk, type=pa.int64()),
-                ],
-                names=[id_col, "rhash", "min_kgram_hash"],
-            )
-
-    return src.mapInArrow(compute, out_schema)
-
-
 def token_window_hash_kernel(
     tokens: pa.Array,
     k: int,
@@ -366,13 +203,13 @@ def token_window_hash_kernel(
     """All k-token polynomial window hashes per row of a list<int> column.
 
     win[i][j] = (seed*base^k + sum_t tok[i][j+t] * base^(k-1-t)) % mod —
-    the Rabin-Karp k-gram fingerprint over TOKEN values (the text-side
-    sibling is rolling_hash_kernel's min_kgram, which keeps only the
-    minimum; token-level dedup needs every window so coverage can be
-    attributed back to positions).
+    the Rabin-Karp k-gram fingerprint over TOKEN values. Token-level dedup
+    needs every window, not only the minimum, so coverage can be
+    attributed back to positions.
 
     One vectorized pass, no per-window refold: k shifted products over the
-    flat token buffer (the same closed form rolling_hash_kernel uses).
+    flat token buffer, from the closed form
+    h = seed*base^k + sum(tok_j * base^(k-1-j)) (mod m).
     Negative tokens take Python/NumPy floor-mod semantics — an SQL replay
     must spell ((t % m) + m) % m if its %% truncates (DuckDB does).
 

@@ -26,7 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import words
+
+def words(text: Column) -> Column:
+    """Whitespace tokenization; empty string -> empty array (SQL-portable)."""
+    return F.filter(F.split(text, r"\s+"), lambda w: w != "")
 
 
 def _ordered_pair_expr(ids: Column, a_name: str, b_name: str) -> Column:
@@ -623,10 +626,9 @@ def cross_table_lsh_pairs(
     out_b: str = "bench_id",
 ) -> DataFrame:
     """FUZZY decontamination screen: (corpus_id, bench_id) candidate
-    near-dup pairs ACROSS two tables via portable MinHash banding — the
-    near-dup complement to the exact-fingerprint screen
-    (textstats.cross_table_overlap), catching lightly-edited benchmark
-    leaks an exact hash misses.
+    near-dup pairs ACROSS two tables via portable MinHash banding,
+    catching lightly-edited benchmark leaks that an exact hash of the
+    text misses.
 
     Cross-table banding is a plain equi-join on (band, key), never a
     corpus × bench product; the benchmark side is orders of magnitude
@@ -842,9 +844,8 @@ def token_ngram_contamination(
 ) -> DataFrame:
     """Token-level decontamination screen: for every corpus document,
     the share of its k-token windows that appear ANYWHERE in the
-    benchmark table — the tokens-column sibling of the text screens
-    (exact fingerprints in textstats.cross_table_overlap, fuzzy MinHash
-    in cross_table_lsh_pairs), catching eval leaks that survive
+    benchmark table — the tokens-column sibling of the fuzzy text screen
+    (cross_table_lsh_pairs), catching eval leaks that survive
     re-tokenization boundary shifts worse than whole-doc hashes do.
 
     Returns one row per distinct corpus id: (id, n_windows,
@@ -854,7 +855,7 @@ def token_ngram_contamination(
     Scale shape: both sides go through the same single-pass window-hash
     + per-doc pair-count kernel (token_window_pair_counts_arrow). The
     benchmark reduces to its DISTINCT window hashes and is broadcast —
-    a benchmark is small by nature (same contract as the text screens);
+    a benchmark is small by nature (same contract as cross_table_lsh_pairs);
     for a benchmark too large to broadcast, drop the hint and AQE plans
     the h-keyed shuffle join. The corpus side never shuffles its window
     stream: the flag join is map-side, and the per-doc rollup

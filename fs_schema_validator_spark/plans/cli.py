@@ -91,7 +91,8 @@ def build_parser() -> argparse.ArgumentParser:
     v.add_argument("--group", default=None, help="print per-group summary on this column")
     v.add_argument("--verbose", "-v", action="store_true")
     v.add_argument("--max-print", type=int, default=50,
-                   help="max violation subjects to print")
+                   help="max violation subjects to print (the exit code "
+                   "counts every violation)")
     pr = sub.add_parser("profile", help="one-pass column profile of a table")
     pr.add_argument(
         "--table",
@@ -112,6 +113,9 @@ def cmd_validate(args: argparse.Namespace) -> int:
             "$VALIDATION_ROOT_DIR)",
             file=sys.stderr,
         )
+        return 2
+    if args.max_print < 0:
+        print(f"--max-print must be >= 0, got {args.max_print}", file=sys.stderr)
         return 2
     try:
         aux = _parse_aux(args.aux)
@@ -170,17 +174,16 @@ def cmd_validate(args: argparse.Namespace) -> int:
         for row in result.ok_subjects().limit(args.max_print).collect():
             print(f"✅ {row.subject}")
 
-    grouped = result.grouped_by_subject().limit(args.max_print).collect()
-    if not grouped:
+    if result.okay():
         if args.verbose:
             print("all rules passed")
-        return 0
-    print()
-    for row in grouped:
-        print(f"❗️ {row.subject}")
-        for reason in row.reasons:
-            print(f"     - {reason}")
-    return 1
+    else:
+        print()
+        for row in result.grouped_by_subject().limit(args.max_print).collect():
+            print(f"❗️ {row.subject}")
+            for reason in row.reasons:
+                print(f"     - {reason}")
+    return result.exit_code()
 
 
 def cmd_profile(args: argparse.Namespace) -> int:

@@ -8,10 +8,11 @@ manifest is a small table of per-partition validation records:
      snapshot_id string, validated_at timestamp)
 
 A partition is skipped when a manifest row exists with the same
-(partition, rules_hash, snapshot_id): same data snapshot + same rule set ⇒
-same verdict. `snapshot_id` is the input's lineage handle — on Iceberg it is
-the table's snapshot id (exact, transaction-consistent); the parquet-backed
-fallback here uses a caller-supplied token (e.g. an ETL batch id) or "-".
+(partition, rules_hash, snapshot_id, engine_version): same data snapshot +
+same rule set + same engine ⇒ same verdict. `snapshot_id` is the input's
+lineage handle — on Iceberg it is the table's snapshot id (exact,
+transaction-consistent); the parquet-backed fallback here uses a
+caller-supplied token (e.g. an ETL batch id) or "-".
 
 Storage is parquet-append via an abstract store so the Iceberg runtime
 (absent in this container) can be swapped in: with Iceberg the manifest is
@@ -106,6 +107,7 @@ class ResumableValidator:
             .filter(
                 (F.col("rules_hash") == rh)
                 & (F.col("snapshot_id") == snapshot_id)
+                & (F.col("engine_version") == __version__)
             )
             .select("partition")
             .collect()

@@ -123,56 +123,6 @@ def test_minhash_kernel_deterministic_and_monotone():
     assert (s1[3] == -1).all()
 
 
-# ---------------------------------------------------------------------------
-# rolling-hash kernel
-
-
-def _naive_rolling(s: str, k: int = 8, base: int = 31, mod: int = 2147483647, seed: int = 7):
-    def fold(codes):
-        h = seed
-        for c in codes:
-            h = (h * base + c) % mod
-        return h
-
-    codes = [ord(c) for c in s]
-    whole = fold(codes)
-    if len(codes) < k:
-        return whole, whole
-    return whole, min(fold(codes[i : i + k]) for i in range(len(codes) - k + 1))
-
-
-def test_rolling_hash_kernel_matches_naive_fold():
-    from fs_schema_validator_spark.functions.arrays import rolling_hash_kernel
-
-    texts = [
-        "",
-        "a",
-        "abcdefg",          # exactly k-1
-        "abcdefgh",         # exactly k
-        "the quick brown fox jumps over the lazy dog",
-        "aaaaaaaaaaaaaaaa",
-        None,
-        "x" * 300 + "y" + "x" * 300,
-    ]
-    whole, mink = rolling_hash_kernel(pa.array(texts, type=pa.string()), k=8)
-    for i, t in enumerate(texts):
-        if t is None:
-            assert whole[i] == 7 and mink[i] == 7  # null ~ empty (seed)
-            continue
-        w, m = _naive_rolling(t)
-        assert (whole[i], mink[i]) == (w, m), t
-
-
-def test_rolling_hash_kernel_non_ascii_uses_codepoints():
-    from fs_schema_validator_spark.functions.arrays import rolling_hash_kernel
-
-    texts = ["héllo wörld, ça va? ééééééé", "plain ascii text here"]
-    whole, mink = rolling_hash_kernel(pa.array(texts, type=pa.string()), k=8)
-    for i, t in enumerate(texts):
-        w, m = _naive_rolling(t)
-        assert (whole[i], mink[i]) == (w, m), t
-
-
 def test_simhash_kernel_matches_naive_votes():
     from fs_schema_validator_spark.functions.arrays import simhash_kernel
 

@@ -81,6 +81,16 @@ def test_rule_change_revalidates(spark, validator):
     assert len(validator.pending_partitions(seq, changed, "snapA")) == 4
 
 
+def test_engine_version_change_revalidates(spark, validator, monkeypatch):
+    from fs_schema_validator_spark.streaming import checkpoint
+
+    seq = synth.gen_sequences(spark, 40)
+    validator.run(seq, RULES, snapshot_id="snapA")
+    assert validator.pending_partitions(seq, RULES, "snapA") == []
+    monkeypatch.setattr(checkpoint, "__version__", "0.1.0+next")
+    assert len(validator.pending_partitions(seq, RULES, "snapA")) == 4
+
+
 def test_manifest_records_lineage(spark, validator):
     seq = synth.gen_sequences(spark, 40)
     validator.run(seq, RULES, snapshot_id="snapZ")
@@ -135,6 +145,15 @@ def test_cli_exit_codes(spark, tmp_path, capsys):
     assert written.count() > 0
 
     assert main(["validate", "--rules", str(rules_bad), "--table", table]) == 127
+
+    # the exit code is the verdict, not the printed rows: printing none
+    # still fails, and a negative print limit is a usage error
+    capsys.readouterr()
+    fail = ["validate", "--rules", str(rules_fail), "--table", table]
+    assert main(fail + ["--max-print", "0"]) == 1
+    assert "❗️" not in capsys.readouterr().out
+    assert main(fail + ["--max-print", "-1"]) == 2
+    assert "--max-print" in capsys.readouterr().err
 
 
 def test_cli_validates_a_catalog_table_by_name(spark, tmp_path, capsys):

@@ -1,10 +1,10 @@
 """The driver's registries agree with each other, checked without Spark.
 
-`queries()` and `oracle_sql()` must name the same entries, and every query
-that `bench.py` times or excludes, or that `tools/plan_audit.py` audits,
-must exist. Both scripts are read with `ast`, not imported: they edit
-`sys.path` and start Spark or import the benchmark's own dependencies at
-module level."""
+`queries()` and `oracle_sql()` must name the same entries, `queries()`
+must fit the driver's window, and every query that `bench.py` times or
+excludes, or that `tools/plan_audit.py` audits, must exist. Both scripts
+are read with `ast`, not imported: they edit `sys.path` and start Spark or
+import the benchmark's own dependencies at module level."""
 
 from __future__ import annotations
 
@@ -14,6 +14,9 @@ from pathlib import Path
 import __spark_entry__ as entrymod
 
 REPO = Path(__file__).resolve().parent.parent
+
+# the driver gates only the first 50 entries of `queries()`
+DRIVER_WINDOW = 50
 
 
 def _bench_names(var: str) -> list[str]:
@@ -31,6 +34,10 @@ def _bench_names(var: str) -> list[str]:
 
 def test_every_query_has_an_oracle_and_every_oracle_a_query():
     assert set(entrymod.queries()) == set(entrymod.oracle_sql())
+
+
+def test_every_query_is_inside_the_driver_window():
+    assert len(entrymod.queries()) <= DRIVER_WINDOW
 
 
 def test_bench_names_only_registered_queries():

@@ -11,43 +11,12 @@ from hypothesis import strategies as st
 
 from fs_schema_validator_spark.functions.arrays import (
     minhash_mix_mod_kernel,
-    rolling_hash_kernel,
     simhash_kernel,
 )
 from fs_schema_validator_spark.operators.dedup import (
     MH31_MOD,
     minhash31_constants,
 )
-
-# printable-ish text incl. whitespace runs and BMP non-ASCII
-_text = st.text(
-    alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x2FF),
-    max_size=60,
-)
-
-
-def _naive_poly(codes, k=None, base=31, mod=2147483647, seed=7):
-    h = seed
-    for c in codes:
-        h = (h * base + c) % mod
-    return h
-
-
-@settings(max_examples=60, deadline=None)
-@given(st.lists(st.one_of(st.none(), _text), min_size=1, max_size=25))
-def test_rolling_hash_kernel_property(texts):
-    whole, mink = rolling_hash_kernel(pa.array(texts, type=pa.string()), k=4)
-    for i, t in enumerate(texts):
-        codes = [] if t is None else [ord(c) for c in t]
-        w = _naive_poly(codes)
-        assert whole[i] == w, (t, whole[i], w)
-        if len(codes) < 4:
-            assert mink[i] == w
-        else:
-            m = min(
-                _naive_poly(codes[j : j + 4]) for j in range(len(codes) - 3)
-            )
-            assert mink[i] == m, t
 
 
 @settings(max_examples=60, deadline=None)
@@ -109,17 +78,6 @@ def test_minhash_constants_are_deterministic_and_valid():
     assert c1 == c2
     assert all(1 <= a < MH31_MOD and 0 <= b < MH31_MOD for a, b in c1)
     assert len({a for a, _ in c1}) > 60  # no degenerate repeats
-
-
-def test_rolling_hash_kernel_sliced_array():
-    """Kernels must honor pa.Array offsets (sliced record batches)."""
-    texts = ["aaaa", "bbbb", "cccc", "dddd"]
-    full = pa.array(texts, type=pa.string())
-    sliced = full.slice(1, 2)
-    w_full, m_full = rolling_hash_kernel(full, k=2)
-    w_sl, m_sl = rolling_hash_kernel(sliced, k=2)
-    assert list(w_sl) == list(w_full[1:3])
-    assert list(m_sl) == list(m_full[1:3])
 
 
 def test_list_kernels_honor_sliced_arrays():

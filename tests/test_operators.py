@@ -1,5 +1,6 @@
-"""Operator tests: dedup recall on planted near-dups, text
-stats, sampling, graph clustering, KS drift."""
+"""Operator tests: dedup recall on planted near-dups, token-window
+dedup and decontamination, graph clustering, KS/PSI drift, table
+loading and profiling."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fs_schema_validator_spark.engine import ValidationEngine
-from fs_schema_validator_spark.operators import dedup, textstats
+from fs_schema_validator_spark.operators import dedup
 
 WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -123,33 +124,6 @@ def test_simhash_near_dups_collide(docs):
     assert hits >= 3
 
 
-def test_quality_and_tokens(spark):
-    df = spark.createDataFrame(
-        [(1, "the cat sat on a mat"), (2, ""), (3, "  spaced   out  ")],
-        "doc_id bigint, text string",
-    )
-    tc = {r.doc_id: r.n_words for r in textstats.token_count(df).collect()}
-    assert tc == {1: 6, 2: 0, 3: 2}
-    q = {r.doc_id: r for r in textstats.quality_features(df).collect()}
-    assert q[1].stopword_ratio == pytest.approx(2 / 6, abs=1e-4)
-    assert q[2].avg_word_len == 0.0
-
-
-def test_lang_id(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the cat and the dog of a house", "en"),
-            (2, "der hund und die katze zu haus", "de"),
-            (3, "xyzzy plugh", "en"),
-        ],
-        "doc_id bigint, text string, lang string",
-    )
-    got = {r.doc_id: r.predicted_lang for r in textstats.lang_id(df).collect()}
-    assert got[1] == "en"
-    assert got[2] == "de"
-    assert got[3] == "und"
-
-
 def test_skewed_source_distribution(spark):
     from fs_schema_validator_spark.sources import synth
 
@@ -223,34 +197,6 @@ def test_bucketed_equality_join_has_no_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS bkt_reference")
 
 
-def test_subword_token_count(spark):
-    df = spark.createDataFrame(
-        [(1, "It's 42 degrees, really!"), (2, "")],
-        "doc_id bigint, text string",
-    )
-    out = {r.doc_id: r for r in textstats.subword_token_count(df).collect()}
-    # It | 's | _42 | _degrees | , | _really | !
-    assert out[1].n_subwords == 7
-    assert out[1].n_alpha == 3  # It, degrees, really ('s is a contraction)
-    assert out[1].n_numeric == 1
-    assert out[2].n_subwords == 0
-
-
-def test_rolling_hashes(spark):
-    df = spark.createDataFrame(
-        [(1, "abcdefghij"), (2, "XXabcdefghij"), (3, "ab"), (4, "")],
-        "doc_id bigint, text string",
-    )
-    out = {r.doc_id: r for r in textstats.rolling_hashes(df, k=8).collect()}
-    # the min 8-gram fingerprint survives a prefix edit; the whole-doc
-    # polynomial hash does not
-    assert out[1].min_kgram_hash == out[2].min_kgram_hash
-    assert out[1].rhash != out[2].rhash
-    # short docs fall back to the whole-document hash
-    assert out[3].min_kgram_hash == out[3].rhash
-    assert out[4].rhash == 7  # empty text -> seed
-
-
 def test_load_table_format_dispatch(spark, tmp_path):
     from fs_schema_validator_spark.sources import synth, tables
 
@@ -301,18 +247,6 @@ def test_simhash_strategies_agree(docs):
     }
     assert arrow == sql
     assert all(s >= 0 for s in arrow.values())
-
-
-def test_rolling_hash_strategies_agree(docs):
-    arrow = {
-        r.doc_id: (r.rhash, r.min_kgram_hash)
-        for r in textstats.rolling_hashes(docs, k=8).collect()
-    }
-    sql = {
-        r.doc_id: (r.rhash, r.min_kgram_hash)
-        for r in textstats.rolling_hashes(docs, k=8, strategy="sql").collect()
-    }
-    assert arrow == sql
 
 
 def test_lsh_bucket_cap_bounds_hot_buckets(spark):
@@ -421,105 +355,6 @@ def test_table_profile_exact_and_approx(spark):
     # approx mode: same shape, distinct within HLL tolerance on tiny input
     approx = {r.col_name: r for r in profile.table_profile(df).collect()}
     assert approx["id"].n_distinct == 4
-
-
-def test_hash_split_is_deterministic_and_partition_invariant(spark):
-    from fs_schema_validator_spark.operators import sampling
-
-    df = spark.range(2000).select(F.col("id").alias("doc_id"))
-    w = {"train": 8, "val": 1, "test": 1}
-    a = {r.doc_id: r.split for r in sampling.hash_split(df, "doc_id", w).collect()}
-    b = {
-        r.doc_id: r.split
-        for r in sampling.hash_split(df.repartition(13), "doc_id", w).collect()
-    }
-    assert a == b  # pure function of the id: repartitioning can't move rows
-    from collections import Counter
-
-    counts = Counter(a.values())
-    assert set(counts) == {"train", "val", "test"}
-    assert 0.75 < counts["train"] / 2000 < 0.85  # ~8/10 within tolerance
-    # a different salt reshuffles the assignment
-    c = {
-        r.doc_id: r.split
-        for r in sampling.hash_split(df, "doc_id", w, salt="v2").collect()
-    }
-    assert c != a
-
-
-def test_pack_offsets_concat_and_chop(spark):
-    from fs_schema_validator_spark.operators import sampling
-
-    df = spark.createDataFrame(
-        [(1, "g", 100), (2, "g", 50), (3, "g", 120), (4, "h", 300)],
-        "doc_id bigint, grp string, n bigint",
-    )
-    got = {
-        r.doc_id: (r.start_bin, r.start_offset, r.end_bin)
-        for r in sampling.pack_offsets(
-            df, "n", capacity=128, group_cols=["grp"], order_col="doc_id"
-        ).collect()
-    }
-    # g: doc1 [0,100) bin0; doc2 [100,150) straddles 0->1; doc3 [150,270)
-    # bins 1->2; h restarts at 0: [0,300) bins 0->2
-    assert got == {
-        1: (0, 0, 0),
-        2: (0, 100, 1),
-        3: (1, 22, 2),
-        4: (0, 0, 2),
-    }
-
-
-def test_vocab_top_terms_global_and_grouped(spark):
-    df = spark.createDataFrame(
-        [(1, "a", "x x x y"), (2, "a", "x z"), (3, "b", "q q y")],
-        "doc_id bigint, lang string, text string",
-    )
-    top = [(r.token, r.n) for r in textstats.vocab_top_terms(df, k=2).collect()]
-    assert top == [("x", 4), ("q", 2)]  # q beats y on the tie via token asc
-    by_lang = {
-        (r.lang, r.rank): (r.token, r.n)
-        for r in textstats.vocab_top_terms(df, k=2, group_col="lang").collect()
-    }
-    assert by_lang[("a", 1)] == ("x", 4)
-    assert by_lang[("b", 1)] == ("q", 2)
-
-
-def test_cross_table_overlap_finds_exact_leaks(spark):
-    corpus = spark.createDataFrame(
-        [(1, "The Answer"), (2, "other text"), (3, "the answer  ")],
-        "doc_id bigint, text string",
-    )
-    bench = spark.createDataFrame(
-        [(100, "the answer"), (101, "unseen eval item")],
-        "doc_id bigint, text string",
-    )
-    got = {
-        (r.bench_id, r.corpus_id)
-        for r in textstats.cross_table_overlap(corpus, bench).collect()
-    }
-    assert got == {(100, 1), (100, 3)}  # normalization catches case/trim
-
-
-def test_stratified_sample_rate_and_determinism(spark):
-    from fs_schema_validator_spark.operators import sampling
-
-    df = spark.createDataFrame(
-        [(i, "g1" if i % 2 else "g2") for i in range(3000)],
-        "doc_id bigint, lang string",
-    )
-    s1 = {r.doc_id for r in sampling.stratified_sample(df, "doc_id", 30, ["lang"]).collect()}
-    s2 = {
-        r.doc_id
-        for r in sampling.stratified_sample(
-            df.repartition(17), "doc_id", 30, ["lang"]
-        ).collect()
-    }
-    assert s1 == s2
-    per_g = [
-        sum(1 for d in s1 if d % 2 == r) / 1500 for r in (0, 1)
-    ]
-    assert all(0.25 < frac < 0.35 for frac in per_g), per_g
 
 
 def test_psi_full_grid_catches_concentrated_drift(spark):
@@ -649,38 +484,6 @@ def test_minhash_oracle_agrees_on_null_and_empty_text(spark, tmp_path):
     assert not ({100, 101, 102} & {x for p in got for x in p})
 
 
-def test_stratified_sample_null_group_and_delimiter(spark):
-    """Null group values and '|' inside values must not alias strata
-    (ADVICE r2: concat_ws silently skips nulls; raw '|' collides). The
-    hash input encodes each group part as 'n' | 'v'+md5(value); this
-    replays the exact membership in pure Python."""
-    import hashlib
-
-    from fs_schema_validator_spark.operators import sampling
-
-    rows = [(i, None if i % 3 == 0 else ("a|b" if i % 3 == 1 else "a"))
-            for i in range(600)]
-    df = spark.createDataFrame(rows, "doc_id bigint, lang string")
-    got = {r.doc_id for r in
-           sampling.stratified_sample(df, "doc_id", 20, ["lang"]).collect()}
-
-    def enc(lang):
-        if lang is None:
-            return "n"
-        return "v" + hashlib.md5(lang.encode()).hexdigest()
-
-    expect = set()
-    for i, lang in rows:
-        payload = f"sample|{enc(lang)}|{i}"
-        h = int(hashlib.md5(payload.encode()).hexdigest()[:15], 16)
-        if h % 100 < 20:
-            expect.add(i)
-    assert got == expect
-    # every stratum (incl. the null one) is represented
-    for r in (0, 1, 2):
-        assert any(i % 3 == r for i in got), f"stratum {r} empty"
-
-
 def test_parity_tool_rejects_complex_output_columns(spark):
     """tools/oracle_parity.py must reproduce the driver's failure mode on
     array-typed output cells (round-2's skew_salted_stats escape)."""
@@ -789,71 +592,9 @@ def test_hot_bucket_cap_keeps_planted_cluster_connected(spark):
     release_all()
 
 
-def test_repetition_features_flags_boilerplate(spark):
-    """Planted: a templated doc (repeated lines + dominant 2-gram) vs a
-    varied doc; Gopher-style signals must separate them."""
-    boiler = "buy now click here\nbuy now click here\nbuy now click here"
-    varied = "alpha bravo charlie delta\necho foxtrot golf hotel"
-    df = spark.createDataFrame(
-        [(1, boiler), (2, varied), (3, ""), (4, "single")],
-        "doc_id bigint, text string",
-    )
-    got = {r.doc_id: r for r in textstats.repetition_features(df).collect()}
-    assert got[1].n_lines == 3
-    assert got[1].dup_line_frac == pytest.approx(1 - 1 / 3, abs=1e-4)
-    # "buy now"/"now click"/"click here" each appear 3x of 9+2... the top
-    # 2-gram share: 12 grams total per line boundarylessness — compute:
-    # words = 12, grams = 11; "now click" appears 3x -> but "here buy"
-    # crosses lines (split is on whitespace incl newline) 2x; top=3
-    assert got[1].top_2gram_frac == pytest.approx(3 / 11, abs=1e-4)
-    assert got[2].dup_line_frac == 0.0
-    assert got[2].top_2gram_frac == pytest.approx(1 / 7, abs=1e-4)
-    assert got[3].n_lines == 0 and got[3].top_2gram_frac == 0.0
-    assert got[4].top_2gram_frac == 0.0  # <2 words -> no grams
-
-
-def test_unigram_entropy_extremes(spark):
-    import math
-
-    df = spark.createDataFrame(
-        [
-            (1, "same same same same"),          # entropy 0
-            (2, "a b c d"),                      # uniform: ln(4)
-            (3, ""),                             # empty: 0
-            (4, "x x y"),                        # 2/3,1/3 mix
-        ],
-        "doc_id bigint, text string",
-    )
-    got = {r.doc_id: (r.n_words, r.entropy) for r in textstats.unigram_entropy(df).collect()}
-    assert got[1] == (4, 0.0)
-    assert got[2] == (4, round(math.log(4), 4))
-    assert got[3] == (0, 0.0)
-    expected = -(2 / 3) * math.log(2 / 3) - (1 / 3) * math.log(1 / 3)
-    assert got[4] == (3, round(expected, 4))
-
-
-def test_pii_scrub_counts_and_replacement(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "contact me at jane.doe+x@example.org or bob@test.io"),
-            (2, "call +1 (555) 123-4567 today"),
-            (3, "no pii here"),
-        ],
-        "doc_id bigint, text string",
-    )
-    got = {r.doc_id: r for r in textstats.pii_scrub(df).collect()}
-    assert got[1].n_emails == 2 and got[1].n_phones == 0
-    assert got[2].n_phones == 1 and got[2].n_emails == 0
-    assert got[3].n_emails == 0 and got[3].n_phones == 0
-    # scrubbed length reflects tag substitution
-    assert got[3].scrubbed_len == len("no pii here")
-    assert got[2].scrubbed_len == len("call <PHONE> today")
-
-
 def test_cross_table_lsh_catches_edited_benchmark_leak(spark):
     """A one-word-edited copy of a benchmark doc must surface in the
-    fuzzy cross-table screen while the exact-fingerprint screen misses
-    it; clean docs must not pair."""
+    fuzzy cross-table screen, as must the exact copies."""
     corpus_rows = [(i, _doc(i)) for i in range(20)]
     corpus_rows.append((50, _doc(3, mutate=10)))  # edited leak of bench doc
     corpus = spark.createDataFrame(corpus_rows, "doc_id bigint, text string")
@@ -866,11 +607,6 @@ def test_cross_table_lsh_catches_edited_benchmark_leak(spark):
     }
     assert (50, 903) in fuzzy          # edited leak caught
     assert (3, 903) in fuzzy and (7, 907) in fuzzy  # exact copies too
-    exact = {
-        (r.corpus_id, r.bench_id)
-        for r in textstats.cross_table_overlap(corpus, bench).collect()
-    }
-    assert (50, 903) not in exact      # the case exact fingerprints miss
 
 
 def test_token_ngram_dup_stats_planted_and_degenerate(spark):
@@ -1062,84 +798,6 @@ def test_token_ngram_contamination_oracle_parity():
     want = sorted(
         tuple(r)
         for r in con.sql(entrymod._token_contamination_oracle()).fetchall()
-    )
-    assert got == want
-
-
-def test_temperature_sample_properties(spark):
-    """Temperature mixing semantics: alpha=1 reduces to a uniform
-    target_frac for every group; alpha=0 splits the budget equally
-    across groups so the small group caps at full inclusion; the keep
-    decision is deterministic; null-group rows form their own stratum."""
-    from fs_schema_validator_spark.operators.sampling import (
-        temperature_sample,
-    )
-
-    rows = [(f"a{i}", "cc", 100) for i in range(900)]
-    rows += [(f"b{i}", "books", 100) for i in range(60)]
-    rows += [(f"n{i}", None, 100) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id string, lang string, w int")
-
-    # alpha=1: every group's keep_rate is exactly target_frac
-    out1 = temperature_sample(df, "lang", "w", alpha=1.0, target_frac=0.4)
-    rates = {r.lang: r.keep_rate for r in out1.collect()}
-    assert set(rates.values()) == {0.4}
-    n1 = out1.count()
-    assert 0.3 * 1000 < n1 < 0.5 * 1000     # ~400 of 1000 kept
-
-    # alpha=0: budget splits equally over the 3 strata (incl. the null
-    # one) -> the small groups' rates cap at 1.0, the big one shrinks
-    out0 = temperature_sample(df, "lang", "w", alpha=0.0, target_frac=0.5)
-    r0 = {r.lang: r.keep_rate for r in out0.collect()}
-    assert r0["books"] == 1.0 and r0[None] == 1.0
-    assert 0 < r0["cc"] < 0.5
-    # every books/null row is kept (rate 1.0)
-    assert out0.filter(F.col("lang").isNull()).count() == 40
-    assert out0.filter(F.col("lang") == "books").count() == 60
-
-    # deterministic: identical kept sets across runs
-    ids = lambda d: sorted(r.doc_id for r in d.collect())
-    assert ids(out0) == ids(
-        temperature_sample(df, "lang", "w", alpha=0.0, target_frac=0.5)
-    )
-
-
-def test_temperature_sample_degenerate_groups_cross_engine(spark):
-    """Zero-weight and all-NULL-weight groups get rate 0.0 (no ANSI
-    divide-by-zero abort, no least(1.0, NULL) full inclusion), and
-    null-id rows are excluded — verified CROSS-ENGINE against the real
-    oracle SQL on the same hostile fixture."""
-
-    import duckdb
-    import pandas as pd
-
-    import __spark_entry__ as entrymod
-    from fs_schema_validator_spark.operators.sampling import (
-        temperature_sample,
-    )
-
-    rows = [(f"a{i}", "en", 100) for i in range(30)]
-    rows += [(f"z{i}", "zero", 0) for i in range(5)]    # zero weight
-    rows += [(f"m{i}", "nullw", None) for i in range(5)]  # null weights
-    rows += [(None, "en", 100)]                          # null id
-    df = spark.createDataFrame(rows, "doc_id string, lang string, n_chars int")
-    got = sorted(
-        tuple(r)
-        for r in temperature_sample(
-            df, "lang", "n_chars", alpha=0.7, target_frac=0.5
-        ).collect()
-    )
-    # no zero/nullw/null-id rows survive
-    assert all(v[1] == "en" for v in got)
-    assert all(v[0] is not None for v in got)
-
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame(rows, columns=["doc_id", "lang", "n_chars"]),
-    )
-    want = sorted(
-        tuple(r) for r in con.sql(entrymod._temperature_oracle()).fetchall()
     )
     assert got == want
 

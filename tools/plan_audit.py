@@ -100,14 +100,6 @@ def main() -> None:
              "max_exchanges": 0},
         )
     )
-    # column pruning: only doc_id+text read for token counting
-    sections.append(
-        audit(
-            "token_counts (column pruning)",
-            qs["token_counts"](spark, SF_DIR),
-            {"schema_excludes": "lang", "max_scans": 1, "max_exchanges": 0},
-        )
-    )
     # referential: dim side broadcast, fact never shuffles
     sections.append(
         audit(
@@ -205,14 +197,6 @@ def main() -> None:
              "plan_contains": "MapInArrow"},
         )
     )
-    sections.append(
-        audit(
-            "rolling_fingerprints (O(n) rolling-hash kernel, one scan)",
-            qs["rolling_fingerprints"](spark, SF_DIR),
-            {"max_scans": 1, "max_exchanges": 0,
-             "plan_contains": "MapInArrow"},
-        )
-    )
     # portable banding: explode -> groupBy on band tuples -> in-expression
     # pair expansion -> distinct; no self-join anywhere
     sections.append(
@@ -229,20 +213,6 @@ def main() -> None:
             "bucketed_join_stats (co-bucketed SMJ, join side shuffle-free)",
             qs["bucketed_join_stats"](spark, SF_DIR),
             {"max_exchanges": 1, "plan_contains": "SortMergeJoin"},
-        )
-    )
-    # curation pipeline v2: the row-local gates (quality, lang, PII,
-    # dup-line fraction) stack on ONE lineage — still 2 scans (union
-    # branches) and 1 dedup-window shuffle; the unigram-entropy feature
-    # adds exactly its two partial-agg exchanges via the groupBy-carry
-    # pattern (features ride the keys — no join-back, no re-execution
-    # of the dedup window)
-    sections.append(
-        audit(
-            "curation_pipeline v2 (fused gates + entropy groupBy-carry)",
-            qs["curation_pipeline"](spark, SF_DIR),
-            {"max_scans": 2, "max_exchanges": 3,
-             "plan_excludes": "SortMergeJoin"},
         )
     )
     # dedup_clusters' pair source (the CC loop itself is iterative with
@@ -268,31 +238,6 @@ def main() -> None:
         )
     )
 
-    # new text-curation screens: one pruned scan each; the gram/word mode
-    # aggregations are two partial-agg exchanges keyed by doc_id; the PII
-    # regex pass is pure codegen, shuffle-free
-    sections.append(
-        audit(
-            "repetition_quality (explode + two partial-agg groupBys)",
-            qs["repetition_quality"](spark, SF_DIR),
-            {"max_scans": 1, "max_exchanges": 2, "schema_excludes": "lang"},
-        )
-    )
-    sections.append(
-        audit(
-            "unigram_entropy (explode + two partial-agg groupBys)",
-            qs["unigram_entropy"](spark, SF_DIR),
-            {"max_scans": 1, "max_exchanges": 2, "schema_excludes": "lang"},
-        )
-    )
-    sections.append(
-        audit(
-            "pii_scrub_counts (codegen regex, zero shuffles)",
-            qs["pii_scrub_counts"](spark, SF_DIR),
-            {"max_scans": 1, "max_exchanges": 0, "schema_excludes": "lang"},
-        )
-    )
-
     # fuzzy decontamination: benchmark band keys broadcast — the corpus
     # side streams through signature kernel + hash probe, never shuffles
     sections.append(
@@ -315,15 +260,6 @@ def main() -> None:
         )
     )
 
-    # combined text screens: both benchmark sides broadcast; no corpus
-    # self-join in either branch of the union
-    sections.append(
-        audit(
-            "contamination_screen (exact + fuzzy union, bench broadcast)",
-            qs["contamination_screen"](spark, SF_DIR),
-            {"has_broadcast": True, "plan_excludes": "SortMergeJoin"},
-        )
-    )
     # token-level decontamination: one Arrow pass per side, benchmark
     # distinct-hash set broadcast, corpus window stream never shuffles
     sections.append(
@@ -335,17 +271,6 @@ def main() -> None:
         )
     )
 
-    # temperature mixing: tiny per-group rates broadcast back; the keep
-    # decision is a row-local filter — the corpus never shuffles
-    sections.append(
-        audit(
-            "temperature_sample_ids (broadcast rates, row-local keep)",
-            qs["temperature_sample_ids"](spark, SF_DIR),
-            {"has_broadcast": True, "plan_excludes": "SortMergeJoin",
-             "max_scans": 2},
-        )
-    )
-
     # window family melt: BOTH running-total metrics stack() from ONE
     # window pass — 3 scans total (orders + events + orders for the
     # round-5 topn_<status> modes), not one per metric
@@ -354,18 +279,6 @@ def main() -> None:
             "window_ops (stack-melted window family, one pass per table)",
             qs["window_ops"](spark, SF_DIR),
             {"max_scans": 3, "plan_excludes": "CartesianProduct"},
-        )
-    )
-
-    # curate→rewrite→pack: the dedup stages' compact (hash,count)
-    # shuffles + ONE doc-keyed join-back + the per-group packing
-    # windows — packing adds no corpus-wide exchange beyond them
-    sections.append(
-        audit(
-            "packing_pipelines (span-dedup → pack fused lineage)",
-            qs["packing_pipelines"](spark, SF_DIR),
-            {"plan_contains": "MapInArrow", "max_scans": 1,
-             "plan_excludes": "CartesianProduct", "max_exchanges": 7},
         )
     )
 
