@@ -21,7 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from fs_schema_validator_spark.compiler.plan import first_mismatch_index  # noqa: E402
 from fs_schema_validator_spark.engine import ValidationEngine  # noqa: E402
 from fs_schema_validator_spark.functions import sketches  # noqa: E402
-from fs_schema_validator_spark.operators import dedup  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -232,55 +231,6 @@ def histogram_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, col="n_chars", group_col="lang", lo=0.0, hi=600.0, buckets=12
     )
     return out.select(F.col("grp").alias("lang"), "psi")
-
-
-# ---------------------------------------------------------------------------
-# dedup operators
-
-
-def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # plant duplicates: re-insert every 10th doc under a shifted id
-    dupes = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    both = docs.unionByName(dupes)
-    out = dedup.exact_duplicates(both)
-    return out.select("fingerprint", "n_docs", "keeper")
-
-
-def prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return dedup.prefix_duplicates(docs, prefix_words=4)
-
-
-def jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return dedup.jaccard_pairs_exact(docs, k=3, threshold=0.5)
-
-
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding candidates over ENGINE-PORTABLE MinHash signatures
-    (mod-2^31-1 universal hash over md5-prefix word hashes) with raw
-    band-slice bucket keys — every step replayed verbatim by the DuckDB
-    oracle, so the banding pipeline itself is value-checked (the
-    xxhash64/splitmix64 scale default is exercised end-to-end by
-    minhash_dedup_verified against the exact-Jaccard oracle)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = dedup.minhash_signatures_portable(docs, k=3, num_perm=64)
-    # max_bucket=None: the DuckDB oracle replays UNCAPPED banding, so the
-    # checked pipeline must be algebraically identical — with the default
-    # cap the gate would pass only while fixtures stay under 512-member
-    # buckets, then silently diverge. The capped form is the scale-path
-    # default and is exercised by the skewed-fixture tests.
-    return dedup.lsh_candidate_pairs(
-        sigs, bands=16, rows_per_band=4, bucket="tuple", max_bucket=None
-    )
-
-
-def simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return dedup.simhash_signatures(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -634,58 +584,7 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# candidate+verify dedup pipelines and drift (oracle-matched scale paths)
-
-
-def minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full near-dup pipeline: MinHash+LSH candidates, exact-Jaccard verify.
-
-    Matches the O(n²) exact-Jaccard oracle because every fixture pair at or
-    above the 0.5 report threshold sits at Jaccard ≥ 0.88, where
-    16-band/4-row LSH recall is ≥ 1 − (1 − 0.88⁴)¹⁶ ≈ 1 − 3e-7. A fixture
-    with pairs near J ≈ 0.6 would make this equality probabilistic (~11%
-    all-band miss per such pair) — at that point compare against the
-    candidates ∩ oracle intersection instead."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = dedup.minhash_signatures(docs, k=3, num_perm=64)
-    # uncapped, like the other oracle-gated LSH queries: the exact-Jaccard
-    # oracle reports every pair >= threshold, so a capped (star-tail)
-    # candidate set would miss clique pairs inside a >512-member bucket.
-    cand = dedup.lsh_candidate_pairs(
-        sigs, bands=16, rows_per_band=4, max_bucket=None
-    )
-    return dedup.verify_candidate_pairs(docs, cand, k=3, threshold=0.5)
-
-
-def minhash_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The incremental near-dup pipeline REPLAYING the batch result:
-    two-thirds of the documents seed a write_minhash_dedup_state layout
-    (signatures → banding reverse-index → verified pairs), the
-    remaining third arrives as an append (delta-only signatures, index
-    probe for cross-batch candidates, candidates-only verify), and the
-    ACCUMULATED pair state is returned. Value-gated against the same
-    O(n²) exact-Jaccard oracle as minhash_dedup_verified — at the
-    fixture's near-dup Jaccard (≥ 0.88) LSH recall is ~1, so
-    state+append must reproduce the exact pair set a from-scratch batch
-    run (and the all-pairs oracle) produces. State is rebuilt
-    deterministically per call (the write overwrites all four
-    relations)."""
-    import hashlib
-    import tempfile
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    old = docs.filter(F.col("doc_id") % 3 != 0)
-    delta = docs.filter(F.col("doc_id") % 3 == 0)
-    # per-process tag: unlike the read-only pq index cache, this state
-    # is REWRITTEN every call — two concurrent runs on one host must
-    # not overwrite each other's dirs mid-query
-    import os
-
-    tag = hashlib.md5(f"{sf_dir}|{os.getpid()}".encode()).hexdigest()[:12]
-    path = f"{tempfile.gettempdir()}/fsv_mh_state_{tag}"
-    dedup.write_minhash_dedup_state(old, path, max_bucket=None)
-    dedup.append_minhash_dedup(delta, old, path, max_bucket=None)
-    return spark.read.parquet(f"{path}/pairs")
+# drift, bucketed join, profiling and token-window dedup (oracle-matched)
 
 
 def drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -722,42 +621,6 @@ def bucketed_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS: connected components (iterative min-label
-    propagation, operators/graph.py) over the oracle-replayable MinHash-LSH
-    candidate pairs — the step that turns pair lists into keep/drop
-    verdicts. DuckDB replays the component labels with a recursive
-    transitive-closure CTE over the same pairs."""
-    from fs_schema_validator_spark.operators import graph
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = dedup.minhash_signatures_portable(docs, k=3, num_perm=64)
-    # max_bucket=None mirrors the uncapped WITH RECURSIVE oracle exactly
-    # (see minhash_lsh_pairs); clusters are cap-insensitive in principle
-    # (the star tail keeps components connected) but the gate checks the
-    # identical pair set.
-    pairs = dedup.lsh_candidate_pairs(
-        sigs, bands=16, rows_per_band=4, bucket="tuple", max_bucket=None
-    )
-    cc = graph.connected_components(pairs)
-    return cc.select(F.col("node").alias("doc_id"), "cluster")
-
-
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_clusters under the O(log n) large-star/small-star contraction
-    (operators/graph.py strategy="star") — same pairs, same recursive-CTE
-    oracle, proving both CC strategies produce the identical labeling."""
-    from fs_schema_validator_spark.operators import graph
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = dedup.minhash_signatures_portable(docs, k=3, num_perm=64)
-    pairs = dedup.lsh_candidate_pairs(
-        sigs, bands=16, rows_per_band=4, bucket="tuple", max_bucket=None
-    )
-    cc = graph.connected_components(pairs, strategy="star")
-    return cc.select(F.col("node").alias("doc_id"), "cluster")
-
-
 def table_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass column profiler (operators/profile.py) in exact mode so
     DuckDB value-checks null/distinct/min/max per column; production runs
@@ -770,27 +633,13 @@ def table_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def contamination_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FUZZY decontamination (dedup.cross_table_lsh_pairs): corpus docs
-    that are NEAR-dups of benchmark docs via cross-table portable-MinHash
-    banding — catches lightly-edited eval leaks an exact text hash
-    misses. Every 25th document plays the benchmark set under a shifted
-    id. Benchmark side broadcast; the oracle replays both banding
-    pipelines in SQL."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 25 == 0).select(
-        (F.col("doc_id") + 500000).alias("doc_id"), "text"
-    )
-    return dedup.cross_table_lsh_pairs(docs, bench)
-
-
 _NGRAM_N = 400
 _NGRAM_K = 8
 
 
 def _degenerate_sequences(spark: SparkSession) -> DataFrame:
-    """Two degenerate sequences-table rows shared by the token-window
-    queries: a null token list and a list shorter than k — both must
+    """Two degenerate sequences-table rows for the token-window
+    fixture: a null token list and a list shorter than k — both must
     come out as zero-window (0, 0, 0.0) rows."""
     return spark.sql(
         "SELECT 'deg-null' AS doc_id, CAST(NULL AS array<int>) AS tokens, "
@@ -803,7 +652,7 @@ def _degenerate_sequences(spark: SparkSession) -> DataFrame:
 def _seq_window_sql(
     n: int, k: int, base: int, mod: int, seed: int
 ) -> tuple[str, str]:
-    """Shared SQL building blocks for the token-window oracles: the
+    """SQL building blocks for the token-window oracle: the
     generator-replay CTE text (`base` with i/doc_id/n_tok/source, `v`
     adding vocab — the single SQL source of truth for
     sources/synth.gen_sequences) and the window-hash expression
@@ -832,73 +681,14 @@ def _seq_window_sql(
 
 def _window_hash_expr(k: int, base: int, mod: int, seed: int) -> str:
     """The closed-form k-window hash as a scalar SQL expression over
-    columns/vars i, vocab and the window start j0 — usable either as a
-    list_transform lambda body (_seq_window_sql) or over an unnested j0
-    column (the span-removal oracle, which needs j0 alongside the
-    hash)."""
+    columns/vars i, vocab and the window start j0, used as the
+    list_transform lambda body in _seq_window_sql."""
     powers = [pow(base, k - 1 - t, mod) for t in range(k)]
     seed_pk = seed * pow(base, k, mod) % mod
     terms = " + ".join(
         f"((i*31 + (j0+{t})*7) % vocab) * {powers[t]}" for t in range(k)
     )
     return f"({seed_pk} + {terms}) % {mod}"
-
-
-def token_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-level decontamination (dedup.token_ngram_contamination)
-    over the north-rule sequences shape: corpus = 300 generated docs +
-    two degenerate rows; benchmark = every 50th doc under a 'bench-' id
-    (token streams identical, so those corpus docs are fully
-    contaminated; same-source stream collisions give partial rates).
-    Oracle replays both generators and the closed-form window hash."""
-    from fs_schema_validator_spark.sources import synth
-
-    base = synth.gen_sequences(spark, _NGRAM_N // 2 + 100)
-    i = F.regexp_extract("doc_id", r"doc-(\d+)", 1).cast("long")
-    bench = base.filter(i % 50 == 0).select(
-        F.format_string("bench-%08d", i).alias("doc_id"),
-        "tokens",
-        "n_tok",
-        "source",
-    )
-    corpus = base.unionByName(_degenerate_sequences(spark))
-    return dedup.token_ngram_contamination(corpus, bench, k=_NGRAM_K)
-
-
-def _token_contamination_oracle(
-    n: int = _NGRAM_N // 2 + 100,
-    k: int = _NGRAM_K,
-    base: int = 1000003,
-    mod: int = 2147483647,
-    seed: int = 7,
-) -> str:
-    """DuckDB replay of token_ngram_contamination over the shared
-    generator-replay + closed-form window-hash blocks (_seq_window_sql);
-    benchmark windows come from the i %% 50 = 0 docs, membership via
-    semi join."""
-    ctes, win_expr = _seq_window_sql(n, k, base, mod, seed)
-    return f"""
-WITH {ctes}, wins AS (
-  SELECT doc_id, i, {win_expr} AS h
-  FROM v WHERE n_tok >= {k}
-), bh AS (
-  SELECT DISTINCT h FROM wins WHERE i % 50 = 0
-), per AS (
-  SELECT doc_id, count(*) AS nw,
-         sum(CASE WHEN h IN (SELECT h FROM bh) THEN 1 ELSE 0 END) AS nc
-  FROM wins GROUP BY doc_id
-), ids AS (
-  SELECT doc_id FROM base
-  UNION ALL SELECT 'deg-null' UNION ALL SELECT 'deg-short'
-)
-SELECT ids.doc_id,
-       CAST(coalesce(nw, 0) AS BIGINT) AS n_windows,
-       CAST(coalesce(nc, 0) AS BIGINT) AS n_contaminated,
-       CASE WHEN coalesce(nw, 0) > 0
-            THEN round(coalesce(nc, 0) * 1.0 / nw, 4)
-            ELSE 0.0 END AS contamination_rate
-FROM ids LEFT JOIN per USING (doc_id)
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -923,11 +713,9 @@ def token_ngram_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ngram_corpus(spark: SparkSession) -> DataFrame:
-    """The shared token-dedup fixture: 400 generated docs + every 20th
-    doc re-planted under a 'dup-' id (guaranteed cross-doc window dups)
-    + the two degenerate zero-window rows. token_ngram_dup_stats
-    (measurement) and token_ngram_dedup_clean (rewrite) screen the
-    identical corpus so their oracles share the replay CTEs."""
+    """The token-dedup fixture: 400 generated docs + every 20th doc
+    re-planted under a 'dup-' id (guaranteed cross-doc window dups) +
+    the two degenerate zero-window rows."""
     from fs_schema_validator_spark.sources import synth
 
     base = synth.gen_sequences(spark, _NGRAM_N)
@@ -941,139 +729,6 @@ def _ngram_corpus(spark: SparkSession) -> DataFrame:
     return base.unionByName(planted).unionByName(
         _degenerate_sequences(spark)
     )
-
-
-def token_ngram_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-SPAN removal (dedup.token_ngram_dedup) over the same
-    corpus token_ngram_dup_stats measures: every token position covered
-    by a cross-doc-duplicated k-window is cut and the sliced sequence
-    re-emitted. The planted 'dup-' docs and their originals are fully
-    erased (every window duplicated); same-source stream collisions
-    produce partial cuts; the degenerate rows pass through. The cleaned
-    token array is serialized for the driver canonicalizer (md5 of the
-    comma-joined tokens — complex output columns hard-fail the gate);
-    the oracle replays the generator, the closed-form window hash, the
-    span union, and the same serialization."""
-    from fs_schema_validator_spark.operators import dedup
-
-    out = dedup.token_ngram_dedup(_ngram_corpus(spark), k=_NGRAM_K)
-    toks = F.col("tokens_clean")
-    return out.select(
-        "doc_id",
-        F.size(toks).alias("n_clean"),
-        F.col("n_removed"),
-        F.md5(
-            F.array_join(F.transform(toks, lambda t: t.cast("string")), ",")
-        ).alias("clean_md5"),
-    )
-
-
-def token_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental duplicate-SPAN removal replaying the batch rewrite:
-    the shared token-dedup corpus is split deterministically (generator
-    ordinal % 3 == 0 plus the degenerate rows arrive as the DELTA), a
-    write_token_dedup_state layout is built over the rest, the delta is
-    appended (delta-only window kernel, counts merge on the delta's
-    hashes, reverse lookup of affected existing docs), and the
-    OVERLAYED output — original rewrites for unaffected docs, append
-    rewrites for delta ∪ affected — is serialized exactly like
-    token_ngram_dedup_clean. Value-gated against the SAME closed-form
-    span-removal oracle: incremental ≡ batch at the driver's hash
-    level, not just in pytest."""
-    import hashlib
-    import tempfile
-
-    from fs_schema_validator_spark.operators import dedup
-
-    corpus = _ngram_corpus(spark)
-    ordinal = F.regexp_extract("doc_id", r"-(\d+)$", 1)
-    # try_cast, not cast: '' (non-matching extract) must yield NULL, not
-    # depend on boolean short-circuit order under ANSI (the
-    # sources/synth.py convention for possibly-nonmatching extracts)
-    is_delta = (
-        ordinal.try_cast("long") % 3 == 0
-    ) | F.col("doc_id").startswith("deg-")
-    old = corpus.filter(~is_delta)
-    delta = corpus.filter(is_delta)
-    import os
-
-    tag = hashlib.md5(f"{sf_dir}|{os.getpid()}".encode()).hexdigest()[:12]
-    path = f"{tempfile.gettempdir()}/fsv_tok_state_{tag}"
-    dedup.write_token_dedup_state(old, path, k=_NGRAM_K)
-    base = dedup.token_ngram_dedup(old, k=_NGRAM_K)
-    rewrites = dedup.append_token_dedup(delta, old, path)
-    combined = base.join(
-        rewrites.select("doc_id"), "doc_id", "left_anti"
-    ).unionByName(rewrites)
-    toks = F.col("tokens_clean")
-    return combined.select(
-        "doc_id",
-        F.size(toks).alias("n_clean"),
-        F.col("n_removed"),
-        F.md5(
-            F.array_join(F.transform(toks, lambda t: t.cast("string")), ",")
-        ).alias("clean_md5"),
-    )
-
-
-def _token_span_dedup_oracle(
-    n: int = _NGRAM_N,
-    k: int = _NGRAM_K,
-    base: int = 1000003,
-    mod: int = 2147483647,
-    seed: int = 7,
-) -> str:
-    """DuckDB replay of token_ngram_dedup_clean: window hashes with
-    their start positions (the scalar _window_hash_expr over an
-    unnested j0), >= 2-instance hashes, covered-position union via a
-    constant-range expansion [j0, j0+k), anti-join to keep the
-    uncovered tokens, regenerate values, serialize identically."""
-    ctes, _ = _seq_window_sql(n, k, base, mod, seed)
-    h_expr = _window_hash_expr(k, base, mod, seed)
-    return f"""
-WITH {ctes}, corpus AS (
-  SELECT doc_id, i, n_tok, vocab FROM v
-  UNION ALL
-  SELECT printf('dup-%08d', i), i, n_tok, vocab FROM v WHERE i % 20 = 0
-), wh AS (
-  SELECT doc_id, i, vocab, j0, {h_expr} AS h
-  FROM (SELECT doc_id, i, n_tok, vocab,
-               unnest(range(0, n_tok - {k - 1})) AS j0
-        FROM corpus WHERE n_tok >= {k})
-), pdc AS (
-  SELECT doc_id, h FROM wh GROUP BY doc_id, h
-), dup AS (
-  SELECT h FROM pdc GROUP BY h HAVING count(*) >= 2
-), cov AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(range(0, {k}), t -> j0 + t)) AS j
-  FROM wh WHERE h IN (SELECT h FROM dup)
-), toks AS (
-  SELECT doc_id, i, vocab, unnest(range(0, n_tok)) AS j FROM corpus
-), kept AS (
-  SELECT t.doc_id, t.j, ((i*31 + t.j*7) % vocab) AS tok
-  FROM toks t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.j = c.j
-  WHERE c.j IS NULL
-), per AS (
-  SELECT doc_id, count(*) AS n_kept,
-         string_agg(CAST(tok AS VARCHAR), ',' ORDER BY j) AS s
-  FROM kept GROUP BY doc_id
-), ids AS (
-  SELECT doc_id, n_tok FROM corpus
-  UNION ALL SELECT 'deg-null', NULL UNION ALL SELECT 'deg-short', 3
-)
-SELECT ids.doc_id,
-       CAST(CASE WHEN ids.doc_id = 'deg-null' THEN NULL
-                 WHEN ids.doc_id = 'deg-short' THEN 3
-                 ELSE coalesce(n_kept, 0) END AS INT) AS n_clean,
-       CAST(CASE WHEN ids.doc_id IN ('deg-null', 'deg-short') THEN 0
-                 ELSE ids.n_tok - coalesce(n_kept, 0) END AS INT)
-           AS n_removed,
-       CASE WHEN ids.doc_id = 'deg-null' THEN NULL
-            WHEN ids.doc_id = 'deg-short' THEN md5('1,2,3')
-            ELSE md5(coalesce(s, '')) END AS clean_md5
-FROM ids LEFT JOIN per USING (doc_id)
-"""
 
 
 def _token_ngram_oracle(
@@ -1134,19 +789,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # so each family costs ONE slot of the driver's 50-entry window while every
 # member stays value-gated. The individual siblings stay registered, so
 # oracle_parity diagnoses each alone.
-
-
-def cc_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both connected-components strategies over the same LSH pairs —
-    O(diameter) min-label propagation and O(log n) large-star/small-star
-    contraction — proving identical labelings under one gated slot."""
-    prop = dedup_clusters(spark, sf_dir).select(
-        F.lit("propagate").alias("mode"), "doc_id", "cluster"
-    )
-    star = dedup_clusters_star(spark, sf_dir).select(
-        F.lit("star").alias("mode"), "doc_id", "cluster"
-    )
-    return prop.unionByName(star)
 
 
 def drift_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,147 +853,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stats_rollup": stats_rollup,
         "quantiles_by_group": quantiles_by_group,
         "drift_tests": drift_tests,
-        "dedup_exact_groups": dedup_exact_groups,
         "token_ngram_dup_stats": token_ngram_dup_stats,
-        "token_ngram_dedup_clean": token_ngram_dedup_clean,
-        "simhash_sigs": simhash_sigs,
         "array_mismatch_index": array_mismatch_index,
         "json_props_validation": json_props_validation,
         "violations_grouped": violations_grouped,
-        "minhash_dedup_verified": minhash_dedup_verified,
         "window_ops": window_ops,
         "stats_threshold_violations": stats_threshold_violations,
         "bucketed_join_stats": bucketed_join_stats,
-        "cc_strategies": cc_strategies,
         "table_profile_documents": table_profile_documents,
-        "token_ngram_contamination": token_ngram_contamination,
         "topn_per_group": topn_per_group,
-        "minhash_lsh_pairs": minhash_lsh_pairs,
         "histogram_psi": histogram_psi,
         "drift_ks": drift_ks,
-        "dedup_clusters": dedup_clusters,
-        "contamination_near_dup": contamination_near_dup,
         "stats_by_group": stats_by_group,
-        "prefix_dup_groups": prefix_dup_groups,
-        "jaccard_pairs": jaccard_pairs,
         "dedup_keep_first": dedup_keep_first,
-        "dedup_clusters_star": dedup_clusters_star,
         "window_running_total": window_running_total,
         "embedding_dim_violations": embedding_dim_violations,
         "sessionize_events": sessionize_events,
-        "minhash_dedup_incremental": minhash_dedup_incremental,
-        "token_dedup_incremental": token_dedup_incremental,
     }
-
-
-_WORDS = "list_filter(string_split_regex(lower(text), '\\s+'), w -> w != '')"
-
-
-# 60-bit engine-portable word hash (mirror of dedup.portable_word_hashes):
-# first 15 hex chars of md5, folded base-16 with list_reduce.
-def _hex15(expr: str) -> str:
-    return (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform(list_filter(string_split_regex(substr(md5({expr}), 1, 15), ''), "
-        "c -> c != ''), c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT))), "
-        "(a, d) -> a * 16 + d)"
-    )
-
-
-def _portable_banded_cte(prefix: str, source: str) -> str:
-    """CTE chain (comma-joined, for use inside WITH) producing
-    `{prefix}banded(doc_id, band, key)` — the DuckDB replay of the
-    engine's portable MinHash+LSH banding over `source` (a relation with
-    doc_id, text). Prefixed names let one query band two tables.
-
-    text IS NOT NULL mirrors the engine's null-sig drop: DuckDB would
-    otherwise KEEP null-text docs with sig=[NULL x64] and its hash join
-    matches list keys containing NULLs ([NULL]=[NULL] joins), pairing
-    every null doc — the opposite of the engine, which emits NULL sigs
-    and drops them before banding. Empty-STRING docs are kept: both
-    engines give them the same sentinel shingle, so they pair with each
-    other (they are exact dups) consistently."""
-    from fs_schema_validator_spark.operators.dedup import (
-        _SH31_C,
-        MH31_MOD,
-        minhash31_constants,
-    )
-
-    m = MH31_MOD
-    c0, c1, c2 = _SH31_C
-    perms = ", ".join(
-        f"({p}, {a}, {b})" for p, (a, b) in enumerate(minhash31_constants(64))
-    )
-    q = prefix
-    return f"""
-{q}w AS (SELECT doc_id, {_WORDS} AS w FROM {source}
-           WHERE text IS NOT NULL),
-{q}wh AS (SELECT doc_id, list_transform(w, t -> {_hex15('t')} % {m}) AS wh,
-              len(w) AS n
-       FROM {q}w),
-{q}sh AS (SELECT doc_id,
-              CASE WHEN n < 3
-                   THEN [list_reduce(list_prepend(CAST(7 AS BIGINT), wh),
-                                     (h, x) -> (h * 37 + x) % {m})]
-                   ELSE list_distinct(list_transform(range(1, n - 1),
-                        i -> ((wh[i] * {c0}) % {m} + (wh[i+1] * {c1}) % {m}
-                              + (wh[i+2] * {c2}) % {m}) % {m})) END AS sh
-       FROM {q}wh),
-{q}perms AS (SELECT * FROM (VALUES {perms}) t(p, a, b)),
-{q}sigs AS (SELECT doc_id, p,
-                list_min(list_transform(sh, x -> (a * x + b) % {m})) AS s
-         FROM {q}sh CROSS JOIN {q}perms),
-{q}sig AS (SELECT doc_id, list(s ORDER BY p) AS sig FROM {q}sigs
-           GROUP BY doc_id),
-{q}banded AS (SELECT doc_id, b AS band, sig[b*4+1 : b*4+4] AS key
-           FROM {q}sig, generate_series(0, 15) g(b))"""
-
-
-def _minhash_lsh_oracle() -> str:
-    """DuckDB replay of the portable MinHash+LSH pipeline, constants
-    embedded from the same generator the Spark kernel uses."""
-    return f"""
-WITH {_portable_banded_cte("", "documents")}
-SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-FROM banded l JOIN banded r
-  ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-"""
-
-
-def _contamination_near_dup_oracle() -> str:
-    """Cross-table LSH decontamination replay: band corpus and (shifted)
-    benchmark separately with the same portable pipeline, equi-join on
-    (band, key)."""
-    return f"""
-WITH csrc AS (SELECT doc_id, text FROM documents),
-bsrc AS (SELECT doc_id + 500000 AS doc_id, text FROM documents
-         WHERE doc_id % 25 = 0),
-{_portable_banded_cte("c", "csrc")},
-{_portable_banded_cte("b", "bsrc")}
-SELECT DISTINCT l.doc_id AS corpus_id, r.doc_id AS bench_id
-FROM cbanded l JOIN bbanded r
-  ON l.band = r.band AND l.key = r.key
-"""
-
-
-_SIMHASH_ORACLE = f"""
-WITH w AS (SELECT doc_id, {_WORDS} AS w FROM documents),
-h AS (SELECT doc_id, list_transform(w, t -> {_hex15('t')}) AS hs FROM w),
-v AS (SELECT doc_id, b,
-             list_sum(list_transform(hs,
-                 x -> CASE WHEN (x >> b) & 1 = 1 THEN 1 ELSE -1 END)) AS vote
-      FROM h, generate_series(0, 59) g(b))
-SELECT doc_id,
-       CAST(COALESCE(sum(CASE WHEN vote > 0
-                              THEN (CAST(1 AS BIGINT) << b) ELSE 0 END), 0)
-            AS BIGINT) AS simhash
-FROM v GROUP BY doc_id
-"""
-_SHINGLES = (
-    "CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')] ELSE "
-    "list_distinct(list_transform(range(1, len(w) - 1), "
-    "i -> array_to_string(list_slice(w, i, i + 2), ' '))) END"
-)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1436,35 +954,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT lang, round(sum((qc - pc) * ln(qc / pc)), 4) AS psi "
             "FROM j GROUP BY lang"
         ),
-        "dedup_exact_groups": (
-            "WITH u AS (SELECT doc_id, text FROM documents UNION ALL "
-            "SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0), "
-            "g AS (SELECT md5(lower(trim(text))) AS fingerprint, "
-            "CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS keeper "
-            "FROM u GROUP BY 1) "
-            "SELECT fingerprint, n_docs, keeper FROM g WHERE n_docs > 1"
-        ),
-        "prefix_dup_groups": (
-            f"WITH w AS (SELECT doc_id, {_WORDS} AS w FROM documents), "
-            "g AS (SELECT md5(array_to_string(list_slice(w, 1, 4), ' ')) "
-            "AS fingerprint, CAST(count(*) AS BIGINT) AS n_docs, "
-            "min(doc_id) AS keeper FROM w GROUP BY 1) "
-            "SELECT fingerprint, n_docs, keeper FROM g WHERE n_docs > 1"
-        ),
-        "jaccard_pairs": (
-            f"WITH w AS (SELECT doc_id, {_WORDS} AS w FROM documents), "
-            f"s AS (SELECT doc_id, {_SHINGLES} AS sh FROM w), "
-            "d AS (SELECT doc_id, sh, len(sh) AS n FROM s) "
-            "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-            "round(len(list_intersect(a.sh, b.sh)) / "
-            "CAST(a.n + b.n - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 4) "
-            "AS jaccard "
-            "FROM d a JOIN d b ON a.doc_id < b.doc_id "
-            "AND least(a.n, b.n) >= greatest(a.n, b.n) * 0.5 "
-            "WHERE round(len(list_intersect(a.sh, b.sh)) / "
-            "CAST(a.n + b.n - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 4) "
-            ">= 0.5"
-        ),
         "embedding_dim_violations": (
             "WITH c AS (SELECT vec_id, CASE WHEN vec_id % 41 = 0 "
             "THEN list_append(embedding, 0.0) ELSE embedding END AS embedding "
@@ -1515,8 +1004,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM v GROUP BY subject"
         ),
         "token_ngram_dup_stats": _token_ngram_oracle(),
-        "token_ngram_dedup_clean": _token_span_dedup_oracle(),
-        "token_ngram_contamination": _token_contamination_oracle(),
         "stats_threshold_violations": (
             "SELECT CAST(l_returnflag AS VARCHAR) AS subject, "
             "'qty_mean_bound' AS rule_id, "
@@ -1559,21 +1046,6 @@ def oracle_sql() -> dict[str, str]:
             "(PARTITION BY md5(lower(trim(text))) ORDER BY doc_id) AS rk FROM u) "
             "WHERE rk > 1"
         ),
-        "minhash_dedup_verified": (
-            # LSH recall is 1 at the planted near-dups' Jaccard (≥0.9), so
-            # candidates+verify equals the exact all-pairs result.
-            f"WITH w AS (SELECT doc_id, {_WORDS} AS w FROM documents), "
-            f"s AS (SELECT doc_id, {_SHINGLES} AS sh FROM w), "
-            "d AS (SELECT doc_id, sh, len(sh) AS n FROM s) "
-            "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-            "round(len(list_intersect(a.sh, b.sh)) / "
-            "CAST(a.n + b.n - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 4) "
-            "AS jaccard "
-            "FROM d a JOIN d b ON a.doc_id < b.doc_id "
-            "WHERE round(len(list_intersect(a.sh, b.sh)) / "
-            "CAST(a.n + b.n - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 4) "
-            ">= 0.5"
-        ),
         "drift_ks": (
             "WITH h AS (SELECT lang AS grp, least(11, greatest(0, "
             "CAST(floor((n_chars - 0.0) / 50.0) AS INT))) AS bucket, "
@@ -1595,8 +1067,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT grp AS lang, round(max(abs(cq - cp)), 4) AS ks_d "
             "FROM c GROUP BY grp"
         ),
-        "simhash_sigs": _SIMHASH_ORACLE,
-        "minhash_lsh_pairs": _minhash_lsh_oracle(),
         "bucketed_join_stats": (
             "SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders, "
             "round(sum(o_totalprice), 4) AS sum_price "
@@ -1611,44 +1081,10 @@ def oracle_sql() -> dict[str, str]:
             f"CAST(max({c}) AS VARCHAR) AS max_value FROM documents"
             for c in ["doc_id", "lang", "source", "n_chars"]
         ),
-        "contamination_near_dup": _contamination_near_dup_oracle(),
-        "dedup_clusters": f"""
-WITH RECURSIVE
-pairs AS ({_minhash_lsh_oracle()}),
-und AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-reach(a, b) AS (SELECT a, b FROM und
-                UNION
-                SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
-SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS cluster
-FROM reach GROUP BY a
-""",
-        "dedup_clusters_star": f"""
-WITH RECURSIVE
-pairs AS ({_minhash_lsh_oracle()}),
-und AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-reach(a, b) AS (SELECT a, b FROM und
-                UNION
-                SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
-SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS cluster
-FROM reach GROUP BY a
-""",
     }
     # Consolidated-gate oracles, built FROM the sibling oracles above so
     # the union gates replay exactly what each sibling gate replays (a
     # hand-copied union could silently drift from its siblings).
-    # the incremental state must accumulate the SAME pair set the batch
-    # pipeline (and its O(n²) exact oracle) produces
-    d["minhash_dedup_incremental"] = d["minhash_dedup_verified"]
-    d["token_dedup_incremental"] = d["token_ngram_dedup_clean"]
-    # both CC strategies produce the identical labeling, so one
-    # transitive-closure replay serves both mode tags
-    d["cc_strategies"] = (
-        "SELECT m.mode, t.doc_id, t.cluster FROM ("
-        + d["dedup_clusters"]
-        + ") t CROSS JOIN (VALUES ('propagate'), ('star')) m(mode)"
-    )
     d["drift_tests"] = (
         f"SELECT 'psi' AS mode, lang, psi AS stat FROM ({d['histogram_psi']}) "
         "UNION ALL "
@@ -1673,4 +1109,3 @@ FROM reach GROUP BY a
         f"FROM ({d['topn_per_group']})"
     )
     return d
-

@@ -7,8 +7,7 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
      "seq_rows_per_sec": ..., "seq_tokens_per_sec": ...}
 
 Two workloads:
-1. The driver-contract query catalog (scale-path queries only — the O(n²)
-   Jaccard oracle is excluded; MinHash-LSH is its scale replacement).
+1. The driver-contract query catalog (the timed `HEADLINE` subset).
 2. The north-rule workload: full rule-set validation of a synthetic
    tokenized-sequences table sized to the sf dir, reporting rows/sec and
    tokens/sec. The input is materialized to parquet once (cached across
@@ -43,8 +42,8 @@ def read_cpu() -> tuple[int, int]:
         return 0, 0
 
 
-# Queries that are part of the timed headline suite. The quadratic
-# jaccard_pairs oracle and the tiny-output probes are excluded.
+# Queries that are part of the timed headline suite. The tiny-output
+# probes are excluded.
 HEADLINE = [
     "flagship_violations",
     "range_violations",
@@ -54,27 +53,17 @@ HEADLINE = [
     "stats_by_group",
     "quantiles_by_group",
     "histogram_psi",
-    "dedup_exact_groups",
-    "minhash_dedup_verified",
-    "minhash_lsh_pairs",
-    "simhash_sigs",
     "drift_ks",
     "array_mismatch_index",
-    "dedup_clusters",
-    # round-3 additions (new operators, timed from this round on)
+    # round-3 addition (new operator, timed from this round on)
     "token_ngram_dup_stats",
-    "token_ngram_contamination",
-    # round-4 additions (new operators, timed from this round on)
-    "token_ngram_dedup_clean",
 ]
 
 # Timed and reported in `queries`, but EXCLUDED from the summed headline
 # `value` so cross-round comparisons of `value` stay apples-to-apples with
-# rounds that predate these workloads (same policy as skew_lsh_dedup).
+# rounds that predate these workloads.
 VALUE_EXCLUDED = {
     "token_ngram_dup_stats",
-    "token_ngram_contamination",
-    "token_ngram_dedup_clean",
 }
 
 SEQ_RULES = r"""
@@ -338,67 +327,6 @@ def bench_ab_r1(sf_dir: str, cpus: int, seq_path: str, ref_path: str) -> dict:
         return {"ab_r1_sec": None, "ab_r1_error": f"{type(ex).__name__}: {ex}"}
 
 
-def bench_skewed_dedup(spark, base: Path) -> dict:
-    """Hot-bucket stress: a 10^5-member boilerplate dup cluster + 10^5
-    distinct docs through the CAPPED near-dup pipeline (signatures → LSH
-    banding with the default max_bucket=512 → connected components).
-
-    This is the adversarial case the cap exists for — uncapped banding
-    would expand ~10^10 pairs in one task. The assertion (one cluster,
-    pair count linear in the cluster) is checked in tests; here it is
-    timed so a regression to superlinear behavior shows up as a wall-time
-    cliff, not just a failed unit test."""
-    n_bg = n_dup = 100_000
-    path = base / f"skewdocs_{n_bg}_{n_dup}"
-    if not (path / "_SUCCESS").exists():
-        bg = spark.range(n_bg).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ",
-                *[
-                    F.substring(
-                        F.md5(F.concat(F.col("id").cast("string"), F.lit(f"-{j}"))),
-                        1,
-                        8,
-                    )
-                    for j in range(12)
-                ],
-            ).alias("text"),
-        )
-        dup = spark.range(n_dup).select(
-            (F.col("id") + 1_000_000).alias("doc_id"),
-            F.lit(
-                "identical boilerplate paragraph repeated across the corpus "
-                "alpha bravo charlie delta echo foxtrot golf hotel"
-            ).alias("text"),
-        )
-        bg.unionByName(dup).repartition(64).write.mode("overwrite").parquet(
-            str(path)
-        )
-    docs = spark.read.parquet(str(path))
-
-    from fs_schema_validator_spark.functions import cache as df_cache
-    from fs_schema_validator_spark.operators import dedup as dedup_ops
-    from fs_schema_validator_spark.operators import graph
-
-    t0 = time.time()
-    sigs = dedup_ops.minhash_signatures(docs, k=3, num_perm=64)
-    pairs = dedup_ops.lsh_candidate_pairs(
-        sigs, bands=16, rows_per_band=4
-    )  # default max_bucket=512 — the scale path
-    cc = graph.connected_components(pairs)
-    planted = cc.filter(F.col("node") >= 1_000_000)
-    n_nodes = planted.count()
-    n_clusters = planted.select("cluster").distinct().count()
-    elapsed = round(time.time() - t0, 3)
-    df_cache.release_all()
-    return {
-        "skew_lsh_sec": elapsed,
-        "skew_cluster_members": n_nodes,
-        "skew_cluster_count": n_clusters,
-    }
-
-
 def bench_token_ngram(spark, seq_path: str) -> dict:
     """Token-level exact k-gram dedup throughput
     (dedup.token_ngram_dup_stats) over a deterministic half of the bench
@@ -406,9 +334,9 @@ def bench_token_ngram(spark, seq_path: str) -> dict:
     on the same side and keep flagging each other. One Arrow
     window-hash + pair-count pass feeds a count-per-hash aggregation and
     the flag join; windows/sec is the tokens-axis dedup capability
-    number. Reported as its own ngram_* fields only (same policy as
-    skew_*: folding a new workload into `value` would read as a
-    regression against prior rounds)."""
+    number. Reported as its own ngram_* fields only (folding a new
+    workload into `value` would read as a regression against prior
+    rounds)."""
     from fs_schema_validator_spark.operators import dedup as dedup_ops
 
     seq = spark.read.parquet(seq_path).filter(
@@ -502,20 +430,15 @@ def main() -> None:
             df.write.mode("overwrite").format("noop").save()
             dt = round(time.time() - t0, 3)
             timings[name] = min(timings.get(name, dt), dt)
-            # release operator-tracked caches (LSH candidate sets etc.) so
+            # release tracked caches (the equality screen's key set) so
             # each query is measured on a quiet executor
             df_cache.release_all()
 
-    # drop caches accumulated by the query suite (LSH banding etc.) so the
-    # sequences workload is measured on a quiet executor
+    # drop caches accumulated by the query suite so the sequences
+    # workload is measured on a quiet executor
     spark.catalog.clearCache()
     base = Path(os.environ.get("SPARK_GRAFT_BENCH_DIR", "/tmp/fsv_bench"))
     base.mkdir(parents=True, exist_ok=True)
-    # reported as its own skew_* fields ONLY — folding it into `timings`
-    # would inflate the headline `value` relative to prior-round baselines
-    # that lacked this workload, reading as a code regression
-    skew_stats = bench_skewed_dedup(spark, base)
-    spark.catalog.clearCache()
     seq_stats = bench_sequences(spark, sf_dir)
 
     seq_path, ref_path = _materialize_sequences(
@@ -541,7 +464,6 @@ def main() -> None:
         "query_passes": query_passes,
         "sf": Path(sf_dir).name,
         "cpus": cpus,
-        **skew_stats,
         **seq_stats,
         **ngram_stats,
         **ab_stats,

@@ -1,14 +1,15 @@
-"""Tracked DataFrame caches: explicit release for operator intermediates.
+"""Tracked DataFrame caches: explicit release for plan intermediates.
 
-Operators that must materialize an intermediate twice (e.g. the LSH
-candidate set, consumed once for participant ids and once for the score
-join) cache it. A bare ``.cache()`` leaks executor storage until the JVM's
-ContextCleaner garbage-collects the plan — fine in a notebook, not in a
-long-lived job. This registry mirrors ``CompiledPlan.release()``: operators
-``track()`` what they persist, and the caller releases everything after the
-consuming action::
+A plan step that must materialize an intermediate twice caches it: the
+``array_equality`` screen's mismatched-key set is counted once to pick a
+re-fetch tier and joined again to re-fetch the arrays. A bare ``.cache()``
+leaks executor storage until the JVM's ContextCleaner garbage-collects the
+plan — fine in a notebook, not in a long-lived job. This registry mirrors
+``CompiledPlan.release()``: steps ``track()`` what they persist, and the
+caller releases everything after the consuming action::
 
-    dups = dedup.verify_candidate_pairs(docs, candidates).collect()
+    result = engine.validate(df, rules, {"reference_tokens": ref})
+    rows = result.sorted_violations().collect()
     cache.release_all()
 
 At cluster scale the same seam is where you would swap the cache for a

@@ -13,7 +13,8 @@ The spark-submit entry point (reference analog: validate_schema CLI,
 (``catalog.db.sequences`` for an Iceberg table).
 
 Exit codes keep the reference contract: 0 = all rules pass, 1 = violations
-found, 127 = the rule spec itself is invalid.
+found, 127 = the rule spec itself is invalid. 2 = a usage error: a missing or
+malformed argument, or a ``--table``/``--aux`` that cannot be read.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import argparse
 import os
 import sys
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..engine import ValidationEngine
@@ -35,14 +37,18 @@ class UsageError(Exception):
     """Bad invocation (exit 2, distinct from validation failure's exit 1)."""
 
 
-def _load(spark: SparkSession, ref: str) -> DataFrame:
+def _load(spark: SparkSession, ref: str, flag: str = "--table") -> DataFrame:
     """A --table or --aux reference: a catalog table by name (Iceberg or
     hive, through the session catalog) or a path, as ``load_table``
     dispatches it. A bare relative directory name would dispatch to the
-    catalog; an existing local path is always a path."""
-    if os.path.exists(ref) and "/" not in ref:
-        ref = f"./{ref}"
-    return load_table(spark, ref)
+    catalog; an existing local path is always a path. A reference Spark
+    cannot resolve is a UsageError naming `flag`."""
+    path = f"./{ref}" if os.path.exists(ref) and "/" not in ref else ref
+    try:
+        return load_table(spark, path)
+    except AnalysisException as e:
+        reason = (str(e).strip().splitlines() or [type(e).__name__])[0]
+        raise UsageError(f"cannot read {flag} {ref}: {reason}") from e
 
 
 def _parse_aux(values: list[str]) -> dict[str, str]:
@@ -147,8 +153,14 @@ def cmd_validate(args: argparse.Namespace) -> int:
 
     spark = get_spark(app_name="fsv-validate")
     spark.sparkContext.setLogLevel("WARN")
-    df = _load(spark, args.table)
-    tables = {name: _load(spark, ref) for name, ref in aux.items()}
+    try:
+        df = _load(spark, args.table)
+        tables = {
+            name: _load(spark, ref, f"--aux {name}") for name, ref in aux.items()
+        }
+    except UsageError as e:
+        print(str(e), file=sys.stderr)
+        return 2
 
     engine = ValidationEngine(subject_col=args.subject)
     try:
@@ -194,7 +206,11 @@ def cmd_profile(args: argparse.Namespace) -> int:
 
     spark = get_spark(app_name="fsv-profile")
     spark.sparkContext.setLogLevel("WARN")
-    df = _load(spark, args.table)
+    try:
+        df = _load(spark, args.table)
+    except UsageError as e:
+        print(str(e), file=sys.stderr)
+        return 2
     cols = args.columns.split(",") if args.columns else None
     for row in table_profile(df, cols, exact=args.exact).collect():
         print(

@@ -2,7 +2,8 @@
 
 The first-mismatch cases evaluate the native expression
 ``compiler.plan.first_mismatch_index`` (the array-equality diagnosis) over
-small DataFrames; the rest test the Arrow kernels of ``functions.arrays``."""
+small DataFrames; the rest test the token-window Arrow kernel of
+``functions.arrays`` and its ``mapInArrow`` wrapper."""
 
 from __future__ import annotations
 
@@ -107,47 +108,6 @@ def test_spark_operator_screens_equal_rows(spark):
     assert got == {"b": 1, "c": 0, "d": 0}
 
 
-def test_minhash_kernel_deterministic_and_monotone():
-    from fs_schema_validator_spark.functions.arrays import minhash_mix_kernel
-
-    rows = [[1, 2, 3, 4], [1, 2, 3, 4], [5, 6], [], [1, 2, 3, 4, 99]]
-    arr = pa.array(rows, type=pa.list_(pa.int64()))
-    s1 = minhash_mix_kernel(arr, 32)
-    s2 = minhash_mix_kernel(arr, 32)
-    assert (s1 == s2).all()          # deterministic
-    assert (s1[0] == s1[1]).all()    # identical sets -> identical sigs
-    # superset can only lower (or keep) each permutation's min — compare
-    # in uint64 space (the int64 output is a bit-cast, not order-preserving)
-    assert (s1[4].astype(np.uint64) <= s1[0].astype(np.uint64)).all()
-    # empty row saturates to the uint64-max sentinel (-1 after int64 cast)
-    assert (s1[3] == -1).all()
-
-
-def test_simhash_kernel_matches_naive_votes():
-    from fs_schema_validator_spark.functions.arrays import simhash_kernel
-
-    rng = np.random.default_rng(7)
-    rows = [
-        [],
-        None,
-        [int(x) for x in rng.integers(0, 1 << 60, size=17)],
-        [int(x) for x in rng.integers(0, 1 << 60, size=1)],
-        [(1 << 60) - 1] * 3,
-        [0, 0, (1 << 60) - 1],  # strict majority: ties -> 0
-    ]
-    got = simhash_kernel(pa.array(rows, type=pa.list_(pa.int64())), bits=60)
-    for i, hs in enumerate(rows):
-        if not hs:
-            assert got[i] == 0
-            continue
-        want = 0
-        for b in range(60):
-            vote = sum(1 if (h >> b) & 1 else -1 for h in hs)
-            if vote > 0:
-                want |= 1 << b
-        assert got[i] == want, i
-
-
 def _naive_token_windows(toks, k=8, base=1000003, mod=2147483647, seed=7):
     if toks is None or any(t is None for t in toks):
         return None
@@ -199,29 +159,29 @@ def test_token_window_hash_kernel_sliced_array():
 
 
 def test_token_window_hashes_arrow_spark_roundtrip(spark):
-    """The list-output Spark wrapper (the general form consumers use for
-    position-attributed windows) must carry the kernel's per-row
-    contract through mapInArrow: hashes for full rows, null for
-    null/child-null rows, empty for short rows."""
+    """The Spark wrapper carries the kernel's per-row contract through
+    mapInArrow: one (doc, hash, multiplicity) row per distinct window of
+    a full row, matching the direct fold, and one sentinel (doc, -1, 0)
+    row for a null, short or child-null row."""
+    from collections import Counter
+
     from fs_schema_validator_spark.functions.arrays import (
-        token_window_hashes_arrow,
+        token_window_pair_counts_arrow,
     )
 
-    df = spark.createDataFrame(
-        [
-            ("a", list(range(9))),
-            ("b", None),
-            ("c", [1, 2]),
-            ("d", [4, None, 6, 7, 8, 9, 10, 11, 12]),
-        ],
-        "doc_id string, tokens array<int>",
-    )
-    rows = {
-        r.doc_id: r.wins
-        for r in token_window_hashes_arrow(df, "tokens", k=8).collect()
-    }
-    assert rows["a"] == _naive_token_windows(list(range(9)), k=8)
-    assert rows["b"] is None
-    assert rows["c"] == []
-    assert rows["d"] is None
-
+    rows = [
+        ("a", list(range(9))),
+        ("b", None),
+        ("c", [1, 2]),
+        ("d", [4, None, 6, 7, 8, 9, 10, 11, 12]),
+        ("e", [5] * 10),  # one window hash, three times
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+    got = {}
+    for r in token_window_pair_counts_arrow(df, "tokens", k=8).collect():
+        got.setdefault(r.doc_id, {})[r.h] = r.k_cnt
+    for doc_id, toks in rows:
+        wins = _naive_token_windows(toks, k=8)
+        want = dict(Counter(wins)) if wins else {-1: 0}
+        assert got[doc_id] == want, doc_id
+    assert list(got["e"].values()) == [3]

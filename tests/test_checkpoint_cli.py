@@ -155,6 +155,17 @@ def test_cli_exit_codes(spark, tmp_path, capsys):
     assert main(fail + ["--max-print", "-1"]) == 2
     assert "--max-print" in capsys.readouterr().err
 
+    # a --table or --aux that cannot be read is a usage error, not a
+    # verdict: one stderr line naming the flag, no traceback
+    missing = str(tmp_path / "no_such_path")
+    ok = ["validate", "--rules", str(rules_ok)]
+    assert main(ok + ["--table", missing]) == 2
+    err = capsys.readouterr().err
+    assert f"cannot read --table {missing}" in err and "PATH_NOT_FOUND" in err
+    assert main(ok + ["--table", table, "--aux", f"dim_sources={missing}"]) == 2
+    err = capsys.readouterr().err
+    assert f"cannot read --aux dim_sources {missing}" in err
+
 
 def test_cli_validates_a_catalog_table_by_name(spark, tmp_path, capsys):
     """--table and --aux take a session-catalog table name as well as a
@@ -310,6 +321,11 @@ def test_cli_profile_subcommand(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "doc_id: rows=30 nulls=0 distinct=30" in out
     assert "n_tok: rows=30" in out
+
+    assert main(["profile", "--table", "no_such_table"]) == 2
+    err = capsys.readouterr().err
+    assert "cannot read --table no_such_table" in err
+    assert "TABLE_OR_VIEW_NOT_FOUND" in err
 
 
 def test_run_counts_each_violation_exactly_once(spark, tmp_path):

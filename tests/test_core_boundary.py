@@ -1,14 +1,17 @@
-"""The validation core runs in the JVM alone.
+"""The validation core runs in the JVM alone, and the package is only that
+core.
 
 A fresh interpreter validates the golden fixture (tests/test_engine_golden.py)
 three ways — ``validate``, ``ResumableValidator.run`` and ``validate_stream`` —
 and builds ``stateful_violation_rate`` over it. Afterwards no curation module
 (``operators*``, ``functions.arrays``) may have been imported, and the
 executed plans of the golden violation relation and of the rate stream may
-hold no Python-evaluated node."""
+hold no Python-evaluated node. A second check, without Spark, pins the
+package's module list: a new operator family has to change this file."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import subprocess
@@ -120,3 +123,55 @@ def test_core_imports_no_curation_module_and_plans_no_python(tmp_path):
     for name, plan in got["plans"].items():
         found = [node for node in PYTHON_NODES if node in plan]
         assert found == [], (name, plan)
+
+
+# the validation core, the CLI `profile` command's operator, and the
+# `dedup.token_ngram_dup_stats` path that the `token_dedup` benchmark runs
+PACKAGE_MODULES = [
+    "__init__.py",
+    "__main__.py",
+    "compiler/__init__.py",
+    "compiler/columns.py",
+    "compiler/messages.py",
+    "compiler/plan.py",
+    "engine.py",
+    "evaluator/__init__.py",
+    "evaluator/errors.py",
+    "evaluator/parser.py",
+    "evaluator/values.py",
+    "functions/__init__.py",
+    "functions/arrays.py",
+    "functions/cache.py",
+    "functions/sketches.py",
+    "operators/__init__.py",
+    "operators/dedup.py",
+    "operators/profile.py",
+    "plans/__init__.py",
+    "plans/cli.py",
+    "rules/__init__.py",
+    "rules/loader.py",
+    "rules/model.py",
+    "rules/spec.py",
+    "session.py",
+    "sources/__init__.py",
+    "sources/synth.py",
+    "sources/tables.py",
+    "streaming/__init__.py",
+    "streaming/checkpoint.py",
+    "streaming/stream.py",
+]
+
+
+def test_package_is_the_validation_core_plus_the_token_dedup_path():
+    pkg = REPO / "fs_schema_validator_spark"
+    got = sorted(p.relative_to(pkg).as_posix() for p in pkg.rglob("*.py"))
+    assert got == PACKAGE_MODULES
+
+    tree = ast.parse((pkg / "operators" / "dedup.py").read_text())
+    public = [
+        node.name
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        and not node.name.startswith("_")
+    ]
+    assert public == ["token_ngram_dup_stats"]

@@ -149,15 +149,6 @@ def main() -> None:
         )
     )
 
-    # near-dup pipeline: candidate generation is one groupBy (no
-    # self-join); the verify join is broadcast (candidate side is tiny)
-    sections.append(
-        audit(
-            "minhash_dedup_verified (LSH candidates + exact verify)",
-            qs["minhash_dedup_verified"](spark, SF_DIR),
-            {"has_broadcast": True},
-        )
-    )
     # rollup: grouping-set expansion inside ONE partial+final aggregate
     sections.append(
         audit(
@@ -187,26 +178,6 @@ def main() -> None:
             {"max_scans": 0, "max_exchanges": 0},
         )
     )
-    # kernelized signatures: single pruned scan straight into mapInArrow,
-    # zero shuffles
-    sections.append(
-        audit(
-            "simhash_sigs (Arrow bit-vote kernel, one scan)",
-            qs["simhash_sigs"](spark, SF_DIR),
-            {"max_scans": 1, "max_exchanges": 0, "schema_excludes": "lang",
-             "plan_contains": "MapInArrow"},
-        )
-    )
-    # portable banding: explode -> groupBy on band tuples -> in-expression
-    # pair expansion -> distinct; no self-join anywhere
-    sections.append(
-        audit(
-            "minhash_lsh_pairs (banding groupBy, no self-join)",
-            qs["minhash_lsh_pairs"](spark, SF_DIR),
-            {"max_scans": 1, "max_exchanges": 3,
-             "plan_excludes": "SortMergeJoin"},
-        )
-    )
     # co-bucketed join: sort-merge with no Exchange below the aggregation
     sections.append(
         audit(
@@ -215,39 +186,6 @@ def main() -> None:
             {"max_exchanges": 1, "plan_contains": "SortMergeJoin"},
         )
     )
-    # dedup_clusters' pair source (the CC loop itself is iterative with
-    # eager localCheckpoints, so the interesting static plan is the
-    # candidate pipeline feeding it): banding groupBy, no self-join
-    from fs_schema_validator_spark.operators import dedup as dedup_ops
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    cc_pairs = dedup_ops.lsh_candidate_pairs(
-        dedup_ops.minhash_signatures_portable(docs, k=3, num_perm=64),
-        bands=16,
-        rows_per_band=4,
-        bucket="tuple",
-        max_bucket=None,
-    )
-    sections.append(
-        audit(
-            "dedup_clusters pair source (banding groupBy, no self-join)",
-            cc_pairs,
-            {"max_scans": 1, "plan_excludes": "SortMergeJoin"},
-        )
-    )
-
-    # fuzzy decontamination: benchmark band keys broadcast — the corpus
-    # side streams through signature kernel + hash probe, never shuffles
-    sections.append(
-        audit(
-            "contamination_near_dup (cross-table LSH, bench broadcast)",
-            qs["contamination_near_dup"](spark, SF_DIR),
-            {"has_broadcast": True, "plan_excludes": "SortMergeJoin"},
-        )
-    )
-
     # token k-gram dedup: one Arrow window-hash pass, then compact
     # (hash, count) aggregations — the corpus never self-joins and no
     # pair set materializes
@@ -256,17 +194,6 @@ def main() -> None:
             "token_ngram_dup_stats (Arrow window hashes + count aggs)",
             qs["token_ngram_dup_stats"](spark, SF_DIR),
             {"plan_contains": "MapInArrow",
-             "plan_excludes": "CartesianProduct"},
-        )
-    )
-
-    # token-level decontamination: one Arrow pass per side, benchmark
-    # distinct-hash set broadcast, corpus window stream never shuffles
-    sections.append(
-        audit(
-            "token_ngram_contamination (Arrow window hashes, bench broadcast)",
-            qs["token_ngram_contamination"](spark, SF_DIR),
-            {"plan_contains": "MapInArrow", "has_broadcast": True,
              "plan_excludes": "CartesianProduct"},
         )
     )
