@@ -20,9 +20,13 @@ Physical strategy (designed for the 10^12-row table, tested at sf*):
     finds no key. No job of their own;
   - completeness: a ``left_anti`` join of the small manifest against the
     distinct subject keys;
-  - array-equality: a hash screen over the cached projection, then the
-    first mismatching index of the flagged keys' arrays as a native
-    expression (``first_mismatch_index``) — no Python;
+  - array-equality: a hash screen over the cached projection yields the
+    flagged keys, cached and counted; one hint-free plan filters both
+    array scans by that key set (Spark picks each join from its measured
+    size: a broadcast below ``spark.sql.autoBroadcastJoinThreshold``, a
+    shuffle above) and finds the first mismatching index of the flagged
+    keys' arrays as a native expression (``first_mismatch_index``) — no
+    Python;
   - drift: one bucketed-histogram aggregation over the cached projection,
     collected with the reference mass in one job; PSI or KS is finished on
     the driver (``functions.sketches.drift``) and comes back as literal
@@ -55,10 +59,6 @@ VIOLATION_SCHEMA = "subject string, rule_id string, rule_seq int, reason string"
 
 # Per-row violation element carried through the fused scan.
 _ROW_ERR_TYPE = "array<struct<rule_seq:int,rule_id:string,reason:string>>"
-
-# Equality re-fetch tiers by count of hash-mismatched keys (_table_violations).
-_BROADCAST_REFETCH_MAX_KEYS = 100_000
-_KEYSET_REFETCH_MAX_KEYS = 5_000_000
 
 # Table rules checked inside the fused scan, as row rules are.
 _LIFTED = (Mdl.TokenRangeRule, Mdl.ReferentialRule)
@@ -497,35 +497,18 @@ class CompiledPlan:
                 F.col(rule.key),
                 F.col(rule.ref_column).alias("_ref_arr"),
             )
-            # Tiered by CORRUPTION VOLUME. The dangerous broadcast is the
-            # array-bearing survivors side (keys alone are ~8B/row; arrays
-            # are KBs/row — 5M array rows would blow past driver/broadcast
-            # limits and turn a recoverable burst into a hard failure), so
-            # arrays broadcast only below a much smaller key count.
-            arrays = self.df.select(F.col(rule.key), F.col(rule.column))
-            if n_bad <= _KEYSET_REFETCH_MAX_KEYS:
-                # broadcast the KEY SET into the scan (bounded: keys only)
-                survivors = arrays.join(
-                    F.broadcast(bad_keys), on=rule.key, how="inner"
-                )
-                if n_bad <= _BROADCAST_REFETCH_MAX_KEYS:
-                    # rare corruption: both probe sides broadcast, neither
-                    # big table shuffles — two streaming scans total
-                    joined = ref.join(
-                        F.broadcast(survivors), on=rule.key, how="inner"
-                    )
-                else:
-                    # burst corruption: the key set filters the reference
-                    # scan too, then the two filtered sides shuffle-join —
-                    # each carries only n_bad array rows
-                    ref_flt = ref.join(
-                        F.broadcast(bad_keys), on=rule.key, how="inner"
-                    )
-                    joined = survivors.join(ref_flt, on=rule.key, how="inner")
-            else:  # pathological corruption: fall back to shuffled joins
-                joined = arrays.join(bad_keys, on=rule.key, how="inner").join(
-                    ref, on=rule.key, how="inner"
-                )
+            # One plan, no join hints. The count above materialised the
+            # cached key set, so the planner knows its exact size: below
+            # spark.sql.autoBroadcastJoinThreshold it broadcasts the keys
+            # into both array scans, so no array shuffles before the key
+            # filter; above it every side shuffles. The two filtered sides
+            # carry only the flagged keys' arrays, and AQE picks their join
+            # from the sizes it measures at run time.
+            survivors = self.df.select(F.col(rule.key), F.col(rule.column)).join(
+                bad_keys, on=rule.key, how="inner"
+            )
+            ref_flt = ref.join(bad_keys, on=rule.key, how="inner")
+            joined = survivors.join(ref_flt, on=rule.key, how="inner")
             mism = joined.select(
                 F.col(rule.key),
                 first_mismatch_index(

@@ -1,8 +1,9 @@
 """Tracked DataFrame caches: explicit release for plan intermediates.
 
 A plan step that must materialize an intermediate twice caches it: the
-``array_equality`` screen's mismatched-key set is counted once to pick a
-re-fetch tier and joined again to re-fetch the arrays. A bare ``.cache()``
+``array_equality`` screen's mismatched-key set is counted once (an empty
+set skips the re-fetch, and the count gives the planner the set's exact
+size) and joined again to re-fetch the arrays. A bare ``.cache()``
 leaks executor storage until the JVM's ContextCleaner garbage-collects the
 plan — fine in a notebook, not in a long-lived job. This registry mirrors
 ``CompiledPlan.release()``: steps ``track()`` what they persist, and the

@@ -24,8 +24,8 @@ def token_ngram_dup_stats(
     seed: int = 7,
     digits: int = 4,
 ) -> DataFrame:
-    """Token-level exact k-gram duplication stats per document — the
-    tokens-column sibling of the text dedup family, in the spirit of
+    """Token-level exact k-gram duplication stats per document, over the
+    token arrays of a tokenized-sequence table, in the spirit of
     exact-substring training-data dedup (Lee et al. 2022,
     arXiv:2107.06499): a window is *duplicated* when its k-token hash
     occurs in >= `min_docs` document ROW INSTANCES (each input row is

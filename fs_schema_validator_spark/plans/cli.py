@@ -13,8 +13,9 @@ The spark-submit entry point (reference analog: validate_schema CLI,
 (``catalog.db.sequences`` for an Iceberg table).
 
 Exit codes keep the reference contract: 0 = all rules pass, 1 = violations
-found, 127 = the rule spec itself is invalid. 2 = a usage error: a missing or
-malformed argument, or a ``--table``/``--aux`` that cannot be read.
+found, 127 = the rule spec itself is invalid, or names a column the table
+lacks. 2 = a usage error: a missing or malformed argument, or a
+``--table``/``--aux`` that cannot be read.
 """
 
 from __future__ import annotations
@@ -47,8 +48,12 @@ def _load(spark: SparkSession, ref: str, flag: str = "--table") -> DataFrame:
     try:
         return load_table(spark, path)
     except AnalysisException as e:
-        reason = (str(e).strip().splitlines() or [type(e).__name__])[0]
-        raise UsageError(f"cannot read {flag} {ref}: {reason}") from e
+        raise UsageError(f"cannot read {flag} {ref}: {_first_line(e)}") from e
+
+
+def _first_line(e: Exception) -> str:
+    """An exception's message as one line (Spark's run to many)."""
+    return (str(e).strip().splitlines() or [type(e).__name__])[0]
 
 
 def _parse_aux(values: list[str]) -> dict[str, str]:
@@ -168,6 +173,12 @@ def cmd_validate(args: argparse.Namespace) -> int:
     except (RuleSetError, ParseError) as e:
         print("❗️ The provided schema is invalid!", file=sys.stderr)
         print(str(e), file=sys.stderr)
+        return 127
+    except AnalysisException as e:
+        # a rule naming a column the input does not have
+        print(
+            f"❗️ The provided schema is invalid: {_first_line(e)}", file=sys.stderr
+        )
         return 127
 
     if args.output:

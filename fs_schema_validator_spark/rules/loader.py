@@ -238,12 +238,15 @@ def _coerce_expanded_scalars(kwargs: dict[str, Any]) -> dict[str, Any]:
     out = dict(kwargs)
     for k, v in kwargs.items():
         if isinstance(v, str):
-            if k in _INT_FIELDS:
-                out[k] = int(v)
-            elif k in _FLOAT_FIELDS:
-                out[k] = float(v)
-            elif k in _BOOL_FIELDS:
-                out[k] = v.lower() in ("1", "true", "yes")
+            try:
+                if k in _INT_FIELDS:
+                    out[k] = int(v)
+                elif k in _FLOAT_FIELDS:
+                    out[k] = float(v)
+                elif k in _BOOL_FIELDS:
+                    out[k] = v.lower() in ("1", "true", "yes")
+            except ValueError as ex:
+                raise SpecError(f"cannot coerce `{k}`={v!r} to a number") from ex
     return out
 
 
@@ -253,9 +256,9 @@ def _build_rule(raw: Mapping[str, Any], seq: int) -> Mdl.Rule:
         raise RuleSetError(f"rule #{seq} is missing required key `type`")
     kwargs = {k: v for k, v in raw.items() if k != "type"}
     rule_id = kwargs.pop("id", None) or f"r{seq:03d}.{kind}"
-    kwargs = _coerce_expanded_scalars(kwargs)
 
     try:
+        kwargs = _coerce_expanded_scalars(kwargs)
         if kind == "column_spec":
             return Mdl.ColumnSpecRule(
                 rule_id, seq, column=kwargs.pop("column"), spec=parse_spec(kwargs.pop("spec")), **kwargs

@@ -166,6 +166,15 @@ def test_cli_exit_codes(spark, tmp_path, capsys):
     err = capsys.readouterr().err
     assert f"cannot read --aux dim_sources {missing}" in err
 
+    # a rule naming a column the table lacks is an invalid spec: one
+    # stderr line of ours (Spark logs its own), no traceback
+    rules_nocol = tmp_path / "nocol.yaml"
+    rules_nocol.write_text("schema: [{type: unique, keys: [no_such_col]}]")
+    assert main(["validate", "--rules", str(rules_nocol), "--table", table]) == 127
+    err = capsys.readouterr().err
+    ours = [line for line in err.splitlines() if line.startswith("❗️")]
+    assert len(ours) == 1 and "no_such_col" in ours[0] and "Traceback" not in err
+
 
 def test_cli_validates_a_catalog_table_by_name(spark, tmp_path, capsys):
     """--table and --aux take a session-catalog table name as well as a

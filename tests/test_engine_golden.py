@@ -12,6 +12,7 @@ import pytest
 
 from fs_schema_validator_spark.compiler import plan
 from fs_schema_validator_spark.engine import ValidationEngine
+from fs_schema_validator_spark.rules.model import ArrayEqualityRule
 from fs_schema_validator_spark.sources import synth
 
 RULES = r"""
@@ -119,27 +120,102 @@ def test_exact_violation_goldens(result):
     assert got == GOLDEN
 
 
-@pytest.mark.parametrize(
-    "zeroed",
-    [
-        (),
-        ("_BROADCAST_REFETCH_MAX_KEYS",),
-        ("_BROADCAST_REFETCH_MAX_KEYS", "_KEYSET_REFETCH_MAX_KEYS"),
-    ],
-    ids=["broadcast", "keyset", "shuffle"],
-)
-def test_equality_refetch_tiers_reproduce_goldens(spark, monkeypatch, zeroed):
-    """Each tier of the equality re-fetch (chosen by the count of
-    hash-mismatched keys) diagnoses the same mismatches: zeroing a tier's
-    key limit forces the next tier on the same fixture."""
-    for name in zeroed:
-        monkeypatch.setattr(plan, name, 0)
-    res = _validate_golden_table(spark)
-    got = [
-        (r.subject, r.rule_id, r.reason) for r in res.sorted_violations().collect()
-    ]
-    res.release()
+def _plan_nodes(node):
+    """A physical plan's nodes, top down; an adaptive plan is walked through
+    its current plan (before execution, the initial one)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _output(node) -> set[str]:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def _refetch_plan(spark) -> tuple[list, int]:
+    """The nodes of the golden table's equality re-fetch plan, planned after
+    the mismatched-key set is counted, as validate() plans it, and the size
+    in bytes the planner sees for that cached key set."""
+    seq, tables = golden_inputs(spark)
+    compiled = ValidationEngine(subject_col="doc_id").compile(seq, RULES, tables)
+    rule = next(
+        r for r in compiled.ruleset.table_rules if isinstance(r, ArrayEqualityRule)
+    )
+    try:
+        qe = compiled._table_violations(rule)._jdf.queryExecution()
+        (key_set_bytes,) = {
+            int(n.stats().sizeInBytes())
+            for n in _plan_nodes(qe.optimizedPlan())
+            if n.nodeName() == "InMemoryRelation" and _output(n) == {"doc_id"}
+        }
+        return list(_plan_nodes(qe.executedPlan())), key_set_bytes
+    finally:
+        compiled.release()
+
+
+def _keyset_filtered_columns(nodes) -> set[str]:
+    """Array columns of the scans that a broadcast of the cached key set
+    filters directly: no join or exchange between the scan and the filter."""
+    cols = set()
+    for join in nodes:
+        if join.nodeName() != "BroadcastHashJoin":
+            continue
+        build, probe = join.right(), join.left()
+        if str(join.buildSide()) != "BuildRight":
+            build, probe = probe, build
+        leaves = [n.nodeName() for n in _plan_nodes(build) if not n.children().size()]
+        if leaves != ["InMemoryTableScan"] or _output(build) != {"doc_id"}:
+            continue
+        names = [n.nodeName() for n in _plan_nodes(probe)]
+        assert not any("Exchange" in n or "Join" in n for n in names), names
+        cols |= _output(probe) & {"tokens", "_ref_arr"}
+    return cols
+
+
+def _shuffled_joins(nodes) -> int:
+    return sum(n.nodeName() in ("SortMergeJoin", "ShuffledHashJoin") for n in nodes)
+
+
+@pytest.mark.parametrize("tier", ["broadcast", "keyset", "shuffle"])
+def test_equality_refetch_tiers_reproduce_goldens(spark, tier):
+    """The equality re-fetch is one plan without join hints; Spark chooses
+    each join from the counted key set's size against
+    spark.sql.autoBroadcastJoinThreshold. Each strategy it can reach
+    diagnoses the same mismatches:
+      - broadcast (default settings): the key set is broadcast into both
+        array scans and the filtered sides join by broadcast, so nothing
+        shuffles;
+      - keyset (threshold at the key set's size): the key set is still
+        broadcast into both array scans, but the filtered sides shuffle;
+      - shuffle (threshold -1): every join shuffles."""
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(conf)
+    try:
+        if tier == "keyset":
+            spark.conf.set(conf, str(_refetch_plan(spark)[1]))
+        elif tier == "shuffle":
+            spark.conf.set(conf, "-1")
+        nodes, _ = _refetch_plan(spark)
+        res = _validate_golden_table(spark)
+        got = [
+            (r.subject, r.rule_id, r.reason) for r in res.sorted_violations().collect()
+        ]
+        res.release()
+    finally:
+        spark.conf.set(conf, default)
     assert got == GOLDEN
+    names = [n.nodeName() for n in nodes]
+    if tier == "shuffle":
+        assert "BroadcastHashJoin" not in names, names
+        assert _shuffled_joins(nodes) == 3, names
+        return
+    assert _keyset_filtered_columns(nodes) == {"tokens", "_ref_arr"}
+    assert _shuffled_joins(nodes) == (tier == "keyset"), names
+    assert ("Exchange" in names) == (tier == "keyset"), names
 
 
 def test_release_unpersists_everything_validation_persisted(spark):

@@ -274,3 +274,23 @@ def test_hyphenated_unbound_binding_is_rejected():
     (hyphens allowed), so {$my-var} cannot ship as literal text."""
     with pytest.raises(RuleSetError, match=r"my-var.*still unbound"):
         RuleSet.from_yaml("schema: [{type: not_empty, column: '{$my-var}'}]")
+
+
+@pytest.mark.parametrize("field", ["buckets", "lo", "hi", "threshold"])
+def test_non_numeric_rule_knob_is_a_rule_set_error(field):
+    """A numeric rule knob that is not a number is an invalid rule spec
+    naming the rule's seq, the field and the value, as a non-numeric `min`
+    in a column spec is, not a bare ValueError."""
+    spec = f"""
+schema:
+  - {{type: not_empty, column: a}}
+  - {{type: drift_psi, column: n_tok, group_col: source, ref: h, {field}: many}}
+"""
+    with pytest.raises(
+        RuleSetError, match=rf"\(seq 1\): cannot coerce `{field}`='many' to a number"
+    ):
+        RuleSet.from_yaml(spec)
+    with pytest.raises(RuleSetError, match=r"cannot coerce `min`='abc'"):
+        RuleSet.from_yaml(
+            "schema: [{type: column_spec, column: a, spec: {type: int, min: abc}}]"
+        )
