@@ -225,12 +225,56 @@ def quantiles_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def histogram_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    out = sketches.psi_vs_global(
-        docs, col="n_chars", group_col="lang", lo=0.0, hi=600.0, buckets=12
+# One drift_psi rule per metric over documents' n_chars by lang. The
+# threshold 0 lies below every lang's statistic, so each lang is reported
+# and its rendered statistic is value-checked.
+_DRIFT_RULE = """
+  - type: drift_psi
+    id: nchars_{metric}
+    column: n_chars
+    group_col: lang
+    ref: table_mass
+    metric: {metric}
+    buckets: 12
+    lo: 0
+    hi: 600
+    threshold: 0
+"""
+
+
+def _table_bucket_mass(docs: DataFrame) -> DataFrame:
+    """(lang, bucket, p): the whole table's n_chars bucket mass, repeated
+    for every lang, so each lang is compared against the table it belongs
+    to. Null values are no mass, as in the engine's histogram."""
+    vals = docs.filter(F.col("n_chars").isNotNull())
+    bucket = sketches.bucketize(F.col("n_chars"), 0.0, 600.0, 12)
+    counts = vals.groupBy(bucket.alias("bucket")).agg(
+        F.count(F.lit(1)).alias("cnt")
     )
-    return out.select(F.col("grp").alias("lang"), "psi")
+    total = vals.agg(F.count(F.lit(1)).alias("total"))
+    mass = counts.crossJoin(total).select(
+        "bucket", (F.col("cnt") / F.col("total")).alias("p")
+    )
+    return vals.select("lang").distinct().crossJoin(mass)
+
+
+def _drift_violations(
+    spark: SparkSession, sf_dir: str, metrics: list[str]
+) -> DataFrame:
+    """The engine's drift_psi violations, one rule per metric, against the
+    table's own bucket mass."""
+    docs = _t(spark, sf_dir, "documents")
+    rules = "schema:" + "".join(_DRIFT_RULE.format(metric=m) for m in metrics)
+    res = ValidationEngine(subject_col="doc_id").validate(
+        docs, rules, {"table_mass": _table_bucket_mass(docs)}
+    )
+    return res.violations.select("subject", "rule_id", "reason")
+
+
+def histogram_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PSI of each lang's n_chars histogram against the whole table's,
+    over the full lang × bucket grid."""
+    return _drift_violations(spark, sf_dir, ["psi"])
 
 
 # ---------------------------------------------------------------------------
@@ -584,41 +628,13 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# drift, bucketed join, profiling and token-window dedup (oracle-matched)
+# drift, profiling and token-window dedup (oracle-matched)
 
 
 def drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    out = sketches.ks_vs_global(
-        docs, col="n_chars", group_col="lang", lo=0.0, hi=600.0, buckets=12
-    )
-    return out.select(F.col("grp").alias("lang"), "ks_d")
-
-
-def bucketed_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed-layout join (SURVEY §2 stretch): customer and orders are
-    materialized co-bucketed by custkey, so the sort-merge join runs with
-    NO Exchange on either side — the layout the engine's recurring
-    sequences⋈reference_tokens equality join uses at scale. Output is the
-    per-mktsegment order rollup, value-checked against a plain-join
-    DuckDB oracle (identical results, different physical plan)."""
-    from pathlib import Path
-
-    from fs_schema_validator_spark.sources import tables as tbl
-
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("custkey"), "c_mktsegment"
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("custkey"), "o_totalprice"
-    )
-    j = tbl.bucketed_equi_join(
-        spark, cust, orders, "custkey", buckets=16, tag=Path(sf_dir).name
-    )
-    return j.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 4).alias("sum_price"),
-    )
+    """Bucketed two-sample KS D of each lang's n_chars against the whole
+    table's."""
+    return _drift_violations(spark, sf_dir, ["ks"])
 
 
 def table_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,16 +808,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def drift_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both per-group distribution-drift tests against the global
-    distribution — PSI over the full group×bucket grid and the
-    binned-CDF KS statistic — one (mode, lang, stat) row each."""
-    psi = histogram_psi(spark, sf_dir).select(
-        F.lit("psi").alias("mode"), "lang", F.col("psi").alias("stat")
-    )
-    ks = drift_ks(spark, sf_dir).select(
-        F.lit("ks").alias("mode"), "lang", F.col("ks_d").alias("stat")
-    )
-    return psi.unionByName(ks)
+    """Both per-group distribution-drift tests against the table's own
+    distribution in one rule set — PSI over the full group×bucket grid
+    and the binned-CDF KS statistic — one violation per (lang, rule)."""
+    return _drift_violations(spark, sf_dir, ["psi", "ks"])
 
 
 def window_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,7 +869,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "violations_grouped": violations_grouped,
         "window_ops": window_ops,
         "stats_threshold_violations": stats_threshold_violations,
-        "bucketed_join_stats": bucketed_join_stats,
         "table_profile_documents": table_profile_documents,
         "topn_per_group": topn_per_group,
         "histogram_psi": histogram_psi,
@@ -933,11 +942,12 @@ def oracle_sql() -> dict[str, str]:
         ),
         "histogram_psi": (
             # full lang × bucket grid (mirrors the engine): a group missing
-            # a bucket with global mass still contributes its EPS-clamped
-            # term, so concentrated drift is not underestimated
-            "WITH hist AS (SELECT lang, least(11, greatest(0, "
-            "CAST(floor(n_chars / 50.0) AS INT))) AS bucket, "
-            "CAST(count(*) AS DOUBLE) AS cnt FROM documents "
+            # a bucket with table mass still contributes its EPS-clamped
+            # term, so concentrated drift is not underestimated. A null
+            # lang is the group '<null>', as in the engine.
+            "WITH hist AS (SELECT coalesce(lang, '<null>') AS lang, "
+            "least(11, greatest(0, CAST(floor(n_chars / 50.0) AS INT))) "
+            "AS bucket, CAST(count(*) AS DOUBLE) AS cnt FROM documents "
             "WHERE n_chars IS NOT NULL GROUP BY 1, 2), "
             "tot AS (SELECT lang, sum(cnt) AS total FROM hist GROUP BY 1), "
             "q AS (SELECT h.lang, h.bucket, h.cnt / t.total AS q "
@@ -950,9 +960,12 @@ def oracle_sql() -> dict[str, str]:
             "greatest(coalesce(q.q, 0), 1e-6) AS qc, "
             "greatest(grid.p, 1e-6) AS pc "
             "FROM grid LEFT JOIN q ON grid.lang = q.lang "
-            "AND grid.bucket = q.bucket) "
-            "SELECT lang, round(sum((qc - pc) * ln(qc / pc)), 4) AS psi "
-            "FROM j GROUP BY lang"
+            "AND grid.bucket = q.bucket), "
+            "s AS (SELECT lang, sum((qc - pc) * ln(qc / pc)) AS psi "
+            "FROM j GROUP BY lang) "
+            "SELECT lang AS subject, 'nchars_psi' AS rule_id, "
+            "'distribution drift: PSI ' || printf('%.4f', psi) || ' > 0' "
+            "AS reason FROM s WHERE psi > 0"
         ),
         "embedding_dim_violations": (
             "WITH c AS (SELECT vec_id, CASE WHEN vec_id % 41 = 0 "
@@ -1047,14 +1060,16 @@ def oracle_sql() -> dict[str, str]:
             "WHERE rk > 1"
         ),
         "drift_ks": (
-            "WITH h AS (SELECT lang AS grp, least(11, greatest(0, "
-            "CAST(floor((n_chars - 0.0) / 50.0) AS INT))) AS bucket, "
-            "count(*) AS cnt FROM documents "
+            # KS D is rounded to 4 digits before the threshold, as in the
+            # engine
+            "WITH h AS (SELECT coalesce(lang, '<null>') AS grp, "
+            "least(11, greatest(0, CAST(floor((n_chars - 0.0) / 50.0) AS INT))) "
+            "AS bucket, count(*) AS cnt FROM documents "
             "WHERE n_chars IS NOT NULL GROUP BY 1, 2), "
             "t AS (SELECT grp, sum(cnt) AS total FROM h GROUP BY 1), "
             "g AS (SELECT bucket, sum(cnt) AS gcnt FROM h GROUP BY 1), "
-            "p AS (SELECT bucket, gcnt / (SELECT CAST(count(*) AS DOUBLE) "
-            "FROM documents) AS p FROM g), "
+            "p AS (SELECT bucket, gcnt / (SELECT CAST(sum(gcnt) AS DOUBLE) "
+            "FROM g) AS p FROM g), "
             "grid AS (SELECT t.grp, p.bucket, p.p FROM t, p), "
             "q AS (SELECT h.grp, h.bucket, h.cnt / CAST(t.total AS DOUBLE) "
             "AS q FROM h JOIN t USING (grp)), "
@@ -1063,15 +1078,12 @@ def oracle_sql() -> dict[str, str]:
             "AND grid.bucket = q.bucket), "
             "c AS (SELECT grp, sum(q) OVER (PARTITION BY grp ORDER BY bucket) "
             "AS cq, sum(p) OVER (PARTITION BY grp ORDER BY bucket) AS cp "
-            "FROM j) "
-            "SELECT grp AS lang, round(max(abs(cq - cp)), 4) AS ks_d "
-            "FROM c GROUP BY grp"
-        ),
-        "bucketed_join_stats": (
-            "SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders, "
-            "round(sum(o_totalprice), 4) AS sum_price "
-            "FROM orders JOIN customer ON o_custkey = c_custkey "
-            "GROUP BY c_mktsegment"
+            "FROM j), "
+            "d AS (SELECT grp, round(max(abs(cq - cp)), 4) AS ks "
+            "FROM c GROUP BY grp) "
+            "SELECT grp AS subject, 'nchars_ks' AS rule_id, "
+            "'distribution drift: KS ' || printf('%.4f', ks) || ' > 0' "
+            "AS reason FROM d WHERE ks > 0"
         ),
         "table_profile_documents": " UNION ALL ".join(
             f"SELECT '{c}' AS col_name, CAST(count(*) AS BIGINT) AS n_rows, "
@@ -1086,9 +1098,8 @@ def oracle_sql() -> dict[str, str]:
     # the union gates replay exactly what each sibling gate replays (a
     # hand-copied union could silently drift from its siblings).
     d["drift_tests"] = (
-        f"SELECT 'psi' AS mode, lang, psi AS stat FROM ({d['histogram_psi']}) "
-        "UNION ALL "
-        f"SELECT 'ks' AS mode, lang, ks_d AS stat FROM ({d['drift_ks']})"
+        f"SELECT * FROM ({d['histogram_psi']}) "
+        f"UNION ALL SELECT * FROM ({d['drift_ks']})"
     )
     d["window_ops"] = (
         "SELECT 'running_total' AS mode, CAST(o_custkey AS BIGINT) AS k1, "

@@ -73,6 +73,19 @@ def key_string(col: str | Column) -> Column:
     return F.coalesce(c.cast("string"), F.lit("<null>"))
 
 
+def _columns_read(rule: Mdl.RuleBase) -> tuple[str, ...]:
+    """The input columns a table rule cannot run without. A referential
+    rule's column is not among them: its absence is a per-subject
+    violation, as for the row rules."""
+    if isinstance(rule, Mdl.UniqueRule):
+        return rule.keys
+    if isinstance(rule, Mdl.ArrayEqualityRule):
+        return (rule.key, rule.column)
+    if isinstance(rule, (Mdl.TokenRangeRule, Mdl.DriftRule, Mdl.StatsThresholdRule)):
+        return (rule.column, rule.group_col)
+    return ()
+
+
 def _no_errs() -> Column:
     return F.array().cast(_ROW_ERR_TYPE)
 
@@ -155,13 +168,13 @@ def _compile_row_rule(rule: Mdl.Rule, schema: T.StructType) -> Column:
 
 
 def row_violation_array(
-    rules: Sequence[Mdl.Rule], schema: T.StructType, extra: Sequence[Column] = ()
+    rules: Sequence[Mdl.Rule], schema: T.StructType, extra: Sequence[Column]
 ) -> Column:
     """Every row rule's violations for one row, as ONE
-    array<struct<rule_seq,rule_id,reason>> — a stateless expression, so
-    it runs in the fused batch scan and inside native streaming operators
-    alike. `extra` appends further per-row violation arrays (the fused
-    scan's lifted token-range and referential checks)."""
+    array<struct<rule_seq,rule_id,reason>> — a stateless expression,
+    evaluated in the fused scan's one projection. `extra` appends further
+    per-row violation arrays (the fused scan's lifted token-range and
+    referential checks)."""
     arrays = [_compile_row_rule(r, schema) for r in rules]
     arrays.extend(extra)
     return F.flatten(F.array(*arrays)) if arrays else _no_errs()
@@ -222,6 +235,15 @@ class CompiledPlan:
                 "subject key; rename it (e.g. withColumnRenamed) — "
                 "`subject` is the engine's reserved violations alias"
             )
+        if subject_col not in df.columns:
+            raise RuleSetError(f"subject column `{subject_col}` does not exist")
+        for rule in ruleset.table_rules:
+            for c in _columns_read(rule):
+                if c not in df.columns:
+                    raise RuleSetError(
+                        f"rule `{rule.rule_id}` (seq {rule.seq}): column "
+                        f"`{c}` does not exist"
+                    )
         self.df = df
         self.ruleset = ruleset
         self.subject_col = subject_col
@@ -271,7 +293,7 @@ class CompiledPlan:
                 cols.add(r.key)
         # "subject" is the reserved alias of the cast subject key
         cols.discard("subject")
-        return sorted(c for c in cols if c in self.df.columns)
+        return sorted(cols)
 
     def _lifted_token_range(self, rule: Mdl.TokenRangeRule) -> Column:
         """Token-range check as a row-scan violation array (vocab column is
@@ -562,8 +584,10 @@ class CompiledPlan:
             rule.hi,
             rule.buckets,
         )
+        # groups render through key_string on both sides, as the
+        # histogram's do, so a null group matches a null group
         ref = self._aux(rule.ref).select(
-            F.col(rule.group_col).alias("grp"), F.col("bucket"), F.col("p")
+            key_string(rule.group_col).alias("grp"), F.col("bucket"), F.col("p")
         )
         # KS D is rounded to 4 digits before the threshold, PSI is not
         ks = rule.metric == "ks"

@@ -22,6 +22,12 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# The window hash's polynomial: base, modulus (a 31-bit prime, so a hash
+# packs beside a row ordinal into one uint64 sort key) and seed.
+HASH_BASE = 1000003
+HASH_MOD = 2147483647
+HASH_SEED = 7
+
 
 def _list_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Return (starts, lengths, values, validity) NumPy views of a ListArray.
@@ -51,16 +57,11 @@ def _list_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.n
     return starts, lengths, values, validity
 
 
-def token_window_hash_kernel(
-    tokens: pa.Array,
-    k: int,
-    base: int = 1000003,
-    mod: int = 2147483647,
-    seed: int = 7,
-) -> pa.ListArray:
+def token_window_hash_kernel(tokens: pa.Array, k: int) -> pa.ListArray:
     """All k-token polynomial window hashes per row of a list<int> column.
 
-    win[i][j] = (seed*base^k + sum_t tok[i][j+t] * base^(k-1-t)) % mod —
+    win[i][j] = (seed*base^k + sum_t tok[i][j+t] * base^(k-1-t)) % mod, with
+    base, mod and seed the module's HASH_BASE, HASH_MOD and HASH_SEED —
     the Rabin-Karp k-gram fingerprint over TOKEN values. Token-level dedup
     needs every window, not only the minimum, so coverage can be
     attributed back to positions.
@@ -78,7 +79,7 @@ def token_window_hash_kernel(
     hashable sequence)."""
     starts, lengths, values, validity = _list_views(tokens)
     n = len(starts)
-    m = np.uint64(mod)
+    m = np.uint64(HASH_MOD)
     rowok = validity.copy()
     if n and values.dtype.kind == "f":
         # child nulls decoded as NaN (see _list_views): invalidate rows
@@ -92,14 +93,14 @@ def token_window_hash_kernel(
         values = np.nan_to_num(values)
     # floor-mod in int64 first: int32 -1 reinterpreted as uint64 would be
     # 2^64-1, and numpy's % on signed ints already floors like Python
-    flat = (values.astype(np.int64) % np.int64(mod)).astype(np.uint64)
+    flat = (values.astype(np.int64) % np.int64(HASH_MOD)).astype(np.uint64)
 
     P = np.empty(k + 1, dtype=np.uint64)
     P[0] = 1
-    b64 = np.uint64(base % mod)
+    b64 = np.uint64(HASH_BASE % HASH_MOD)
     for j in range(1, k + 1):
         P[j] = P[j - 1] * b64 % m
-    seed64 = np.uint64(seed % mod)
+    seed64 = np.uint64(HASH_SEED % HASH_MOD)
 
     n_wins = np.where(rowok, np.maximum(lengths - k + 1, 0), 0)
     offsets = np.zeros(n + 1, dtype=np.int64)
@@ -126,13 +127,7 @@ def token_window_hash_kernel(
 
 
 def token_window_pair_counts_arrow(
-    df: DataFrame,
-    tokens_col: str,
-    id_col: str = "doc_id",
-    k: int = 8,
-    base: int = 1000003,
-    mod: int = 2147483647,
-    seed: int = 7,
+    df: DataFrame, tokens_col: str, id_col: str = "doc_id", k: int = 8
 ) -> DataFrame:
     """(id, h, k_cnt) — one row per (document, DISTINCT k-window hash),
     with k_cnt the within-document multiplicity. Rows with no windows
@@ -149,10 +144,7 @@ def token_window_pair_counts_arrow(
     then a plain count per hash, because each doc contributes each hash
     at most once (a doc_id duplicated across input ROWS contributes once
     per row — each row is a document instance, so exact full-row
-    duplicates flag each other). Requires mod <= 2^32 (row ordinal and
-    hash pack into one uint64 sort key)."""
-    if mod > 1 << 32:
-        raise ValueError("token_window_pair_counts_arrow requires mod <= 2^32")
+    duplicates flag each other)."""
     id_field = df.schema[id_col]
     out_schema = (
         f"{id_col} {id_field.dataType.simpleString()}, h bigint, k_cnt bigint"
@@ -161,9 +153,7 @@ def token_window_pair_counts_arrow(
 
     def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            wins = token_window_hash_kernel(
-                batch.column("_t"), k, base, mod, seed
-            )
+            wins = token_window_hash_kernel(batch.column("_t"), k)
             off = wins.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
             lens = np.diff(off)
             child = wins.values.to_numpy(zero_copy_only=False).astype(

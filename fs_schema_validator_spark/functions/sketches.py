@@ -3,13 +3,12 @@
 ``histogram`` buckets a column per group (nulls excluded) in one partial →
 final aggregation. A drift statistic needs only that histogram — groups ×
 buckets rows — and a reference mass of the same shape, so ``drift``
-collects both in one job and computes PSI or KS in plain Python: one tail
-for the DriftRule in compiler/plan.py (reference table) and for the "vs
-global" forms (the whole table's distribution, when no reference table
-exists). The per-group result comes back as a relation of literals, so
-rounding, filtering and reason rendering stay Spark expressions and run no
-job of their own. The collect is capped (``_DRIFT_MAX_CELLS``): a group
-column with too many values fails loud instead of exhausting the driver.
+collects both in one job and computes PSI or KS in plain Python: the tail
+of the DriftRule in compiler/plan.py. The per-group result comes back as a
+relation of literals, so rounding, filtering and reason rendering stay
+Spark expressions and run no job of their own. The collect is capped
+(``_DRIFT_MAX_CELLS``): a group column with too many values fails loud
+instead of exhausting the driver.
 """
 
 from __future__ import annotations
@@ -21,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..compiler.plan import key_string
 from ..rules.loader import RuleSetError
 
 EPS = 1e-6
@@ -46,32 +46,31 @@ def histogram(
     NULL values are excluded: Spark's greatest() skips nulls, so an
     unfiltered null row would silently land in bucket 0 and shift every
     distribution left — nullness is the required/spec rules' concern, not
-    distribution mass."""
+    distribution mass. The group renders through ``key_string``, so a null
+    group is the group '<null>', as on every other surface."""
     return (
         df.filter(F.col(col).isNotNull())
         .groupBy(
-            F.col(group_col).alias("grp"),
+            key_string(group_col).alias("grp"),
             bucketize(F.col(col), lo, hi, buckets).alias("bucket"),
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def _collect(hist: DataFrame, ref: DataFrame | None) -> tuple[list, list]:
+def _collect(hist: DataFrame, ref: DataFrame) -> tuple[list, list]:
     """The histogram's (grp, bucket, cnt) rows and the reference's
     (grp, bucket, p) rows, in one collect of at most _DRIFT_MAX_CELLS rows."""
     cells = hist.select(
         F.lit(True).alias("_hist"), "grp", "bucket", "cnt",
         F.lit(None).cast("double").alias("p"),
-    )
-    if ref is not None:
-        cells = cells.unionByName(
-            ref.select(
-                F.lit(False).alias("_hist"), "grp", "bucket",
-                F.lit(None).cast("long").alias("cnt"),
-                F.col("p").cast("double").alias("p"),
-            )
+    ).unionByName(
+        ref.select(
+            F.lit(False).alias("_hist"), "grp", "bucket",
+            F.lit(None).cast("long").alias("cnt"),
+            F.col("p").cast("double").alias("p"),
         )
+    )
     rows = cells.limit(_DRIFT_MAX_CELLS + 1).collect()
     if len(rows) > _DRIFT_MAX_CELLS:
         raise RuleSetError(
@@ -83,43 +82,26 @@ def _collect(hist: DataFrame, ref: DataFrame | None) -> tuple[list, list]:
     return hist_rows, ref_rows
 
 
-def _global_mass(hist_rows: list) -> list:
-    """(grp, bucket, p): the whole table's bucket mass, repeated for every
-    group of the histogram — the full grp × occupied-bucket grid, so a
-    group MISSING a bucket where the table has mass still contributes its
-    term. The grand total is Σcnt of the histogram itself."""
-    gtotal = float(sum(c for _, _, c in hist_rows) or 1)
-    per_bucket: dict = defaultdict(int)
-    for _, b, c in hist_rows:
-        per_bucket[b] += c
-    groups = dict.fromkeys(g for g, _, _ in hist_rows)
-    return [(g, b, n / gtotal) for g in groups for b, n in per_bucket.items()]
-
-
 def _cells(hist_rows: list, ref_rows: list) -> dict:
     """grp -> [(bucket, q, p)]: each group's share `q` of its histogram next
     to the reference mass `p`, over the full outer join of the two on
-    (grp, bucket) — a side missing a cell has mass 0. As in a Spark join,
-    null never matches null: the histogram's null group has no total to
-    divide by and drops out, and the reference's null-group rows stay
-    unmatched, forming a group of their own."""
+    (grp, bucket) — a side missing a cell has mass 0. Both sides' groups
+    are ``key_string`` renderings, so a null group is '<null>' on each and
+    matches like any other."""
     totals: dict = defaultdict(int)
     for g, _, c in hist_rows:
         totals[g] += c
     ref_by_cell: dict = defaultdict(list)
     for g, b, p in ref_rows:
-        if g is not None and b is not None:
-            ref_by_cell[(g, b)].append(0.0 if p is None else p)
+        ref_by_cell[(g, b)].append(0.0 if p is None else p)
     out: dict = defaultdict(list)
     for g, b, c in hist_rows:
-        if g is None:
-            continue
         q = c / totals[g]
         for p in ref_by_cell.get((g, b)) or [0.0]:
             out[g].append((b, q, p))
-    matched = {(g, b) for g, b, _ in hist_rows if g is not None}
+    matched = {(g, b) for g, b, _ in hist_rows}
     for g, b, p in ref_rows:
-        if g is None or b is None or (g, b) not in matched:
+        if (g, b) not in matched:
             out[g].append((b, 0.0, 0.0 if p is None else p))
     return out
 
@@ -153,59 +135,25 @@ def _ks(cells: list) -> float:
 
 def drift(
     hist: DataFrame,
-    ref: DataFrame | None,
+    ref: DataFrame,
     metric: str,
     digits: int | None = None,
 ) -> DataFrame:
     """(grp, stat): PSI (``metric="psi"``) or KS D (``"ks"``) of each
     group's (grp, bucket, cnt) histogram against the reference mass
-    ``ref`` (grp, bucket, p), or against the whole table's distribution
-    when ``ref`` is None. Histogram and reference are collected together,
-    once; the result is a relation of literals, with ``stat`` rounded to
-    ``digits`` by Spark when given."""
+    ``ref`` (grp, bucket, p). Histogram and reference are collected
+    together, once; the result is a relation of literals, with ``stat``
+    rounded to ``digits`` by Spark when given."""
     hist_rows, ref_rows = _collect(hist, ref)
-    if ref is None:
-        ref_rows = _global_mass(hist_rows)
     stat_of = _ks if metric == "ks" else _psi
     stats = [(g, stat_of(c)) for g, c in _cells(hist_rows, ref_rows).items()]
-    grp_type = hist.schema["grp"].dataType
     item = T.StructType(
-        [T.StructField("grp", grp_type), T.StructField("stat", T.DoubleType())]
+        [T.StructField("grp", T.StringType()), T.StructField("stat", T.DoubleType())]
     )
-    rows = F.array(
-        *[F.struct(F.lit(g).cast(grp_type), F.lit(s)) for g, s in stats]
-    ).cast(T.ArrayType(item))
+    rows = F.array(*[F.struct(F.lit(g), F.lit(s)) for g, s in stats]).cast(
+        T.ArrayType(item)
+    )
     out = hist.sparkSession.range(1, numPartitions=1).select(F.inline(rows))
     if digits is not None:
         out = out.select("grp", F.round("stat", digits).alias("stat"))
     return out
-
-
-def psi_vs_global(
-    df: DataFrame,
-    col: str,
-    group_col: str,
-    lo: float,
-    hi: float,
-    buckets: int,
-    digits: int = 4,
-) -> DataFrame:
-    """(grp, psi) — population-stability index of each group's histogram
-    against the whole-table distribution, over the full grid."""
-    hist = histogram(df, col, group_col, lo, hi, buckets)
-    return drift(hist, None, "psi", digits).withColumnRenamed("stat", "psi")
-
-
-def ks_vs_global(
-    df: DataFrame,
-    col: str,
-    group_col: str,
-    lo: float,
-    hi: float,
-    buckets: int,
-    digits: int = 4,
-) -> DataFrame:
-    """(grp, ks_d) — sketch-based two-sample KS of each group's bucketed
-    distribution against the whole table's, with no sort of the raw data."""
-    hist = histogram(df, col, group_col, lo, hi, buckets)
-    return drift(hist, None, "ks", digits).withColumnRenamed("stat", "ks_d")

@@ -12,28 +12,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# A window is duplicated when this many document rows hold its hash.
+MIN_DOCS = 2
+# Decimal digits of the reported dup_rate.
+RATE_DIGITS = 4
+
 
 def token_ngram_dup_stats(
     df: DataFrame,
     k: int = 8,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
-    min_docs: int = 2,
-    base: int = 1000003,
-    mod: int = 2147483647,
-    seed: int = 7,
-    digits: int = 4,
 ) -> DataFrame:
     """Token-level exact k-gram duplication stats per document, over the
     token arrays of a tokenized-sequence table, in the spirit of
     exact-substring training-data dedup (Lee et al. 2022,
     arXiv:2107.06499): a window is *duplicated* when its k-token hash
-    occurs in >= `min_docs` document ROW INSTANCES (each input row is
+    occurs in >= MIN_DOCS (2) document ROW INSTANCES (each input row is
     one instance — an id spanning two rows contributes 2, not 1; see
     below).
 
     Returns one row per DISTINCT id: (id, n_windows, n_dup_windows,
-    dup_rate) with dup_rate = round(n_dup/n_windows, digits). Rows whose
+    dup_rate) with dup_rate = round(n_dup/n_windows, RATE_DIGITS). Rows whose
     token list is null, contains nulls, or is shorter than k have no
     windows: (id, 0, 0, 0.0). An id duplicated across input rows is one
     output row summing both instances — and since each ROW counts as a
@@ -59,9 +59,7 @@ def token_ngram_dup_stats(
     10^12 rows every shuffle key is a uniform 31-bit hash."""
     from ..functions.arrays import token_window_pair_counts_arrow
 
-    pdc = token_window_pair_counts_arrow(
-        df, tokens_col, id_col, k=k, base=base, mod=mod, seed=seed
-    )
+    pdc = token_window_pair_counts_arrow(df, tokens_col, id_col, k)
     # sentinel (h = -1, k_cnt = 0) rows keep zero-window docs in the
     # stream, so no join back to the source is needed; they must not
     # enter the hash counts
@@ -78,7 +76,7 @@ def token_ngram_dup_stats(
         .agg(
             F.sum("k_cnt").alias("_nw"),
             F.sum(
-                F.when(F.col("n_docs") >= min_docs, F.col("k_cnt")).otherwise(
+                F.when(F.col("n_docs") >= MIN_DOCS, F.col("k_cnt")).otherwise(
                     F.lit(0)
                 )
             ).alias("_nd"),
@@ -90,7 +88,7 @@ def token_ngram_dup_stats(
         id_col,
         nw.alias("n_windows"),
         nd.alias("n_dup_windows"),
-        F.when(nw > 0, F.round(nd.cast("double") / nw, digits))
+        F.when(nw > 0, F.round(nd.cast("double") / nw, RATE_DIGITS))
         .otherwise(F.lit(0.0))
         .alias("dup_rate"),
     )

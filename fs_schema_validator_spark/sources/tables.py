@@ -17,9 +17,6 @@ Iceberg specifics that map onto this engine when the runtime is present:
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -39,32 +36,14 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def load_table(
-    spark: SparkSession,
-    ref: str,
-    schema: str | None = None,
-    fmt: str | None = None,
-) -> DataFrame:
+def load_table(spark: SparkSession, ref: str) -> DataFrame:
     """Load `ref` as a DataFrame.
 
     ``catalog.db.table`` references go through the session catalog (Iceberg
     or hive). Paths dispatch on FILE EXTENSION only: parquet (default),
-    orc, json/jsonl (line-delimited), csv (headered); pass `fmt` to force a
-    format for extension-less directories (directory NAMES are never
-    sniffed — a parquet directory named `events_orc` reads as parquet).
-    Schemaless text formats accept an optional DDL `schema` string —
-    validation semantics require declared types, so passing one avoids
-    sampling-based inference (a second scan at scale, and inferred types
-    defeat strict checks)."""
-    if fmt is not None:
-        r = spark.read
-        if schema:
-            r = r.schema(schema)
-        if fmt == "csv":
-            r = r.option("header", "true")
-            if not schema:
-                r = r.option("inferSchema", "true")
-        return r.format(fmt).load(ref)
+    orc, json/jsonl (line-delimited), csv (headered, types inferred).
+    Directory NAMES are never sniffed — a parquet directory named
+    `events_orc` reads as parquet."""
     if "/" not in ref and not any(
         ref.endswith(ext) for ext in (".parquet", ".orc", ".json", ".jsonl", ".csv")
     ):
@@ -73,17 +52,9 @@ def load_table(
     if low.endswith(".orc"):
         return spark.read.orc(ref)
     if low.endswith((".json", ".jsonl")):
-        r = spark.read
-        if schema:
-            r = r.schema(schema)
-        return r.json(ref)
+        return spark.read.json(ref)
     if low.endswith(".csv"):
-        r = spark.read.option("header", "true")
-        if schema:
-            r = r.schema(schema)
-        else:
-            r = r.option("inferSchema", "true")
-        return r.csv(ref)
+        return spark.read.option("header", "true").option("inferSchema", "true").csv(ref)
     return spark.read.parquet(ref)
 
 
@@ -96,66 +67,3 @@ def current_snapshot_id(spark: SparkSession, ref: str) -> str:
         f"SELECT snapshot_id FROM {ref}.snapshots ORDER BY committed_at DESC LIMIT 1"
     ).first()
     return str(row[0]) if row else "-"
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    keys: list[str],
-    buckets: int = 64,
-    sort: bool = True,
-) -> None:
-    """Write `df` as a bucketed (and bucket-sorted) managed table.
-
-    Bucketing is the shuffle eliminator for the engine's recurring joins:
-    when both `sequences` and `reference_tokens` are bucketed (and sorted)
-    by `doc_id` with the same bucket count, the per-row equality join
-    compiles to a sort-merge join with NO Exchange on either side — each
-    task zips bucket i with bucket i. At 10^12 rows that converts the
-    largest shuffle in the pipeline (one narrow record per row) into a
-    co-located scan. The Iceberg equivalent is a `bucket(N, doc_id)`
-    partition transform; this writer is the session-catalog form the
-    sandbox can execute and test."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    # A previous session's managed-table files can survive while the fresh
-    # in-memory catalog has no metadata for them — saveAsTable then fails
-    # with LOCATION_ALREADY_EXISTS. Clear the orphaned location.
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = Path(wh.removeprefix("file:")) / name.lower()
-    if loc.exists():
-        shutil.rmtree(loc, ignore_errors=True)
-    w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
-    w.saveAsTable(name)
-
-
-def bucketed_equi_join(
-    spark: SparkSession,
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    buckets: int = 16,
-    tag: str = "t",
-) -> DataFrame:
-    """Materialize both sides as co-bucketed tables and return their
-    shuffle-free equality join.
-
-    With identical bucket counts on the join key, Catalyst's sort-merge
-    join reads bucket i of each table in the same task: the executed plan
-    has NO Exchange on either side (asserted in
-    tests/test_operators.py::test_bucketed_join_has_no_exchange and
-    exercised oracle-checked by the driver query `bucketed_join_stats`).
-    The merge hint pins SMJ so a small side doesn't silently take the
-    broadcast path and mask the layout win being demonstrated. At 10^12
-    rows this is the difference between re-shuffling one narrow record
-    per row on every validation run and a co-located scan; the Iceberg
-    equivalent is a `bucket(N, key)` partition transform on both tables."""
-    import re
-
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", tag)
-    lt, rt = f"fsv_bkt_{tag}_l", f"fsv_bkt_{tag}_r"
-    write_bucketed(left, lt, [key], buckets)
-    write_bucketed(right, rt, [key], buckets)
-    return spark.table(lt).hint("merge").join(spark.table(rt), key)

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 from fs_schema_validator_spark.sources import synth
@@ -11,6 +16,8 @@ from fs_schema_validator_spark.streaming.checkpoint import (
     ResumableValidator,
     rules_fingerprint,
 )
+
+REPO = Path(__file__).resolve().parents[1]
 
 RULES = """
 schema:
@@ -108,7 +115,7 @@ def test_manifest_records_lineage(spark, validator):
 # CLI
 
 
-def test_cli_exit_codes(spark, tmp_path, capsys):
+def test_cli_exit_codes(spark, tmp_path, capfd):
     from fs_schema_validator_spark.plans.cli import main
 
     table = str(tmp_path / "seq")
@@ -139,7 +146,7 @@ def test_cli_exit_codes(spark, tmp_path, capsys):
         )
         == 1
     )
-    printed = capsys.readouterr().out
+    printed = capfd.readouterr().out
     assert "❗️ doc-" in printed and "cannot be empty" in printed
     written = spark.read.parquet(out_path)
     assert written.count() > 0
@@ -148,32 +155,57 @@ def test_cli_exit_codes(spark, tmp_path, capsys):
 
     # the exit code is the verdict, not the printed rows: printing none
     # still fails, and a negative print limit is a usage error
-    capsys.readouterr()
+    capfd.readouterr()
     fail = ["validate", "--rules", str(rules_fail), "--table", table]
     assert main(fail + ["--max-print", "0"]) == 1
-    assert "❗️" not in capsys.readouterr().out
+    assert "❗️" not in capfd.readouterr().out
     assert main(fail + ["--max-print", "-1"]) == 2
-    assert "--max-print" in capsys.readouterr().err
+    assert "--max-print" in capfd.readouterr().err
 
     # a --table or --aux that cannot be read is a usage error, not a
     # verdict: one stderr line naming the flag, no traceback
     missing = str(tmp_path / "no_such_path")
     ok = ["validate", "--rules", str(rules_ok)]
     assert main(ok + ["--table", missing]) == 2
-    err = capsys.readouterr().err
+    err = capfd.readouterr().err
     assert f"cannot read --table {missing}" in err and "PATH_NOT_FOUND" in err
     assert main(ok + ["--table", table, "--aux", f"dim_sources={missing}"]) == 2
-    err = capsys.readouterr().err
+    err = capfd.readouterr().err
     assert f"cannot read --aux dim_sources {missing}" in err
 
-    # a rule naming a column the table lacks is an invalid spec: one
-    # stderr line of ours (Spark logs its own), no traceback
+    # a rule naming a column the table lacks is an invalid spec, found
+    # before Spark plans anything: our two stderr lines, no traceback, no
+    # Spark ERROR record or JVM stack trace
     rules_nocol = tmp_path / "nocol.yaml"
     rules_nocol.write_text("schema: [{type: unique, keys: [no_such_col]}]")
-    assert main(["validate", "--rules", str(rules_nocol), "--table", table]) == 127
-    err = capsys.readouterr().err
-    ours = [line for line in err.splitlines() if line.startswith("❗️")]
-    assert len(ours) == 1 and "no_such_col" in ours[0] and "Traceback" not in err
+    nocol = ["validate", "--rules", str(rules_nocol), "--table", table]
+    assert main(nocol) == 127
+    err = capfd.readouterr().err
+    assert err.splitlines() == [
+        "❗️ The provided schema is invalid!",
+        "rule `r000.unique` (seq 0): column `no_such_col` does not exist",
+    ]
+    # the in-process JVM logs to the descriptors it started with, so the
+    # JVM's own stderr is checked in a fresh CLI process
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="2")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), env.get("PYTHONPATH")) if p
+    )
+    cli = subprocess.run(
+        [sys.executable, "-m", "fs_schema_validator_spark", *nocol],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert cli.returncode == 127, cli.stderr[-4000:]
+    noise = [
+        line
+        for line in cli.stderr.splitlines()
+        if "ERROR" in line or line.lstrip().startswith("at ") or "Traceback" in line
+    ]
+    assert noise == [], cli.stderr[-4000:]
 
 
 def test_cli_validates_a_catalog_table_by_name(spark, tmp_path, capsys):

@@ -2,12 +2,12 @@
 core.
 
 A fresh interpreter validates the golden fixture (tests/test_engine_golden.py)
-three ways — ``validate``, ``ResumableValidator.run`` and ``validate_stream`` —
-and builds ``stateful_violation_rate`` over it. Afterwards no curation module
-(``operators*``, ``functions.arrays``) may have been imported, and the
-executed plans of the golden violation relation and of the rate stream may
+three ways — ``validate``, ``ResumableValidator.run`` and ``validate_stream``.
+Afterwards no curation module (``operators*``, ``functions.arrays``) may have
+been imported, and the executed plan of the golden violation relation may
 hold no Python-evaluated node. A second check, without Spark, pins the
-package's module list: a new operator family has to change this file."""
+package's module list and the public names of the modules around the
+core: a new operator family, helper or option has to change this file."""
 
 from __future__ import annotations
 
@@ -37,10 +37,7 @@ from fs_schema_validator_spark.streaming.checkpoint import (
     ParquetManifestStore,
     ResumableValidator,
 )
-from fs_schema_validator_spark.streaming.stream import (
-    stateful_violation_rate,
-    validate_stream,
-)
+from fs_schema_validator_spark.streaming.stream import validate_stream
 from tests.test_engine_golden import RULES, golden_inputs
 
 tmp = sys.argv[1]
@@ -49,12 +46,10 @@ spark = get_spark(
     app_name="fsv-core-boundary",
     extra_conf={"spark.sql.warehouse.dir": f"{tmp}/warehouse"},
 )
-plans = {}
-
 seq, tables = golden_inputs(spark)
 res = ValidationEngine(subject_col="doc_id").validate(seq, RULES, tables)
 n_validate = res.n_violations
-plans["violations"] = res.violations._jdf.queryExecution().executedPlan().toString()
+plan = res.violations._jdf.queryExecution().executedPlan().toString()
 res.release()
 
 store = ParquetManifestStore(spark, f"{tmp}/manifest")
@@ -74,17 +69,6 @@ q = validate_stream(
     on_batch=lambda bid, df, k: seen.append(k),
 )
 q.awaitTermination(120)
-
-q = (
-    stateful_violation_rate(stream, RULES)
-    .writeStream.format("noop")
-    .outputMode("update")
-    .option("checkpointLocation", f"{tmp}/chk_rate")
-    .trigger(availableNow=True)
-    .start()
-)
-q.awaitTermination(120)
-plans["rate"] = q._jsq.explainInternal(False)
 spark.stop()
 
 print(json.dumps({
@@ -93,7 +77,7 @@ print(json.dumps({
         if m.startswith("fs_schema_validator_spark.operators")
         or m == "fs_schema_validator_spark.functions.arrays"
     ),
-    "plans": plans,
+    "plan": plan,
     "counts": [n_validate, n_run, sum(seen)],
 }))
 """
@@ -119,10 +103,9 @@ def test_core_imports_no_curation_module_and_plans_no_python(tmp_path):
     assert got["counts"] == [17, 17, 17]
     assert got["modules"] == []
     # the persisted relation's string carries the plan that computed it
-    assert "InMemoryRelation" in got["plans"]["violations"]
-    for name, plan in got["plans"].items():
-        found = [node for node in PYTHON_NODES if node in plan]
-        assert found == [], (name, plan)
+    plan = got["plan"]
+    assert "InMemoryRelation" in plan
+    assert [node for node in PYTHON_NODES if node in plan] == [], plan
 
 
 # the validation core, the CLI `profile` command's operator, and the
@@ -162,16 +145,35 @@ PACKAGE_MODULES = [
 ]
 
 
+# public functions and classes of the modules around the core, in order
+PUBLIC_NAMES = {
+    "operators/dedup.py": ["token_ngram_dup_stats"],
+    "functions/sketches.py": ["bucketize", "histogram", "drift"],
+    "sources/tables.py": ["iceberg_available", "load_table", "current_snapshot_id"],
+    "streaming/stream.py": ["validate_stream"],
+}
+
+
+def _top_level_defs(path: Path) -> dict[str, ast.FunctionDef | ast.ClassDef]:
+    tree = ast.parse(path.read_text())
+    return {
+        node.name: node
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+    }
+
+
 def test_package_is_the_validation_core_plus_the_token_dedup_path():
     pkg = REPO / "fs_schema_validator_spark"
     got = sorted(p.relative_to(pkg).as_posix() for p in pkg.rglob("*.py"))
     assert got == PACKAGE_MODULES
 
-    tree = ast.parse((pkg / "operators" / "dedup.py").read_text())
-    public = [
-        node.name
-        for node in tree.body
-        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
-        and not node.name.startswith("_")
-    ]
-    assert public == ["token_ngram_dup_stats"]
+    for module, names in PUBLIC_NAMES.items():
+        defs = _top_level_defs(pkg / module)
+        assert [n for n in defs if not n.startswith("_")] == names, module
+
+    # the hash polynomial, the dup threshold and the rate's digits are
+    # module constants, not options
+    dedup = _top_level_defs(pkg / "operators" / "dedup.py")["token_ngram_dup_stats"]
+    assert [a.arg for a in dedup.args.args] == ["df", "k", "tokens_col", "id_col"]
+    assert dedup.args.kwonlyargs == [] and dedup.args.vararg is None

@@ -452,8 +452,8 @@ schema:
 @pytest.mark.parametrize(
     "metric, stats",
     [
-        ("psi", {"<null>": "PSI 12.4292", "data_only": "PSI 12.4292", "ref_only": "PSI 11.0427"}),
-        ("ks", {"<null>": "KS 1.0000", "data_only": "KS 1.0000", "ref_only": "KS 1.0000"}),
+        ("psi", {"<null>": "PSI 15.1899", "data_only": "PSI 12.4292", "ref_only": "PSI 11.0427"}),
+        ("ks", {"<null>": "KS 0.7500", "data_only": "KS 1.0000", "ref_only": "KS 1.0000"}),
     ],
     ids=["psi", "ks"],
 )
@@ -461,10 +461,10 @@ def test_drift_groups_on_one_side_only(spark, metric, stats):
     """The cells are the full outer join of the histogram and the
     reference: a group only in the reference is compared against an
     all-zero histogram, and a group only in the data against an all-zero
-    reference. A null group never matches (a join never matches null to
-    null): the data's null-group rows drop out, and the reference's
-    null-group rows form a group of their own, reported under the subject
-    '<null>'. A group in both with the reference's exact shape passes."""
+    reference. A null group is the group '<null>' on both sides, so the
+    data's null-group rows (1/8 in each even bucket) meet the reference's
+    (1/4 in buckets 0-3): KS 0.75 at bucket 3, PSI from all 10 cells. A
+    group in both with the reference's exact shape passes."""
     rows = [(i, "both", (i % 16) * 32 + 1) for i in range(160)]
     rows += [(200 + i, "data_only", (i % 4) * 32 + 1) for i in range(40)]
     rows += [(300 + i, None, (i % 8) * 64 + 1) for i in range(40)]
@@ -749,6 +749,46 @@ def test_referential_on_missing_column_is_a_violation(spark):
         ("d1", "source_known", "`source`: does not exist"),
         ("d2", "source_known", "`source`: does not exist"),
     ]
+
+
+@pytest.mark.parametrize(
+    "rule",
+    [
+        "{type: unique, id: r, keys: [doc_id, no_such_col]}",
+        "{type: token_range, id: r, column: no_such_col, group_col: source, "
+        "dim: dim, dim_key: source, vocab_col: vocab_size}",
+        "{type: array_equality, id: r, column: tokens, reference: dim, "
+        "key: no_such_col, ref_column: tokens}",
+        "{type: drift_psi, id: r, column: n_tok, group_col: no_such_col, ref: dim}",
+        "{type: stats_threshold, id: r, column: no_such_col, group_col: source, "
+        "assert: 'n > 0'}",
+    ],
+    ids=["unique", "token_range", "array_equality", "drift", "stats_threshold"],
+)
+def test_table_rule_on_missing_column_is_a_rule_set_error(spark, rule):
+    """A table rule that cannot run without a column the input lacks is an
+    invalid rule set: RuleSetError naming the rule and the column, raised
+    while compiling, before any DataFrame is built over the input."""
+    from fs_schema_validator_spark.rules.loader import RuleSetError
+
+    df = spark.createDataFrame(
+        [("d1", "en", 3, [1, 2, 3])],
+        "doc_id string, source string, n_tok int, tokens array<int>",
+    )
+    with pytest.raises(RuleSetError, match=r"rule `r` \(seq 0\): column `no_such_col`"):
+        ValidationEngine(subject_col="doc_id").compile(
+            df, f"schema: [{rule}]", {"dim": df}
+        )
+
+
+def test_missing_subject_column_is_a_rule_set_error(spark):
+    from fs_schema_validator_spark.rules.loader import RuleSetError
+
+    df = spark.createDataFrame([("d1",)], "doc_id string")
+    with pytest.raises(RuleSetError, match="subject column `id` does not exist"):
+        ValidationEngine(subject_col="id").compile(
+            df, "schema: [{type: not_empty, column: doc_id}]"
+        )
 
 
 def test_scan_metrics_with_row_only_ruleset_uses_the_observed_pass(spark):

@@ -9,30 +9,55 @@ from pyspark.sql import functions as F
 from fs_schema_validator_spark.engine import ValidationEngine
 
 
-def test_ks_vs_global_flags_shifted_group(spark):
+def _drift_vs_table(spark, df, metric, lo, hi, buckets):
+    """grp -> statistic of each group's `v` against the whole table's
+    bucket mass, through a DriftRule whose threshold (-1) lies below
+    every statistic, read back from the engine's reasons."""
+    from collections import Counter
+
     from fs_schema_validator_spark.functions import sketches
 
+    hist = sketches.histogram(df, "v", "grp_name", lo, hi, buckets).collect()
+    total = sum(r.cnt for r in hist)
+    mass = Counter()
+    for r in hist:
+        mass[r.bucket] += r.cnt
+    ref = spark.createDataFrame(
+        [(g, b, n / total) for g in {r.grp for r in hist} for b, n in mass.items()],
+        "grp_name string, bucket int, p double",
+    )
+    rules = f"""
+schema:
+  - type: drift_psi
+    id: v_drift
+    column: v
+    group_col: grp_name
+    ref: table_mass
+    metric: {metric}
+    buckets: {buckets}
+    lo: {lo}
+    hi: {hi}
+    threshold: -1
+"""
+    res = ValidationEngine(subject_col="id").validate(df, rules, {"table_mass": ref})
+    out = {r.subject: float(r.reason.split()[3]) for r in res.violations.collect()}
+    res.release()
+    return out
+
+
+def test_ks_vs_global_flags_shifted_group(spark):
     rows = [(i, "steady", float(i % 100)) for i in range(2000)]
     rows += [(10_000 + i, "shifted", float(400 + i % 100)) for i in range(2000)]
     df = spark.createDataFrame(rows, "id bigint, grp_name string, v double")
-    out = {
-        r.grp: r.ks_d
-        for r in sketches.ks_vs_global(
-            df, col="v", group_col="grp_name", lo=0.0, hi=500.0, buckets=10
-        ).collect()
-    }
+    out = _drift_vs_table(spark, df, "ks", lo=0.0, hi=500.0, buckets=10)
     # each group is half the table shifted to opposite ends: D = 0.5 exactly
-    assert out["steady"] == pytest.approx(0.5)
-    assert out["shifted"] == pytest.approx(0.5)
+    assert out == {"steady": 0.5, "shifted": 0.5}
 
 
 def test_vs_global_drift_on_empty_input_returns_no_rows(spark):
-    from fs_schema_validator_spark.functions import sketches
-
     df = spark.createDataFrame([], "id bigint, grp_name string, v double")
-    for fn in (sketches.ks_vs_global, sketches.psi_vs_global):
-        out = fn(df, col="v", group_col="grp_name", lo=0.0, hi=500.0, buckets=10)
-        assert out.collect() == []
+    for metric in ("ks", "psi"):
+        assert _drift_vs_table(spark, df, metric, 0.0, 500.0, 10) == {}
 
 
 def test_skewed_source_distribution(spark):
@@ -79,36 +104,9 @@ schema:
     assert "KS" in rows[0].reason
 
 
-def test_bucketed_equality_join_has_no_exchange(spark):
-    import io
-    from contextlib import redirect_stdout
-
-    from fs_schema_validator_spark.sources import synth, tables
-
-    seq = synth.gen_sequences(spark, 200)
-    ref = seq.select("doc_id", "tokens")
-    tables.write_bucketed(seq, "bkt_sequences", ["doc_id"], buckets=4)
-    tables.write_bucketed(ref, "bkt_reference", ["doc_id"], buckets=4)
-    try:
-        a = spark.table("bkt_sequences")
-        b = spark.table("bkt_reference").withColumnRenamed("tokens", "ref_tokens")
-        # merge hint: at test scale AQE would broadcast instead; production
-        # reference side is far past the broadcast threshold
-        joined = a.join(b.hint("merge"), "doc_id")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain(mode="formatted")
-        plan = buf.getvalue()
-        # co-located bucketed join: sort-merge with zero shuffles
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 200
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_sequences")
-        spark.sql("DROP TABLE IF EXISTS bkt_reference")
-
-
 def test_load_table_format_dispatch(spark, tmp_path):
+    """Paths dispatch on their extension; directory names are never
+    sniffed, so a parquet directory named *_orc reads as parquet."""
     from fs_schema_validator_spark.sources import synth, tables
 
     seq = synth.gen_sequences(spark, 50).select("doc_id", "n_tok", "source")
@@ -117,36 +115,19 @@ def test_load_table_format_dispatch(spark, tmp_path):
         ("orc", tmp_path / "t.orc"),
         ("json", tmp_path / "t.json"),
         ("csv", tmp_path / "t.csv"),
+        ("parquet", tmp_path / "events_orc"),
     ]:
         w = seq.write.mode("overwrite")
         if fmt == "csv":
             w = w.option("header", "true")
         getattr(w, fmt)(str(path))
-        got = tables.load_table(
-            spark,
-            str(path),
-            schema="doc_id string, n_tok bigint, source string"
-            if fmt in ("json", "csv")
-            else None,
-        )
+        got = tables.load_table(spark, str(path))
         assert got.count() == 50, fmt
         assert set(got.columns) == {"doc_id", "n_tok", "source"}, fmt
-        # declared-schema path keeps strict types for the rule compiler
-        # (parquet/orc carry their own written types)
-        want = "bigint" if fmt in ("json", "csv") else dict(seq.dtypes)["n_tok"]
+        # JSON inference reads every integer as bigint; the other formats
+        # carry (or infer) the written int
+        want = "bigint" if fmt == "json" else dict(seq.dtypes)["n_tok"]
         assert dict(got.dtypes)["n_tok"] == want, fmt
-
-
-def test_load_table_explicit_fmt_overrides_extension(spark, tmp_path):
-    """Directory names are never sniffed: a parquet dir named *_orc reads
-    as parquet (the default), and `fmt` forces the reader explicitly."""
-    from fs_schema_validator_spark.sources import synth, tables
-
-    seq = synth.gen_sequences(spark, 20).select("doc_id", "n_tok", "source")
-    path = str(tmp_path / "events_orc")
-    seq.write.mode("overwrite").parquet(path)
-    assert tables.load_table(spark, path).count() == 20
-    assert tables.load_table(spark, path, fmt="parquet").count() == 20
 
 
 def test_cache_registry_releases_tracked_frames(spark):
@@ -162,20 +143,6 @@ def test_cache_registry_releases_tracked_frames(spark):
     res.release()
     assert cache.release_all() >= 1
     assert cache.release_all() == 0
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Co-bucketed tables join with zero Exchange on either side — the
-    shuffle-eliminating layout for the engine's recurring equality join."""
-    from fs_schema_validator_spark.sources import synth, tables as tbl
-
-    seq = synth.gen_sequences(spark, 200).select("doc_id", "n_tok")
-    ref = synth.gen_sequences(spark, 200).select("doc_id", "source")
-    j = tbl.bucketed_equi_join(spark, seq, ref, "doc_id", buckets=8, tag="test")
-    assert j.count() == 200
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan, plan
-    assert "Exchange" not in plan, plan
 
 
 def test_table_profile_exact_and_approx(spark):
@@ -200,17 +167,10 @@ def test_psi_full_grid_catches_concentrated_drift(spark):
     must report LARGE psi — the grid form includes the (EPS - p) terms
     for the group's empty buckets (a group-histogram-only join drops
     exactly those and underestimates drift)."""
-    from fs_schema_validator_spark.functions import sketches
-
     rows = [(i, "spread", float(i % 100)) for i in range(2000)]
     rows += [(10_000 + i, "peaked", 5.0) for i in range(2000)]
     df = spark.createDataFrame(rows, "id bigint, grp_name string, v double")
-    out = {
-        r.grp: r.psi
-        for r in sketches.psi_vs_global(
-            df, col="v", group_col="grp_name", lo=0.0, hi=100.0, buckets=10
-        ).collect()
-    }
+    out = _drift_vs_table(spark, df, "psi", lo=0.0, hi=100.0, buckets=10)
     assert out["peaked"] > 3.0, out  # concentrated: many dropped-mass terms
     assert out["spread"] > 0.1, out
 

@@ -157,14 +157,15 @@ def main() -> None:
             {"max_scans": 1, "max_exchanges": 1},
         )
     )
-    # drift: the one collected job is a histogram aggregate over one
-    # pruned scan; KS is finished on the driver, so the returned relation
-    # is literal rows that read no table
+    # drift: the DriftRule's one collected job is a histogram aggregate
+    # over one pruned scan; PSI/KS is finished on the driver, so the
+    # engine's violation plan holds literal rows and the fused projection's
+    # one pruned scan, and no shuffle
     from fs_schema_validator_spark.functions import sketches
 
     sections.append(
         audit(
-            "drift_ks histogram job (one scan, one exchange)",
+            "drift histogram job (one scan, one exchange)",
             sketches.histogram(
                 entry._t(spark, SF_DIR, "documents"), "n_chars", "lang", 0.0, 600.0, 12
             ),
@@ -173,17 +174,9 @@ def main() -> None:
     )
     sections.append(
         audit(
-            "drift_ks (KS vs global, finished on the driver)",
+            "drift_ks (engine DriftRule, finished on the driver)",
             qs["drift_ks"](spark, SF_DIR),
-            {"max_scans": 0, "max_exchanges": 0},
-        )
-    )
-    # co-bucketed join: sort-merge with no Exchange below the aggregation
-    sections.append(
-        audit(
-            "bucketed_join_stats (co-bucketed SMJ, join side shuffle-free)",
-            qs["bucketed_join_stats"](spark, SF_DIR),
-            {"max_exchanges": 1, "plan_contains": "SortMergeJoin"},
+            {"schema_excludes": "text", "max_scans": 1, "max_exchanges": 0},
         )
     )
     # token k-gram dedup: one Arrow window-hash pass, then compact
