@@ -123,7 +123,7 @@ def _missing_column(rule: Mdl.RuleBase) -> Column:
     return _rule_errs(rule, F.lit(f"`{rule.column}`: does not exist"))
 
 
-def _compile_row_rule(rule: Mdl.Rule, schema: T.StructType) -> Column:
+def _compile_row_rule(rule: Mdl.RuleBase, schema: T.StructType) -> Column:
     """Compile one row rule to an array<struct<rule_seq,rule_id,reason>>."""
     if isinstance(rule, Mdl.ColumnSpecRule):
         if rule.column not in schema.names:
@@ -143,13 +143,13 @@ def _compile_row_rule(rule: Mdl.Rule, schema: T.StructType) -> Column:
         return _checker_errs(rule, checker(row, F.lit("")))
     if isinstance(rule, Mdl.ExprRule):
         ok = F.expr(rule.assert_sql)
-        # A null reason (its SQL hit a null input) falls back to a static
-        # message; a null assertion result counts as a violation (three-
-        # valued logic must not let nulls slip through a validator).
-        reason = F.coalesce(
-            F.expr(rule.reason_sql).cast("string"),
-            F.lit(f"assertion failed: {rule.rule_id}"),
-        )
+        # No reason, or a null one (its SQL hit a null input), falls back
+        # to a static message; a null assertion result counts as a
+        # violation (three-valued logic must not let nulls slip through a
+        # validator).
+        reason = F.lit(f"assertion failed: {rule.rule_id}")
+        if rule.reason_sql is not None:
+            reason = F.coalesce(F.expr(rule.reason_sql).cast("string"), reason)
         return _rule_errs(rule, reason, ~F.coalesce(ok, F.lit(False)))
     if isinstance(rule, Mdl.NotEmptyRule):
         if rule.allow_empty:
@@ -168,7 +168,7 @@ def _compile_row_rule(rule: Mdl.Rule, schema: T.StructType) -> Column:
 
 
 def row_violation_array(
-    rules: Sequence[Mdl.Rule], schema: T.StructType, extra: Sequence[Column]
+    rules: Sequence[Mdl.RuleBase], schema: T.StructType, extra: Sequence[Column]
 ) -> Column:
     """Every row rule's violations for one row, as ONE
     array<struct<rule_seq,rule_id,reason>> — a stateless expression,
@@ -449,7 +449,7 @@ class CompiledPlan:
             raise RuleSetError(f"rule references unknown table `{name}`")
         return self.tables[name]
 
-    def _table_violations(self, rule: Mdl.Rule) -> DataFrame:
+    def _table_violations(self, rule: Mdl.RuleBase) -> DataFrame:
         # All scalar-column table rules read the cached narrow projection —
         # never the wide base scan (see fused_projection()).
         fused = self.fused_projection()
@@ -589,10 +589,8 @@ class CompiledPlan:
         ref = self._aux(rule.ref).select(
             key_string(rule.group_col).alias("grp"), F.col("bucket"), F.col("p")
         )
-        # KS D is rounded to 4 digits before the threshold, PSI is not
-        ks = rule.metric == "ks"
-        stat = drift(hist, ref, rule.metric, digits=4 if ks else None)
-        label = "KS" if ks else "PSI"
+        stat = drift(hist, ref, rule.metric)
+        label = rule.metric.upper()
         reason = F.format_string(
             f"distribution drift: {label} %.4f > %s",
             F.col("stat"),

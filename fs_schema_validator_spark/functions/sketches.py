@@ -133,17 +133,12 @@ def _ks(cells: list) -> float:
     return d
 
 
-def drift(
-    hist: DataFrame,
-    ref: DataFrame,
-    metric: str,
-    digits: int | None = None,
-) -> DataFrame:
+def drift(hist: DataFrame, ref: DataFrame, metric: str) -> DataFrame:
     """(grp, stat): PSI (``metric="psi"``) or KS D (``"ks"``) of each
     group's (grp, bucket, cnt) histogram against the reference mass
     ``ref`` (grp, bucket, p). Histogram and reference are collected
-    together, once; the result is a relation of literals, with ``stat``
-    rounded to ``digits`` by Spark when given."""
+    together, once; the result is a relation of literals. KS D is rounded
+    to 4 digits by Spark (before any threshold), PSI is not."""
     hist_rows, ref_rows = _collect(hist, ref)
     stat_of = _ks if metric == "ks" else _psi
     stats = [(g, stat_of(c)) for g, c in _cells(hist_rows, ref_rows).items()]
@@ -154,6 +149,6 @@ def drift(
         T.ArrayType(item)
     )
     out = hist.sparkSession.range(1, numPartitions=1).select(F.inline(rows))
-    if digits is not None:
-        out = out.select("grp", F.round("stat", digits).alias("stat"))
+    if metric == "ks":
+        out = out.select("grp", F.round("stat", 4).alias("stat"))
     return out

@@ -24,12 +24,14 @@ import argparse
 import os
 import sys
 
+import yaml
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..engine import ValidationEngine
 from ..evaluator import ParseError, parse_assignment
-from ..rules.loader import RuleSetError
+from ..evaluator.errors import EvaluatorError
+from ..rules.loader import RuleSet, RuleSetError
 from ..session import get_spark
 from ..sources.tables import load_table
 
@@ -54,6 +56,12 @@ def _load(spark: SparkSession, ref: str, flag: str = "--table") -> DataFrame:
 def _first_line(e: Exception) -> str:
     """An exception's message as one line (Spark's run to many)."""
     return (str(e).strip().splitlines() or [type(e).__name__])[0]
+
+
+def _invalid_spec(e: Exception) -> int:
+    print("❗️ The provided schema is invalid!", file=sys.stderr)
+    print(str(e), file=sys.stderr)
+    return 127
 
 
 def _parse_aux(values: list[str]) -> dict[str, str]:
@@ -155,6 +163,11 @@ def cmd_validate(args: argparse.Namespace) -> int:
     except OSError as e:
         print(f"cannot read rule spec: {e}", file=sys.stderr)
         return 127
+    # the spec is checked before Spark starts
+    try:
+        rules = RuleSet.from_yaml(rules_yaml, bindings)
+    except (RuleSetError, EvaluatorError, yaml.YAMLError) as e:
+        return _invalid_spec(e)
 
     spark = get_spark(app_name="fsv-validate")
     spark.sparkContext.setLogLevel("WARN")
@@ -169,11 +182,9 @@ def cmd_validate(args: argparse.Namespace) -> int:
 
     engine = ValidationEngine(subject_col=args.subject)
     try:
-        result = engine.validate(df, rules_yaml, tables, bindings)
-    except (RuleSetError, ParseError) as e:
-        print("❗️ The provided schema is invalid!", file=sys.stderr)
-        print(str(e), file=sys.stderr)
-        return 127
+        result = engine.validate(df, rules, tables)
+    except RuleSetError as e:
+        return _invalid_spec(e)
     except AnalysisException as e:
         # a rule naming a column the input does not have
         print(

@@ -15,8 +15,9 @@ Reproduces the reference's schema compilation pipeline
    ``leave_unbound_vars_in=True``, and take the Cartesian product across
    fields (__init__.py:120-141). ``{{...}}`` escapes survive as literals —
    regexes with counted quantifiers are written ``\\d{{8}}``.
-5. Parse each concrete dict into the typed rule union, assigning ``seq``
-   ordinals in declaration/expansion order (the ordering contract).
+5. Decode each concrete dict into its kind's rule class (``spec.decode``,
+   the spec trees' decoder too), assigning ``seq`` ordinals in
+   declaration/expansion order (the ordering contract).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import yaml
 from .. import evaluator
 from ..evaluator import Bindings, EnumVal, RangeVal, Str, UnboundSymbolError
 from . import model as Mdl
-from .spec import SpecError, parse_spec
+from .spec import SpecError, decode
 
 
 class RuleSetError(ValueError):
@@ -228,86 +229,52 @@ def _apply_inner_bindings(
     }
 
 
-_INT_FIELDS = {"buckets"}
-_FLOAT_FIELDS = {"lo", "hi", "threshold"}
-_BOOL_FIELDS = {"allow_empty"}
+_RULE_KINDS: dict[str, type] = {
+    "column_spec": Mdl.ColumnSpecRule,
+    "row_spec": Mdl.RowSpecRule,
+    "json_spec": Mdl.JsonSpecRule,
+    "expr": Mdl.ExprRule,
+    "not_empty": Mdl.NotEmptyRule,
+    "unique": Mdl.UniqueRule,
+    "referential": Mdl.ReferentialRule,
+    "completeness": Mdl.CompletenessRule,
+    "token_range": Mdl.TokenRangeRule,
+    "array_equality": Mdl.ArrayEqualityRule,
+    "drift_psi": Mdl.DriftRule,
+    "stats_threshold": Mdl.StatsThresholdRule,
+}
+
+# YAML key -> rule field, where the two differ; the field names themselves
+# (and `seq`, the declaration ordinal) are not YAML keys
+_RENAMED = {"id": "rule_id", "assert": "assert_sql", "reason": "reason_sql"}
 
 
-def _coerce_expanded_scalars(kwargs: dict[str, Any]) -> dict[str, Any]:
-    """Template expansion stringifies everything; re-coerce numeric knobs."""
-    out = dict(kwargs)
-    for k, v in kwargs.items():
-        if isinstance(v, str):
-            try:
-                if k in _INT_FIELDS:
-                    out[k] = int(v)
-                elif k in _FLOAT_FIELDS:
-                    out[k] = float(v)
-                elif k in _BOOL_FIELDS:
-                    out[k] = v.lower() in ("1", "true", "yes")
-            except ValueError as ex:
-                raise SpecError(f"cannot coerce `{k}`={v!r} to a number") from ex
-    return out
-
-
-def _build_rule(raw: Mapping[str, Any], seq: int) -> Mdl.Rule:
+def _build_rule(raw: Mapping[str, Any], seq: int) -> Mdl.RuleBase:
     kind = raw.get("type")
     if kind is None:
         raise RuleSetError(f"rule #{seq} is missing required key `type`")
-    kwargs = {k: v for k, v in raw.items() if k != "type"}
-    rule_id = kwargs.pop("id", None) or f"r{seq:03d}.{kind}"
-
+    cls = _RULE_KINDS.get(kind)
+    if cls is None:
+        raise RuleSetError(f"unknown rule type `{kind}`")
+    what = f"`{kind}` rule (seq {seq})"
+    reserved = {"seq", *_RENAMED.values()} & raw.keys()
+    if reserved:
+        raise RuleSetError(f"invalid {what}: unknown keys {sorted(reserved)}")
+    fields = {_RENAMED.get(k, k): v for k, v in raw.items() if k != "type"}
+    fields["rule_id"] = fields.get("rule_id") or f"r{seq:03d}.{kind}"
+    fields["seq"] = seq
+    if cls is Mdl.ArrayEqualityRule:
+        fields.setdefault("ref_column", fields.get("column"))
     try:
-        kwargs = _coerce_expanded_scalars(kwargs)
-        if kind == "column_spec":
-            return Mdl.ColumnSpecRule(
-                rule_id, seq, column=kwargs.pop("column"), spec=parse_spec(kwargs.pop("spec")), **kwargs
-            )
-        if kind == "row_spec":
-            return Mdl.RowSpecRule(rule_id, seq, spec=parse_spec(kwargs.pop("spec")), **kwargs)
-        if kind == "json_spec":
-            return Mdl.JsonSpecRule(
-                rule_id, seq, column=kwargs.pop("column"), spec=parse_spec(kwargs.pop("spec")), **kwargs
-            )
-        if kind == "expr":
-            return Mdl.ExprRule(
-                rule_id,
-                seq,
-                assert_sql=kwargs.pop("assert"),
-                reason_sql=kwargs.pop("reason", f"'assertion failed: {rule_id}'"),
-                **kwargs,
-            )
-        if kind == "not_empty":
-            return Mdl.NotEmptyRule(rule_id, seq, **kwargs)
-        if kind == "unique":
-            keys = kwargs.pop("keys")
-            if isinstance(keys, str):
-                keys = [keys]
-            return Mdl.UniqueRule(rule_id, seq, keys=tuple(keys), **kwargs)
-        if kind == "referential":
-            return Mdl.ReferentialRule(rule_id, seq, **kwargs)
-        if kind == "completeness":
-            return Mdl.CompletenessRule(rule_id, seq, **kwargs)
-        if kind == "token_range":
-            return Mdl.TokenRangeRule(rule_id, seq, **kwargs)
-        if kind == "array_equality":
-            kwargs.setdefault("ref_column", kwargs.get("column"))
-            return Mdl.ArrayEqualityRule(rule_id, seq, **kwargs)
-        if kind == "drift_psi":
-            return Mdl.DriftRule(rule_id, seq, **kwargs)
-        if kind == "stats_threshold":
-            return Mdl.StatsThresholdRule(
-                rule_id, seq, assert_sql=kwargs.pop("assert"), **kwargs
-            )
-    except (TypeError, KeyError, SpecError) as ex:
-        raise RuleSetError(f"invalid `{kind}` rule (seq {seq}): {ex}") from ex
-    raise RuleSetError(f"unknown rule type `{kind}`")
+        return decode(cls, fields, what)
+    except SpecError as ex:
+        raise RuleSetError(str(ex)) from ex
 
 
 class RuleSet:
     """An ordered, fully-expanded list of typed rules."""
 
-    def __init__(self, rules: list[Mdl.Rule]):
+    def __init__(self, rules: list[Mdl.RuleBase]):
         self.rules = rules
 
     @classmethod
@@ -334,11 +301,11 @@ class RuleSet:
         )
 
     @property
-    def row_rules(self) -> list[Mdl.Rule]:
+    def row_rules(self) -> list[Mdl.RuleBase]:
         return [r for r in self.rules if isinstance(r, Mdl.ROW_RULE_TYPES)]
 
     @property
-    def table_rules(self) -> list[Mdl.Rule]:
+    def table_rules(self) -> list[Mdl.RuleBase]:
         return [r for r in self.rules if not isinstance(r, Mdl.ROW_RULE_TYPES)]
 
     def __len__(self) -> int:

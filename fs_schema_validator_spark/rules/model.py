@@ -25,7 +25,6 @@ declaration-order-within-path, sorted-across-paths output
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Union
 
 from .spec import Spec
 
@@ -58,12 +57,13 @@ class ExprRule(RuleBase):
     """Free-form SQL assertion with a SQL-rendered reason.
 
     ``assert_sql`` is a boolean SQL expression that must hold;
-    ``reason_sql`` is a string SQL expression rendered for violating rows
-    (defaults to a static message).
+    ``reason_sql`` is a string SQL expression rendered for violating rows;
+    without one (or where it renders null) the reason is the static
+    "assertion failed: {rule_id}".
     """
 
     assert_sql: str
-    reason_sql: str
+    reason_sql: str | None = None
 
 
 @dataclass(frozen=True)
@@ -95,6 +95,10 @@ class UniqueRule(RuleBase):
     key with reason "duplicate key"."""
 
     keys: tuple[str, ...]
+
+    def __post_init__(self) -> None:
+        if not self.keys:
+            raise ValueError("unique requires at least one key column")
 
 
 @dataclass(frozen=True)
@@ -154,7 +158,8 @@ class ArrayEqualityRule(RuleBase):
 class DriftRule(RuleBase):
     """Distribution drift of ``column`` per ``group_col`` vs a reference
     histogram table (north-rule addition). ``metric`` is "psi" (population
-    stability index) or "ks" (bucketed two-sample Kolmogorov–Smirnov D).
+    stability index) or "ks" (bucketed two-sample Kolmogorov–Smirnov D),
+    over ``buckets`` >= 1 equal-width buckets of ``[lo, hi)``, lo < hi.
     Violation per drifted group."""
 
     column: str
@@ -165,6 +170,14 @@ class DriftRule(RuleBase):
     hi: float = 1.0
     threshold: float = 0.2
     metric: str = "psi"
+
+    def __post_init__(self) -> None:
+        if self.metric not in ("psi", "ks"):
+            raise ValueError(f"drift metric must be psi or ks, got {self.metric!r}")
+        if self.buckets < 1:
+            raise ValueError(f"drift buckets must be >= 1, got {self.buckets}")
+        if not self.lo < self.hi:
+            raise ValueError(f"drift needs lo < hi, got lo={self.lo} hi={self.hi}")
 
 
 @dataclass(frozen=True)
@@ -177,17 +190,5 @@ class StatsThresholdRule(RuleBase):
     group_col: str
     assert_sql: str
 
-
-RowRule = Union[ColumnSpecRule, RowSpecRule, JsonSpecRule, ExprRule, NotEmptyRule]
-TableRule = Union[
-    UniqueRule,
-    ReferentialRule,
-    CompletenessRule,
-    TokenRangeRule,
-    ArrayEqualityRule,
-    DriftRule,
-    StatsThresholdRule,
-]
-Rule = Union[RowRule, TableRule]
 
 ROW_RULE_TYPES = (ColumnSpecRule, RowSpecRule, JsonSpecRule, ExprRule, NotEmptyRule)

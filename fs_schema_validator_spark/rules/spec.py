@@ -19,8 +19,9 @@ fixed_array/tuple) and reject unknown keys (``extra="forbid"`` analog).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, fields
-from typing import Any, Mapping, Union
+import functools
+from dataclasses import dataclass, fields
+from typing import Any, Mapping, Union, get_args, get_origin, get_type_hints
 
 Number = Union[int, float]
 
@@ -185,63 +186,63 @@ def parse_spec(raw: Mapping[str, Any]) -> Spec:
     cls = _KIND_ALIASES.get(kind)
     if cls is None:
         raise SpecError(f"unknown spec type `{kind}`")
+    return decode(cls, {k: v for k, v in raw.items() if k != "type"}, f"`{kind}` spec")
 
-    kwargs: dict[str, Any] = {k: v for k, v in raw.items() if k != "type"}
 
-    # Recurse into child specs.
-    if cls is ArraySpec:
-        if "items" not in kwargs:
-            raise SpecError("array spec requires `items`")
-        kwargs["items"] = parse_spec(kwargs["items"])
-    elif cls is FixedArraySpec:
-        if "items" not in kwargs or not isinstance(kwargs["items"], list):
-            raise SpecError("fixed_array spec requires a list of `items`")
-        kwargs["items"] = tuple(parse_spec(i) for i in kwargs["items"])
-    elif cls is ObjectSpec:
-        if "attrs" not in kwargs or not isinstance(kwargs["attrs"], Mapping):
-            raise SpecError("object spec requires an `attrs` mapping")
-        kwargs["attrs"] = tuple((k, parse_spec(v)) for k, v in kwargs["attrs"].items())
-    elif cls is DictSpec:
-        for key in ("keys", "values"):
-            if key not in kwargs:
-                raise SpecError(f"dict spec requires `{key}`")
-            kwargs[key] = parse_spec(kwargs[key])
-    elif cls is EnumSpec:
-        if "variants" not in kwargs or not isinstance(kwargs["variants"], list):
-            raise SpecError("enum spec requires a list of `variants`")
-        kwargs["variants"] = tuple(parse_spec(v) for v in kwargs["variants"])
+@functools.cache
+def _field_types(cls: type) -> dict[str, Any]:
+    hints = get_type_hints(cls)
+    return {f.name: hints[f.name] for f in fields(cls)}
 
-    allowed = {f.name for f in fields(cls)}
-    extra = set(kwargs) - allowed
-    if extra:
-        raise SpecError(f"unknown keys for `{kind}` spec: {sorted(extra)}")
-    kwargs = _coerce_scalar_fields(cls, kwargs)
+
+def decode(cls: type, mapping: Mapping[str, Any], what: str) -> Any:
+    """Build the dataclass `cls` from an untyped mapping (YAML after
+    template expansion), directed by its field types: a ``Spec`` field
+    parses recursively, a tuple field takes a list (a tuple of
+    ``(name, Spec)`` pairs takes a mapping), and a bool, int or float field
+    re-types the string that binding interpolation left, as the
+    reference's pydantic models do (e.g. a binding-driven ``min_items`` at
+    tests/test_json.py:58-84); a bool accepts only 1/0, true/false and
+    yes/no. A field whose type admits ``str`` keeps a string as it is. An
+    unknown key, a missing field or a rejected value is a SpecError naming
+    `what`."""
+    types = _field_types(cls)
     try:
-        return cls(**kwargs)
-    except TypeError as ex:
-        raise SpecError(f"invalid `{kind}` spec: {ex}") from ex
+        extra = set(mapping) - set(types)
+        if extra:
+            raise SpecError(f"unknown keys {sorted(extra)}")
+        return cls(**{k: _decode_value(types[k], v, k) for k, v in mapping.items()})
+    except (TypeError, ValueError) as ex:
+        raise SpecError(f"invalid {what}: {ex}") from ex
 
 
-_INT_FIELDS = {"min_length", "max_length", "min_items", "max_items"}
-_NUM_FIELDS = {"min", "max", "exclusive_min", "exclusive_max", "multiple_of"}
+_BOOLS = {"1": True, "true": True, "yes": True, "0": False, "false": False, "no": False}
 
 
-def _coerce_scalar_fields(cls: type, kwargs: dict[str, Any]) -> dict[str, Any]:
-    """Re-type scalar knobs that arrive as strings after template expansion
-    (binding interpolation stringifies every expanded field — the reference
-    relies on pydantic's lax coercion here, e.g. a binding-driven
-    ``min_items`` at tests/test_json.py:58-84)."""
-    out = dict(kwargs)
-    for k, v in kwargs.items():
-        if not isinstance(v, str):
-            continue
-        try:
-            if k in _INT_FIELDS or (k in _NUM_FIELDS and cls is IntSpec):
-                out[k] = int(v)
-            elif k in _NUM_FIELDS:
-                out[k] = float(v)
-            elif k == "nullable":
-                out[k] = v.lower() in ("1", "true", "yes")
-        except ValueError as ex:
-            raise SpecError(f"cannot coerce `{k}`={v!r} to a number") from ex
-    return out
+def _decode_value(tp: Any, value: Any, key: str) -> Any:
+    if tp == Spec:
+        return parse_spec(value)
+    if get_origin(tp) is tuple:
+        item = get_args(tp)[0]
+        if get_origin(item) is tuple:  # ordered (name, value) pairs
+            if not isinstance(value, Mapping):
+                raise SpecError(f"`{key}` must be a mapping")
+            return tuple(
+                (k, _decode_value(get_args(item)[1], v, key)) for k, v in value.items()
+            )
+        if isinstance(value, str) and item is str:
+            value = [value]
+        if not isinstance(value, list):
+            raise SpecError(f"`{key}` must be a list")
+        return tuple(_decode_value(item, v, key) for v in value)
+    types = get_args(tp) or (tp,)
+    if not isinstance(value, str) or str in types:
+        return value
+    if bool in types:
+        if value.lower() not in _BOOLS:
+            raise SpecError(f"cannot coerce `{key}`={value!r} to a boolean")
+        return _BOOLS[value.lower()]
+    try:
+        return float(value) if float in types else int(value)
+    except ValueError:
+        raise SpecError(f"cannot coerce `{key}`={value!r} to a number") from None

@@ -12,7 +12,7 @@ Schema (BASELINE.json input_hint):
 Generators follow FIXTURES.md §1-5:
     doc_id  = f"doc-{i:08d}"
     n_tok   = 1 + (i % 512)
-    source  = [cc, wiki, code, books][i % 4]   (skew mode: 90% cc)
+    source  = [cc, wiki, code, books][i % 4]
     tokens  = [(i*31 + j*7) % vocab(source) for j in range(n_tok)]
 """
 
@@ -26,17 +26,7 @@ VOCABS = {"cc": 50304, "wiki": 32000, "code": 65536, "books": 32000}
 MAX_SEQ_LEN = 512
 
 
-def _source_col(i: Column, skew: bool = False) -> Column:
-    if skew:
-        # 90% of rows land on the hot source `cc`; the tail round-robins
-        # over the other three.
-        tail = (i / 10).cast("long") % 3
-        return (
-            F.when(i % 10 < 9, F.lit("cc"))
-            .when(tail == 0, F.lit("wiki"))
-            .when(tail == 1, F.lit("code"))
-            .otherwise(F.lit("books"))
-        )
+def _source_col(i: Column) -> Column:
     expr = F.when(i % 4 == 0, SOURCES[0])
     for k in (1, 2, 3):
         expr = expr.when(i % 4 == k, SOURCES[k])
@@ -58,15 +48,12 @@ def _tokens_col(i: Column, n_tok: Column, vocab: Column) -> Column:
 
 
 def gen_sequences(
-    spark: SparkSession,
-    n: int,
-    skew: bool = False,
-    partitions: int | None = None,
+    spark: SparkSession, n: int, partitions: int | None = None
 ) -> DataFrame:
     """The subject table, pristine (no corruptions)."""
     i = F.col("id")
     base = spark.range(0, n, numPartitions=partitions or spark.sparkContext.defaultParallelism)
-    source = _source_col(i, skew)
+    source = _source_col(i)
     n_tok = (1 + (i % MAX_SEQ_LEN)).cast("int")
     return base.select(
         F.format_string("doc-%08d", i).alias("doc_id"),
@@ -85,9 +72,9 @@ def gen_dim_sources(spark: SparkSession) -> DataFrame:
     )
 
 
-def gen_reference_tokens(spark: SparkSession, n: int, skew: bool = False) -> DataFrame:
+def gen_reference_tokens(spark: SparkSession, n: int) -> DataFrame:
     """Same generator as sequences.tokens — uncorrupted rows compare equal."""
-    return gen_sequences(spark, n, skew).select("doc_id", "tokens")
+    return gen_sequences(spark, n).select("doc_id", "tokens")
 
 
 def gen_expected_manifest(spark: SparkSession, n: int, extra: int = 0) -> DataFrame:
@@ -98,15 +85,11 @@ def gen_expected_manifest(spark: SparkSession, n: int, extra: int = 0) -> DataFr
     )
 
 
-def gen_ref_distribution(spark: SparkSession, buckets: int = 16) -> DataFrame:
+def gen_ref_distribution(spark: SparkSession) -> DataFrame:
     """Reference histogram of n_tok per source. n_tok is uniform on
-    [1, 512], so each of `buckets` equal-width buckets over [0, 512) holds
-    mass ~1/buckets."""
-    rows = [
-        (s, b, 1.0 / buckets)
-        for s in SOURCES
-        for b in range(buckets)
-    ]
+    [1, 512], so each of 16 equal-width buckets over [0, 512) holds
+    mass ~1/16."""
+    rows = [(s, b, 1.0 / 16) for s in SOURCES for b in range(16)]
     return spark.createDataFrame(rows, "source string, bucket int, p double")
 
 

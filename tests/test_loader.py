@@ -7,6 +7,8 @@ and the escape hatch for literal braces."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from fs_schema_validator_spark.evaluator import EnumVal, Str, UnboundSymbolError
@@ -294,3 +296,185 @@ schema:
         RuleSet.from_yaml(
             "schema: [{type: column_spec, column: a, spec: {type: int, min: abc}}]"
         )
+
+
+# one typed example per rule kind and per spec class; the string twin of
+# each is what template expansion leaves of it
+RULE_EXAMPLES = {
+    "column_spec": {"column": "n_tok", "spec": {"type": "int", "min": 1, "max": 512}},
+    "row_spec": {
+        "spec": {"type": "object", "attrs": {"n_tok": {"type": "int", "multiple_of": 2}}}
+    },
+    "json_spec": {"column": "doc", "spec": {"type": "float", "exclusive_max": 2.5}},
+    "expr": {"id": "e", "assert": "n_tok > 0", "reason": "'bad n_tok'"},
+    "not_empty": {"column": "tokens", "allow_empty": True},
+    "unique": {"keys": ["doc_id", "source"]},
+    "referential": {"column": "source", "dim": "dims", "dim_key": "source"},
+    "completeness": {"manifest": "expected", "key": "doc_id"},
+    "token_range": {
+        "column": "tokens",
+        "group_col": "source",
+        "dim": "dims",
+        "dim_key": "source",
+        "vocab_col": "vocab_size",
+    },
+    "array_equality": {"column": "tokens", "reference": "ref_tokens", "key": "doc_id"},
+    "drift_psi": {
+        "column": "n_tok",
+        "group_col": "source",
+        "ref": "hist",
+        "buckets": 8,
+        "lo": 0.5,
+        "hi": 512.0,
+        "threshold": 0.1,
+        "metric": "ks",
+    },
+    "stats_threshold": {"column": "n_tok", "group_col": "source", "assert": "avg > 1"},
+}
+
+SPEC_EXAMPLES = [
+    {"type": "bool", "nullable": True},
+    {"type": "int", "min": -3, "exclusive_max": 9, "multiple_of": 3},
+    {"type": "float", "min": 0.5, "exclusive_min": 0, "max": 2},
+    {"type": "str", "min_length": 1, "max_length": 8, "regex": "^a+$"},
+    {"type": "array", "items": {"type": "int", "max": 7}, "min_items": 1, "max_items": 4},
+    {"type": "fixed_array", "items": [{"type": "int", "min": 0}, {"type": "str"}]},
+    {"type": "object", "attrs": {"a": {"type": "bool"}, "b": {"type": "float", "max": 1}}},
+    {"type": "dict", "keys": {"type": "str", "max_length": 3}, "values": {"type": "int"}},
+    {"type": "enum", "variants": [{"type": "int", "max": 2}, {"type": "literal", "value": "x"}]},
+    # a literal admits a string, so its value is never re-typed
+    {"type": "literal", "value": "7", "nullable": False},
+]
+
+
+def _as_strings(value):
+    """`value` with every scalar leaf rendered as a string, as binding
+    interpolation renders an expanded field."""
+    if isinstance(value, dict):
+        return {k: v if k == "type" else _as_strings(v) for k, v in value.items()}
+    if isinstance(value, list):
+        return [_as_strings(v) for v in value]
+    return str(value)
+
+
+def test_every_rule_kind_decodes_from_expanded_strings():
+    import yaml
+
+    from fs_schema_validator_spark.rules.loader import _RULE_KINDS
+
+    assert RULE_EXAMPLES.keys() == _RULE_KINDS.keys()
+    typed = [{"type": kind, **fields} for kind, fields in RULE_EXAMPLES.items()]
+    want = RuleSet.from_yaml(yaml.safe_dump({"schema": typed})).rules
+    got = RuleSet.from_yaml(yaml.safe_dump({"schema": _as_strings(typed)})).rules
+    assert [type(r) for r in want] == list(_RULE_KINDS.values())
+    assert got == want
+
+
+def test_every_spec_kind_decodes_from_expanded_strings():
+    want = [S.parse_spec(raw) for raw in SPEC_EXAMPLES]
+    assert {type(s) for s in want} == set(S._KIND_ALIASES.values())
+    assert [S.parse_spec(_as_strings(raw)) for raw in SPEC_EXAMPLES] == want
+
+
+@pytest.mark.parametrize(
+    "knobs, error",
+    [
+        ("metric: KS", "metric must be psi or ks, got 'KS'"),
+        ("metric: kss", "metric must be psi or ks, got 'kss'"),
+        ("buckets: 0", "buckets must be >= 1, got 0"),
+        ("lo: 5, hi: 5", "needs lo < hi, got lo=5 hi=5"),
+        ("lo: 512, hi: 0", "needs lo < hi, got lo=512 hi=0"),
+    ],
+)
+def test_bad_drift_config_is_a_rule_set_error(knobs, error):
+    """A drift knob outside its domain fails the load; it must not compute
+    PSI for an unknown metric, divide by zero or mirror the buckets."""
+    with pytest.raises(RuleSetError, match=rf"\(seq 0\): drift {re.escape(error)}"):
+        RuleSet.from_yaml(
+            "schema: [{type: drift_psi, column: n_tok, group_col: source, "
+            f"ref: h, {knobs}}}]"
+        )
+
+
+def test_unique_without_keys_is_a_rule_set_error():
+    """An empty key list has no duplicates to find; it must not report one
+    `duplicate key` violation with an empty subject."""
+    with pytest.raises(RuleSetError, match="unique requires at least one key"):
+        RuleSet.from_yaml("schema: [{type: unique, keys: []}]")
+
+
+def test_expr_without_reason_keeps_no_sql_reason():
+    """The static fallback reason is built by the compiler, not rendered
+    into SQL text, so a rule id with a quote cannot break the reason."""
+    rule = RuleSet.from_yaml(
+        """schema: [{type: expr, id: "it's", assert: "n_tok > 0"}]"""
+    ).rules[0]
+    assert rule.reason_sql is None
+
+
+def test_expr_rule_id_with_a_quote_validates(spark):
+    from fs_schema_validator_spark.engine import ValidationEngine
+
+    df = spark.createDataFrame([("a", 0), ("b", 1)], "doc_id string, n_tok int")
+    res = ValidationEngine(subject_col="doc_id").validate(
+        df, """schema: [{type: expr, id: "it's", assert: "n_tok > 0"}]"""
+    )
+    rows = [(r.subject, r.rule_id, r.reason) for r in res.violations.collect()]
+    res.release()
+    assert rows == [("a", "it's", "assertion failed: it's")]
+
+
+@pytest.mark.parametrize(
+    "rule, error",
+    [
+        (
+            "{type: drift_psi, column: n_tok, group_col: source, ref: h, metric: KS}",
+            "invalid `drift_psi` rule (seq 0): drift metric must be psi or ks, got 'KS'",
+        ),
+        (
+            "{type: unique, keys: []}",
+            "invalid `unique` rule (seq 0): unique requires at least one key column",
+        ),
+        (
+            "{type: not_empty, column: a, if: $nope == x}",
+            "no value provided for binding `nope`",
+        ),
+        ("[", "while parsing a flow sequence"),
+    ],
+)
+def test_cli_rejects_a_bad_rule_before_reading_the_table(tmp_path, capsys, rule, error):
+    """An invalid rule spec is exit 127 with its message, found before
+    Spark starts: the table (here absent, which would be exit 2) is never
+    read."""
+    from fs_schema_validator_spark.plans.cli import main
+
+    rules = tmp_path / "rules.yaml"
+    rules.write_text(f"schema: [{rule}]")
+    table = str(tmp_path / "no_such_table")
+    assert main(["validate", "--rules", str(rules), "--table", table]) == 127
+    assert capsys.readouterr().err.splitlines()[:2] == [
+        "❗️ The provided schema is invalid!",
+        error,
+    ]
+
+
+def test_non_boolean_rule_knob_is_a_rule_set_error():
+    """An expanded bool knob must read as a boolean: "maybe" is not False."""
+    rs = RuleSet.from_yaml(
+        "schema: [{type: not_empty, column: a, allow_empty: 'yes'}]"
+    )
+    assert rs.rules[0].allow_empty is True
+    with pytest.raises(
+        RuleSetError, match=r"cannot coerce `allow_empty`='maybe' to a boolean"
+    ):
+        RuleSet.from_yaml(
+            "schema: [{type: not_empty, column: a, allow_empty: 'maybe'}]"
+        )
+
+
+@pytest.mark.parametrize("key", ["foo", "seq", "rule_id", "assert_sql", "reason_sql"])
+def test_unknown_rule_key_is_a_rule_set_error(key):
+    """A key that names no YAML field of the rule fails the load, also
+    where it names a rule field set by the loader or renamed from YAML."""
+    with pytest.raises(RuleSetError, match=rf"unknown keys \['{key}'\]"):
+        RuleSet.from_yaml(f"schema: [{{type: expr, assert: '1=1', {key}: x}}]")

@@ -60,19 +60,6 @@ def test_vs_global_drift_on_empty_input_returns_no_rows(spark):
         assert _drift_vs_table(spark, df, metric, 0.0, 500.0, 10) == {}
 
 
-def test_skewed_source_distribution(spark):
-    from fs_schema_validator_spark.sources import synth
-
-    counts = {
-        r.source: r.n
-        for r in synth.gen_sequences(spark, 1000, skew=True)
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert counts["cc"] == 900
-
-
 def test_ks_drift_rule(spark):
     from fs_schema_validator_spark.sources import synth
 
