@@ -332,8 +332,8 @@ def bench_token_ngram(spark, seq_path: str) -> dict:
     (dedup.token_ngram_dup_stats) over a deterministic half of the bench
     corpus — hash-picked so with_duplicates' duplicate doc_id ROWS land
     on the same side and keep flagging each other. One Arrow
-    window-hash + pair-count pass feeds a count-per-hash aggregation and
-    the flag join; windows/sec is the tokens-axis dedup capability
+    window-hash + pair-count pass feeds a per-hash window count and the
+    per-doc rollup; windows/sec is the tokens-axis dedup capability
     number. Reported as its own ngram_* fields only (folding a new
     workload into `value` would read as a regression against prior
     rounds)."""
@@ -352,8 +352,8 @@ def bench_token_ngram(spark, seq_path: str) -> dict:
     # column is the contamination signal that attributes such swings to
     # host weather instead of code. NOTE the aggregate must include
     # n_dup_windows — summing only n_windows lets Catalyst prune the
-    # entire dup-flag join (left join on a unique key, no referenced
-    # output) and times a degenerate query.
+    # per-hash window count (no referenced output) and times a
+    # degenerate query.
     for i in range(3):
         # budget cap: on a heavily stolen box one pass can run 60s+;
         # don't burn the driver's bench window re-measuring noise

@@ -2,14 +2,16 @@
 
 One operator, `token_ngram_dup_stats`: per document, how many of its
 k-token windows also occur in another document row. The window hashing and
-the per-(doc, hash) pre-aggregation run in one Arrow kernel
+the per-(doc, hash) pre-aggregation run in one Arrow kernel pass
 (`functions.arrays.token_window_pair_counts_arrow`); everything after it is
-Spark SQL, and every shuffle key is a uniform 31-bit window hash.
+Spark SQL: one shuffle of the pair stream by window hash, where a window
+function counts each hash's document rows, then a per-document rollup.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 # A window is duplicated when this many document rows hold its hash.
@@ -44,41 +46,53 @@ def token_ngram_dup_stats(
     row (no per-window refold) AND pre-aggregates to per-(doc,
     distinct-hash) counts in the same pass
     (token_window_pair_counts_arrow), so the widest relation — every
-    window occurrence — never reaches a shuffle. The pair stream feeds
-    two consumers (the global hash counts and the flag join), so the
-    kernel lineage executes twice per action — DELIBERATELY uncached:
-    at 1M docs / 256M windows, persisting the pair stream measured 2x
-    slower than recomputing the NumPy kernel (materializing the widest
-    relation costs more than the hashing). What shuffles is compact: a
-    count-per-hash aggregation (map-side partials collapse hot hashes),
-    the h-keyed join back (AQE broadcasts the hash-count table when
-    duplication is concentrated, skew-splits it when not), and a
-    per-doc rollup that partial-aggregates to one row per doc before
-    moving. The suffix-array machinery of the paper is replaced by
-    fixed-k fingerprints — the standard distributed approximation; at
-    10^12 rows every shuffle key is a uniform 31-bit hash."""
+    window occurrence — never reaches a shuffle. The kernel runs ONCE per
+    action, and no intermediate is stored: its pair stream shuffles once, by
+    h, and a window function counts the rows of each h partition (one
+    row per (document row, hash), so that count is the hash's document
+    count); the per-doc rollup then partial-aggregates to one row per
+    doc before it moves.
+
+    The trade, measured at 32,768 docs (8.2M windows, k=8, local[4], 3
+    ops a side) against the earlier plan (a count-per-hash aggregate
+    joined back to a second kernel pass): on the recipe's all-duplicate
+    streams (dup ratio 1.0) the window is slower, 4.3–4.6 s a warm op
+    against 3.4–3.6 s, because the earlier plan broadcast a small
+    hash-count table and never shuffled the pair stream; on hash-mixed
+    streams with 0.84% duplicate windows, the realistic case, it is
+    2.0–2.6x faster, 4.6–5.8 s against 11.8–11.9 s, because there the
+    broadcast table held one row per distinct hash (~8M; Spark sized it
+    from the compressed parquet input) and the kernel ran twice. Past
+    the broadcast threshold the earlier plan's sort-merge join shuffled
+    the pair stream too, so there the window saves a kernel pass and the
+    count aggregate's shuffle (read from the two plans' shapes, not
+    measured). A window group is one task (AQE does not skew-split a
+    window), so a hash held by millions of rows, or the h = -1 sentinel
+    rows of as many zero-window docs, is counted by one task that
+    buffers the whole group. The suffix-array machinery of the paper is
+    replaced by fixed-k fingerprints — the standard distributed
+    approximation; at 10^12 rows every shuffle key is a uniform 31-bit
+    hash."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     from ..functions.arrays import token_window_pair_counts_arrow
 
     pdc = token_window_pair_counts_arrow(df, tokens_col, id_col, k)
-    # sentinel (h = -1, k_cnt = 0) rows keep zero-window docs in the
-    # stream, so no join back to the source is needed; they must not
-    # enter the hash counts
-    gc = (
-        pdc.filter(F.col("h") >= 0)
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    # left join: every real hash matches (gc derives from the same
-    # stream); only sentinel rows dangle, contributing 0 to both sums
+    # each (doc row, hash) pair is one row of the stream, so a count over
+    # the h partition is the hash's document count; the sentinel rows
+    # (h = -1, k_cnt = 0) that keep zero-window docs in the stream share
+    # one partition and are kept out of the dup sum by h >= 0
+    n_docs = F.count(F.lit(1)).over(Window.partitionBy("h"))
     out = (
-        pdc.join(gc, "h", "left")
+        pdc.withColumn("n_docs", n_docs)
         .groupBy(id_col)
         .agg(
             F.sum("k_cnt").alias("_nw"),
             F.sum(
-                F.when(F.col("n_docs") >= MIN_DOCS, F.col("k_cnt")).otherwise(
-                    F.lit(0)
-                )
+                F.when(
+                    (F.col("h") >= 0) & (F.col("n_docs") >= MIN_DOCS),
+                    F.col("k_cnt"),
+                ).otherwise(F.lit(0))
             ).alias("_nd"),
         )
     )

@@ -203,9 +203,11 @@ def decode(cls: type, mapping: Mapping[str, Any], what: str) -> Any:
     re-types the string that binding interpolation left, as the
     reference's pydantic models do (e.g. a binding-driven ``min_items`` at
     tests/test_json.py:58-84); a bool accepts only 1/0, true/false and
-    yes/no. A field whose type admits ``str`` keeps a string as it is. An
-    unknown key, a missing field or a rejected value is a SpecError naming
-    `what`."""
+    yes/no. A field whose type admits ``str`` keeps a string as it is. Any
+    other value must already be an instance of the field's type (an int
+    also counts for a float, a bool never for an int, None only for an
+    optional field). An unknown key, a missing field or a rejected value
+    is a SpecError naming `what`."""
     types = _field_types(cls)
     try:
         extra = set(mapping) - set(types)
@@ -214,6 +216,17 @@ def decode(cls: type, mapping: Mapping[str, Any], what: str) -> Any:
         return cls(**{k: _decode_value(types[k], v, k) for k, v in mapping.items()})
     except (TypeError, ValueError) as ex:
         raise SpecError(f"invalid {what}: {ex}") from ex
+
+
+def _admits(types: tuple, value: Any) -> bool:
+    """Whether a non-string YAML value is an instance of a field type: an
+    int also counts for a float, a bool never for an int, and None only
+    for an optional field."""
+    if isinstance(value, bool):
+        return bool in types
+    if isinstance(value, int) and float in types:
+        return True
+    return isinstance(value, types)
 
 
 _BOOLS = {"1": True, "true": True, "yes": True, "0": False, "false": False, "no": False}
@@ -236,7 +249,12 @@ def _decode_value(tp: Any, value: Any, key: str) -> Any:
             raise SpecError(f"`{key}` must be a list")
         return tuple(_decode_value(item, v, key) for v in value)
     types = get_args(tp) or (tp,)
-    if not isinstance(value, str) or str in types:
+    if not isinstance(value, str):
+        if not _admits(types, value):
+            names = " or ".join("null" if t is type(None) else t.__name__ for t in types)
+            raise SpecError(f"`{key}` must be {names}, got {value!r}")
+        return value
+    if str in types:
         return value
     if bool in types:
         if value.lower() not in _BOOLS:

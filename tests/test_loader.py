@@ -396,6 +396,51 @@ def test_bad_drift_config_is_a_rule_set_error(knobs, error):
         )
 
 
+@pytest.mark.parametrize(
+    "rule, error",
+    [
+        (
+            "{type: drift_psi, column: n_tok, group_col: source, ref: h, buckets: 2.5}",
+            "`buckets` must be int, got 2.5",
+        ),
+        (
+            "{type: drift_psi, column: n_tok, group_col: source, ref: h, buckets: true}",
+            "`buckets` must be int, got True",
+        ),
+        (
+            "{type: drift_psi, column: n_tok, group_col: source, ref: h, lo: [0]}",
+            "`lo` must be float, got [0]",
+        ),
+        ("{type: not_empty, column: 5}", "`column` must be str, got 5"),
+        ("{type: not_empty, column: a, allow_empty: 0.0}", "`allow_empty` must be bool"),
+        ("{type: not_empty, column: null}", "`column` must be str, got None"),
+        ("{type: unique, keys: [doc_id, 3]}", "`keys` must be str, got 3"),
+        ("{type: column_spec, column: a, spec: {type: int, min: [1]}}", "`min` must be int"),
+        ("{type: column_spec, column: a, spec: {type: int, max: 1.5}}", "`max` must be int"),
+        ("{type: column_spec, column: a, spec: {type: str, nullable: 1}}", "`nullable` must be bool"),
+        ("{type: column_spec, column: a, spec: {type: literal, value: false}}", "`value` must be"),
+    ],
+)
+def test_wrong_typed_rule_value_is_a_rule_set_error(rule, error):
+    """A YAML value that is not a string must already be of its field's
+    type; it must not reach the compiler as, say, 2.5 buckets."""
+    with pytest.raises(RuleSetError, match=re.escape(error)):
+        RuleSet.from_yaml(f"schema: [{rule}]")
+
+
+def test_field_types_admit_ints_for_floats_and_null_for_optionals():
+    rs = RuleSet.from_yaml(
+        "schema: [{type: drift_psi, column: n_tok, group_col: source, ref: h, "
+        "lo: 0, hi: 512, threshold: 1},"
+        " {type: column_spec, column: a, spec: {type: float, min: 1, max: 2.5}},"
+        " {type: column_spec, column: b, spec: {type: int, min: null, max: 9}}]"
+    )
+    drift, fspec, ispec = rs.rules
+    assert (drift.lo, drift.hi, drift.threshold) == (0, 512, 1)
+    assert (fspec.spec.min, fspec.spec.max) == (1, 2.5)
+    assert (ispec.spec.min, ispec.spec.max) == (None, 9)
+
+
 def test_unique_without_keys_is_a_rule_set_error():
     """An empty key list has no duplicates to find; it must not report one
     `duplicate key` violation with an empty subject."""
@@ -434,6 +479,10 @@ def test_expr_rule_id_with_a_quote_validates(spark):
         (
             "{type: unique, keys: []}",
             "invalid `unique` rule (seq 0): unique requires at least one key column",
+        ),
+        (
+            "{type: drift_psi, column: n_tok, group_col: source, ref: h, buckets: 2.5}",
+            "invalid `drift_psi` rule (seq 0): `buckets` must be int, got 2.5",
         ),
         (
             "{type: not_empty, column: a, if: $nope == x}",

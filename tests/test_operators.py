@@ -429,3 +429,96 @@ def test_hot_bucket_cap_keeps_planted_cluster_connected(spark):
     bg = out.filter(F.col("doc_id").startswith("bg-"))
     assert bg.count() == 50
     assert bg.filter(F.col("n_dup_windows") != 0).count() == 0
+
+
+def _dedup_rows(k, seed):
+    """Seeded rows for the dup-stats differential test: random short
+    streams over a tiny vocabulary (so windows collide by chance), an id
+    spread over two rows with different tokens, exact full-row duplicates,
+    a window shared by more than 1,000 rows, and null, child-null, empty
+    and short lists."""
+    import random
+
+    rnd = random.Random(seed)
+    rows = [
+        (f"r{i}", [rnd.randrange(5) for _ in range(rnd.randrange(k + 6))])
+        for i in range(300)
+    ]
+    rows += [
+        ("split", [rnd.randrange(5) for _ in range(k + 4)]),
+        ("split", [10 + rnd.randrange(5) for _ in range(k + 2)]),
+        ("twin-a", [20 + t for t in range(k + 3)]),
+        ("twin-b", [20 + t for t in range(k + 3)]),
+        ("twin-a", [20 + t for t in range(k + 3)]),
+        ("null", None),
+        ("child-null", [1] * k + [None] + [2] * k),
+        ("empty", []),
+        ("short", [3] * (k - 1)),
+    ]
+    hot = [100 + t for t in range(k)]
+    rows += [
+        (f"hot-{i}", hot + [1000 + 4 * i + t for t in range(rnd.randrange(4))])
+        for i in range(1100)
+    ]
+    rnd.shuffle(rows)
+    return rows
+
+
+@pytest.mark.parametrize("k", [1, 3, 8])
+def test_token_ngram_dup_stats_matches_portable_contract(spark, k):
+    """The operator against the plain-Python statement of its contract,
+    over seeded rows that cover every way a row reaches the pair stream:
+    each row is one document instance, an id is one output row, and a hot
+    window hash is one window-function group."""
+    from fs_schema_validator_spark.operators.dedup import (
+        token_ngram_dup_stats,
+    )
+
+    rows = _dedup_rows(k, seed=100 + k)
+    want = _dup_stats_portable(rows, k)
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+    out = token_ngram_dup_stats(df, k=k).collect()
+    assert len(out) == len({d for d, _ in rows}) == len(want)
+    got = {r.doc_id: (r.n_windows, r.n_dup_windows) for r in out}
+    assert got == {d: (nw, nd) for d, (nw, nd, _) in want.items()}
+    for r in out:
+        nw, nd = got[r.doc_id]
+        assert r.dup_rate == pytest.approx(nd / nw if nw else 0.0, abs=5e-5)
+    # the planted cases hold for every k
+    assert got["twin-b"][1] == got["twin-b"][0] == 4
+    assert got["twin-a"] == (8, 8)
+    assert got["null"] == got["child-null"] == got["empty"] == (0, 0)
+    assert all(got[f"hot-{i}"][1] >= 1 for i in range(1100))
+
+
+def test_token_ngram_dup_stats_runs_the_kernel_once(spark):
+    """The pair stream feeds one window count and one rollup, so the Arrow
+    kernel (a MapInArrow node) appears once in the physical plan."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    from fs_schema_validator_spark.operators.dedup import (
+        token_ngram_dup_stats,
+    )
+
+    df = spark.createDataFrame(
+        [("a", list(range(12))), ("b", None)], "doc_id string, tokens array<int>"
+    )
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        token_ngram_dup_stats(df, k=4).explain(mode="formatted")
+    assert len(set(re.findall(r"\((\d+)\) MapInArrow", buf.getvalue()))) == 1
+
+
+@pytest.mark.parametrize("k", [0, -3])
+def test_token_ngram_dup_stats_rejects_k_below_one(spark, k):
+    """k < 1 has no windows to hash; it fails before a plan is built, not
+    as a Python worker error partway through a job."""
+    from fs_schema_validator_spark.operators.dedup import (
+        token_ngram_dup_stats,
+    )
+
+    df = spark.createDataFrame([("a", [1, 2])], "doc_id string, tokens array<int>")
+    with pytest.raises(ValueError, match=rf"k must be >= 1, got {k}"):
+        token_ngram_dup_stats(df, k=k)

@@ -41,6 +41,7 @@ def audit(name: str, df, expectations: dict[str, object]) -> tuple[str, list[str
         set(re.findall(r"\((\d+)\) Broadcast(?:Exchange|HashJoin|NestedLoopJoin)", txt))
     )
     codegen_spans = len(set(re.findall(r"\[codegen id : (\d+)\]", txt)))
+    arrow_maps = len(set(re.findall(r"\((\d+)\) MapInArrow", txt)))
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", txt)
     read_schemas = re.findall(r"ReadSchema: ([^\n]*)", txt)
 
@@ -65,6 +66,8 @@ def audit(name: str, df, expectations: dict[str, object]) -> tuple[str, list[str
             got = broadcasts > 0 if want else broadcasts == 0
         elif key == "max_exchanges":
             got = exchanges <= want
+        elif key == "max_arrow_maps":
+            got = arrow_maps <= want
         elif key == "plan_contains":
             got = want in txt
         elif key == "plan_excludes":
@@ -179,14 +182,14 @@ def main() -> None:
             {"schema_excludes": "text", "max_scans": 1, "max_exchanges": 0},
         )
     )
-    # token k-gram dedup: one Arrow window-hash pass, then compact
-    # (hash, count) aggregations — the corpus never self-joins and no
-    # pair set materializes
+    # token k-gram dedup: the Arrow window-hash kernel runs once, and its
+    # pair stream feeds one h-keyed window count and a per-doc rollup —
+    # the corpus never self-joins and no pair set materializes
     sections.append(
         audit(
-            "token_ngram_dup_stats (Arrow window hashes + count aggs)",
+            "token_ngram_dup_stats (one Arrow window-hash pass + window count)",
             qs["token_ngram_dup_stats"](spark, SF_DIR),
-            {"plan_contains": "MapInArrow",
+            {"plan_contains": "MapInArrow", "max_arrow_maps": 1,
              "plan_excludes": "CartesianProduct"},
         )
     )
